@@ -1,8 +1,11 @@
 package graft.streaming
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming formulations of the SURVEY.md §2.I inventory — the
   * (a) side of the dual-formulation rule. Each takes an unbounded events
@@ -472,23 +475,6 @@ object Streams {
         } finally { next.unpersist(); () }
       }
 
-  /** A10 — CDC UPSERT sink (Flink upsert-kafka / JDBC-upsert sink
-    * analogue): each micro-batch is merged into a keyed parquet table,
-    * keeping the latest row per key by (`orderCol`, event_id) — the
-    * materialized "current state" table a changelog stream maintains.
-    *
-    * Publish protocol: merge into a staging directory, then swap it into
-    * place WITHOUT a window where no copy of the table exists — the live
-    * dir is renamed aside (`.old-<id>`), staging is renamed in, and only
-    * then is the old copy deleted. A crash between the two renames leaves
-    * the table recoverable from the `.old` dir; [[recoverUpsertTable]]
-    * runs at every batch entry and performs that restore (and sweeps
-    * fully-published leftovers). On a posix filesystem each rename is
-    * atomic; on an object store the production form is a manifest/
-    * table-format commit (the same place Flink's exactly-once JDBC sink
-    * reaches for transactions). The merge is idempotent (keep-latest of a
-    * union is stable under batch replay), which is what makes the
-    * checkpointed foreachBatch at-least-once replay safe end-to-end. */
   private def rmRec(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rmRec)
     f.delete(); ()
@@ -507,16 +493,19 @@ object Streams {
     * it. If the live dir exists, any `.old` leftovers are from a crash after
     * a completed publish — delete them. Stale `.staging` dirs are always
     * safe to drop: a staging dir only becomes the table by rename, and the
-    * replayed batch rebuilds its own staging from scratch. */
-  private[graft] def recoverUpsertTable(tablePath: String): Unit = {
+    * replayed batch rebuilds its own staging from scratch. Returns whether
+    * a table was restored from an `.old` copy. */
+  private[graft] def recoverUpsertTable(tablePath: String): Boolean = {
     val cur = new java.io.File(tablePath)
     val olds = upsertLeftovers(cur, "old")
-    if (!cur.isDirectory && olds.nonEmpty) {
+    val restore = !cur.isDirectory && olds.nonEmpty
+    if (restore) {
       val newest = olds.maxBy(_.getName.stripPrefix(cur.getName + ".old-").toLong)
       require(newest.renameTo(cur), s"upsert recovery rename failed: $newest")
       olds.filterNot(_ == newest).foreach(rmRec)
     } else olds.foreach(rmRec)
     upsertLeftovers(cur, "staging").foreach(rmRec)
+    restore
   }
 
   /** Publish `staging` as the new content of `cur`: rename the live copy
@@ -530,28 +519,165 @@ object Streams {
     if (old.exists) rmRec(old)
   }
 
+  /** A10 — CDC UPSERT sink (Flink upsert-kafka / JDBC-upsert sink
+    * analogue): each micro-batch is merged into a keyed parquet table,
+    * keeping the latest row per key by (`orderCol`, event_id) — the
+    * materialized "current state" table a changelog stream maintains.
+    * Nulls in either ordering column rank lowest; an exact tie keeps the
+    * batch row.
+    *
+    * Keyed merge ([[upsertMerge]]): the live table is read with the
+    * batch's schema (no footer inference), both sides are hash-partitioned
+    * on the key columns into `defaultParallelism` partitions, the batch is
+    * reduced map-side to its newest row per key, and each table partition
+    * is zipped with its batch partition and merged by hash lookup. A
+    * steady-state micro-batch is ONE Spark job: the table scan and the batch shuffle run
+    * as parallel map stages, then `defaultParallelism` tasks merge and
+    * write. Per-batch cost: table-proportional I/O (one scan, one shuffle
+    * and one rewrite of the table), batch-proportional shuffle on the
+    * batch side, no sort, and at most `defaultParallelism` part files.
+    *
+    * Schema drift: because the table is read with the batch schema, a
+    * table whose columns differ would silently be read null-filled or
+    * pruned. The footer schema is therefore checked against the batch
+    * schema, by name and type, once per sink instance — on its first
+    * batch and again after a recovery restores the table — and a mismatch
+    * fails the batch.
+    *
+    * Publish protocol: merge into a staging directory, then swap it into
+    * place WITHOUT a window where no copy of the table exists — the live
+    * dir is renamed aside (`.old-<id>`), staging is renamed in, and only
+    * then is the old copy deleted. A crash between the two renames leaves
+    * the table recoverable from the `.old` dir; [[recoverUpsertTable]]
+    * runs at every batch entry and performs that restore (and sweeps
+    * fully-published leftovers). On a posix filesystem each rename is
+    * atomic; on an object store the production form is a manifest/
+    * table-format commit (the same place Flink's exactly-once JDBC sink
+    * reaches for transactions). The merge is idempotent (re-merging a batch
+    * leaves the table unchanged), which is what makes the checkpointed
+    * foreachBatch at-least-once replay safe end-to-end. */
   def foreachBatchUpsert(events: DataFrame, tablePath: String,
       keys: Seq[String], orderCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val schemaChecked = new java.util.concurrent.atomic.AtomicBoolean(false)
     events.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        recoverUpsertTable(tablePath)
+        if (recoverUpsertTable(tablePath)) schemaChecked.set(false)
         val spark = batch.sparkSession
+        val schema = batch.schema
         val cur = new java.io.File(tablePath)
-        val existing =
-          if (cur.isDirectory) spark.read.parquet(tablePath)
-          else spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keys.map(col): _*)
-          .orderBy(col(orderCol).desc, col("event_id").desc)
-        val merged = existing.unionByName(batch.toDF())
-          .withColumn("_rn", row_number().over(w))
-          .where(col("_rn") === 1).drop("_rn")
+        val table = if (cur.isDirectory) {
+          if (!schemaChecked.get)
+            requireUpsertSchema(spark.read.parquet(tablePath).schema, schema, tablePath)
+          Some(spark.read.schema(schema).parquet(tablePath).queryExecution.toRdd)
+        } else None
+        schemaChecked.set(true)
+        val merged = upsertMerge(table, batch.queryExecution.toRdd, schema, keys, orderCol)
         val staging = new java.io.File(tablePath + s".staging-$id")
-        merged.write.mode("overwrite").parquet(staging.getPath)
+        org.apache.spark.sql.graftbridge.DatasetBridge.ofInternalRows(spark, merged, schema)
+          .write.mode("overwrite").parquet(staging.getPath)
         publishUpsertTable(cur, staging, id)
       }
+  }
+
+  /** Fails unless the table's stored columns equal the batch's by name
+    * and type, column order and nullability aside. */
+  private def requireUpsertSchema(table: org.apache.spark.sql.types.StructType,
+      batch: org.apache.spark.sql.types.StructType, tablePath: String): Unit = {
+    import org.apache.spark.sql.types.DataType
+    val stored = table.fields.map(f => f.name -> f.dataType).toMap
+    // leaf types (nullability aside), then nested field names
+    def same(a: DataType, b: DataType) = DataType.equalsStructurally(a, b, true) &&
+      DataType.equalsStructurallyByName(a, b, _ == _)
+    require(table.length == batch.length &&
+        batch.fields.forall(f => stored.get(f.name).exists(same(_, f.dataType))),
+      s"upsert table $tablePath has schema ${table.simpleString}, " +
+        s"the stream has ${batch.simpleString}")
+  }
+
+  /** Sends a record to the partition id it carries as its key. */
+  private final class PartitionIdRoute(override val numPartitions: Int)
+      extends org.apache.spark.Partitioner {
+    override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  /** The keyed merge behind [[foreachBatchUpsert]]: `table` (unique per key,
+    * absent before the first batch) and `batch` rows in `schema`'s layout
+    * in, the merged table's rows out, over `defaultParallelism` hash
+    * partitions of the key columns. Per key the row with the larger (`orderCol`, event_id)
+    * survives, nulls lowest; an exact tie keeps the batch row, so
+    * re-merging a batch is a no-op. Builds the RDD lineage only; the job
+    * runs when the result is consumed.
+    *
+    * Both sides cross the shuffle as bare UnsafeRows in Spark SQL's own
+    * exchange format ([[org.apache.spark.sql.execution.UnsafeRowSerializer]]),
+    * routed by the hash partition id of their key; the key itself is not
+    * shipped but recomputed by the reducer. The batch is deduplicated per
+    * key on the map side, so each batch key crosses the shuffle at most
+    * once per map task. */
+  private def upsertMerge(table: Option[RDD[InternalRow]],
+      batch: RDD[InternalRow], schema: org.apache.spark.sql.types.StructType,
+      keys: Seq[String], orderCol: String): RDD[InternalRow] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    val parts = batch.sparkContext.defaultParallelism
+    def ref(c: String) = {
+      val i = schema.fieldIndex(c)
+      BoundReference(i, schema(i).dataType, schema(i).nullable)
+    }
+    // -0.0 and 0.0, and every NaN bit pattern, are one key each, as in SQL
+    // grouping
+    val keyExprs = keys.map(ref).map {
+      case r if r.dataType == org.apache.spark.sql.types.DoubleType ||
+          r.dataType == org.apache.spark.sql.types.FloatType =>
+        org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero(r)
+      case r => r
+    }
+    // ascending with nulls first: a null ranks lowest
+    val order = new InterpretedOrdering(
+      Seq(orderCol, "event_id").map(c => SortOrder(ref(c), Ascending)))
+    val types = schema.fields.map(_.dataType)
+
+    def exchange(rows: RDD[InternalRow]): RDD[InternalRow] =
+      new org.apache.spark.rdd.ShuffledRDD[Int, InternalRow, InternalRow](
+          rows.mapPartitions { it =>
+            val key = UnsafeProjection.create(keyExprs)
+            val full = UnsafeProjection.create(types)
+            it.map { r =>
+              // a shuffle writer may hold records before serializing them
+              val row = full(r).copy()
+              (Math.floorMod(key(row).hashCode, parts), row)
+            }
+          }, new PartitionIdRoute(parts))
+        .setSerializer(new org.apache.spark.sql.execution.UnsafeRowSerializer(types.length))
+        .values
+    // the newest row per key, copied out of the reader's reused buffers
+    def newest(rows: Iterator[InternalRow]) = {
+      val key = UnsafeProjection.create(keyExprs)
+      val m = new java.util.HashMap[UnsafeRow, InternalRow]()
+      rows.foreach { r =>
+        val k = key(r)
+        val prev = m.get(k)
+        if (prev == null || order.gteq(r, prev)) m.put(k.copy(), r.copy())
+      }
+      m
+    }
+    def values(m: java.util.HashMap[UnsafeRow, InternalRow]) =
+      m.values.iterator.asScala
+
+    val fresh = exchange(batch.mapPartitions(it => values(newest(it))))
+    table match {
+      case None => fresh.mapPartitions(it => values(newest(it)))
+      case Some(t) =>
+        exchange(t).zipPartitions(fresh) { (stored, updates) =>
+          val pending = newest(updates)
+          val key = UnsafeProjection.create(keyExprs)
+          stored.map { old =>
+            val upd = pending.remove(key(old))
+            if (upd == null || order.gt(old, upd)) old else upd
+          } ++ values(pending)
+        }
+    }
+  }
 
   /** A2/A8 — Kafka source/sink wiring (the canonical Flink
     * KafkaSource/KafkaSink analogue). Returns the fully-configured

@@ -603,6 +603,189 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  /** Runs `batches` through a fresh upsert sink on a new table, one
+    * micro-batch each; returns the table path. */
+  private def upsertBatches(keys: Seq[String], batches: Seq[Event]*): String = {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
+    val ms = MemoryStream[Event]
+    val q = Streams.foreachBatchUpsert(ms.toDF(), dir, keys, orderCol = "ts").start()
+    try batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    dir
+  }
+
+  private def upsertTable(dir: String): Set[Event] = {
+    val s = spark
+    import s.implicits._
+    spark.read.parquet(dir).as[Event].collect().toSet
+  }
+
+  /** Reference upsert semantics: row_number 1 of a window over all rows
+    * per key, newest (ts, event_id) first. */
+  private def windowLatest(keys: Seq[String], rows: Seq[Event]): Set[Event] = {
+    val s = spark
+    import s.implicits._
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("ts").desc, col("event_id").desc)
+    rows.toDF().withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
+      .drop("_rn").as[Event].collect().toSet
+  }
+
+  test("A10 merge: a late row does not overwrite a newer stored row") {
+    val dir = upsertBatches(Seq("user_id"),
+      Seq(ev(1, "2024-01-01 10:00:00", 1, "click", 1.0)),
+      Seq(ev(2, "2024-01-01 09:00:00", 1, "view", 2.0),
+        ev(3, "2024-01-01 09:30:00", 2, "view", 3.0)))
+    assert(upsertTable(dir).map(_.event_id) === Set(1L, 3L))
+  }
+
+  test("A10 merge: equal ts is decided by event_id, in either direction") {
+    val dir = upsertBatches(Seq("user_id"),
+      Seq(ev(5, "2024-01-01 10:00:00", 1, "click", 1.0),
+        ev(3, "2024-01-01 10:00:00", 2, "click", 2.0)),
+      // user 1: lower id at the same ts loses to the stored row;
+      // user 2: higher id at the same ts replaces it
+      Seq(ev(4, "2024-01-01 10:00:00", 1, "view", 3.0),
+        ev(6, "2024-01-01 10:00:00", 2, "view", 4.0)))
+    assert(upsertTable(dir).map(_.event_id) === Set(5L, 6L))
+  }
+
+  test("A10 merge: duplicate keys inside one micro-batch collapse to the newest") {
+    val dup = Seq(ev(1, "2024-01-01 10:00:00", 1, "click", 1.0),
+      ev(2, "2024-01-01 10:05:00", 1, "click", 2.0),
+      ev(6, "2024-01-01 10:05:00", 1, "view", 6.0),
+      ev(3, "2024-01-01 09:00:00", 1, "view", 3.0),
+      ev(4, "2024-01-01 10:05:00", 2, "click", 4.0),
+      ev(5, "2024-01-01 10:01:00", 2, "view", 5.0))
+    // first batch (no table yet) and a later batch (merged into one)
+    assert(upsertTable(upsertBatches(Seq("user_id"), dup)).map(_.event_id) === Set(6L, 4L))
+    val later = upsertBatches(Seq("user_id"),
+      Seq(ev(0, "2024-01-01 08:00:00", 1, "click", 0.0)), dup)
+    assert(upsertTable(later).map(_.event_id) === Set(6L, 4L))
+  }
+
+  test("A10 merge: a null component of a two-column key groups like the window") {
+    val keys = Seq("user_id", "event_type")
+    val b1 = Seq(ev(1, "2024-01-01 10:00:00", 1, null, 1.0),
+      ev(2, "2024-01-01 10:00:00", 1, "click", 2.0),
+      ev(3, "2024-01-01 10:00:00", 2, null, 3.0))
+    val b2 = Seq(ev(4, "2024-01-01 11:00:00", 1, null, 4.0),
+      ev(5, "2024-01-01 10:30:00", 1, null, 5.0),
+      ev(6, "2024-01-01 09:00:00", 1, "click", 6.0))
+    val got = upsertTable(upsertBatches(keys, b1, b2))
+    assert(got.map(_.event_id) === Set(4L, 2L, 3L), got)
+    assert(got === windowLatest(keys, b1 ++ b2))
+  }
+
+  test("A10 merge: replaying a committed batch leaves the table unchanged") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-upsert-ckpt").toString
+    val ms = MemoryStream[Event]
+    def start() = Streams.foreachBatchUpsert(ms.toDF(), dir, Seq("user_id"), "ts")
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      ms.addData(ev(1, "2024-01-01 10:00:00", 1, "click", 1.0),
+        ev(2, "2024-01-01 10:00:00", 2, "click", 2.0))
+      q1.processAllAvailable()
+      ms.addData(ev(3, "2024-01-01 11:00:00", 1, "view", 3.0),
+        ev(4, "2024-01-01 09:00:00", 2, "view", 4.0),
+        ev(5, "2024-01-01 09:00:00", 3, "view", 5.0))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val before = upsertTable(dir)
+    assert(before.map(_.event_id) === Set(3L, 2L, 5L))
+    // un-commit batch 1: the restarted query re-runs it on the merged table
+    Seq("1", ".1.crc").foreach(f => new java.io.File(s"$ckpt/commits/$f").delete())
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      assert(q2.recentProgress.exists(p => p.batchId == 1 && p.numInputRows == 3),
+        q2.recentProgress.map(_.batchId).mkString(","))
+    } finally q2.stop()
+    assert(upsertTable(dir) === before)
+  }
+
+  test("A10 merge: three seeded random batches equal the row_number window over their union") {
+    val rnd = new scala.util.Random(20241017L)
+    val ids = rnd.shuffle((1L to 600L).toVector)
+    val types = Vector("click", "view", null)
+    val rows = ids.map { id =>
+      ev(id, f"2024-01-01 10:${rnd.nextInt(20)}%02d:00", rnd.nextInt(40).toLong,
+        types(rnd.nextInt(types.length)), rnd.nextInt(1000) / 10.0)
+    }
+    val keys = Seq("user_id", "event_type")
+    val got = upsertTable(upsertBatches(keys, rows.take(200), rows.slice(200, 400),
+      rows.drop(400)))
+    val want = windowLatest(keys, rows)
+    assert(got.size === want.size)
+    assert(got === want)
+  }
+
+  test("A10 merge: a steady-state upsert batch is one Spark job and writes <= defaultParallelism files") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
+    val ms = MemoryStream[Event]
+    val q = Streams.foreachBatchUpsert(ms.toDF(), dir, Seq("user_id"), "ts").start()
+    val queryId = q.id.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("sql.streaming.queryId") == queryId))
+          jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    def batch(from: Int, n: Int): Unit = {
+      ms.addData((from until from + n).map(i =>
+        ev(i.toLong, "2024-01-01 10:00:00", (i % 500).toLong, "click", i.toDouble)))
+      q.processAllAvailable()
+    }
+    try {
+      batch(0, 1000) // creates the table
+      batch(1000, 1000) // checks the footer schema once
+      org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
+      val j0 = jobs.get()
+      batch(2000, 1000)
+      org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
+      assert(jobs.get() - j0 === 1, "Spark jobs in one steady-state upsert batch")
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val parts = new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+    assert(parts >= 1 && parts <= spark.sparkContext.defaultParallelism, parts)
+    assert(upsertTable(dir).map(_.event_id) === (2500L until 3000L).toSet)
+  }
+
+  test("A10 merge: a table whose stored schema drifted from the stream fails the batch") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
+    Seq((1L, "2024-01-01 10:00:00", 1L, "click", "1.0"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .write.parquet(dir)
+    val ms = MemoryStream[Event]
+    val q = Streams.foreachBatchUpsert(ms.toDF(), dir, Seq("user_id"), "ts").start()
+    try {
+      ms.addData(ev(2, "2024-01-01 11:00:00", 1, "click", 2.0))
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      assert(err.getMessage.contains("upsert table"), err.getMessage)
+    } finally q.stop()
+    assert(spark.read.parquet(dir).schema("value").dataType ===
+      org.apache.spark.sql.types.StringType)
+  }
+
   test("I6f: transformWithState event-time timers close gap sessions; stale timers ignored") {
     val s = spark
     import s.implicits._
