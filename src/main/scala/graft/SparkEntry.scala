@@ -15,106 +15,65 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.StreamOps.tumblingCounts(spark, "/root/testdata/sf0.001")
 
+  /** Every ops module's (queries, oracles) pair, in merge order: a later
+    * module's key overrides an earlier one's in both maps. */
+  private def modules
+      : Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] = Seq(
+    ops.StreamOps.queries -> ops.StreamOps.oracles,
+    ops.Relational.queries -> ops.Relational.oracles,
+    ops.Joins.queries -> ops.Joins.oracles,
+    ops.Scalars.queries -> ops.Scalars.oracles,
+    ops.Analytics.queries -> ops.Analytics.oracles,
+    ops.Llm.queries -> ops.Llm.oracles,
+    ops.Llm2.queries -> ops.Llm2.oracles,
+    ops.Llm3.queries -> ops.Llm3.oracles,
+    ops.Llm4.queries -> ops.Llm4.oracles,
+    ops.Llm5.queries -> ops.Llm5.oracles,
+    ops.Llm6.queries -> ops.Llm6.oracles,
+    ops.Llm7.queries -> ops.Llm7.oracles,
+    ops.Llm8.queries -> ops.Llm8.oracles,
+    ops.Llm9.queries -> ops.Llm9.oracles,
+    ops.Llm10.queries -> ops.Llm10.oracles,
+    ops.Llm11.queries -> ops.Llm11.oracles,
+    ops.Llm12.queries -> ops.Llm12.oracles,
+    ops.Llm13.queries -> ops.Llm13.oracles,
+    ops.Llm14.queries -> ops.Llm14.oracles,
+    ops.Llm15.queries -> ops.Llm15.oracles,
+    ops.Llm16.queries -> ops.Llm16.oracles,
+    ops.Llm17.queries -> ops.Llm17.oracles,
+    ops.Llm18.queries -> ops.Llm18.oracles,
+    ops.Llm19.queries -> ops.Llm19.oracles,
+    ops.Mm2.queries -> ops.Mm2.oracles,
+    ops.Mm3.queries -> ops.Mm3.oracles,
+    ops.Mm4.queries -> ops.Mm4.oracles,
+    ops.Mm5.queries -> ops.Mm5.oracles,
+    ops.Mm6.queries -> ops.Mm6.oracles,
+    ops.Mm7.queries -> ops.Mm7.oracles,
+    ops.Mm8.queries -> ops.Mm8.oracles,
+    ops.Warehouse5.queries -> ops.Warehouse5.oracles,
+    ops.Warehouse6.queries -> ops.Warehouse6.oracles,
+    ops.Layout.queries -> ops.Layout.oracles,
+    ops.Er.queries -> ops.Er.oracles,
+    ops.Audit.queries -> ops.Audit.oracles,
+    ops.Ml.queries -> ops.Ml.oracles,
+    ops.Ml2.queries -> ops.Ml2.oracles,
+    ops.Stats.queries -> ops.Stats.oracles,
+    ops.Stats2.queries -> ops.Stats2.oracles,
+    ops.Stats3.queries -> ops.Stats3.oracles,
+    ops.Stats4.queries -> ops.Stats4.oracles,
+    ops.Stats5.queries -> ops.Stats5.oracles,
+    ops.Warehouse.queries -> ops.Warehouse.oracles,
+    ops.Warehouse2.queries -> ops.Warehouse2.oracles,
+    ops.Warehouse3.queries -> ops.Warehouse3.oracles,
+    ops.Warehouse4.queries -> ops.Warehouse4.oracles,
+    ops.Warehouse7.queries -> ops.Warehouse7.oracles)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.StreamOps.queries ++
-      ops.Relational.queries ++
-      ops.Joins.queries ++
-      ops.Scalars.queries ++
-      ops.Analytics.queries ++
-      ops.Llm.queries ++
-      ops.Llm2.queries ++
-      ops.Llm3.queries ++
-      ops.Llm4.queries ++
-      ops.Llm5.queries ++
-      ops.Llm6.queries ++
-      ops.Llm7.queries ++
-      ops.Llm8.queries ++
-      ops.Llm9.queries ++
-      ops.Llm10.queries ++
-      ops.Llm11.queries ++
-      ops.Llm12.queries ++
-      ops.Llm13.queries ++
-      ops.Llm14.queries ++
-      ops.Llm15.queries ++
-      ops.Llm16.queries ++
-      ops.Llm17.queries ++
-      ops.Llm18.queries ++
-      ops.Llm19.queries ++
-      ops.Mm2.queries ++
-      ops.Mm3.queries ++
-      ops.Mm4.queries ++
-      ops.Mm5.queries ++
-      ops.Mm6.queries ++
-      ops.Mm7.queries ++
-      ops.Mm8.queries ++
-      ops.Warehouse5.queries ++
-      ops.Warehouse6.queries ++
-      ops.Layout.queries ++
-      ops.Er.queries ++
-      ops.Audit.queries ++
-      ops.Ml.queries ++
-      ops.Ml2.queries ++
-      ops.Stats.queries ++
-      ops.Stats2.queries ++
-      ops.Stats3.queries ++
-      ops.Stats4.queries ++
-      ops.Stats5.queries ++
-      ops.Warehouse.queries ++
-      ops.Warehouse2.queries ++
-      ops.Warehouse3.queries ++
-      ops.Warehouse4.queries ++
-      ops.Warehouse7.queries
+    modules.map(_._1).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    ops.StreamOps.oracles ++
-      ops.Relational.oracles ++
-      ops.Joins.oracles ++
-      ops.Scalars.oracles ++
-      ops.Analytics.oracles ++
-      ops.Llm.oracles ++
-      ops.Llm2.oracles ++
-      ops.Llm3.oracles ++
-      ops.Llm4.oracles ++
-      ops.Llm5.oracles ++
-      ops.Llm6.oracles ++
-      ops.Llm7.oracles ++
-      ops.Llm8.oracles ++
-      ops.Llm9.oracles ++
-      ops.Llm10.oracles ++
-      ops.Llm11.oracles ++
-      ops.Llm12.oracles ++
-      ops.Llm13.oracles ++
-      ops.Llm14.oracles ++
-      ops.Llm15.oracles ++
-      ops.Llm16.oracles ++
-      ops.Llm17.oracles ++
-      ops.Llm18.oracles ++
-      ops.Llm19.oracles ++
-      ops.Mm2.oracles ++
-      ops.Mm3.oracles ++
-      ops.Mm4.oracles ++
-      ops.Mm5.oracles ++
-      ops.Mm6.oracles ++
-      ops.Mm7.oracles ++
-      ops.Mm8.oracles ++
-      ops.Warehouse5.oracles ++
-      ops.Warehouse6.oracles ++
-      ops.Layout.oracles ++
-      ops.Er.oracles ++
-      ops.Audit.oracles ++
-      ops.Ml.oracles ++
-      ops.Ml2.oracles ++
-      ops.Stats.oracles ++
-      ops.Stats2.oracles ++
-      ops.Stats3.oracles ++
-      ops.Stats4.oracles ++
-      ops.Stats5.oracles ++
-      ops.Warehouse.oracles ++
-      ops.Warehouse2.oracles ++
-      ops.Warehouse3.oracles ++
-      ops.Warehouse4.oracles ++
-      ops.Warehouse7.oracles
+    modules.map(_._2).reduce(_ ++ _)
 }

@@ -8,21 +8,14 @@ import org.apache.spark.sql.types
   *
   * Loading contract (SURVEY.md §1.2-1.3, FIXTURES.md):
   *   - All fixture tables are single parquet files under `$dir/<name>.parquet`.
-  *   - Time columns have shipped in TWO fixture generations and the loaders
-  *     dispatch on the read schema to support both:
-  *     (a) pre-2026-08-13 drops: `events.ts` was parquet `timestamp[ns]`
-  *     (readable only as epoch-nanos Long under
-  *     `spark.sql.legacy.parquet.nanosAsLong`; normalized here with
-  *     `timestamp_micros(ts div 1000)` — integer floor-to-µs, exactly
-  *     DuckDB's own ns→µs read; a double `ts/1000` would lose precision
-  *     since epoch-ns ≈ 1.7e18 > 2^53), and orders/lineitem dates were
-  *     UTC-adjusted `timestamp[ms]` (plain TimestampType read).
-  *     (b) current drops: all time columns are plain `timestamp[us]`
-  *     without UTC adjustment, which Spark 4 reads as TIMESTAMP_NTZ —
-  *     normalized here by casting to session-zone TimestampType (the
-  *     repo-wide UTC session makes that cast wall-clock identity, and
-  *     `tools/check.py` pins DuckDB to UTC too), so every downstream
-  *     operator keeps seeing the TimestampType it was built against.
+  *   - Time columns are plain parquet `timestamp[us]` without UTC
+  *     adjustment, which Spark 4 reads as TIMESTAMP_NTZ — normalized here
+  *     by casting to session-zone TimestampType (the repo-wide UTC session
+  *     makes that cast wall-clock identity, and `tools/check.py` pins
+  *     DuckDB to UTC too), so every downstream operator keeps seeing the
+  *     TimestampType it was built against. A `timestamp[ns]` column is
+  *     refused by the parquet reader (`PARQUET_TYPE_ILLEGAL`) rather than
+  *     read as something else.
   *
   * Determinism contract (SURVEY.md §7.5): double aggregation order differs
   * between Spark's partial aggregation and DuckDB's single-threaded fold, so
@@ -45,17 +38,8 @@ object Tables {
       .foldLeft(df)((d, f) => d.withColumn(f.name, col(f.name).cast("timestamp")))
 
   /** events with `ts` normalized to TimestampType (µs), exact DuckDB parity. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    // Runtime conf; must be set before the first read of events.parquet in
-    // this session (legacy ns fixtures only). Harmless to re-set.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case types.LongType => // generation (a): int64 epoch-nanos
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => tsNorm(raw) // generation (b): timestamp[us] NTZ
-    }
-  }
+  def events(spark: SparkSession, dir: String): DataFrame =
+    tsNorm(table(spark, dir, "events"))
 
   // NOTE (round 17, measured): fanout does NOT belong in these loaders.
   // Wrapping lineitem/orders in fanout regressed every probe key

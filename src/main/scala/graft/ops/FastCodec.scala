@@ -3,7 +3,7 @@ package graft.ops
 /** Direct byte-level encoders for the Mm fixtures' synthetic payloads —
   * round-17 optimization (guide §1.2 step 2: per-task work).
   *
-  * MEASURED motivation (MmProbe, single thread): the per-payload cost of
+  * MEASURED motivation (off Spark, single thread): the per-payload cost of
   * every mm_* key was dominated by SYNTHESIS, not the decode the
   * operator actually exercises — `BufferedImage` + per-pixel `setRGB`
   * (a color-model conversion per call) + `ImageIO.write` (plugin lookup

@@ -369,7 +369,7 @@ object Llm {
     // the lost partitions from lineage. The previous invocation's cache is
     // dropped on entry so repeated runs (bench reps, verify) each pay the
     // full build — caching may never quietly change what the bench times.
-    // Measured cost of that honesty (BenchOne jaccard_split, sf0.1, r9):
+    // Measured cost of that honesty (jaccard_split alone, sf0.1, r9):
     // warm build ≈ 0.8 s, warm probe ≈ 0.7 s per rep (cold-JVM rep1:
     // 5.9 s / 2.1 s). The r8 bench's 4.52 s was cold reps under machine
     // contention, not plan debt — today's bench min is 0.86 s full.

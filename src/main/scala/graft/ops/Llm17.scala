@@ -475,12 +475,6 @@ object Llm17 {
   private def doubling(spark: SparkSession, dir: String, upTo: Int = RMax)
       : (Lay, RDD[(Int, (Array[Long], Array[Long], Array[Boolean]))],
          Vector[RDD[(Int, Array[Long])]], Vector[Long], Int, Long) = {
-    val dbg = sys.env.contains("GRAFT_SUFFIX_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      println(f"[suffix] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     val (p0raw, total) = positions(spark, dir)
     val p0 = p0raw.localCheckpoint(true)
     val lay = layoutFor(spark, total)
@@ -508,7 +502,6 @@ object Llm17 {
       "key0").select(col("gpos"), col("r"), col("doc_id"), col("pos"),
       col("nw"))
     val (l0, meta) = baseBlocksOf(joined, lay, part)
-    lap("l0")
     var levels = Vector(l0)
     var tieds = Vector(tied0)
     var m = if (tied0 == 0L) 0 else -1
@@ -518,7 +511,6 @@ object Llm17 {
       levels = levels :+ next
       tieds = tieds :+ tied
       k += 1
-      lap(s"round $k")
       if (tied == 0L) m = k
     }
     if (m < 0 && upTo == RMax) throw new IllegalStateException(

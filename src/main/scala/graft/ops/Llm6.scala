@@ -549,8 +549,8 @@ object MmAudio {
   }
 
   /** The JDK's WAVE AudioFileReader, resolved from the SPI registry ONCE.
-    * Round-17 optimization (guide §1.2 per-task work, measured in
-    * MmProbe): `AudioSystem.getAudioInputStream` re-walks the provider
+    * Round-17 optimization (guide §1.2 per-task work, measured off
+    * Spark): `AudioSystem.getAudioInputStream` re-walks the provider
     * registry on EVERY call behind a shared lock, so the row-local audio
     * kernels got SLOWER with more cores (0.39 s on 1 thread → 0.90 s on
     * 32 for the same 5 000 decodes). Calling the resolved provider

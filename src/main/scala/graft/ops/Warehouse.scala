@@ -870,7 +870,7 @@ object Warehouse {
     * and the pass-through.
     *
     * ROUND-16 ROOT CAUSE + RESTRUCTURE (closes the r14/r15 aged-JVM
-    * bi-modality): CfDiag's fresh-vs-aged stage-metric diff showed the
+    * bi-modality): a fresh-vs-aged stage-metric diff showed the
     * slow regime moves IDENTICAL bytes (148.2 MB shuffle read, 85
     * tasks, 0 spill, GC ≤ 1 s) while task CPU inflates 25 s → 50 s, and
     * a rerun with `spark.sql.codegen.cache.maxEntries=8192` held the

@@ -727,16 +727,14 @@ object Streams {
         timerValues: streaming.TimerValues): Iterator[CusumStat] = {
       var (s, n, alarms, maxS, firstUs) =
         Option(st.get()).getOrElse((0L, 0L, 0L, 0L, -1L))
-      def us(t: java.sql.Timestamp): Long = // µs-faithful (getTime is ms)
-        t.getTime / 1000 * 1000000L + t.getNanos / 1000
       // micro-batch rows arrive shuffle-ordered; the chart is sequential
-      rows.toSeq.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
+      rows.toSeq.sortBy(e => (microsOf(e.ts), e.event_id)).foreach { e =>
         val term = math.rint((e.value - kMicro / 1e6) * 1e6).toLong
         s = math.max(0L, s + term)
         n += 1
         if (s > hMicro) {
           alarms += 1
-          if (firstUs < 0) firstUs = us(e.ts)
+          if (firstUs < 0) firstUs = microsOf(e.ts)
         }
         if (s > maxS) maxS = s
       }
@@ -810,18 +808,27 @@ object Streams {
   }
 
   /** Per-user running (count, sum) in a RocksDB-backed ValueState. One
-    * class serves both the unbounded (TTLConfig.NONE) and the TTL'd
-    * variant — a single accumulation body, so the twins cannot drift. */
+    * class serves the unbounded (TTLConfig.NONE), the TTL'd and the
+    * bootstrapped variant — a single accumulation body, so the three
+    * cannot drift. The initial-state hook runs only when the query is
+    * built with the initial-state overload of `transformWithState`
+    * ([[userTotalsBootstrapped]]); the other two never call it. */
   class UserTotalsProcessor(
       ttl: org.apache.spark.sql.streaming.TTLConfig =
         org.apache.spark.sql.streaming.TTLConfig.NONE)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, UserTotals] {
+      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
+        Long, Event, UserTotals, (Long, Double)] {
     import org.apache.spark.sql.{Encoders, streaming}
     @transient private var totals: streaming.ValueState[(Long, Double)] = _
 
     override def init(outputMode: OutputMode, timeMode: streaming.TimeMode): Unit =
       totals = getHandle.getValueState[(Long, Double)]("totals",
         Encoders.product[(Long, Double)], ttl)
+
+    /** Installs pre-computed totals for a key the stream has not yet seen. */
+    override def handleInitialState(key: Long, initialState: (Long, Double),
+        timerValues: streaming.TimerValues): Unit =
+      totals.update(initialState)
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: streaming.TimerValues): Iterator[UserTotals] = {
@@ -1225,12 +1232,6 @@ object Streams {
           Encoders.scalaLong), streaming.TTLConfig.NONE)
     }
 
-    private def micro(x: Double): Long =
-      (BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP) *
-        BigDecimal(1000000)).toLongExact
-    private def r6(x: Double): Double =
-      BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: streaming.TimerValues): Iterator[HoltPoint] = {
       rows.foreach { e =>
@@ -1296,9 +1297,6 @@ object Streams {
     override def init(outputMode: OutputMode, timeMode: streaming.TimeMode): Unit =
       pending = getHandle.getListState[String]("pending_touches",
         Encoders.STRING, streaming.TTLConfig.NONE)
-
-    private def r6(x: Double): Double =
-      BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: streaming.TimerValues): Iterator[AttributedTouch] = {
@@ -1436,35 +1434,9 @@ object Streams {
     val init = initial.groupByKey(_._1).mapValues(t => (t._2, t._3))
     events
       .groupByKey(_.user_id)
-      .transformWithState(new UserTotalsBootstrapProcessor,
+      .transformWithState(new UserTotalsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update(), init)
-  }
-
-  /** Same accumulation body as [[UserTotalsProcessor]], plus the
-    * initial-state hook that installs pre-computed totals for keys the
-    * stream has not yet seen. */
-  class UserTotalsBootstrapProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        Long, Event, UserTotals, (Long, Double)] {
-    import org.apache.spark.sql.{Encoders, streaming}
-    @transient private var totals: streaming.ValueState[(Long, Double)] = _
-
-    override def init(outputMode: OutputMode, timeMode: streaming.TimeMode): Unit =
-      totals = getHandle.getValueState[(Long, Double)]("totals",
-        Encoders.product[(Long, Double)], streaming.TTLConfig.NONE)
-
-    override def handleInitialState(key: Long, initialState: (Long, Double),
-        timerValues: streaming.TimerValues): Unit =
-      totals.update(initialState)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: streaming.TimerValues): Iterator[UserTotals] = {
-      val prev = Option(totals.get()).getOrElse((0L, 0.0))
-      val next = rows.foldLeft(prev) { case ((n, s), e) => (n + 1, s + e.value) }
-      totals.update(next)
-      Iterator.single(UserTotals(key, next._1, next._2))
-    }
   }
 
   case class UserAccum(user_id: Long, first_ms: Long, last_ms: Long, n: Long)
@@ -1487,6 +1459,16 @@ object Streams {
     * µs-precision batch sessionizer). */
   private[streaming] def microsOf(t: java.sql.Timestamp): Long =
     math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  /** Half-up to 6 dp — the DECIMAL(18,6) rounding the batch twins apply. */
+  private[streaming] def r6(x: Double): Double =
+    BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** [[r6]] as an exact ×10⁶ long, for state that sums DECIMAL(18,6) terms. */
+  private[streaming] def micro(x: Double): Long =
+    (BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP) *
+      BigDecimal(1000000)).toLongExact
+
   case class UserTotals(user_id: Long, n: Long, sum_value: Double)
   case class CwState(emitted: Long, inWindow: Long, sum: Double)
   case class CountWindow(user_id: Long, window_idx: Long, sum_value: Double)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * folding, ledger upserts). That is exactly how L273's PSI monitor
   * already ships its reference distribution. */
 object Streams2 {
-  import Streams.{Event, microsOf}
+  import Streams.{Event, micro, microsOf, r6}
 
   // ----------------------------------------------------------------- HBOS
 
@@ -125,12 +125,6 @@ object Streams2 {
       frontier = getHandle.getValueState[Long]("stl_frontier_day",
         Encoders.scalaLong, streaming.TTLConfig.NONE)
     }
-
-    private def micro(x: Double): Long =
-      (BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP) *
-        BigDecimal(1000000)).toLongExact
-    private def r6(x: Double): Double =
-      BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: streaming.TimerValues): Iterator[StlPoint] = {

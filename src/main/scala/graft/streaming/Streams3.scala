@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.OutputMode
+import Streams.r6
 
 /** Round-15 streaming twin for the exact-substring dedup family. */
 object Streams3 {
@@ -300,10 +301,6 @@ object Streams3 {
         Encoders.scalaLong, streaming.TTLConfig.NONE)
     }
 
-    private def r6(x: Double): Double =
-      BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble
-
     override def handleInputRows(key: Long, rows: Iterator[HourPoint],
         timerValues: streaming.TimerValues): Iterator[AdwinPoint] = {
       // exists() guard: ValueState[Long].get() on absent state returns a
@@ -405,7 +402,7 @@ object Streams3 {
         val (newCs, newR2, action) =
           KcenterDoubling.step(cs, r2, p.vec_id, pe, k)
         cs = newCs; r2 = newR2
-        out += KcLog(p.vec_id, action, cs.length, KcenterDoubling.r6(r2))
+        out += KcLog(p.vec_id, action, cs.length, r6(r2))
       }
       centers.put(cs.map(c => VecPoint(c._1, c._2.toSeq)).toArray)
       r2state.update(r2)
@@ -609,8 +606,8 @@ object AdwinKernel {
   * construction). */
 object KcenterDoubling {
 
-  def r6(x: Double): Double =
-    BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  /** [[Streams.r6]], public for the spec's replica. */
+  def r6(x: Double): Double = Streams.r6(x)
 
   /** Round-6 squared distance with the index-order dot fold (the L381
     * ArrayMath parity order). */

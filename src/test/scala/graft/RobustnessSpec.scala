@@ -9,26 +9,11 @@ class RobustnessSpec extends SparkTestBase {
 
   private lazy val emptyDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
-    // raw events carries int64-nanos; readable only under this conf (the
-    // empty copy is written as plain INT64, which loads under any conf).
-    // Scoped: restore the session's prior value so this shared-session
-    // fixture can't leak conf into suites that run after it.
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val tables = Catalog.TableNames :+ "events"
-      tables.foreach { t =>
-        // limit(0) preserves the schema exactly as our loaders see it
-        // (events keeps its raw int64-nanos ts column)
-        Tables.table(spark, sf0001, t).limit(0)
-          .write.mode("overwrite").parquet(s"$dir/$t.parquet")
-      }
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val tables = Catalog.TableNames :+ "events"
+    tables.foreach { t =>
+      // limit(0) preserves the schema exactly as our loaders see it
+      Tables.table(spark, sf0001, t).limit(0)
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
     }
     dir
   }
@@ -44,5 +29,29 @@ class RobustnessSpec extends SparkTestBase {
     }
     assert(failures.isEmpty,
       s"${failures.size} queries fail on empty input:\n${failures.mkString("\n")}")
+  }
+
+  test("loading events leaves the session conf untouched") {
+    val fresh = spark.newSession()
+    val key = org.apache.spark.sql.internal.SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key
+    val ev = Tables.events(fresh, sf0001)
+    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(fresh.conf.getAll.get(key).isEmpty, s"$key was set by the loader")
+  }
+
+  test("a timestamp[ns] events file fails to load instead of being misread") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft-ns").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter.builder(
+      new org.apache.hadoop.fs.Path(s"$dir/events.parquet")).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 1704067200000000000L))
+    finally w.close()
+    val e = intercept[Exception](Tables.events(spark.newSession(), dir).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("PARQUET_TYPE_ILLEGAL")), e.toString)
   }
 }

@@ -26,9 +26,6 @@ class ScaleRehearsalSpec extends SparkTestBase {
 
   private lazy val scaledDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-scale10x").toString
-    // events.ts is parquet ns → read raw as long (the rewrite keeps ts as a
-    // plain int64 column, which Tables.events normalizes identically)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def times10(df: DataFrame, idCols: Seq[String]): DataFrame =
       (0 until K).map { i =>
         idCols.foldLeft(df)((d, c) => d.withColumn(c, col(c) * K + lit(i.toLong)))

@@ -1052,6 +1052,32 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("I6f: CUSUM alarm time floors pre-1970 instants to the µs below") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(providerKey)
+    spark.conf.set(providerKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ms = MemoryStream[Event]
+    val q = runToTable(Streams.cusumTws(ms.toDS()).toDF(), "tws_cusum_pre1970", "update")
+    try {
+      val t = java.sql.Timestamp.from(java.time.Instant.parse("1969-12-31T23:59:59.5Z"))
+      ms.addData(Event(1L, t, 1L, "purchase", 300.0))
+      q.processAllAvailable()
+      val got = spark.table("tws_cusum_pre1970")
+        .select($"n_alarms", $"first_alarm_us").as[(Long, Long)].collect().toSeq
+      assert(got == Seq((1L, -500000L)), s"alarm row: $got")
+    } finally {
+      q.stop()
+      prev match {
+        case Some(v) => spark.conf.set(providerKey, v)
+        case None => spark.conf.unset(providerKey)
+      }
+    }
+  }
+
   test("online SNM: sorted-buffer pairs across batches, prefix-keyed, bounded state; precision 1 on the fixture") {
     val s = spark
     import s.implicits._
