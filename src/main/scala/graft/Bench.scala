@@ -261,17 +261,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the 381-query suite generates far more than the default 100
-      // codegen cache entries, so every rep regenerated + re-JIT-ed its
-      // classes (the r16 "re-JIT churn" tax); sized to hold the whole
-      // suite's generated classes (round-17 measurement in SURVEY §8r)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm every query once at the smallest fixture before timing: the
     // generated-code cache is keyed on plan shape (not input path), so this

@@ -159,4 +159,19 @@ object Tables {
       s"list_transform(range(1,13), hx_i -> " +
       s"CAST(strpos('0123456789abcdef', substr(md5($e),hx_i,1)) - 1 AS BIGINT))), " +
       s"(hx_a,hx_b) -> hx_a*16 + hx_b)"
+
+  /** DuckDB twin of [[dsum]]. */
+  def dsumSql(e: String): String = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
+
+  /** DuckDB twin of [[davg]]. */
+  def davgSql(e: String): String = s"${dsumSql(e)} / CAST(COUNT($e) AS DOUBLE)"
+
+  /** DuckDB twin of `ArrayMath.dotProduct` over two 64-dim FLOAT[]
+    * embeddings: doubles, index order. */
+  def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(range(1,65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+
+  /** DuckDB twin of `ArrayMath.l2Norm`. */
+  def normSql(a: String): String =
+    s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 }

@@ -1510,7 +1510,6 @@ object Analytics {
   )
 
   private val evTs = "CAST(ts AS TIMESTAMP)"
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
   val oracles: Map[String, String] = Map(
     "graph_rich_club" ->

@@ -453,7 +453,6 @@ object Joins {
   )
 
   private val evTs = "CAST(ts AS TIMESTAMP)"
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
   val oracles: Map[String, String] = Map(
     "cep_relaxed_blocks" ->

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.{dotProduct, l2Norm}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,20 +42,6 @@ object Llm {
 
   /** Embedding dimensionality (FIXTURES.md: fixed dim=64). */
   private val Dim = 64
-
-  /** Dot product of two DOUBLE arrays — native codegen'd kernel
-    * ([[graft.functions.DotProduct]]), ascending-index order, bit-identical
-    * to the oracle's index-order list_sum. Inputs are pre-cast to double
-    * once per *vector* (see [[withNorm]]), not once per pair.
-    * (Two alternatives measured at sf0.1 on llm_dedup_embed and rejected:
-    * `zip_with`+`aggregate` HOF fold = interpreted lambdas, ~12.5 s; a
-    * 64-term unrolled expression falls out of whole-stage codegen, ~51 s.) */
-  private def dotCol(a: Column, b: Column): Column =
-    graft.functions.ArrayMath.dotProduct(a, b)
-
-  /** L2 norm of a double array. */
-  private def normCol(a: Column): Column =
-    graft.functions.ArrayMath.l2Norm(a)
 
   // ------------------------------------------------------------------
   // J1 — exact dedup
@@ -482,7 +469,7 @@ object Llm {
       .select(col("vec_id"), col("embedding"), col("nrm"),
         posexplode(typedlit(centRows)))
       .withColumn("cos_c", round(
-        graft.functions.ArrayMath.dotProduct(col("embedding"), col("col._2")) /
+        dotProduct(col("embedding"), col("col._2")) /
           (col("nrm") * col("col._3")), 6))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("cos_c").desc, col("col._1").asc)))
@@ -491,7 +478,7 @@ object Llm {
     val pruned = assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") > col("b.vec_id"))
       .where(round(
-        graft.functions.ArrayMath.dotProduct(col("a.embedding"), col("b.embedding")) /
+        dotProduct(col("a.embedding"), col("b.embedding")) /
           (col("a.nrm") * col("b.nrm")), 6) >= tau)
       .select(col("a.vec_id")).distinct()
       .withColumn("is_pruned", lit(true))
@@ -509,7 +496,7 @@ object Llm {
     * all similarity math downstream is pure double folds. */
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("embedding", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", normCol(col("embedding")))
+      .withColumn("nrm", l2Norm(col("embedding")))
 
   /** Query vectors a [[simTopk]] run may broadcast; beyond this the query
     * set itself should be bucketed (annLsh) rather than shipped whole. */
@@ -668,7 +655,7 @@ object Llm {
     val cand = e.select(col("vec_id"), col("embedding"), col("nrm"), col("bucket"))
     val scored = q.join(cand, Seq("bucket")).where(col("qid") =!= col("vec_id"))
       .select(col("qid"), col("bucket"), col("vec_id"),
-        round(dotCol(col("qemb"), col("embedding")) / (col("qnrm") * col("nrm")), 6).as("cos_r"))
+        round(dotProduct(col("qemb"), col("embedding")) / (col("qnrm") * col("nrm")), 6).as("cos_r"))
     val w = Window.partitionBy(col("qid")).orderBy(col("cos_r").desc, col("vec_id").asc)
     val best = scored.withColumn("rn", row_number().over(w))
       .groupBy(col("qid"))
@@ -891,12 +878,6 @@ object Llm {
   // ---- DuckDB oracles ----
 
   private def h48S(e: String): String = graft.Tables.h48Sql(e)
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
-  /** DuckDB dot product of two FLOAT[] in doubles, index order. */
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1,65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-  private def normSql(a: String): String =
-    s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
   /** DuckDB CTE chain ending in `cand(d1, d2)` — banded candidate pairs,
     * the oracle twin of [[nearCandidates]]. CTE names are nc_-prefixed so

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.{dotProduct, l2Norm}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,11 +29,6 @@ import org.apache.spark.sql.functions._
   * adds only |Q|-grain joins on top. */
 object Llm15 {
 
-  private def dotCol(a: Column, b: Column) =
-    graft.functions.ArrayMath.dotProduct(a, b)
-  private def normCol(a: Column) =
-    graft.functions.ArrayMath.l2Norm(a)
-
   private val K = 5 // retrieval depth AND |Q| (queries = vec_id < 5)
 
   /** Ground-truth stop-shingle document-frequency cap — see
@@ -48,7 +44,7 @@ object Llm15 {
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", normCol(col("emb")))
+      .withColumn("nrm", l2Norm(col("emb")))
       .select(col("vec_id"), col("label"), col("emb"), col("nrm"))
 
     val qs = e.where(col("vec_id") < K).select(col("vec_id").as("qid"))
@@ -65,14 +61,14 @@ object Llm15 {
         Seq("bucket"))
       .where(col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id"),
-        round(dotCol(col("qemb"), col("embedding")) / (col("qnrm") * col("nrm")), 6)
+        round(dotProduct(col("qemb"), col("embedding")) / (col("qnrm") * col("nrm")), 6)
           .as("cos_r"))
 
     // --- IVF: candidates live in the one probed centroid cell
     val ivfScored = Llm2.ivfProbe(spark, dir)
       .join(e, col("cell") === e("label") && col("qid") =!= e("vec_id"))
       .select(col("qid"), col("vec_id"),
-        round(dotCol(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")), 6)
+        round(dotProduct(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")), 6)
           .as("cos_r"))
 
     // --- PQ: the full ADC table (code scan over the whole corpus)
@@ -269,8 +265,6 @@ object Llm15 {
 
   private def dotSql(a: String, b: String): String =
     s"list_sum(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-  private def normSql(a: String): String =
-    s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
   private def methodSql(m: String, five: String, cand: String): String =
     s"""SELECT '$m' AS method,

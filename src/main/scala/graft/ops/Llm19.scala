@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.Tables._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.ArrayMath.{dotProduct, l2Norm}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,15 +33,10 @@ object Llm19 {
     * the last row an exact-recall anchor by construction. */
   private[graft] val Probes = Seq(1, 2, 4, 10)
 
-  private def dotCol(a: Column, b: Column) =
-    graft.functions.ArrayMath.dotProduct(a, b)
-  private def normCol(a: Column) =
-    graft.functions.ArrayMath.l2Norm(a)
-
   def ivfMultiprobe(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", normCol(col("emb")))
+      .withColumn("nrm", l2Norm(col("emb")))
       .select(col("vec_id"), col("label"), col("emb"), col("nrm"))
     val qs = e.where(col("vec_id") < K).select(col("vec_id").as("qid"))
     // exact cosine top-5 ground truth — the L397 audit's anchor set
@@ -55,7 +51,7 @@ object Llm19 {
       val scored = cells
         .join(e, col("cell") === e("label") && col("qid") =!= e("vec_id"))
         .select(col("qid"), col("vec_id"),
-          round(dotCol(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")), 6)
+          round(dotProduct(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")), 6)
             .as("cos_r"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("cos_r").desc, col("vec_id").asc)

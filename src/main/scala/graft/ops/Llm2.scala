@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.{dotProduct, l2Norm}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,14 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Llm2 {
 
-  /** Embedding dimensionality (FIXTURES.md: fixed dim=64). */
-  private val Dim = 64
-
-  private def dotCol(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.functions.ArrayMath.dotProduct(a, b)
-  private def normCol(a: org.apache.spark.sql.Column) =
-    graft.functions.ArrayMath.l2Norm(a)
-
   /** The IVF probe stage, shared with [[Llm5.ivfpqAnn]]: per query
     * (vec_id<5) its nearest cell centroid — cells = label groups,
     * centroid = exact decimal-mean per dimension (deterministic across
@@ -45,7 +38,7 @@ object Llm2 {
   private[graft] def ivfProbe(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", normCol(col("emb")))
+      .withColumn("nrm", l2Norm(col("emb")))
 
     // Centroids: mean per (label, dim) via exact decimal sums, reassembled
     // into an ordered array per label. |labels|·64 rows — broadcastable.
@@ -56,7 +49,7 @@ object Llm2 {
       .groupBy("label")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         s => s.getField("c")).as("cemb"))
-      .withColumn("cnrm", normCol(col("cemb")))
+      .withColumn("cnrm", l2Norm(col("cemb")))
 
     val q = e.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("emb").as("qemb"), col("nrm").as("qnrm"))
@@ -73,7 +66,7 @@ object Llm2 {
   private[graft] def ivfProbeRanked(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", normCol(col("emb")))
+      .withColumn("nrm", l2Norm(col("emb")))
     val centroids = e
       .select(col("label"), posexplode(col("emb")).as(Seq("pos", "x")))
       .groupBy("label", "pos")
@@ -81,7 +74,7 @@ object Llm2 {
       .groupBy("label")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         s => s.getField("c")).as("cemb"))
-      .withColumn("cnrm", normCol(col("cemb")))
+      .withColumn("cnrm", l2Norm(col("cemb")))
     val q = e.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("emb").as("qemb"), col("nrm").as("qnrm"))
     ivfProbeRankedFrom(q, centroids)
@@ -92,7 +85,7 @@ object Llm2 {
       .orderBy(col("cos_c").desc, col("label").asc)
     q.crossJoin(broadcast(centroids))
       .select(col("qid"), col("qemb"), col("qnrm"), col("label"),
-        round(dotCol(col("qemb"), col("cemb")) / (col("qnrm") * col("cnrm")), 6).as("cos_c"))
+        round(dotProduct(col("qemb"), col("cemb")) / (col("qnrm") * col("cnrm")), 6).as("cos_c"))
       .withColumn("rn", row_number().over(wProbe))
   }
 
@@ -104,7 +97,7 @@ object Llm2 {
   def ivfAnn(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", normCol(col("emb")))
+      .withColumn("nrm", l2Norm(col("emb")))
     val probed = ivfProbe(spark, dir)
 
     // Search: equi-join on the probed cell, exact cosine top-3.
@@ -112,7 +105,7 @@ object Llm2 {
       .orderBy(col("cos_r").desc, col("vec_id").asc)
     probed.join(e, probed("cell") === e("label") && col("qid") =!= col("vec_id"))
       .select(col("qid"), col("cell"), col("vec_id"),
-        round(dotCol(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")), 6).as("cos_r"))
+        round(dotProduct(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")), 6).as("cos_r"))
       .withColumn("rn", row_number().over(wRank))
       .where(col("rn") <= 3)
       .orderBy("qid", "rn")
@@ -134,7 +127,7 @@ object Llm2 {
   private def centroidAssignment(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", normCol(col("emb")))
+      .withColumn("nrm", l2Norm(col("emb")))
     val centroids = e
       .select(col("label"), posexplode(col("emb")).as(Seq("pos", "x")))
       .groupBy("label", "pos")
@@ -142,14 +135,14 @@ object Llm2 {
       .groupBy("label")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         s => s.getField("c")).as("cemb"))
-      .withColumn("cnrm", normCol(col("cemb")))
+      .withColumn("cnrm", l2Norm(col("cemb")))
       .select(col("label").as("cluster"), col("cemb"), col("cnrm"))
 
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("cos_c").desc, col("cluster").asc)
     e.crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("label"), col("cluster"),
-        round(dotCol(col("emb"), col("cemb")) / (col("nrm") * col("cnrm")), 6).as("cos_c"))
+        round(dotProduct(col("emb"), col("cemb")) / (col("nrm") * col("cnrm")), 6).as("cos_c"))
       .withColumn("rn", row_number().over(wAssign))
       .where(col("rn") === 1)
   }
@@ -314,12 +307,6 @@ object Llm2 {
     "llm_centroid_accuracy" -> (centroidAccuracy _),
   )
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
-  /** DuckDB dot product over the first 64 positions, double index-order. */
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1,${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-  private def normSql(a: String): String =
-    s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
   val oracles: Map[String, String] = Map(
     "llm_centroid_accuracy" ->

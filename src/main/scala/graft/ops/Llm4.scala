@@ -314,12 +314,6 @@ object Llm4 {
     "llm_knn_label" -> (knnLabel _),
   )
 
-  /** DuckDB dot/norm over FLOAT[] in doubles, index order (same forms as
-    * the Llm.scala embedding oracles). */
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1,65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-  private def normSql(a: String): String =
-    s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
   val oracles: Map[String, String] = Map(
     "llm_knn_label" ->

@@ -243,11 +243,8 @@ object Llm5 {
           SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
             ORDER BY d2 ASC, j ASC) AS rk FROM d2s) WHERE rk = 1)"""
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
   private def dotSql(a: String, b: String): String =
     s"list_sum(list_transform(range(1, ${M * Dsub + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-  private def normSql(a: String): String =
-    s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
   /** The IVF probe as DuckDB CTEs — text-identical math to the
     * `llm_ivf_ann` oracle in [[Llm2]] (decimal-mean centroids, 6-dp

@@ -419,11 +419,6 @@ object Llm8 {
     "llm_dedup_keep_best" -> (dedupKeepBest _),
   )
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1,65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-  private def normSql(a: String): String =
-    s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
   val oracles: Map[String, String] = Map(
     "llm_containment_dedup" ->

@@ -589,7 +589,6 @@ object Llm9 {
     "ml_ols_multi" -> (olsMulti _),
   )
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
   private def dotNSql(a: String, b: String, n: Int): String =
     s"list_sum(list_transform(range(1,${n + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"

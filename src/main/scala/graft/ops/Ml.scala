@@ -974,7 +974,6 @@ object Ml {
   )
 
   private val Dim = 64
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
   /** DuckDB twin of [[scoredDocs]] (shared CTE text for the eval rows). */
   private val scoredSql =

@@ -292,9 +292,6 @@ object Relational {
   )
 
   private val evTs = "CAST(ts AS TIMESTAMP)"
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
-  private def davgSql(e: String) =
-    s"${dsumSql(e)} / CAST(COUNT($e) AS DOUBLE)"
 
   val oracles: Map[String, String] = Map(
     "src_events_scan" ->

@@ -72,8 +72,6 @@ object Scalars {
     "scalar_array_embedding_norm" -> (scalarArrayEmbeddingNorm _),
   )
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
-  private def davgSql(e: String) = s"${dsumSql(e)} / CAST(COUNT($e) AS DOUBLE)"
 
   val oracles: Map[String, String] = Map(
     "scalar_string_docs" ->

@@ -21,7 +21,6 @@ import org.apache.spark.sql.functions._
   * [[graft.Tables.dsum]] decimal quantization. */
 object Stats {
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
   private val evTs = "CAST(ts AS TIMESTAMP)"
 
   /** L251 — Gini coefficient + Lorenz curve of customer revenue (the

@@ -15,7 +15,6 @@ import org.apache.spark.sql.functions._
   * site and every double sum goes through [[graft.Tables.dsum]]. */
 object Stats2 {
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
   private val evTs = "CAST(ts AS TIMESTAMP)"
 
   /** L274 — Welch's two-sample t-test, click vs purchase event values

@@ -166,8 +166,6 @@ object Stats5 {
     "ml_conformal_interval" -> (conformalInterval _),
   )
 
-  private def dsumSql(e: String) =
-    s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
   private val evTs = "CAST(ts AS TIMESTAMP)"
 
   val oracles: Map[String, String] = Map(

@@ -1279,7 +1279,6 @@ object Warehouse {
   )
 
   private val evTs = "CAST(ts AS TIMESTAMP)"
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
   val oracles: Map[String, String] = Map(
     "tpch_q3_shipping_priority" ->

@@ -198,7 +198,6 @@ object Warehouse2 {
     "tpch_q19_discount_bands" -> (tpchQ19 _),
   )
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
   val oracles: Map[String, String] = Map(
     "tpch_q7_nation_volume" ->

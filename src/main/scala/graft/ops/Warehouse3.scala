@@ -273,7 +273,6 @@ object Warehouse3 {
     "tpch_q22_idle_customers" -> (tpchQ22 _),
   )
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
   private def davgSql(e: String) =
     s"(${dsumSql(e)} / CAST(COUNT($e) AS DOUBLE))"
 

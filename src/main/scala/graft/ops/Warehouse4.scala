@@ -214,7 +214,6 @@ object Warehouse4 {
   )
 
   private val evTs = "CAST(ts AS TIMESTAMP)"
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
   val oracles: Map[String, String] = Map(
     "sample_weighted_reservoir" -> {

@@ -899,7 +899,6 @@ object Warehouse5 {
     "ts_stl_decompose" -> (stlDecompose _),
   )
 
-  private def dsumSql(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
   private val evTs = "CAST(ts AS TIMESTAMP)"
 
   val oracles: Map[String, String] = Map(

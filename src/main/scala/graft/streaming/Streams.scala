@@ -797,7 +797,8 @@ object Streams {
 
   /** I6 via the Spark 4 `transformWithState` API — the nearest 1:1 analogue
     * of Flink's `KeyedProcessFunction` + `ValueState` (SURVEY.md §1.1).
-    * Requires the RocksDB state store provider (asserted in the spec). */
+    * Needs the RocksDB state store provider, which [[graft.Session]] sets
+    * for every session. */
   def userTotalsTws(events: Dataset[Event]): Dataset[UserTotals] = {
     import events.sparkSession.implicits._
     events
@@ -937,15 +938,28 @@ object Streams {
       sess = getHandle.getValueState[(Long, Double, Long)]("sess",
         Encoders.product[(Long, Double, Long)], streaming.TTLConfig.NONE)
 
+    /** Same rule as the GroupState twin [[timerSessions]]: an event more
+      * than `gapMs` after the open session's last event emits that session
+      * and opens a new one, so in-batch gaps split without a timer. */
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: streaming.TimerValues): Iterator[TimerSession] = {
-      var st = Option(sess.get()).getOrElse((0L, 0.0, Long.MinValue))
-      rows.toSeq.sortBy(e => microsOf(e.ts)).foreach { e =>
-        st = (st._1 + 1, st._2 + e.value, math.max(st._3, microsOf(e.ts)))
+      var open = Option(sess.get())
+      val out = Seq.newBuilder[TimerSession]
+      for (e <- rows.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))) {
+        val t = microsOf(e.ts)
+        open = open match {
+          case Some((n, v, last)) if t - last > gapMs * 1000L =>
+            out += TimerSession(key, n, v, last)
+            Some((1L, e.value, t))
+          case Some((n, v, last)) => Some((n + 1, v + e.value, math.max(last, t)))
+          case None => Some((1L, e.value, t))
+        }
       }
-      sess.update(st)
-      getHandle.registerTimer(st._3 / 1000 + gapMs)
-      Iterator.empty
+      open.foreach { st =>
+        sess.update(st)
+        getHandle.registerTimer(st._3 / 1000 + gapMs)
+      }
+      out.result().iterator
     }
 
     override def handleExpiredTimer(key: Long,

@@ -13,12 +13,7 @@ class AsOfSpec extends AnyFunSuite {
     val base = SparkTestSession.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
+    val s = Session.builder(4).withExtensions(new plans.GraftExtensions).getOrCreate()
     SparkSession.setDefaultSession(base)
     SparkSession.setActiveSession(base)
     s

@@ -14,13 +14,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val base = SparkTestSession.spark // ensures the shared context exists
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
+    val s = Session.builder(4).withExtensions(new plans.GraftExtensions).getOrCreate()
     SparkSession.setDefaultSession(base)
     SparkSession.setActiveSession(base)
     s

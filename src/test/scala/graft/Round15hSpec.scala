@@ -91,33 +91,24 @@ class Round15hSpec extends SparkTestBase {
     import s.implicits._
     implicit val ctx = s.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val pts = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding"))
+      .collect().sortBy(_.getLong(0))
+      .map(r => streaming.Streams3.VecPoint(r.getLong(0),
+        r.getSeq[Float](1).map(_.toDouble)))
+    val ms = MemoryStream[streaming.Streams3.VecPoint]
+    val q = streaming.Streams3.kcenterDoublingTws(ms.toDS(), k = 8)
+      .toDF().writeStream.format("memory")
+      .queryName(s"kc_tws_$chunks").outputMode("append").start()
     try {
-      val pts = Tables.embeddings(spark, sf0001)
-        .select(col("vec_id"), col("embedding"))
-        .collect().sortBy(_.getLong(0))
-        .map(r => streaming.Streams3.VecPoint(r.getLong(0),
-          r.getSeq[Float](1).map(_.toDouble)))
-      val ms = MemoryStream[streaming.Streams3.VecPoint]
-      val q = streaming.Streams3.kcenterDoublingTws(ms.toDS(), k = 8)
-        .toDF().writeStream.format("memory")
-        .queryName(s"kc_tws_$chunks").outputMode("append").start()
-      try {
-        pts.grouped((pts.length + chunks - 1) / chunks).foreach { c =>
-          ms.addData(c.toSeq: _*)
-          q.processAllAvailable()
-        }
-        spark.table(s"kc_tws_$chunks")
-          .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
-            r.getDouble(3))).sortBy(_._1).toSeq
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+      pts.grouped((pts.length + chunks - 1) / chunks).foreach { c =>
+        ms.addData(c.toSeq: _*)
+        q.processAllAvailable()
+      }
+      spark.table(s"kc_tws_$chunks")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
+          r.getDouble(3))).sortBy(_._1).toSeq
+    } finally q.stop()
   }
 
   test("doubling k-center: decision log is micro-batch-split invariant and equals the JVM replica") {

@@ -45,33 +45,24 @@ class Round15jSpec extends SparkTestBase {
     import s.implicits._
     implicit val ctx = s.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val points = monitoredSeries().flatMap { case (b, x) =>
-        Seq(streaming.Streams3.HourPoint(b, x / 2),
-          streaming.Streams3.HourPoint(b, x - x / 2))
-      }
-      val ms = MemoryStream[streaming.Streams3.HourPoint]
-      val q = streaming.Streams3.adwinTws(ms.toDS())
-        .toDF().writeStream.format("memory")
-        .queryName(s"adwin_tws_$chunks").outputMode("append").start()
-      try {
-        points.grouped((points.length + chunks - 1) / chunks).foreach { c =>
-          ms.addData(c.toSeq: _*)
-          q.processAllAvailable()
-        }
-        spark.table(s"adwin_tws_$chunks")
-          .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2),
-            r.getDouble(3), r.getLong(4), r.getBoolean(5)))
-          .sortBy(_._1).toSeq
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
+    val points = monitoredSeries().flatMap { case (b, x) =>
+      Seq(streaming.Streams3.HourPoint(b, x / 2),
+        streaming.Streams3.HourPoint(b, x - x / 2))
     }
+    val ms = MemoryStream[streaming.Streams3.HourPoint]
+    val q = streaming.Streams3.adwinTws(ms.toDS())
+      .toDF().writeStream.format("memory")
+      .queryName(s"adwin_tws_$chunks").outputMode("append").start()
+    try {
+      points.grouped((points.length + chunks - 1) / chunks).foreach { c =>
+        ms.addData(c.toSeq: _*)
+        q.processAllAvailable()
+      }
+      spark.table(s"adwin_tws_$chunks")
+        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2),
+          r.getDouble(3), r.getLong(4), r.getBoolean(5)))
+        .sortBy(_._1).toSeq
+    } finally q.stop()
   }
 
   test("ADWIN: chunking-invariant, equals the shared-kernel replica, stable pre-drift, collapses post-drift") {

@@ -160,31 +160,22 @@ class Round16Spec extends SparkTestBase {
     import s.implicits._
     implicit val ctx = s.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    def hp(h: Long, x: Long) = streaming.Streams3.HourPoint(h * 3600000000L, x)
+    val ms = MemoryStream[streaming.Streams3.HourPoint]
+    val name = s"ph_late_$injectLate"
+    val q = streaming.Streams3.pageHinkleyTws(ms.toDS(), 12000000L, 250000L)
+      .toDF().writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
     try {
-      def hp(h: Long, x: Long) = streaming.Streams3.HourPoint(h * 3600000000L, x)
-      val ms = MemoryStream[streaming.Streams3.HourPoint]
-      val name = s"ph_late_$injectLate"
-      val q = streaming.Streams3.pageHinkleyTws(ms.toDS(), 12000000L, 250000L)
-        .toDF().writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-      try {
-        ms.addData(hp(1, 1000000L), hp(2, 1100000L), hp(3, 900000L))
-        q.processAllAvailable() // hours 1 and 2 close and fold
-        if (injectLate) ms.addData(hp(1, 5000000L)) // stale partial
-        ms.addData(hp(4, 1200000L), hp(5, 1000000L))
-        q.processAllAvailable()
-        spark.table(name).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          .sortBy(_._1).toSeq
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+      ms.addData(hp(1, 1000000L), hp(2, 1100000L), hp(3, 900000L))
+      q.processAllAvailable() // hours 1 and 2 close and fold
+      if (injectLate) ms.addData(hp(1, 5000000L)) // stale partial
+      ms.addData(hp(4, 1200000L), hp(5, 1000000L))
+      q.processAllAvailable()
+      spark.table(name).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .sortBy(_._1).toSeq
+    } finally q.stop()
   }
 
   test("Page–Hinkley frontier: a late partial for a closed hour is dropped, not re-folded") {

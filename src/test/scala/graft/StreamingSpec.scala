@@ -523,10 +523,6 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.userTotalsTws(ms.toDS()).toDF(), "tws", "update")
     try {
@@ -539,23 +535,13 @@ class StreamingSpec extends SparkTestBase {
         .orderBy($"n".desc).limit(1).select($"n", $"sum_value")
         .as[(Long, Double)].head()
       assert(last === ((3L, 8.0)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("I6e: ListState buffer stays bounded and MapState counts accumulate across batches") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.userProfileTws(ms.toDS(), keepN = 3).toDF(), "profile", "update")
     try {
@@ -571,13 +557,7 @@ class StreamingSpec extends SparkTestBase {
       // BOTH batches — list trimmed, map accumulated, both in RocksDB
       assert(last.recent === Seq(2L, 3L, 4L), last.recent)
       assert(last.type_counts === Seq(("click", 3L), ("view", 1L)), last.type_counts)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("A10: upsert sink keeps the latest row per key across batches (staging swap)") {
@@ -790,10 +770,6 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.timerSessionsTws(ms.toDS()).toDF(), "tws_timer", "append")
     try {
@@ -823,23 +799,36 @@ class StreamingSpec extends SparkTestBase {
       val got = spark.table("tws_timer").where($"user_id" === 1)
         .select($"n_events", $"sum_value").as[(Long, Double)].collect().toSet
       assert(got === Set((2L, 4.0), (1L, 4.0)), got)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
+  }
+
+  test("I6f: transformWithState timer sessions split an in-batch gap like the GroupState twin") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val ms = MemoryStream[Event]
+    val q = runToTable(Streams.timerSessionsTws(ms.toDS()).toDF(), "tws_timer_gap", "append")
+    try {
+      // one batch, two events 3h apart (> the 2h gap): two sessions
+      ms.addData(ev(1, "2024-01-01 10:00:00", 1, "click", 1.0),
+        ev(2, "2024-01-01 13:00:00", 1, "view", 2.0))
+      q.processAllAvailable()
+      ms.addData(ev(-1, "2030-01-01 00:00:00", -1, "click", 0.0))
+      q.processAllAvailable()
+      ms.addData(ev(-2, "2030-06-01 00:00:00", -1, "click", 0.0))
+      q.processAllAvailable()
+      val got = spark.table("tws_timer_gap").where($"user_id" === 1)
+        .select($"n_events", $"sum_value", $"last_us").as[(Long, Double, Long)]
+        .collect().toSet
+      assert(got === Set((1L, 1.0, usOf("2024-01-01 10:00:00")),
+        (1L, 2.0, usOf("2024-01-01 13:00:00"))), got)
+    } finally q.stop()
   }
 
   test("I4d: dynamic-gap sessions — a purchase's 4h window outlives a click's 1h; boundary closes in-line") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.dynamicGapSessionsTws(ms.toDS()).toDF(), "tws_dyn", "append")
     try {
@@ -872,13 +861,7 @@ class StreamingSpec extends SparkTestBase {
         .as[(Long, Double, Long, Long)].collect().toSet
       assert(all === afterInline + ((1L, 1.0,
         usOf("2024-01-01 14:30:00"), usOf("2024-01-01 15:30:00"))), all)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("I4d+L97: dynamic-gap streaming sessions equal the batch twin on the whole fixture") {
@@ -893,10 +876,6 @@ class StreamingSpec extends SparkTestBase {
     // split at a strict ts boundary so the 0s watermark drops nothing
     val cut = rows(rows.length / 2).ts.getTime
     val (b1, b2) = rows.partition(_.ts.getTime < cut)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.dynamicGapSessionsTws(ms.toDS()).toDF(), "tws_dyn_eq", "append")
     try {
@@ -923,23 +902,13 @@ class StreamingSpec extends SparkTestBase {
         assert(math.abs(streamed(k) - v) < 1e-6, s"sum mismatch at $k: ${streamed(k)} vs $v")
       }
       assert(batch.nonEmpty)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("I5b: count-trigger fires every 3rd element over the last-5 evicted pane, across batches") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.countTriggerWindowTws(ms.toDS()).toDF(), "tws_cte", "append")
     try {
@@ -957,13 +926,7 @@ class StreamingSpec extends SparkTestBase {
         .select($"fire_seq", $"n_in_window", $"win_sum")
         .as[(Long, Long, Double)].collect().toSet
       assert(got === Set((1L, 3L, 6.0), (2L, 5L, 20.0)), got)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("I5b+L97: streamed count-trigger windows equal the batch twin on the whole fixture") {
@@ -977,10 +940,6 @@ class StreamingSpec extends SparkTestBase {
       .sortBy(e => (e.ts.getTime, e.event_id))
     val cut = rows(rows.length / 2).ts.getTime
     val (b1, b2) = rows.partition(_.ts.getTime < cut)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.countTriggerWindowTws(ms.toDS()).toDF(), "tws_cte_eq", "append")
     try {
@@ -1000,13 +959,7 @@ class StreamingSpec extends SparkTestBase {
         assert(math.abs(streamed(k) - v) < 1e-6, s"pane sum mismatch at $k: ${streamed(k)} vs $v")
       }
       assert(batch.nonEmpty)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("I6f+L216: streaming CUSUM equals the batch control chart on the whole fixture") {
@@ -1021,10 +974,6 @@ class StreamingSpec extends SparkTestBase {
     // three ts-ordered slices so the recursion crosses state boundaries
     val (b1, rest) = rows.splitAt(rows.length / 3)
     val (b2, b3) = rest.splitAt(rest.length / 2)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.cusumTws(ms.toDS()).toDF(), "tws_cusum_eq", "update")
     try {
@@ -1043,23 +992,13 @@ class StreamingSpec extends SparkTestBase {
       assert(streamed == batch,
         s"streaming chart diverged:\n  stream $streamed\n  batch  $batch")
       assert(batch.map(_._3).sum > 0, "no alarms anywhere — dead chart")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("I6f: CUSUM alarm time floors pre-1970 instants to the µs below") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.cusumTws(ms.toDS()).toDF(), "tws_cusum_pre1970", "update")
     try {
@@ -1069,23 +1008,13 @@ class StreamingSpec extends SparkTestBase {
       val got = spark.table("tws_cusum_pre1970")
         .select($"n_alarms", $"first_alarm_us").as[(Long, Long)].collect().toSeq
       assert(got == Seq((1L, -500000L)), s"alarm row: $got")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("online SNM: sorted-buffer pairs across batches, prefix-keyed, bounded state; precision 1 on the fixture") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Streams.StreamDoc]
     val q = runToTable(Streams.streamingSnm(ms.toDS()).toDF(), "snm_stream", "append")
     try {
@@ -1125,23 +1054,13 @@ class StreamingSpec extends SparkTestBase {
           s"pair ($a,$b) emitted wrong verify arithmetic")
         assert(10 * inter >= 9 * uni, s"pair ($a,$b) below threshold emitted")
       }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("I6g: initial state bootstraps keyed totals — a migrated job resumes, not restarts") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     // "savepoint": user 1 had (2 events, 10.0) before the cutover
     val seed = Seq((1L, 2L, 10.0)).toDS()
@@ -1156,23 +1075,13 @@ class StreamingSpec extends SparkTestBase {
         .collect().toSet
       // user 1 RESUMES from the seeded (2, 10.0); unseeded user 2 starts fresh
       assert(got === Set((1L, 3L, 11.5), (2L, 1L, 2.0)), got)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("I6c: value state expires after its TTL — the key restarts instead of resuming") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     // discrete single-batch runs over one checkpoint: the realistic
     // incremental shape for processing-time TTL, and the only settle-able
@@ -1196,27 +1105,20 @@ class StreamingSpec extends SparkTestBase {
       try assert(q.awaitTermination(120000), "single-batch run did not finish")
       finally if (q.isActive) q.stop()
     }
-    try {
-      ms.addData(ev(1, "2024-01-01 10:00:00", 1, "click", 1.5),
-        ev(2, "2024-01-01 10:01:00", 1, "click", 2.5))
-      runOnce()
-      val r1 = out.toArray(Array.empty[(Long, Double)])
-      assert(r1.contains((2L, 4.0)), r1.mkString(", "))
-      out.clear()
-      Thread.sleep(2500) // let the processing-time TTL lapse
-      ms.addData(ev(3, "2024-01-01 10:02:00", 1, "view", 4.0))
-      runOnce()
-      // expired state restarts the key at (1, 4.0); live state would
-      // have resumed to (3, 8.0)
-      val r2 = out.toArray(Array.empty[(Long, Double)])
-      assert(r2.contains((1L, 4.0)) && !r2.contains((3L, 8.0)),
-        r2.mkString(", "))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    ms.addData(ev(1, "2024-01-01 10:00:00", 1, "click", 1.5),
+      ev(2, "2024-01-01 10:01:00", 1, "click", 2.5))
+    runOnce()
+    val r1 = out.toArray(Array.empty[(Long, Double)])
+    assert(r1.contains((2L, 4.0)), r1.mkString(", "))
+    out.clear()
+    Thread.sleep(2500) // let the processing-time TTL lapse
+    ms.addData(ev(3, "2024-01-01 10:02:00", 1, "view", 4.0))
+    runOnce()
+    // expired state restarts the key at (1, 4.0); live state would
+    // have resumed to (3, 8.0)
+    val r2 = out.toArray(Array.empty[(Long, Double)])
+    assert(r2.contains((1L, 4.0)) && !r2.contains((3L, 8.0)),
+      r2.mkString(", "))
   }
 
   test("I9b/I6d: RocksDB state store + changelog checkpointing recovers windowed-agg state across a restart") {
@@ -1224,20 +1126,16 @@ class StreamingSpec extends SparkTestBase {
     // 100 TB streaming deployment actually flips: RocksDBStateStoreProvider
     // moves keyed state off-heap (state size no longer bounded by executor
     // heap), and changelog checkpointing makes the per-commit upload
-    // O(batch delta) instead of O(full state snapshot). A classic windowed
-    // aggregation — which defaults to the HDFS-backed heap provider, unlike
-    // transformWithState which requires RocksDB — is run against it over a
-    // stop/restart so the recovery path (changelog replay on top of the
-    // last snapshot) is exercised, not just the happy path.
+    // O(batch delta) instead of O(full state snapshot). The provider comes
+    // from the session (graft.Session); a classic windowed aggregation is
+    // run with changelog checkpointing on over a stop/restart so the
+    // recovery path (changelog replay on top of the last snapshot) is
+    // exercised, not just the happy path.
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val changelogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevP = spark.conf.getOption(providerKey)
     val prevC = spark.conf.getOption(changelogKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(changelogKey, "true")
     val ms = MemoryStream[Event]
     val ckpt = java.nio.file.Files.createTempDirectory("graft-rocksdb-ckpt").toString
@@ -1271,15 +1169,9 @@ class StreamingSpec extends SparkTestBase {
       val r2 = out.toArray(Array.empty[(String, Long)])
       assert(r2.contains(("click", 3L)) && !r2.contains(("click", 1L)),
         r2.mkString(", "))
-    } finally {
-      prevP match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-      prevC match {
-        case Some(v) => spark.conf.set(changelogKey, v)
-        case None => spark.conf.unset(changelogKey)
-      }
+    } finally prevC match {
+      case Some(v) => spark.conf.set(changelogKey, v)
+      case None => spark.conf.unset(changelogKey)
     }
   }
 
@@ -1287,10 +1179,6 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.absenceAlerts(ms.toDS()).toDF(), "absence", "append")
     try {
@@ -1312,13 +1200,7 @@ class StreamingSpec extends SparkTestBase {
       val alerts = spark.table("absence")
         .select($"user_id", $"click_id").as[(Long, Long)].collect().toSet
       assert(alerts === Set((1L, 3L)), s"got $alerts")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("I6i: absence tiebreak — same-µs purchase in a LATER batch cancels only when its event_id is larger") {
@@ -1331,10 +1213,6 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Event]
     // 10-min watermark delay: with the default 0s, batch 1 advances the
     // watermark TO the clicks' timestamp, and the same-µs batch-2
@@ -1357,23 +1235,13 @@ class StreamingSpec extends SparkTestBase {
       val alerts = spark.table("absence_tie")
         .select($"user_id", $"click_id").as[(Long, Long)].collect().toSet
       assert(alerts === Set((1L, 10L)), s"got $alerts")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("C8: connected control+data streams — rules update keyed thresholds across batches") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def t(m: String) = java.sql.Timestamp.valueOf(m)
     val data = MemoryStream[Event]
     val ctrl = MemoryStream[(String, java.sql.Timestamp, Double)]
@@ -1405,23 +1273,13 @@ class StreamingSpec extends SparkTestBase {
       val out = spark.table("c8_connect")
         .select($"event_id", $"threshold").as[(Long, Double)].collect().toSet
       assert(out === Set((1L, 50.0), (5L, 10.0)), s"got $out")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: relaxed chain matches equal cep_followed_by_relaxed, state crossing batches") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1447,23 +1305,13 @@ class StreamingSpec extends SparkTestBase {
       assert(streamed === batch,
         s"only-streamed=${(streamed -- batch).take(5)} only-batch=${(batch -- streamed).take(5)}")
       assert(streamed.nonEmpty)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: temporal join equals cdc_temporal_join on the full fixture") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1488,23 +1336,13 @@ class StreamingSpec extends SparkTestBase {
       assert(streamed === batch,
         s"only-streamed=${(streamed -- batch).take(5)} only-batch=${(batch -- streamed).take(5)}")
       assert(streamed.nonEmpty)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: OHLC candles bit-equal to the batch rollup across micro-batches") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1530,23 +1368,13 @@ class StreamingSpec extends SparkTestBase {
       assert(streamed === batch,
         s"only-streamed=${(streamed -- batch).take(3)} only-batch=${(batch -- streamed).take(3)}")
       assert(batch.size > 10, "fixture must span many candles")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: Holt level/trend maintenance bit-equal to the recursive-CTE batch") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1570,23 +1398,13 @@ class StreamingSpec extends SparkTestBase {
       assert(streamed == batch.dropRight(1),
         s"\nstream ${streamed.take(3)}…\nbatch ${batch.take(3)}…")
       assert(streamed.length >= 25, "fixture must close many days")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: Page–Hinkley statistic bit-equal to the batch frame, hours split across batches") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // the monitored (drift-planted) series and λ come from the batch frame
     val frame = ops.Stats4.pageHinkleyFrameMicro(spark, sf0001)
       .select($"rn", $"bucket_us", $"x_mon", $"mean_run", $"m", $"ph",
@@ -1621,23 +1439,13 @@ class StreamingSpec extends SparkTestBase {
         s"\nstream ${streamed.take(3)}…\nbatch ${batch.take(3)}…")
       assert(streamed.count(_._7) > 0, "the planted drift must alarm")
       assert(streamed.exists(!_._7), "pre-drift hours must stay silent")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: U-shaped attribution credits bit-equal to the batch query") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1669,23 +1477,13 @@ class StreamingSpec extends SparkTestBase {
         assert(math.abs(r.getDouble(2) - 1.0) < r.getLong(3) * 1e-6,
           s"credits must conserve: $r")
       }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: windowed PSI drift monitor bit-equal to the batch form") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1718,23 +1516,13 @@ class StreamingSpec extends SparkTestBase {
       val firstDay = spark.table("psi_win").orderBy("ws").collect().head
       assert(!firstDay.getBoolean(12), "reference day must not drift")
       assert(firstDay.getDouble(11) < 0.01)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: per-user inter-arrival gaps equal the batch lag window") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1764,13 +1552,7 @@ class StreamingSpec extends SparkTestBase {
       val nUsers = ordered.map(_.user_id).distinct.length
       assert(batch.length === ordered.length - nUsers)
       assert(batch.nonEmpty)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: rolling 7-day WAU equals the batch day expansion") {
@@ -1835,10 +1617,6 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1873,23 +1651,13 @@ class StreamingSpec extends SparkTestBase {
             s"row $j of window $ws lost mass")
         }
       }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: rate-limiter admits the same event set as the batch row_number twin") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1921,23 +1689,13 @@ class StreamingSpec extends SparkTestBase {
       val total = Tables.events(spark, sf0001).count()
       assert(streamed.size < total, "quota dropped nothing — limit unexercised")
       assert(streamed.forall(_._4 <= 5L))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: per-window KMV bottom-k sketches bit-equal across micro-batches") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id))
@@ -1978,23 +1736,13 @@ class StreamingSpec extends SparkTestBase {
         if (truth(ws).size > 8) sawBounded = true
       }
       assert(sawBounded, "no window exceeded k — bounded path not exercised")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: absence alerts equal cep_not_followed_by on the full fixture") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val batchEvents = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
       .collect()
@@ -2015,23 +1763,13 @@ class StreamingSpec extends SparkTestBase {
         .select($"user_id", $"click_id").as[(Long, Long)].collect().toSet
       assert(streamed === batch,
         s"only-streamed=${streamed -- batch} only-batch=${batch -- streamed}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("online near-dup: exact replicas alert in-stream; every alert is a batch LSH candidate") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // the sf0.001 corpus has NO exact duplicates (its near-dups are weak
     // band-collision pairs) — plant replicas of five fixture docs under
     // fresh ids to give the detector true positives with known answers
@@ -2068,13 +1806,7 @@ class StreamingSpec extends SparkTestBase {
       val bad = fixtureAlerts.map { case (d, of, _) =>
         (math.min(d, of), math.max(d, of)) } -- batchPairs
       assert(bad.isEmpty, s"streamed alerts missing from batch candidates: $bad")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("iterate analogue: foreachBatch feedback loop halves values to fixpoint and drains") {
@@ -2277,10 +2009,6 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // frozen references trained by the SAME projection the batch scorer
     // uses (Audit.hbosFeatures/hbosHist) — the binning cannot drift
     val feat = ops.Audit.hbosFeatures(spark, sf0001)
@@ -2307,23 +2035,13 @@ class StreamingSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3),
           r.getDouble(4))).toSeq
       assert(top20 === batch)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: STL day-close decomposition + robust-z monitor align with the batch frame") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ordered = Tables.orders(spark, sf0001)
       .select($"o_orderkey", $"o_orderdate", $"o_custkey", $"o_totalprice")
       .collect()
@@ -2368,23 +2086,13 @@ class StreamingSpec extends SparkTestBase {
       val overlap = anomBatch.filter(p => zStream.contains(p._1))
       assert(overlap.nonEmpty)
       overlap.foreach { case (d, zf) => assert(zStream(d) === zf, s"day $d") }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: online image aHash alerts equal the batch band-candidate verdicts") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ids = Tables.documents(spark, sf0001)
       .select($"doc_id").as[Long].collect().sorted
     val ms = MemoryStream[Long]
@@ -2423,23 +2131,13 @@ class StreamingSpec extends SparkTestBase {
       val batch = SparkEntry.queries("mm_image_ahash_dedup")(spark, sf0001)
         .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
       assert(hist === batch)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: golden-record ledger's final upsert per cluster equals the batch survivorship") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // cluster assignment frozen from the batch matcher — the ledger
     // maintains survivorship live, re-clustering stays offline
     val pairs = ops.Er.snmMultipass(spark, sf0001).select($"d1", $"d2")
@@ -2471,13 +2169,7 @@ class StreamingSpec extends SparkTestBase {
         .collect().map(row8).sortBy(_._1).toSeq
       assert(batch.nonEmpty, "fixture must hold multi-member entities")
       assert(finals === batch)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("hbosScored: a never-seen bin scores max-surprise with novel_bin set, not dropped") {
@@ -2505,10 +2197,6 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def dayNum(d: String): Long =
       math.floorDiv(usOf(s"$d 00:00:00"), 86400000000L)
     val ms = MemoryStream[Event]
@@ -2543,23 +2231,13 @@ class StreamingSpec extends SparkTestBase {
         dayNum("2024-01-10") -> 110.0) // the above-frontier +100 folded in
       assert(byDay === expected)
       assert(spark.table("stl_frontier").count() === 7L, "each day once")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("imageAHashTws retention: a replica past the maxPerBucket horizon no longer alerts") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // ids 1, 151, 301 synthesize IDENTICAL images (same family mod 50,
     // same perturbation mod 3) — every pair is a Hamming-0 duplicate
     val ms = MemoryStream[Long]
@@ -2577,23 +2255,13 @@ class StreamingSpec extends SparkTestBase {
       // horizon 1: each arrival alerts against the single retained
       // member only — (1,301) is beyond the horizon and must NOT alert
       assert(alerts === Set((1L, 151L), (151L, 301L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: online exact-substring dedup flags merge to the batch keep-first span rows") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val docs = Tables.documents(spark, sf0001)
       .select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1)
     val ms = MemoryStream[(Long, String)]
@@ -2635,23 +2303,13 @@ class StreamingSpec extends SparkTestBase {
       assert(streamed === batch,
         s"only-streamed=${(streamed.toSet -- batch.toSet).take(3)} " +
           s"only-batch=${(batch.toSet -- streamed.toSet).take(3)}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: online scene-cut alerts equal the batch shot boundaries") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ids = Tables.documents(spark, sf0001)
       .select($"doc_id").as[Long].collect().sorted
     // frames arrive in order per video; chunking at 2699 (not a
@@ -2677,23 +2335,13 @@ class StreamingSpec extends SparkTestBase {
       assert(streamed === batch,
         s"only-streamed=${(streamed -- batch).take(3)} " +
           s"only-batch=${(batch -- streamed).take(3)}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 
   test("batch≡streaming: live source-mix weights equal the batch temperature mix once the last hour closes") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val Hour = 3600000000L
     // replay the sf0.001 corpus across five ingest hours (doc_id mod 5),
     // plus one dummy row in hour 5 whose only job is to CLOSE hour 4 —
@@ -2734,12 +2382,6 @@ class StreamingSpec extends SparkTestBase {
           .select($"p").collect().map(_.getDouble(0)).sum
         assert(math.abs(ps - 1.0) < 1e-4, s"hour $h p-sum $ps")
       }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q.stop()
   }
 }
