@@ -125,16 +125,6 @@ object Bench {
     s"{$body}"
   }
 
-  /** Compatibility wrapper: seconds-only view of [[timeQueriesDetailed]]. */
-  def timeQueries(
-      spark: SparkSession,
-      sfDir: String,
-      queries: Map[String, (SparkSession, String) => DataFrame],
-      reps: Int = REPS): (Map[String, Double], Int) = {
-    val (stats, errors) = timeQueriesDetailed(spark, sfDir, queries, reps)
-    (stats.map { case (k, s) => k -> s.sec }, errors)
-  }
-
   /** Times each query `reps` times, keeping the per-query min, and records
     * the shuffle read/write + spill bytes of the best-timed rep. When the
     * base reps all succeed but disagree by more than `retryRatio`× (a

@@ -430,7 +430,7 @@ object Analytics {
 
   /** One PageRank power-iteration step over the supplier→customer trade
     * graph (edges = distinct (l_suppkey, o_custkey) pairs; the graph
-    * analogue of [[graft.ops.Llm3.dedupClusters]]'s Pregel loop, here as
+    * analogue of [[graft.ops.Llm3.componentLabelsDf]]'s Pregel loop, here as
     * the relational-algebra iteration primitive: iterating = re-running
     * with the previous ranks). Uniform start rank 1/N over all nodes;
     * damping 0.85; customers (sinks) accumulate, suppliers keep the
@@ -1028,118 +1028,33 @@ object Analytics {
 
   /** L307 — connected components of the co-purchase graph (the
     * partition every distributed graph job computes FIRST — component
-    * boundaries bound all later traversals; Kiveris et al. 2014 show
-    * the min-label + compress scheme below converging in O(log d)
-    * rounds). Min-label propagation run to FIXPOINT under a driver
-    * loop: each round (a) pulls the min neighbor label through one
-    * edge-keyed join + node-keyed agg, (b) COMPRESSES by looking each
-    * label's own label up (the pointer-doubling half-step that turns
-    * diameter-many rounds into log-many), then materializes the
-    * node-sized label frame and checks the exact-integer label SUM —
-    * labels only ever decrease, so an unchanged sum IS the fixpoint
-    * (no row-diff join needed). At 100 TB the per-round cost is one
-    * edge-linear shuffle + two node-sized ones; the output is the
+    * boundaries bound all later traversals). Labels come from the
+    * shared kernel [[Llm3.componentLabelsDf]]: driver union-find below
+    * [[Llm3.DriverUfCap]] edges (the support-pruned, part-bounded edge
+    * set is ~3.5k edges at sf0.1), min-label propagation with a
+    * pointer-doubling compress above it. The output is the
     * component-size profile (top 20 by size) with the component count
-    * and covered-node total carried on every row. Convergence is
-    * label-order-free: the fixpoint is the componentwise MIN, so the
-    * result is independent of round count once reached — the property
-    * that makes the driver-loop form oracle-comparable against a
-    * recursive-CTE transitive closure. */
+    * and covered-node total carried on every row. The fixpoint is the
+    * componentwise MIN, so the result does not depend on the path or
+    * the round count — the property that makes it oracle-comparable
+    * against a recursive-CTE transitive closure. */
   def connectedComponents(spark: SparkSession, dir: String): DataFrame =
-    connectedComponentsAt(spark, dir, forceDistributed = false)
+    connectedComponentsAt(spark, dir, parallelism = 0)
 
-  /** [[connectedComponents]] with the driver union-find fast path
-    * bypassable — the rehearsal/parity specs force the distributed
-    * Pregel loop the >[[Llm3.DriverUfCap]]-edge regime takes. */
+  /** [[connectedComponents]] with the kernel's `parallelism`: > 0 forces
+    * the distributed loop the >[[Llm3.DriverUfCap]]-edge regime takes
+    * (the rehearsal/parity specs). */
   private[graft] def connectedComponentsAt(spark: SparkSession, dir: String,
-      forceDistributed: Boolean): DataFrame = {
-    import spark.implicits._
-    // already materialized by the coPurchaseEdges memo (round 14) — the
-    // per-call localCheckpoint this def used to carry is now shared
+      parallelism: Int): DataFrame = {
+    // already materialized by the coPurchaseEdges memo (round 14)
     val e0 = coPurchaseEdges(spark, dir)
-    // the co-purchase edge set is support-pruned and part-dimension-
-    // bounded (~3.5k edges at sf0.1) — below the cap the component
-    // profile comes from the same driver union-find the dedup clusters
-    // use (round 12): the distributed loop spent its whole runtime on
-    // per-round job scheduling, not data. The capped overflow-reporting
-    // collect probes and fetches in ONE job (the separate size-probe
-    // count paid a second job barrier). On overflow, the Pregel loop
-    // below is the path (parity-pinned in Round12cSpec).
-    val esOpt = if (forceDistributed) None
-      else collectWithin(e0.select(col("a"), col("b")).as[(Long, Long)],
-        Llm3.DriverUfCap)
-    esOpt.foreach { es =>
-      val lbl = Llm3.unionFindMinLabels(es)
-      val sizes = lbl.groupBy(_._2).map { case (c, m) => (c, m.size.toLong) }
-      val nComponents = sizes.size.toLong
-      val nCovered = lbl.size.toLong
-      val top = sizes.toSeq.sortBy { case (c, n) => (-n, c) }.take(20)
-        .map { case (c, n) => (c, n, nComponents, nCovered) }
-      return top.toDF("component_id", "n_nodes", "n_components",
-        "n_covered_nodes")
-    }
-    // localCheckpoint (eager) rather than persist: it TRUNCATES the
-    // logical plan each round — without it the per-round plan nests the
-    // whole loop history and Catalyst planning itself OOMs by round ~10
-    val ed0 = e0.select(col("a").as("x"), col("b").as("y"))
-      .unionAll(e0.select(col("b").as("x"), col("a").as("y")))
-      .localCheckpoint(true)
-    // size the LOOP's shuffle parallelism to the (node-dimension-sized)
-    // label frame, not the session default: every round is 3 shuffles
-    // of a tiny frame, and 32-partition exchanges make task overhead
-    // the whole runtime. The override is scoped to a CLONED session
-    // (ADVICE r11: a session-global set/restore leaks the reduced
-    // parallelism to any concurrent query on the shared session); the
-    // clone shares the SparkContext, so the checkpointed edge blocks
-    // carry over without recompute.
-    val sessionParts = spark.sessionState.conf.numShufflePartitions
-    val loopParts = math.max(1L,
-      math.min(sessionParts.toLong, ed0.count() / 100000L)).toInt
-    val loop = spark.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val ed = loop.createDataFrame(ed0.rdd, ed0.schema).localCheckpoint(true)
-    var lab = ed.select(col("x").as("v")).distinct()
-      .withColumn("l", col("v")).localCheckpoint(true)
-    // null-safe: sum over an EMPTY label frame is NULL (the empty-tables
-    // robustness contract) — treat it as already-converged
-    def labelSum(df: DataFrame): Option[Long] = {
-      val r = df.agg(sum(col("l"))).first()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
-    }
-    val initSum = labelSum(lab)
-    var labSum = initSum.getOrElse(0L)
-    var converged = initSum.isEmpty
-    var rounds = 0
-    def step(cur: DataFrame): DataFrame = {
-      val nbrMin = ed
-        .join(cur.select(col("v").as("y"), col("l").as("ln")), Seq("y"))
-        .groupBy(col("x").as("v")).agg(min(col("ln")).as("lnbr"))
-      val prop = cur.join(nbrMin, Seq("v"), "left")
-        .select(col("v"), least(col("l"), coalesce(col("lnbr"), col("l"))).as("l"))
-      prop
-        .join(prop.select(col("v").as("l"), col("l").as("l2")), Seq("l"), "left")
-        .select(col("v"), coalesce(col("l2"), col("l")).as("l"))
-    }
-    while (!converged && rounds < 50) {
-      val next = step(lab).localCheckpoint(true)
-      val nextSum = labelSum(next).getOrElse(0L)
-      lab = next
-      converged = nextSum == labSum
-      labSum = nextSum
-      rounds += 1
-    }
-    // fail loudly rather than return split components (ADVICE r11): a
-    // non-converged exit is indistinguishable from a converged one to
-    // the caller, and with pointer-doubling 50 rounds covers any graph
-    // of diameter < 2^50 — hitting the cap means something is broken
-    require(converged,
-      s"connected-components did not converge within $rounds rounds — " +
-        "component diameter exceeds the iteration budget; raise the cap")
+    val lab = Llm3.componentLabelsDf(spark,
+      e0.select(col("a").as("d1"), col("b").as("d2")), parallelism)
     // global totals as a 1-row broadcast cross, NOT a whole-frame
     // window: the component-size frame is one row per component —
     // data-proportional on a fragmented graph — and the r13 window
     // guard bans unpartitioned windows over data-grain frames
-    val sizes = lab.groupBy(col("l").as("component_id"))
+    val sizes = lab.groupBy(col("label").as("component_id"))
       .agg(count(lit(1)).as("n_nodes"))
     val totals = sizes.agg(count(lit(1)).as("n_components"),
       sum(col("n_nodes")).as("n_covered_nodes"))

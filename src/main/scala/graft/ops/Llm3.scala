@@ -139,15 +139,21 @@ object Llm3 {
   private[graft] val PregelRoundBudget = 60
 
   /** Component labels (node → min member) for every node APPEARING IN
-    * an edge, as a DataFrame `(node, label)` — the hybrid the cluster
-    * family standardizes on: below [[DriverUfCap]] edges the labels
-    * come from the driver union-find over a boundedCollect (a
-    * few-hundred-edge graph spends ~10× its own cost on Pregel job
-    * scheduling); above it, the same pointer-doubling min-label
-    * propagation loop as [[dedupClustersAt]], restricted to the edge
-    * endpoints (callers left-join and label isolated nodes
-    * themselves). Round13Spec pins the two paths row-identical on the
-    * fixture edge set. */
+    * an edge `(d1, d2)`, as a DataFrame `(node, label)` — the one
+    * connected-components kernel (dedup clusters, co-purchase
+    * components, golden-record clusters, DBSCAN). Below [[DriverUfCap]]
+    * edges the labels come from the driver union-find over a capped
+    * collect (a few-hundred-edge graph spends ~10× its own cost on
+    * Pregel job scheduling); above it, or whenever `parallelism` > 0,
+    * from min-label propagation with a pointer-doubling compress
+    * half-step (Kiveris et al., SoCC 2014: O(log diameter) rounds), run
+    * to the fixpoint within [[PregelRoundBudget]] rounds. The fixpoint
+    * is the componentwise MIN, so both paths return the same rows.
+    * Callers left-join and label isolated nodes themselves; Round13Spec
+    * pins the two paths row-identical on the fixture edge set.
+    * @param parallelism 0 = choose the path by edge count, Pregel rounds
+    *   at `defaultParallelism` partitions; > 0 = force the Pregel loop
+    *   at that many node-keyed partitions. */
   private[graft] def componentLabelsDf(spark: SparkSession,
       edges: DataFrame, parallelism: Int = 0): DataFrame = {
     import spark.implicits._
@@ -181,10 +187,14 @@ object Llm3 {
     while (!converged && iter < PregelRoundBudget) {
       val nb = und.join(labels, col("d2") === col("node"))
         .groupBy(col("d1")).agg(min(col("label")).as("nb_min"))
+      // carry the previous label through the round so convergence is a
+      // filter over the already-materialized checkpoint
       val prop = labels.join(nb, col("node") === col("d1"), "left")
         .select(col("node"), col("label").as("prev_label"),
           least(col("label"), coalesce(col("nb_min"), col("label"))).as("label"))
-      // re-apply the node partitioning before checkpointing so every
+      // pointer-doubling compress: follow each label to ITS label, so a
+      // chain of length d resolves in O(log d) rounds, not O(d).
+      // Re-apply the node partitioning before checkpointing so every
       // round's `und ⋈ labels` reuses the seed frame's layout instead of
       // re-shuffling labels that drifted onto the join-output partitioning
       val next = part(prop
@@ -207,7 +217,7 @@ object Llm3 {
   /** Driver-side union-find with path compression; returns node →
     * (min member of its component) for every node that appears in an
     * edge (isolated docs label themselves at the join site). */
-  private[graft] def unionFindMinLabels(
+  private def unionFindMinLabels(
       es: Array[(Long, Long)]): collection.Map[Long, Long] = {
     val parent = collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
@@ -231,12 +241,10 @@ object Llm3 {
   }
 
   /** [[dedupClusters]] with explicit round parallelism.
-    * @param parallelism partitions per Pregel round; 0 = choose by edge
-    *   count — 1 while the candidate-pair graph fits one task comfortably
-    *   (keeps each round at ~2 tasks instead of 32 micro-stages), else
-    *   `defaultParallelism` hash-partitioned on the node key. The count
-    *   is one extra action on the (tiny) pair set — noise next to the
-    *   iterative rounds it sizes. */
+    * @param parallelism passed to [[componentLabelsDf]]: 0 = driver
+    *   union-find below [[DriverUfCap]] edges, else the Pregel loop at
+    *   `defaultParallelism` partitions; > 0 = the Pregel loop at that
+    *   many partitions, hash-partitioned on the node key. */
   def dedupClustersAt(spark: SparkSession, dir: String, parallelism: Int): DataFrame = {
     val docs = documents(spark, dir)
     // checkpoint the (tiny, banding-proportional) candidate set once so
@@ -265,83 +273,17 @@ object Llm3 {
       .where(lit(10) * col("inter") >=
         lit(9) * (col("z1.sz") + col("z2.sz") - col("inter")))
       .select(col("d1"), col("d2"))
-    // The verified edge set is banding-proportional (near-dup pairs),
-    // orders of magnitude smaller than the corpus. Below the cap the
-    // component labels come from a DRIVER union-find over the collected
-    // edges — in ONE job via the capped overflow-reporting collect (the
-    // former checkpoint + size-probe count + boundedCollect trio paid 3
-    // job barriers per invocation; a 3-round distributed Pregel on a
-    // few-hundred-edge graph spends ~10x the edge set's own cost on job
-    // scheduling — measured 2.6 s loop vs 0.1 s union-find at sf0.1's
-    // 413 edges). On overflow — a duplicate-heavy corpus at deployment
-    // scale — the hash-partitioned pointer-doubling Pregel loop below
-    // is the path (it recomputes the edge frame once into its own
-    // checkpoint); Round12Spec pins the two paths row-identical and
-    // ScaleRehearsalSpec drives the Pregel form at 10x replica density.
-    if (parallelism == 0) {
-      import spark.implicits._
-      collectWithin(edges.as[(Long, Long)], DriverUfCap).foreach { es =>
-        val label = unionFindMinLabels(es)
-        val labelDf = label.toSeq.toDF("doc_id", "cl")
-        val cw = Window.partitionBy(col("cluster"))
-        return docs.select(col("doc_id"))
-          .join(broadcast(labelDf), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("cl"), col("doc_id")).as("cluster"))
-          .withColumn("cluster_size", count(lit(1)).over(cw))
-          .orderBy("doc_id")
-      }
-    }
-    val edgesCk = edges.localCheckpoint()
-    val p = if (parallelism > 0) parallelism
-      else spark.sparkContext.defaultParallelism
-    def part(df: DataFrame, key: String): DataFrame =
-      df.repartition(p, col(key))
-    val und = part(edgesCk.union(edgesCk.select(col("d2").as("d1"), col("d1").as("d2"))), "d1")
-      .localCheckpoint()
-    // seed labels with min(node, min direct neighbor) — one aggregation
-    // that equals the first propagation round for free; near-dup
-    // components are clique-heavy, so most nodes start already converged
-    val nbMin = und.groupBy(col("d1")).agg(min(col("d2")).as("nb0"))
-    var labels = part(docs.select(col("doc_id").as("node"))
-      .join(nbMin, col("node") === col("d1"), "left")
-      .select(col("node"), least(col("node"), coalesce(col("nb0"), col("node"))).as("label")),
-      "node").localCheckpoint()
-    var converged = false
-    var iter = 0
-    // pointer-doubling makes 60 rounds cover any graph of diameter
-    // < 2^60; the loop exits at convergence (near-dup components are
-    // clique-heavy, so the min-neighbor seed usually converges in ONE
-    // verification round — the llm_dedup_keep_best fast path)
-    while (!converged && iter < 60) {
-      val nb = und.join(labels, col("d2") === col("node"))
-        .groupBy(col("d1")).agg(min(col("label")).as("nb_min"))
-      // carry the previous label through the round so convergence is a
-      // filter over the ALREADY-materialized checkpoint — no extra
-      // next⋈labels comparison join per round
-      val prop = labels.join(nb, col("node") === col("d1"), "left")
-        .select(col("node"), col("label").as("prev_label"),
-          least(col("label"), coalesce(col("nb_min"), col("label"))).as("label"))
-      // pointer-doubling compress: follow each label to ITS label, so a
-      // chain of length d resolves in O(log d) rounds, not O(d)
-      val next = prop
-        .join(prop.select(col("node").as("lk"), col("label").as("l2")),
-          col("label") === col("lk"), "left")
-        .select(col("node"), col("prev_label"),
-          coalesce(col("l2"), col("label")).as("label"))
-        .localCheckpoint()
-      converged = next.where(col("label") =!= col("prev_label")).limit(1).count() == 0
-      labels = next.select(col("node"), col("label"))
-      iter += 1
-    }
-    // fail loudly rather than return split components: a chain longer than
-    // the iteration budget means wrong labels, not a slightly-worse answer
-    require(converged,
-      s"connected-components did not converge within $iter rounds — " +
-        "component diameter exceeds the iteration budget; raise the cap")
+    // docs in no verified pair label themselves. The verified edge set
+    // is banding-proportional (413 edges at sf0.1: the driver union-find
+    // path, 0.1 s against 2.6 s for the Pregel loop); Round12Spec pins
+    // the two paths row-identical and ScaleRehearsalSpec drives the
+    // Pregel form at 10x replica density.
     val cw = Window.partitionBy(col("cluster"))
-    labels
-      .select(col("node").as("doc_id"), col("label").as("cluster"))
+    docs.select(col("doc_id"))
+      .join(componentLabelsDf(spark, edges, parallelism)
+        .select(col("node").as("doc_id"), col("label").as("cl")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("cl"), col("doc_id")).as("cluster"))
       .withColumn("cluster_size", count(lit(1)).over(cw))
       .orderBy("doc_id")
   }

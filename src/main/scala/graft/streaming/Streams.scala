@@ -107,19 +107,7 @@ object Streams {
             state.remove()
             Iterator(closed)
           } else {
-            val evs = it.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))
-            var open = state.getOption
-            val out = Seq.newBuilder[TimerSession]
-            for (e <- evs) open = open match {
-              case Some(s) if microsOf(e.ts) - s.last_us > gapMs * 1000L =>
-                out += s // in-batch gap: close the earlier session now
-                Some(TimerSession(uid, 1L, e.value, microsOf(e.ts)))
-              case Some(s) =>
-                Some(TimerSession(uid, s.n_events + 1, s.sum_value + e.value,
-                  math.max(s.last_us, microsOf(e.ts))))
-              case None =>
-                Some(TimerSession(uid, 1L, e.value, microsOf(e.ts)))
-            }
+            val (open, closed) = foldTimerSession(state.getOption, it, uid, gapMs)
             open.foreach { s =>
               state.update(s)
               // the engine requires timeout > current watermark; a late
@@ -127,9 +115,35 @@ object Streams {
               state.setTimeoutTimestamp(
                 math.max(s.last_us / 1000L + gapMs, state.getCurrentWatermarkMs() + 1))
             }
-            out.result().iterator
+            closed.iterator
           }
       }
+  }
+
+  /** The per-key step both timer-session twins ([[timerSessions]],
+    * [[timerSessionsTws]]) run on a batch: fold `events`, sorted here by
+    * (ts, event_id), into the open session. An event more than `gapMs`
+    * after the open session's last event closes it (in-batch gap) and
+    * opens a new one; out-of-order events within the gap fold in.
+    * Returns (the still-open session, the sessions closed by this batch). */
+  private[streaming] def foldTimerSession(open: Option[TimerSession],
+      events: Iterator[Event], uid: Long,
+      gapMs: Long): (Option[TimerSession], Seq[TimerSession]) = {
+    val closed = Seq.newBuilder[TimerSession]
+    val last = events.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))
+      .foldLeft(open) { (cur, e) =>
+        val t = microsOf(e.ts)
+        cur match {
+          case Some(s) if t - s.last_us > gapMs * 1000L =>
+            closed += s
+            Some(TimerSession(uid, 1L, e.value, t))
+          case Some(s) =>
+            Some(TimerSession(uid, s.n_events + 1, s.sum_value + e.value,
+              math.max(s.last_us, t)))
+          case None => Some(TimerSession(uid, 1L, e.value, t))
+        }
+      }
+    (last, closed.result())
   }
 
   /** Streaming twin of the batch `cep_kleene_timeout` query (Flink CEP
@@ -938,28 +952,17 @@ object Streams {
       sess = getHandle.getValueState[(Long, Double, Long)]("sess",
         Encoders.product[(Long, Double, Long)], streaming.TTLConfig.NONE)
 
-    /** Same rule as the GroupState twin [[timerSessions]]: an event more
-      * than `gapMs` after the open session's last event emits that session
-      * and opens a new one, so in-batch gaps split without a timer. */
+    /** The GroupState twin's step, [[foldTimerSession]], over the
+      * `(n_events, sum_value, last_us)` state encoding. */
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: streaming.TimerValues): Iterator[TimerSession] = {
-      var open = Option(sess.get())
-      val out = Seq.newBuilder[TimerSession]
-      for (e <- rows.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))) {
-        val t = microsOf(e.ts)
-        open = open match {
-          case Some((n, v, last)) if t - last > gapMs * 1000L =>
-            out += TimerSession(key, n, v, last)
-            Some((1L, e.value, t))
-          case Some((n, v, last)) => Some((n + 1, v + e.value, math.max(last, t)))
-          case None => Some((1L, e.value, t))
-        }
+      val (open, closed) = foldTimerSession(Option(sess.get())
+        .map { case (n, v, last) => TimerSession(key, n, v, last) }, rows, key, gapMs)
+      open.foreach { s =>
+        sess.update((s.n_events, s.sum_value, s.last_us))
+        getHandle.registerTimer(s.last_us / 1000 + gapMs)
       }
-      open.foreach { st =>
-        sess.update(st)
-        getHandle.registerTimer(st._3 / 1000 + gapMs)
-      }
-      out.result().iterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(key: Long,

@@ -10,17 +10,17 @@ class BenchSpec extends SparkTestBase {
   private def q(df: => DataFrame): (SparkSession, String) => DataFrame =
     (_, _) => df
 
-  test("timeQueries counts a throwing query in errors and still times the rest") {
+  test("timeQueriesDetailed counts a throwing query in errors and still times the rest") {
     val s = spark
     import s.implicits._
     val queries = Map[String, (SparkSession, String) => DataFrame](
       "ok"   -> q(Seq(1, 2, 3).toDF("x")),
       "boom" -> q(throw new RuntimeException("broken query"))
     )
-    val (results, errors) = Bench.timeQueries(spark, sf0001, queries, reps = 2)
+    val (stats, errors) = Bench.timeQueriesDetailed(spark, sf0001, queries, reps = 2)
     assert(errors === 1)
-    assert(results.keySet === Set("ok", "boom"))
-    assert(results("ok") >= 0.0)
+    assert(stats.keySet === Set("ok", "boom"))
+    assert(stats("ok").sec >= 0.0)
   }
 
   test("a failing rep never becomes the query's timing (no phantom speedup)") {
@@ -31,11 +31,11 @@ class BenchSpec extends SparkTestBase {
       if (calls.getAndIncrement() == 0) { Thread.sleep(60); Seq(1).toDF("x") }
       else throw new RuntimeException("flaky second rep")
     }
-    val (results, errors) = Bench.timeQueries(spark, sf0001,
+    val (stats, errors) = Bench.timeQueriesDetailed(spark, sf0001,
       Map("flaky" -> flaky), reps = 2)
     assert(errors === 1)
     // the recorded time must be rep 0's slow success, not the fast failure
-    assert(results("flaky") >= 0.06, s"got ${results("flaky")}")
+    assert(stats("flaky").sec >= 0.06, s"got ${stats("flaky").sec}")
   }
 
   test("renderLine rollup stays consistent when a long name hits the budget cutoff") {
@@ -56,14 +56,14 @@ class BenchSpec extends SparkTestBase {
     assert((total - acct).abs < 0.1, s"total=$total accounted=$acct")
   }
 
-  test("timeQueries reports zero errors on healthy queries") {
+  test("timeQueriesDetailed reports zero errors on healthy queries") {
     val s = spark
     import s.implicits._
     val queries = Map[String, (SparkSession, String) => DataFrame](
       "a" -> q(Seq(1).toDF("x")),
       "b" -> q(Seq(2).toDF("x"))
     )
-    val (_, errors) = Bench.timeQueries(spark, sf0001, queries, reps = 2)
+    val (_, errors) = Bench.timeQueriesDetailed(spark, sf0001, queries, reps = 2)
     assert(errors === 0)
   }
 

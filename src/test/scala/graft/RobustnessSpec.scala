@@ -31,6 +31,16 @@ class RobustnessSpec extends SparkTestBase {
       s"${failures.size} queries fail on empty input:\n${failures.mkString("\n")}")
   }
 
+  test("connected components on the forced distributed path return no rows on empty input") {
+    val s = spark
+    import s.implicits._
+    // the sweep above only takes the driver union-find (0 edges < cap)
+    val noEdges = Seq.empty[(Long, Long)].toDF("d1", "d2")
+    assert(ops.Llm3.componentLabelsDf(spark, noEdges, parallelism = 4).count() === 0)
+    assert(ops.Analytics.connectedComponentsAt(spark, emptyDir, parallelism = 4).count() === 0)
+    assert(ops.Llm3.dedupClustersAt(spark, emptyDir, parallelism = 4).count() === 0)
+  }
+
   test("loading events leaves the session conf untouched") {
     val fresh = spark.newSession()
     val key = org.apache.spark.sql.internal.SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key

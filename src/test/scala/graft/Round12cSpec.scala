@@ -13,10 +13,10 @@ class Round12cSpec extends SparkTestBase {
 
   test("graph_connected_components: union-find and Pregel paths agree row-for-row") {
     val uf = ops.Analytics
-      .connectedComponentsAt(spark, sf0001, forceDistributed = false)
+      .connectedComponentsAt(spark, sf0001, parallelism = 0)
       .collect().map(_.toSeq)
     val pregel = ops.Analytics
-      .connectedComponentsAt(spark, sf0001, forceDistributed = true)
+      .connectedComponentsAt(spark, sf0001, parallelism = 4)
       .collect().map(_.toSeq)
     assert(uf.toSeq === pregel.toSeq)
     assert(uf.nonEmpty, "fixture co-purchase graph must have components")
