@@ -501,14 +501,17 @@ object Streams {
       .filter(_.getName.startsWith(cur.getName + s".$tag-"))
   }
 
+  private lazy val upsertLog = org.slf4j.LoggerFactory.getLogger("graft.streaming.Streams")
+
   /** Crash recovery for the [[foreachBatchUpsert]] publish protocol. If the
     * live dir is absent but an `.old-<id>` copy exists (crash landed between
     * rename-aside and rename-in), the newest `.old` IS the table — restore
-    * it. If the live dir exists, any `.old` leftovers are from a crash after
-    * a completed publish — delete them. Stale `.staging` dirs are always
-    * safe to drop: a staging dir only becomes the table by rename, and the
-    * replayed batch rebuilds its own staging from scratch. Returns whether
-    * a table was restored from an `.old` copy. */
+    * it, with one WARN line naming the restored dir. If the live dir exists,
+    * any `.old` leftovers are from a crash after a completed publish —
+    * delete them. Stale `.staging` dirs are always safe to drop: a staging
+    * dir only becomes the table by rename, and the replayed batch rebuilds
+    * its own staging from scratch. Returns whether a table was restored
+    * from an `.old` copy. */
   private[graft] def recoverUpsertTable(tablePath: String): Boolean = {
     val cur = new java.io.File(tablePath)
     val olds = upsertLeftovers(cur, "old")
@@ -516,6 +519,8 @@ object Streams {
     if (restore) {
       val newest = olds.maxBy(_.getName.stripPrefix(cur.getName + ".old-").toLong)
       require(newest.renameTo(cur), s"upsert recovery rename failed: $newest")
+      upsertLog.warn(s"upsert table $tablePath was missing after an interrupted publish; " +
+        s"restored it from $newest")
       olds.filterNot(_ == newest).foreach(rmRec)
     } else olds.foreach(rmRec)
     upsertLeftovers(cur, "staging").foreach(rmRec)
@@ -533,6 +538,10 @@ object Streams {
     if (old.exists) rmRec(old)
   }
 
+  /** File name of hash bucket `i` of an `n`-bucket upsert table. */
+  private def upsertBucketName(i: Int, n: Int): String =
+    f"part-$i%05d-of-$n%05d.parquet"
+
   /** A10 — CDC UPSERT sink (Flink upsert-kafka / JDBC-upsert sink
     * analogue): each micro-batch is merged into a keyed parquet table,
     * keeping the latest row per key by (`orderCol`, event_id) — the
@@ -540,16 +549,27 @@ object Streams {
     * Nulls in either ordering column rank lowest; an exact tie keeps the
     * batch row.
     *
-    * Keyed merge ([[upsertMerge]]): the live table is read with the
-    * batch's schema (no footer inference), both sides are hash-partitioned
-    * on the key columns into `defaultParallelism` partitions, the batch is
-    * reduced map-side to its newest row per key, and each table partition
-    * is zipped with its batch partition and merged by hash lookup. A
-    * steady-state micro-batch is ONE Spark job: the table scan and the batch shuffle run
-    * as parallel map stages, then `defaultParallelism` tasks merge and
-    * write. Per-batch cost: table-proportional I/O (one scan, one shuffle
-    * and one rewrite of the table), batch-proportional shuffle on the
-    * batch side, no sort, and at most `defaultParallelism` part files.
+    * Bucket-stable layout: the table is `n = defaultParallelism` files,
+    * `part-<i>-of-<n>.parquet` ([[upsertBucketName]]), and file `i` holds
+    * exactly the keys whose hash falls in bucket `i` — the partition the
+    * keyed merge ([[upsertMerge]]) routes them to. A steady-state
+    * micro-batch is ONE Spark job of two stages: the batch is deduplicated
+    * per key and shuffled into the `n` buckets (the only exchange), then
+    * merge task `i` reads bucket file `i` in place, merges it with batch
+    * bucket `i` by hash lookup and writes the result as bucket file `i` of
+    * the staging dir. Per-batch cost: one sequential read and one rewrite
+    * of the table, a batch-proportional shuffle, no sort, no per-batch
+    * DataFrame planning and no Hadoop commit protocol — each task writes
+    * its bucket with parquet-java straight to a local file (attempt-named,
+    * then renamed to the bucket name, so a retried task never leaves a
+    * torn file) and records its bytes and rows in the task's output
+    * metrics. Every bucket file is written, even an empty one.
+    *
+    * Any other layout — a table from a DataFrame writer, from
+    * [[graft.ops.Maintenance.compactParquet]], or from a run with another
+    * core count — is read once through the DataFrame reader and shuffled
+    * into the buckets by the same merge job (one WARN line says so); from
+    * the next batch on the table is read in place.
     *
     * Schema drift: because the table is read with the batch schema, a
     * table whose columns differ would silently be read null-filled or
@@ -564,12 +584,13 @@ object Streams {
     * then is the old copy deleted. A crash between the two renames leaves
     * the table recoverable from the `.old` dir; [[recoverUpsertTable]]
     * runs at every batch entry and performs that restore (and sweeps
-    * fully-published leftovers). On a posix filesystem each rename is
-    * atomic; on an object store the production form is a manifest/
-    * table-format commit (the same place Flink's exactly-once JDBC sink
-    * reaches for transactions). The merge is idempotent (re-merging a batch
-    * leaves the table unchanged), which is what makes the checkpointed
-    * foreachBatch at-least-once replay safe end-to-end. */
+    * fully-published leftovers). The table therefore lives on a local
+    * (posix) filesystem, where each rename is atomic and every task sees
+    * the same directory; on an object store the production form is a
+    * manifest/table-format commit (the same place Flink's exactly-once
+    * JDBC sink reaches for transactions). The merge is idempotent
+    * (re-merging a batch leaves the table unchanged), which is what makes
+    * the checkpointed foreachBatch at-least-once replay safe end-to-end. */
   def foreachBatchUpsert(events: DataFrame, tablePath: String,
       keys: Seq[String], orderCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -579,17 +600,25 @@ object Streams {
         if (recoverUpsertTable(tablePath)) schemaChecked.set(false)
         val spark = batch.sparkSession
         val schema = batch.schema
+        val n = spark.sparkContext.defaultParallelism
         val cur = new java.io.File(tablePath)
         val table = if (cur.isDirectory) {
           if (!schemaChecked.get)
             requireUpsertSchema(spark.read.parquet(tablePath).schema, schema, tablePath)
-          Some(spark.read.schema(schema).parquet(tablePath).queryExecution.toRdd)
+          val buckets = (0 until n).map(i => new java.io.File(cur, upsertBucketName(i, n)))
+          if (cur.list().toSet == buckets.map(_.getName).toSet)
+            Some(Right(readBuckets(spark, schema, buckets)))
+          else {
+            upsertLog.warn(s"upsert table $tablePath is not in $n hash buckets; " +
+              s"batch $id re-buckets it through one table shuffle")
+            Some(Left(spark.read.schema(schema).parquet(tablePath).queryExecution.toRdd))
+          }
         } else None
         schemaChecked.set(true)
-        val merged = upsertMerge(table, batch.queryExecution.toRdd, schema, keys, orderCol)
+        val merged = upsertMerge(table, batch.queryExecution.toRdd, schema, keys, orderCol, n)
         val staging = new java.io.File(tablePath + s".staging-$id")
-        org.apache.spark.sql.graftbridge.DatasetBridge.ofInternalRows(spark, merged, schema)
-          .write.mode("overwrite").parquet(staging.getPath)
+        require(staging.mkdirs(), s"cannot create $staging")
+        writeBuckets(spark, merged, schema, staging)
         publishUpsertTable(cur, staging, id)
       }
   }
@@ -609,6 +638,81 @@ object Streams {
         s"the stream has ${batch.simpleString}")
   }
 
+  /** The bucket files of an upsert table as an RDD whose partition `i`
+    * reads `files(i)` in place, through Spark's parquet row reader. */
+  private def readBuckets(spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      files: Seq[java.io.File]): RDD[InternalRow] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(spark, schema,
+        org.apache.spark.sql.types.StructType(Nil), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration))
+    val parts = files.map(f => (f.toURI.toString, f.length))
+    spark.sparkContext.parallelize(parts, parts.length).mapPartitions(_.flatMap {
+      case (uri, len) =>
+        val rows = read(PartitionedFile(InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromUrlString(uri), 0L, len, Array.empty, 0L, len))
+        // closed on exhaustion too; this covers a task that stops early
+        rows match {
+          case c: java.io.Closeable =>
+            org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => c.close())
+          case _ =>
+        }
+        rows
+    })
+  }
+
+  /** Runs the job that writes partition `i` of `rows` as bucket file `i`
+    * of `dir`. The parquet writer settings are Spark's own (the parquet
+    * data source's `prepareWrite`), resolved here once and shipped to the
+    * tasks as a plain map. */
+  private def writeBuckets(spark: org.apache.spark.sql.SparkSession, rows: RDD[InternalRow],
+      schema: org.apache.spark.sql.types.StructType, dir: java.io.File): Unit = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      new org.apache.hadoop.conf.Configuration(false))
+    new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    val conf = job.getConfiguration.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+    val (path, n) = (dir.getPath, rows.getNumPartitions)
+    rows.sparkContext.runJob(rows, (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) =>
+      writeBucket(it, path, ctx.partitionId, n, conf))
+  }
+
+  /** Writes `rows` as bucket `i` of `n` in `dir`: to a hidden file named
+    * for the task attempt, then renamed to the bucket's name, so a failed
+    * or retried attempt leaves no torn bucket file. */
+  private def writeBucket(rows: Iterator[InternalRow], dir: String, i: Int, n: Int,
+      conf: Map[String, String]): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val hadoopConf = new org.apache.hadoop.conf.Configuration(false)
+    conf.foreach { case (k, v) => hadoopConf.set(k, v) }
+    val file = Paths.get(dir, upsertBucketName(i, n))
+    val tmp = file.resolveSibling(
+      s".${file.getFileName}.${org.apache.spark.TaskContext.get().taskAttemptId()}")
+    try {
+      val writer = new BucketWriter(new org.apache.parquet.io.LocalOutputFile(tmp))
+        .withConf(hadoopConf)
+        .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName
+          .fromConf(hadoopConf.get(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION)))
+        .build()
+      var written = 0L
+      try rows.foreach { r => writer.write(r); written += 1 } finally writer.close()
+      Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE)
+      org.apache.spark.graftbridge.OutputMetricsBridge.record(Files.size(file), written)
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** parquet-java writer of `InternalRow`s through Spark's own write support. */
+  private final class BucketWriter(file: org.apache.parquet.io.OutputFile)
+      extends org.apache.parquet.hadoop.ParquetWriter.Builder[InternalRow, BucketWriter](file) {
+    override protected def self(): BucketWriter = this
+    override protected def getWriteSupport(conf: org.apache.hadoop.conf.Configuration)
+        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport()
+  }
+
   /** Sends a record to the partition id it carries as its key. */
   private final class PartitionIdRoute(override val numPartitions: Int)
       extends org.apache.spark.Partitioner {
@@ -617,23 +721,24 @@ object Streams {
 
   /** The keyed merge behind [[foreachBatchUpsert]]: `table` (unique per key,
     * absent before the first batch) and `batch` rows in `schema`'s layout
-    * in, the merged table's rows out, over `defaultParallelism` hash
-    * partitions of the key columns. Per key the row with the larger (`orderCol`, event_id)
-    * survives, nulls lowest; an exact tie keeps the batch row, so
-    * re-merging a batch is a no-op. Builds the RDD lineage only; the job
-    * runs when the result is consumed.
+    * in, the merged table's rows out, as `parts` hash buckets of the key
+    * columns — output partition `i` is bucket `i`. A table already in
+    * those buckets (`Right`, partition `i` = bucket `i`) is merged in
+    * place; any other (`Left`) is shuffled into them first. Per key the
+    * row with the larger (`orderCol`, event_id) survives, nulls lowest; an
+    * exact tie keeps the batch row, so re-merging a batch is a no-op.
+    * Builds the RDD lineage only; the job runs when the result is consumed.
     *
-    * Both sides cross the shuffle as bare UnsafeRows in Spark SQL's own
-    * exchange format ([[org.apache.spark.sql.execution.UnsafeRowSerializer]]),
-    * routed by the hash partition id of their key; the key itself is not
-    * shipped but recomputed by the reducer. The batch is deduplicated per
-    * key on the map side, so each batch key crosses the shuffle at most
-    * once per map task. */
-  private def upsertMerge(table: Option[RDD[InternalRow]],
+    * Shuffled rows cross the exchange as bare UnsafeRows in Spark SQL's
+    * own format ([[org.apache.spark.sql.execution.UnsafeRowSerializer]]),
+    * routed by the bucket of their key; the key itself is not shipped but
+    * recomputed by the reducer. The batch is deduplicated per key on the
+    * map side, so each batch key crosses the shuffle at most once per map
+    * task. */
+  private def upsertMerge(table: Option[Either[RDD[InternalRow], RDD[InternalRow]]],
       batch: RDD[InternalRow], schema: org.apache.spark.sql.types.StructType,
-      keys: Seq[String], orderCol: String): RDD[InternalRow] = {
+      keys: Seq[String], orderCol: String, parts: Int): RDD[InternalRow] = {
     import org.apache.spark.sql.catalyst.expressions._
-    val parts = batch.sparkContext.defaultParallelism
     def ref(c: String) = {
       val i = schema.fieldIndex(c)
       BoundReference(i, schema(i).dataType, schema(i).nullable)
@@ -682,7 +787,9 @@ object Streams {
     table match {
       case None => fresh.mapPartitions(it => values(newest(it)))
       case Some(t) =>
-        exchange(t).zipPartitions(fresh) { (stored, updates) =>
+        // each stored row is consumed (written) before the next is read,
+        // so the in-place reader's reused row needs no copy
+        t.fold(exchange, identity).zipPartitions(fresh) { (stored, updates) =>
           val pending = newest(updates)
           val key = UnsafeProjection.create(keyExprs)
           stored.map { old =>

@@ -43,6 +43,16 @@ class Round8Spec extends SparkTestBase {
     assert(root.listFiles().map(_.getName).toSet === Set("current"))
   }
 
+  test("upsert recovery logs one WARN line naming the restored dir") {
+    val root = java.nio.file.Files.createTempDirectory("graft-r8-warn").toFile
+    mkTable(new java.io.File(root, "current.old-3"), "v1")
+    val cur = new java.io.File(root, "current").getPath
+    val warns = warnings("graft.streaming.Streams")(streaming.Streams.recoverUpsertTable(cur))
+    assert(warns.size === 1 && warns.head.contains(s"$cur.old-3"), warns)
+    // nothing to restore: silent
+    assert(warnings("graft.streaming.Streams")(streaming.Streams.recoverUpsertTable(cur)).isEmpty)
+  }
+
   test("upsert recovery: crash after swap but before old-delete keeps the NEW version") {
     val root = java.nio.file.Files.createTempDirectory("graft-r8-rec2").toFile
     mkTable(new java.io.File(root, "current"), "v2")

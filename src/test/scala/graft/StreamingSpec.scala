@@ -708,6 +708,24 @@ class StreamingSpec extends SparkTestBase {
     assert(got === want)
   }
 
+  /** Counts the Spark jobs, and the stages of each, that one streaming
+    * query runs, by its query id. */
+  private final class QueryJobs(queryId: String) extends org.apache.spark.scheduler.SparkListener {
+    private def ours(p: java.util.Properties) =
+      Option(p).exists(_.getProperty("sql.streaming.queryId") == queryId)
+    /** Stage count of each job, in job start order. */
+    val jobStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val stagesRun = new java.util.concurrent.atomic.AtomicInteger()
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      if (ours(e.properties)) jobStages.add(e.stageInfos.size): Unit
+    override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+      if (ours(e.properties)) stagesRun.incrementAndGet(): Unit
+  }
+
+  /** Exactly the bucket files of an `n`-bucket upsert table. */
+  private def bucketFiles(n: Int): Set[String] =
+    (0 until n).map(i => f"part-$i%05d-of-$n%05d.parquet").toSet
+
   test("A10 merge: a steady-state upsert batch is one Spark job and writes <= defaultParallelism files") {
     val s = spark
     import s.implicits._
@@ -715,13 +733,7 @@ class StreamingSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
     val ms = MemoryStream[Event]
     val q = Streams.foreachBatchUpsert(ms.toDF(), dir, Seq("user_id"), "ts").start()
-    val queryId = q.id.toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("sql.streaming.queryId") == queryId))
-          jobs.incrementAndGet(): Unit
-    }
+    val listener = new QueryJobs(q.id.toString)
     spark.sparkContext.addSparkListener(listener)
     def batch(from: Int, n: Int): Unit = {
       ms.addData((from until from + n).map(i =>
@@ -732,17 +744,89 @@ class StreamingSpec extends SparkTestBase {
       batch(0, 1000) // creates the table
       batch(1000, 1000) // checks the footer schema once
       org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
-      val j0 = jobs.get()
+      val (j0, s0) = (listener.jobStages.size, listener.stagesRun.get)
       batch(2000, 1000)
       org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
-      assert(jobs.get() - j0 === 1, "Spark jobs in one steady-state upsert batch")
+      assert(listener.jobStages.size - j0 === 1, "Spark jobs in one steady-state upsert batch")
+      // the batch shuffle's map stage and the merge-and-write stage; no
+      // table exchange
+      assert(listener.stagesRun.get - s0 === 2, "stages in one steady-state upsert batch")
     } finally {
       q.stop()
       spark.sparkContext.removeSparkListener(listener)
     }
-    val parts = new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
-    assert(parts >= 1 && parts <= spark.sparkContext.defaultParallelism, parts)
+    // no _SUCCESS, _temporary, .crc or attempt file beside the buckets
+    assert(new java.io.File(dir).list().toSet === bucketFiles(spark.sparkContext.defaultParallelism))
     assert(upsertTable(dir).map(_.event_id) === (2500L until 3000L).toSet)
+  }
+
+  /** Runs two micro-batches into the existing upsert table `dir` and checks
+    * that the first re-buckets it (its merge job has a table exchange
+    * stage) and the second reads the buckets in place; the table must end
+    * as exactly the bucket files holding the newest row per user of
+    * `init` (unique per user) and both batches. */
+  private def migratesToBuckets(dir: String, init: Seq[Event]): Unit = {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val b1 = (1 to 300).map(i => ev(1000L + i, "2024-01-01 11:00:00", (i % 120).toLong, "view", i.toDouble))
+    val b2 = (1 to 300).map(i => ev(2000L + i, "2024-01-01 09:00:00", (i % 240).toLong, "click", i.toDouble))
+    val ms = MemoryStream[Event]
+    val q = Streams.foreachBatchUpsert(ms.toDF(), dir, Seq("user_id"), "ts").start()
+    val listener = new QueryJobs(q.id.toString)
+    spark.sparkContext.addSparkListener(listener)
+    var mergeStages = Seq.empty[Int]
+    val warns = warnings("graft.streaming.Streams") {
+      try mergeStages = Seq(b1, b2).map { b =>
+        ms.addData(b: _*)
+        q.processAllAvailable()
+        org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
+        listener.jobStages.asScala.last
+      } finally {
+        q.stop()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+    assert(mergeStages === Seq(3, 2), "stages of each batch's merge job")
+    assert(warns.size === 1 && warns.head.contains(s"$dir is not in"), warns)
+    assert(new java.io.File(dir).list().toSet === bucketFiles(spark.sparkContext.defaultParallelism))
+    assert(upsertTable(dir) === windowLatest(Seq("user_id"), init ++ b1 ++ b2))
+  }
+
+  /** 200 rows, one per user, at 10:00. */
+  private def upsertInit: Seq[Event] =
+    (0 until 200).map(u => ev(u.toLong, "2024-01-01 10:00:00", u.toLong, "click", u.toDouble))
+
+  test("A10 layout: a table written by the DataFrame writer is re-bucketed once") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
+    upsertInit.toDF().repartition(3).write.parquet(dir)
+    migratesToBuckets(dir, upsertInit)
+  }
+
+  test("A10 layout: a table compacted by Maintenance.compactParquet is re-bucketed once") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
+    upsertInit.toDF().repartition(3).write.parquet(dir)
+    assert(graft.ops.Maintenance.compactParquet(spark, dir).filesAfter === 1)
+    migratesToBuckets(dir, upsertInit)
+  }
+
+  test("A10 layout: a table bucketed for another core count is re-bucketed once") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-upsert").toFile
+    val written = new java.io.File(root, "written")
+    upsertInit.toDF().repartition(2).write.parquet(written.getPath)
+    val dir = new java.io.File(root, "current")
+    assert(dir.mkdir())
+    // the files a 2-core run of the sink leaves: two buckets, nothing else
+    written.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName).zipWithIndex
+      .foreach { case (f, i) => assert(f.renameTo(new java.io.File(dir, f"part-$i%05d-of-00002.parquet"))) }
+    assert(dir.list().toSet === bucketFiles(2))
+    migratesToBuckets(dir.getPath, upsertInit)
   }
 
   test("A10 merge: a table whose stored schema drifted from the stream fails the batch") {
