@@ -15,8 +15,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.StreamOps.tumblingCounts(spark, "/root/testdata/sf0.001")
 
-  /** Every ops module's (queries, oracles) pair, in merge order: a later
-    * module's key overrides an earlier one's in both maps. */
+  /** Every ops module's (queries, oracles) pair. A key belongs to exactly
+    * one module: [[merged]] refuses a key that two modules define. */
   private def modules
       : Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] = Seq(
     ops.StreamOps.queries -> ops.StreamOps.oracles,
@@ -68,12 +68,23 @@ object SparkEntry {
     ops.Warehouse4.queries -> ops.Warehouse4.oracles,
     ops.Warehouse7.queries -> ops.Warehouse7.oracles)
 
+  /** The union of `maps`, failing loudly, and naming the key, when two of
+    * them define the same key — a silent override would drop one module's
+    * query and oracle while the gate still reads N/N. */
+  private[graft] def merged[V](maps: Seq[Map[String, V]]): Map[String, V] =
+    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val dup = m.keySet.intersect(acc.keySet)
+      require(dup.isEmpty,
+        s"duplicate SparkEntry key(s): ${dup.toSeq.sorted.mkString(", ")}")
+      acc ++ m
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+    merged(modules.map(_._1))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    modules.map(_._2).reduce(_ ++ _)
+    merged(modules.map(_._2))
 }

@@ -147,15 +147,33 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object ArrayMath {
-  /** Expose the kernels to the SQL surface. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_product", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs.head, exprs(1)), "built-in")
+/** One kernel on the SQL surface: its name, argument count, expression
+  * class and builder. */
+final case class SqlFunction(name: String, arity: Int, cls: Class[_ <: Expression],
+    build: Seq[Expression] => Expression) {
+  /** [[build]], refusing a call with any other argument count. */
+  def checkedBuild(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == arity,
+      s"$name expects exactly $arity arguments, got ${exprs.length}")
+    build(exprs)
   }
+}
+
+object ArrayMath {
+  /** Every kernel on the SQL surface; both [[register]] and
+    * [[graft.plans.GraftExtensions]] read this list. */
+  val SqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_dot_product", 2, classOf[DotProduct],
+      e => DotProduct(e(0), e(1))),
+    SqlFunction("graft_sorted_intersect_size", 2, classOf[SortedIntersectSize],
+      e => SortedIntersectSize(e(0), e(1))))
+
+  /** Expose the kernels to the SQL surface of `spark`. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    SqlFunctions.foreach { f =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        f.name, f.checkedBuild, "built-in")
+    }
 
   /** Column API: sequential-order dot product of two double arrays.
     * (Two alternatives measured at sf0.1 on llm_dedup_embed and rejected:

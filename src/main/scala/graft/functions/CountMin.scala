@@ -1,15 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Mergeable COUNT-MIN sketch (Cormode & Muthukrishnan 2005, "An improved
   * data stream summary: the count-min sketch and its applications") as a
@@ -38,21 +33,12 @@ case class CountMinAgg(
     child: Expression, depth: Int, width: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySketchAgg {
 
   import MinHashSig.P
 
   require(depth >= 1 && depth <= 16, s"depth must be in [1, 16], got $depth")
   require(width >= 2 && width <= 65536, s"width must be in [2, 65536], got $width")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a BIGINT input (pre-hash with h48), " +
-        s"got ${child.dataType}")
-  }
 
   // same verified-bijection affine family as MinHashSig (a_j ≠ 0 mod p)
   private val as: Array[Long] = Array.tabulate(depth)(j => ((2L * j + 1) * 1299721L) % P)
@@ -81,23 +67,7 @@ case class CountMinAgg(
     buf
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(depth * width)(bb.getLong())
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_count_min"
-  override def children: Seq[Expression] = Seq(child)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): CountMinAgg =
     copy(child = newChildren.head)

@@ -5,11 +5,8 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Mergeable KMV ("k minimum values" / bottom-k) distinct-count sketch
   * (Bar-Yossef et al. RANDOM 2002 counting-distinct framing; Beyer et
@@ -46,18 +43,9 @@ case class KmvAgg(
     child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[Long]] {
+  extends HashSketchAgg[java.util.TreeSet[Long]] {
 
   require(k >= 2 && k <= 65536, s"k must be in [2, 65536], got $k")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a BIGINT input (pre-hash with h48), " +
-        s"got ${child.dataType}")
-  }
 
   override def createAggregationBuffer(): java.util.TreeSet[Long] =
     new java.util.TreeSet[Long]()
@@ -108,10 +96,7 @@ case class KmvAgg(
     buf
   }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_kmv"
-  override def children: Seq[Expression] = Seq(child)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KmvAgg =
     copy(child = newChildren.head)

@@ -35,22 +35,11 @@ case class MinHashSig(
     child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySketchAgg {
 
   import MinHashSig.P
 
   require(k >= 1 && k <= 256, s"signature width k must be in [1, 256], got $k")
-
-  // analysis-time type gate (mirrors SortedIntersectSize): without it a
-  // non-long child analyzes fine and then ClassCastExceptions per row
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a BIGINT input (pre-hash with h48), " +
-        s"got ${child.dataType}")
-  }
 
   // a_i in [1, p): (2i+1) is odd and < p, 1299721 is prime — product mod p
   // never 0, so every permutation is a genuine bijection on Z_p
@@ -83,23 +72,7 @@ case class MinHashSig(
     buf
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * k)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(k)(bb.getLong())
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_minhash_sig"
-  override def children: Seq[Expression] = Seq(child)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MinHashSig =
     copy(child = newChildren.head)
@@ -107,6 +80,45 @@ case class MinHashSig(
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): MinHashSig =
     copy(inputAggBufferOffset = newOffset)
+}
+
+/** Contract shared by the portable sketch aggregates ([[MinHashSig]],
+  * [[CountMinAgg]], [[KmvAgg]]): one BIGINT input, pre-hashed with
+  * [[graft.Tables.h48]], and an `array<bigint>` result. */
+abstract class HashSketchAgg[T] extends TypedImperativeAggregate[T] {
+  def child: Expression
+
+  // analysis-time type gate (mirrors SortedIntersectSize): without it a
+  // non-long child analyzes fine and then ClassCastExceptions per row
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects a BIGINT input (pre-hash with h48), " +
+        s"got ${child.dataType}")
+  }
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def children: Seq[Expression] = Seq(child)
+}
+
+/** A [[HashSketchAgg]] whose buffer is a fixed-length `Array[Long]`,
+  * returned as the result. */
+abstract class LongArraySketchAgg extends HashSketchAgg[Array[Long]] {
+  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
+
+  override def serialize(buf: Array[Long]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 * buf.length)
+    buf.foreach(bb.putLong)
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    val bb = ByteBuffer.wrap(bytes)
+    Array.fill(bytes.length / 8)(bb.getLong())
+  }
 }
 
 object MinHashSig {

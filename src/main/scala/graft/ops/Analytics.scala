@@ -810,6 +810,25 @@ object Analytics {
            ON a.o = b.o AND a.p < b.p
          GROUP BY 1, 2 HAVING COUNT(*) >= 2)"""
 
+  /** DuckDB twin of [[edgesWithDegrees]]: `e` plus `deg(v, d)`. */
+  private val coPurchaseDegreesSql =
+    s"""$coPurchaseEdgesSql,
+       und AS (SELECT a AS v FROM e UNION ALL SELECT b FROM e),
+       deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM und GROUP BY 1)"""
+
+  /** DuckDB twin of [[orientedWedges]]: `deg`, the oriented edges
+    * `o(u, v, dv)` and the wedges `w(apex, lo, hi)`. */
+  private val orientedWedgesSql =
+    s"""$coPurchaseDegreesSql,
+       o AS (SELECT CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.a ELSE e.b END AS u,
+           CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.b ELSE e.a END AS v,
+           CASE WHEN (da.d, e.a) < (db.d, e.b) THEN db.d ELSE da.d END AS dv
+         FROM e JOIN deg da ON da.v = e.a JOIN deg db ON db.v = e.b),
+       w AS (SELECT e1.u AS apex,
+           CASE WHEN (e1.dv, e1.v) < (e2.dv, e2.v) THEN e1.v ELSE e2.v END AS lo,
+           CASE WHEN (e1.dv, e1.v) < (e2.dv, e2.v) THEN e2.v ELSE e1.v END AS hi
+         FROM o e1 JOIN o e2 ON e1.u = e2.u AND e1.v < e2.v)"""
+
   /** L286 — modularity of the brand partition of the part co-purchase
     * graph (Newman & Girvan 2004: Q = Σ_c [e_c/m − (d_c/2m)²] — the
     * number that says whether a labeling is a real community structure
@@ -852,13 +871,29 @@ object Analytics {
       .orderBy("brand")
   }
 
-  def triangleCount(spark: SparkSession, dir: String): DataFrame = {
+  /** The co-purchase graph's edges (a, b), node degrees `deg(v, d)`, and
+    * each edge with its endpoint degrees (a, b, da, db). */
+  private def edgesWithDegrees(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     val edges = coPurchaseEdges(spark, dir)
     val deg = edges.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("d"))
-    val oriented = edges
+    val withDeg = edges
       .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
+    (edges, deg, withDeg)
+  }
+
+  /** Degree-ordered forward wedges of the co-purchase graph: each edge
+    * oriented from its lower-(degree, id) end `u` to `v`, and every wedge
+    * (apex, lo, hi) of two oriented edges sharing their `u`, the closing
+    * side re-canonicalized to the SAME (deg, id) order the oriented edge
+    * set stores — equi-joinable against `oriented(u, v)`. Returns
+    * (edges, deg, oriented, wedges). */
+  private def orientedWedges(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val (edges, deg, withDeg) = edgesWithDegrees(spark, dir)
+    val oriented = withDeg
       .select(
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
@@ -870,16 +905,20 @@ object Analytics {
         col("e.du2").as("du"), col("e.dv2").as("dv"))
     val wedges = oriented.as("e1").join(oriented.as("e2"),
         col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.v").as("x"), col("e1.dv").as("dx"),
+      .select(col("e1.u").as("apex"),
+        col("e1.v").as("x"), col("e1.dv").as("dx"),
         col("e2.v").as("y"), col("e2.dv").as("dy"))
-      // the closing side re-canonicalized to the SAME (deg, id) order the
-      // oriented edge set stores — equi-joinable
-      .select(
+      .select(col("apex"),
         when(col("dx") < col("dy") ||
           (col("dx") === col("dy") && col("x") < col("y")),
           struct(col("x").as("lo"), col("y").as("hi")))
           .otherwise(struct(col("y").as("lo"), col("x").as("hi"))).as("c"))
-      .select(col("c.lo").as("lo"), col("c.hi").as("hi"))
+      .select(col("apex"), col("c.lo").as("lo"), col("c.hi").as("hi"))
+    (edges, deg, oriented, wedges)
+  }
+
+  def triangleCount(spark: SparkSession, dir: String): DataFrame = {
+    val (edges, deg, oriented, wedges) = orientedWedges(spark, dir)
     val nWedges = wedges.agg(count(lit(1)).as("n_wedges"))
     val nTri = wedges.join(oriented,
         wedges("lo") === oriented("u") && wedges("hi") === oriented("v"),
@@ -908,32 +947,7 @@ object Analytics {
     * same equi joins. lcc = 2T_v/(d_v(d_v−1)) from exact integers,
     * round-6; top-20 by (T, lcc) with full tie-break. */
   def localClustering(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coPurchaseEdges(spark, dir)
-    val deg = edges.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    val oriented = edges
-      .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
-      .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("u"), col("b").as("v"),
-            col("da").as("du2"), col("db").as("dv2")))
-          .otherwise(struct(col("b").as("u"), col("a").as("v"),
-            col("db").as("du2"), col("da").as("dv2"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"),
-        col("e.du2").as("du"), col("e.dv2").as("dv"))
-    val wedges = oriented.as("e1").join(oriented.as("e2"),
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("apex"),
-        col("e1.v").as("x"), col("e1.dv").as("dx"),
-        col("e2.v").as("y"), col("e2.dv").as("dy"))
-      .select(col("apex"),
-        when(col("dx") < col("dy") ||
-          (col("dx") === col("dy") && col("x") < col("y")),
-          struct(col("x").as("lo"), col("y").as("hi")))
-          .otherwise(struct(col("y").as("lo"), col("x").as("hi"))).as("c"))
-      .select(col("apex"), col("c.lo").as("lo"), col("c.hi").as("hi"))
+    val (_, deg, oriented, wedges) = orientedWedges(spark, dir)
     val triangles = wedges.join(oriented.select(col("u").as("lo"),
         col("v").as("hi")), Seq("lo", "hi"), "inner")
     val perNode = triangles
@@ -1243,12 +1257,8 @@ object Analytics {
     * graph structure. One degree agg + one edge join + a 1-row reduce;
     * everything edge-linear. */
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coPurchaseEdges(spark, dir)
-    val deg = edges.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    val directed = edges
-      .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
+    val (_, deg, withDeg) = edgesWithDegrees(spark, dir)
+    val directed = withDeg
       .select(explode(array(
         struct(col("da").as("x"), col("db").as("y")),
         struct(col("db").as("x"), col("da").as("y")))).as("p"))
@@ -1488,12 +1498,7 @@ object Analytics {
            WHERE e.a = s.u1 AND e.b = s.u2)
          ORDER BY score DESC, u1, u2 LIMIT 20""",
     "graph_assortativity" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-         e AS (SELECT a.p AS a, b.p AS b FROM op a JOIN op b
-             ON a.o = b.o AND a.p < b.p
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         und AS (SELECT a AS v FROM e UNION ALL SELECT b FROM e),
-         deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM und GROUP BY 1),
+      s"""WITH $coPurchaseDegreesSql,
          joined AS (SELECT da.d AS x, db.d AS y
            FROM e JOIN deg da ON da.v = e.a JOIN deg db ON db.v = e.b),
          de AS (SELECT x, y FROM joined UNION ALL SELECT y, x FROM joined),
@@ -1508,20 +1513,7 @@ object Analytics {
              CAST(n * sxx - sx * sx AS DOUBLE), 6) AS assortativity
          FROM s""",
     "graph_local_clustering" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-         e AS (SELECT a.p AS a, b.p AS b FROM op a JOIN op b
-             ON a.o = b.o AND a.p < b.p
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         und AS (SELECT a AS v FROM e UNION ALL SELECT b FROM e),
-         deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM und GROUP BY 1),
-         o AS (SELECT CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.a ELSE e.b END AS u,
-             CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.b ELSE e.a END AS v,
-             CASE WHEN (da.d, e.a) < (db.d, e.b) THEN db.d ELSE da.d END AS dv
-           FROM e JOIN deg da ON da.v = e.a JOIN deg db ON db.v = e.b),
-         w AS (SELECT e1.u AS apex,
-             CASE WHEN (e1.dv, e1.v) < (e2.dv, e2.v) THEN e1.v ELSE e2.v END AS lo,
-             CASE WHEN (e1.dv, e1.v) < (e2.dv, e2.v) THEN e2.v ELSE e1.v END AS hi
-           FROM o e1 JOIN o e2 ON e1.u = e2.u AND e1.v < e2.v),
+      s"""WITH $orientedWedgesSql,
          t AS (SELECT apex, lo, hi FROM w WHERE EXISTS
            (SELECT 1 FROM o WHERE o.u = w.lo AND o.v = w.hi)),
          pn AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM
@@ -1698,19 +1690,7 @@ object Analytics {
              AS q_total
          FROM q ORDER BY brand""",
     "graph_triangle_count" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-         e AS (SELECT a.p AS a, b.p AS b FROM op a JOIN op b
-             ON a.o = b.o AND a.p < b.p
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         und AS (SELECT a AS v FROM e UNION ALL SELECT b FROM e),
-         deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM und GROUP BY 1),
-         o AS (SELECT CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.a ELSE e.b END AS u,
-             CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.b ELSE e.a END AS v,
-             CASE WHEN (da.d, e.a) < (db.d, e.b) THEN db.d ELSE da.d END AS dv
-           FROM e JOIN deg da ON da.v = e.a JOIN deg db ON db.v = e.b),
-         w AS (SELECT CASE WHEN (e1.dv, e1.v) < (e2.dv, e2.v) THEN e1.v ELSE e2.v END AS lo,
-             CASE WHEN (e1.dv, e1.v) < (e2.dv, e2.v) THEN e2.v ELSE e1.v END AS hi
-           FROM o e1 JOIN o e2 ON e1.u = e2.u AND e1.v < e2.v),
+      s"""WITH $orientedWedgesSql,
          t AS (SELECT w.lo FROM w WHERE EXISTS
            (SELECT 1 FROM o WHERE o.u = w.lo AND o.v = w.hi))
          SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM deg) AS n_nodes,

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -247,9 +248,6 @@ object Audit {
       stlDaily(spark, dir).select(col("day_num"), col("residual"))
         .as[(Long, Double)],
       100000, "ESD residual frame (calendar-bounded)")
-    def r6(v: Double): Double =
-      BigDecimal.decimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble
     def pct50(xs: Array[Double]): Double = { // Spark Percentile, p = 0.5
       java.util.Arrays.sort(xs)
       val pos = 0.5 * (xs.length - 1)
@@ -261,10 +259,10 @@ object Audit {
     var remaining = base
     val out = Seq.newBuilder[(Int, Long, Double, Double, Double, Double, Boolean)]
     for (r <- 1 to 3 if remaining.nonEmpty) {
-      val med = r6(pct50(remaining.map(_._2).toArray))
-      val mad = r6(pct50(remaining.map(t => math.abs(t._2 - med)).toArray))
+      val med = round6(pct50(remaining.map(_._2).toArray))
+      val mad = round6(pct50(remaining.map(t => math.abs(t._2 - med)).toArray))
       val scored = remaining.map { case (d, x) =>
-        val z = if (mad != 0.0) r6(0.6745 * (x - med) / mad) else 0.0
+        val z = if (mad != 0.0) round6(0.6745 * (x - med) / mad) else 0.0
         (d, x, z)
       }
       val top = scored.minBy { case (d, _, z) => (-math.abs(z), d) }
@@ -550,8 +548,7 @@ object Audit {
     * map-combinable scan; three counters. */
   def randomizedResponse(spark: SparkSession, dir: String): DataFrame = {
     val p = 0.75
-    val eps = BigDecimal(math.log(p / (1 - p)))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val eps = round6(math.log(p / (1 - p)))
     val u = (h48(concat(lit("rr:"), col("event_id"))).cast("double") + 0.5) /
       lit(math.pow(2.0, 48))
     val y = col("event_type") === "purchase"

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -184,10 +185,9 @@ object Er {
   private val FsFields = Seq(
     ("words_band", 0.90, 0.10), ("first_word", 0.85, 0.05),
     ("last_word", 0.85, 0.05), ("chars_close", 0.95, 0.20))
-  private def r6(x: Double) = math.rint(x * 1e6) / 1e6
-  private val FsAgree = FsFields.map { case (_, m, u) => r6(math.log(m / u)) }
+  private val FsAgree = FsFields.map { case (_, m, u) => round6(math.log(m / u)) }
   private val FsDisagree =
-    FsFields.map { case (_, m, u) => r6(math.log((1 - m) / (1 - u))) }
+    FsFields.map { case (_, m, u) => round6(math.log((1 - m) / (1 - u))) }
   private val FsThreshold = 2.0
 
   /** L232 — Fellegi–Sunter record-linkage scoring (Fellegi & Sunter
@@ -457,14 +457,7 @@ object Er {
          cand AS (SELECT LEAST(a.doc_id, b.doc_id) AS d1,
              GREATEST(a.doc_id, b.doc_id) AS d2
            FROM r a JOIN r b ON b.rank - a.rank BETWEEN 1 AND $W),
-         w AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS word
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM w GROUP BY 1),
-         inter AS (SELECT c.d1, c.d2, COUNT(*) AS inter
-           FROM cand c
-           JOIN w w1 ON c.d1 = w1.doc_id
-           JOIN w w2 ON c.d2 = w2.doc_id AND w1.word = w2.word
-           GROUP BY 1, 2)
+         $wordOverlapSql
          SELECT d1, d2, CAST(inter AS BIGINT) AS inter,
            CAST(z1.sz + z2.sz - inter AS BIGINT) AS uni,
            round(CAST(inter AS DOUBLE) / CAST(z1.sz + z2.sz - inter AS DOUBLE), 6)
@@ -521,6 +514,19 @@ object Er {
          WHERE rk = 1 ORDER BY cluster""",
   )
 
+  /** Oracle CTEs over a candidate-pair CTE `cand(d1, d2)`: each doc's
+    * distinct words `w`, their count `sizes(doc_id, sz)` and each pair's
+    * shared-word count `inter(d1, d2, inter)`. */
+  private def wordOverlapSql: String =
+    """w AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS word
+           FROM documents),
+         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM w GROUP BY 1),
+         inter AS (SELECT c.d1, c.d2, COUNT(*) AS inter
+           FROM cand c
+           JOIN w w1 ON c.d1 = w1.doc_id
+           JOIN w w2 ON c.d2 = w2.doc_id AND w1.word = w2.word
+           GROUP BY 1, 2)"""
+
   /** Shared DuckDB CTE chain for the SNM multipass candidate+verify
     * stages, ending in `inter(d1, d2, inter)` and `sizes(doc_id, sz)` —
     * composed by the er_snm_multipass oracle and er_golden_record's
@@ -546,12 +552,5 @@ object Er {
              SELECT LEAST(a.doc_id, b.doc_id) AS d1,
                GREATEST(a.doc_id, b.doc_id) AS d2
              FROM r2 a JOIN r2 b ON b.rank - a.rank BETWEEN 1 AND $W)),
-         w AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS word
-           FROM documents),
-         sizes AS (SELECT doc_id, COUNT(*) AS sz FROM w GROUP BY 1),
-         inter AS (SELECT c.d1, c.d2, COUNT(*) AS inter
-           FROM cand c
-           JOIN w w1 ON c.d1 = w1.doc_id
-           JOIN w w2 ON c.d2 = w2.doc_id AND w1.word = w2.word
-           GROUP BY 1, 2)"""
+         $wordOverlapSql"""
 }

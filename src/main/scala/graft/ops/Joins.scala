@@ -379,10 +379,17 @@ object Joins {
     * specialized shapes are reproduced from their AST forms in Round9Spec;
     * this key proves the compiler end-to-end against its own oracle. */
   def cepPatternGeneric(spark: SparkSession, dir: String): DataFrame =
+    viewClickPurchase(spark, dir, relaxed = false)
+
+  /** view → click → purchase within 3 days through the compiler, strict
+    * or relaxed contiguity; one row per match with the three event ids. */
+  private def viewClickPurchase(spark: SparkSession, dir: String,
+      relaxed: Boolean): DataFrame =
     Cep.matches(events(spark, dir),
         Cep.Pattern(
           Seq(Cep.Group("view"), Cep.Group("click"), Cep.Group("purchase")),
-          withinUs = Some(3L * 24 * 3600 * 1000000)))
+          withinUs = Some(3L * 24 * 3600 * 1000000),
+          relaxed = relaxed))
       .select(col("user_id"),
         col("g_first_id")(0).as("view_id"),
         col("g_first_id")(1).as("click_id"),
@@ -400,17 +407,7 @@ object Joins {
     * relaxed match with identical ids (Round9Spec pins the containment
     * on the fixture). */
   def cepFollowedByRelaxed(spark: SparkSession, dir: String): DataFrame =
-    Cep.matches(events(spark, dir),
-        Cep.Pattern(
-          Seq(Cep.Group("view"), Cep.Group("click"), Cep.Group("purchase")),
-          withinUs = Some(3L * 24 * 3600 * 1000000),
-          relaxed = true))
-      .select(col("user_id"),
-        col("g_first_id")(0).as("view_id"),
-        col("g_first_id")(1).as("click_id"),
-        col("g_first_id")(2).as("purchase_id"),
-        col("span_us"))
-      .orderBy("purchase_id")
+    viewClickPurchase(spark, dir, relaxed = true)
 
   /** Strict block chained relaxedly (Flink `times(2).consecutive()` then
     * `followedBy`): two strictly consecutive clicks (a double-click, no
@@ -453,6 +450,33 @@ object Joins {
   )
 
   private val evTs = "CAST(ts AS TIMESTAMP)"
+
+  /** `seq`: each event with the types, ids and time of its two
+    * predecessors in the user's (ts, event_id) order — the strict
+    * three-event chain oracles read t1/t2/id1/id2/ts1. */
+  private val lag3Sql =
+    s"""seq AS (
+            SELECT user_id, event_id, event_type, epoch_us($evTs) AS ts_us,
+              lag(event_type, 2) OVER w AS t1, lag(event_type, 1) OVER w AS t2,
+              lag(event_id, 2) OVER w AS id1, lag(event_id, 1) OVER w AS id2,
+              lag(epoch_us($evTs), 2) OVER w AS ts1
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id))"""
+
+  /** Each purchase with the latest click at or before it, per user. */
+  private val asOfClickBeforePurchaseSql =
+    s"""WITH tagged AS (
+            SELECT user_id, event_id, $evTs AS ts, event_type,
+              last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
+                OVER w AS click_id,
+              last_value(CASE WHEN event_type = 'click' THEN epoch_us($evTs) END IGNORE NULLS)
+                OVER w AS click_us
+            FROM events WHERE event_type IN ('click', 'purchase')
+            WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+          SELECT user_id, event_id AS purchase_id, click_id,
+            epoch_us(ts) - click_us AS age_us
+          FROM tagged WHERE event_type = 'purchase' ORDER BY purchase_id"""
 
   val oracles: Map[String, String] = Map(
     "cep_relaxed_blocks" ->
@@ -497,13 +521,7 @@ object Joins {
           WHERE p.us - v.view_us <= CAST(3 AS BIGINT) * 24 * 3600 * 1000000
           ORDER BY purchase_id""",
     "cep_pattern_generic" ->
-      s"""WITH seq AS (
-            SELECT user_id, event_id, event_type, epoch_us($evTs) AS ts_us,
-              lag(event_type, 2) OVER w AS t1, lag(event_type, 1) OVER w AS t2,
-              lag(event_id, 2) OVER w AS id1, lag(event_id, 1) OVER w AS id2,
-              lag(epoch_us($evTs), 2) OVER w AS ts1
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id))
+      s"""WITH $lag3Sql
           SELECT user_id, id1 AS view_id, id2 AS click_id,
             event_id AS purchase_id, ts_us - ts1 AS span_us
           FROM seq
@@ -570,13 +588,7 @@ object Joins {
           FROM v WHERE next_type IS NULL OR next_type <> 'view'
           ORDER BY user_id, first_view_id""",
     "cep_click_click_purchase" ->
-      s"""WITH seq AS (
-            SELECT user_id, event_id, event_type, epoch_us($evTs) AS ts_us,
-              lag(event_type, 2) OVER w AS t1, lag(event_type, 1) OVER w AS t2,
-              lag(event_id, 2) OVER w AS id1, lag(event_id, 1) OVER w AS id2,
-              lag(epoch_us($evTs), 2) OVER w AS ts1
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id))
+      s"""WITH $lag3Sql
           SELECT user_id, id1, id2, event_id AS purchase_id, ts_us - ts1 AS span_us
           FROM seq
           WHERE t1 = 'click' AND t2 = 'click' AND event_type = 'purchase'
@@ -595,34 +607,10 @@ object Joins {
           SELECT user_id, event_id AS click_id, purchase_id,
             purchase_us - epoch_us(ts) AS wait_us
           FROM tagged WHERE event_type = 'click' ORDER BY click_id""",
-    "join_asof_click_before_purchase" ->
-      s"""WITH tagged AS (
-            SELECT user_id, event_id, $evTs AS ts, event_type,
-              last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
-                OVER w AS click_id,
-              last_value(CASE WHEN event_type = 'click' THEN epoch_us($evTs) END IGNORE NULLS)
-                OVER w AS click_us
-            FROM events WHERE event_type IN ('click', 'purchase')
-            WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-          SELECT user_id, event_id AS purchase_id, click_id,
-            epoch_us(ts) - click_us AS age_us
-          FROM tagged WHERE event_type = 'purchase' ORDER BY purchase_id""",
+    "join_asof_click_before_purchase" -> asOfClickBeforePurchaseSql,
     // the physical-operator route has the SAME contract as the window
     // form — one oracle text, two Spark plans, both must hash-match it
-    "join_asof_physical" ->
-      s"""WITH tagged AS (
-            SELECT user_id, event_id, $evTs AS ts, event_type,
-              last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
-                OVER w AS click_id,
-              last_value(CASE WHEN event_type = 'click' THEN epoch_us($evTs) END IGNORE NULLS)
-                OVER w AS click_us
-            FROM events WHERE event_type IN ('click', 'purchase')
-            WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-          SELECT user_id, event_id AS purchase_id, click_id,
-            epoch_us(ts) - click_us AS age_us
-          FROM tagged WHERE event_type = 'purchase' ORDER BY purchase_id""",
+    "join_asof_physical" -> asOfClickBeforePurchaseSql,
     "join_range_bucketed" ->
       s"""WITH e AS (SELECT event_id AS err_id, epoch_us($evTs) AS err_us
             FROM events WHERE event_type = 'error' AND value >= 150),

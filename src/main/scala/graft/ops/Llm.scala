@@ -879,6 +879,37 @@ object Llm {
 
   private def h48S(e: String): String = graft.Tables.h48Sql(e)
 
+  /** Oracle twin of [[lshFrame]]'s hyperplane bits: `buckets(vec_id,
+    * bucket)`, the 6-bit sign pattern of each embedding against the
+    * h48-seeded ±1000 hyperplanes. */
+  private[ops] val lshBucketsSql = {
+    val hw = s"(${h48S("(j || '_' || i)")} % 2001 - 1000)"
+    s"""bits AS (
+            SELECT vec_id, j,
+              CASE WHEN list_sum(list_transform(range(1,65),
+                  i -> CAST(embedding[i] AS DOUBLE) * CAST($hw AS DOUBLE))) >= 0
+                THEN CAST(1 AS BIGINT) << CAST(j AS INT) ELSE 0 END AS bit
+            FROM embeddings CROSS JOIN (SELECT unnest(range(0,6)) AS j) js),
+          buckets AS (SELECT vec_id, CAST(SUM(bit) AS BIGINT) AS bucket
+            FROM bits GROUP BY 1)"""
+  }
+
+  /** Oracle CTEs through `bands(doc_id, simhash, band, v)`: the 48-bit
+    * word SimHash `sig(doc_id, simhash)` of every document of `docs`,
+    * banded 4×12 bits. */
+  private def simhashBandsSql(docs: String): String =
+    s"""wds AS (SELECT doc_id, unnest(list_distinct(string_split(text,' '))) AS word
+            FROM $docs),
+          h AS (SELECT doc_id, ${h48S("word")} AS hw FROM wds),
+          bits AS (SELECT doc_id, b,
+              CAST(SUM(CASE WHEN (hw >> b) & 1 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS s
+            FROM h CROSS JOIN (SELECT unnest(range(0,48)) AS b) bb GROUP BY 1, 2),
+          sig AS (SELECT doc_id,
+              CAST(SUM(CASE WHEN s > 0 THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE 0 END) AS BIGINT) AS simhash
+            FROM bits GROUP BY 1),
+          bands AS (SELECT doc_id, simhash, band, (simhash >> CAST(12*band AS INT)) & 4095 AS v
+            FROM sig CROSS JOIN (SELECT unnest(range(0,4)) AS band) b4)"""
+
   /** DuckDB CTE chain ending in `cand(d1, d2)` — banded candidate pairs,
     * the oracle twin of [[nearCandidates]]. CTE names are nc_-prefixed so
     * composing oracles (Llm3's corpus-wide clusters) can append their own
@@ -927,17 +958,7 @@ object Llm {
           GROUP BY 1, 2 ORDER BY 1, 2"""
     },
     "llm_dedup_simhash" ->
-      s"""WITH wds AS (SELECT doc_id, unnest(list_distinct(string_split(text,' '))) AS word
-            FROM documents),
-          h AS (SELECT doc_id, ${h48S("word")} AS hw FROM wds),
-          bits AS (SELECT doc_id, b,
-              CAST(SUM(CASE WHEN (hw >> b) & 1 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS s
-            FROM h CROSS JOIN (SELECT unnest(range(0,48)) AS b) bb GROUP BY 1, 2),
-          sig AS (SELECT doc_id,
-              CAST(SUM(CASE WHEN s > 0 THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE 0 END) AS BIGINT) AS simhash
-            FROM bits GROUP BY 1),
-          bands AS (SELECT doc_id, simhash, band, (simhash >> CAST(12*band AS INT)) & 4095 AS v
-            FROM sig CROSS JOIN (SELECT unnest(range(0,4)) AS band) b4),
+      s"""WITH ${simhashBandsSql("documents")},
           pr AS (SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
             FROM bands b1 JOIN bands b2
               ON b1.band = b2.band AND b1.v = b2.v AND b1.doc_id != b2.doc_id),
@@ -945,17 +966,7 @@ object Llm {
           SELECT s.doc_id, s.simhash, COALESCE(pc.n_partners, 0) AS n_partners
           FROM sig s LEFT JOIN pc ON s.doc_id = pc.doc_id ORDER BY s.doc_id""",
     "llm_dedup_simhash_verified" ->
-      s"""WITH wds AS (SELECT doc_id, unnest(list_distinct(string_split(text,' '))) AS word
-            FROM documents WHERE doc_id < 1000),
-          h AS (SELECT doc_id, ${h48S("word")} AS hw FROM wds),
-          bits AS (SELECT doc_id, b,
-              CAST(SUM(CASE WHEN (hw >> b) & 1 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS s
-            FROM h CROSS JOIN (SELECT unnest(range(0,48)) AS b) bb GROUP BY 1, 2),
-          sig AS (SELECT doc_id,
-              CAST(SUM(CASE WHEN s > 0 THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE 0 END) AS BIGINT) AS simhash
-            FROM bits GROUP BY 1),
-          bands AS (SELECT doc_id, simhash, band, (simhash >> CAST(12*band AS INT)) & 4095 AS v
-            FROM sig CROSS JOIN (SELECT unnest(range(0,4)) AS band) b4),
+      s"""WITH ${simhashBandsSql("documents WHERE doc_id < 1000")},
           cand AS (SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2,
               b1.simhash AS sh1, b2.simhash AS sh2
             FROM bands b1 JOIN bands b2
@@ -1040,15 +1051,7 @@ object Llm {
           FROM e a JOIN e b ON a.vec_id < b.vec_id
           ORDER BY cos_r DESC, v1 ASC, v2 ASC LIMIT 20""",
     "llm_ann_lsh" -> {
-      val hw = s"(${h48S("(j || '_' || i)")} % 2001 - 1000)"
-      s"""WITH bits AS (
-            SELECT vec_id, j,
-              CASE WHEN list_sum(list_transform(range(1,65),
-                  i -> CAST(embedding[i] AS DOUBLE) * CAST($hw AS DOUBLE))) >= 0
-                THEN CAST(1 AS BIGINT) << CAST(j AS INT) ELSE 0 END AS bit
-            FROM embeddings CROSS JOIN (SELECT unnest(range(0,6)) AS j) js),
-          buckets AS (SELECT vec_id, CAST(SUM(bit) AS BIGINT) AS bucket
-            FROM bits GROUP BY 1),
+      s"""WITH $lshBucketsSql,
           e AS (SELECT em.vec_id, embedding, ${normSql("embedding")} AS nrm, bucket
             FROM embeddings em JOIN buckets b ON em.vec_id = b.vec_id),
           scored AS (SELECT q.vec_id AS qid, q.bucket AS bucket, c.vec_id AS vec_id,
@@ -1240,7 +1243,15 @@ object MmDecode {
 
   /** Real decode: container sniff (reader selection), header parse, raster
     * read — format name, true dimensions, band count. */
-  def decode(p: Payload): Meta = {
+  def decode(p: Payload): Meta = withReader(p) { reader =>
+    val img = reader.read(0)
+    Meta(p.doc_id, reader.getFormatName.toLowerCase, img.getWidth,
+      img.getHeight, img.getRaster.getNumBands)
+  }
+
+  /** Runs `f` on the first image reader that recognizes `p`'s container
+    * (input already set), then releases the reader and the stream. */
+  private def withReader[T](p: Payload)(f: javax.imageio.ImageReader => T): T = {
     val iis = javax.imageio.ImageIO.createImageInputStream(
       new java.io.ByteArrayInputStream(p.payload))
     try {
@@ -1249,9 +1260,7 @@ object MmDecode {
       val reader = readers.next()
       try {
         reader.setInput(iis)
-        val img = reader.read(0)
-        Meta(p.doc_id, reader.getFormatName.toLowerCase, img.getWidth,
-          img.getHeight, img.getRaster.getNumBands)
+        f(reader)
       } finally reader.dispose()
     } finally iis.close()
   }
@@ -1364,39 +1373,31 @@ object MmDecode {
     * form of the same rational). */
   def sampleFrames(p: Payload): Seq[VFrame] = {
     import javax.imageio.metadata.IIOMetadataNode
-    val iis = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(p.payload))
-    try {
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      require(readers.hasNext, s"no codec recognizes doc ${p.doc_id}")
-      val reader = readers.next()
-      try {
-        reader.setInput(iis)
-        require(reader.getFormatName.toLowerCase == "gif",
-          s"doc ${p.doc_id}: not a gif container")
-        val n = reader.getNumImages(true)
-        (0 until 4).map(j => j.toLong * n / 4).distinct.map { fi =>
-          val img = reader.read(fi.toInt)
-          val meta = reader.getImageMetadata(fi.toInt)
-          val root = meta.getAsTree(meta.getNativeMetadataFormatName)
-            .asInstanceOf[IIOMetadataNode]
-          val gce = root.getElementsByTagName("GraphicControlExtension")
-          require(gce.getLength > 0, s"doc ${p.doc_id} frame $fi: no GCE")
-          val delayCs = gce.item(0).asInstanceOf[IIOMetadataNode]
-            .getAttribute("delayTime").toLong
-          val (w, h) = (img.getWidth, img.getHeight)
-          var sum = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) { sum += img.getRGB(x, y) & 0xff; x += 1 }
-            y += 1
-          }
-          VFrame(p.doc_id, n.toLong, fi, fi * delayCs * 10,
-            sum.toDouble / (w.toLong * h))
+    withReader(p) { reader =>
+      require(reader.getFormatName.toLowerCase == "gif",
+        s"doc ${p.doc_id}: not a gif container")
+      val n = reader.getNumImages(true)
+      (0 until 4).map(j => j.toLong * n / 4).distinct.map { fi =>
+        val img = reader.read(fi.toInt)
+        val meta = reader.getImageMetadata(fi.toInt)
+        val root = meta.getAsTree(meta.getNativeMetadataFormatName)
+          .asInstanceOf[IIOMetadataNode]
+        val gce = root.getElementsByTagName("GraphicControlExtension")
+        require(gce.getLength > 0, s"doc ${p.doc_id} frame $fi: no GCE")
+        val delayCs = gce.item(0).asInstanceOf[IIOMetadataNode]
+          .getAttribute("delayTime").toLong
+        val (w, h) = (img.getWidth, img.getHeight)
+        var sum = 0L
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) { sum += img.getRGB(x, y) & 0xff; x += 1 }
+          y += 1
         }
-      } finally reader.dispose()
-    } finally iis.close()
+        VFrame(p.doc_id, n.toLong, fi, fi * delayCs * 10,
+          sum.toDouble / (w.toLong * h))
+      }
+    }
   }
 
   /** Real resize + feature extraction: aspect-preserving integer resize to

@@ -206,12 +206,7 @@ object Llm10 {
     val xy = scanned.select(
       round(log(col("n_tok").cast("double")), 6).as("x"),
       round(log(col("n_voc").cast("double")), 6).as("y"))
-    val s = xy.agg(count(lit(1)).as("n"),
-      sum(col("x").cast("decimal(18,6)")).cast("double").as("sx"),
-      sum(round(col("x") * col("x"), 6).cast("decimal(18,6)")).cast("double").as("sxx"),
-      sum(col("y").cast("decimal(18,6)")).cast("double").as("sy"),
-      sum(round(col("x") * col("y"), 6).cast("decimal(18,6)")).cast("double").as("sxy"),
-      sum(round(col("y") * col("y"), 6).cast("decimal(18,6)")).cast("double").as("syy"))
+    val s = Llm8.sixSums(xy)
     val slope = (col("n") * col("sxy") - col("sx") * col("sy")) /
       (col("n") * col("sxx") - col("sx") * col("sx"))
     s.select(col("n").as("n_checkpoints"),

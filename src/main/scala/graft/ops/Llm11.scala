@@ -170,6 +170,17 @@ object Llm11 {
            AS BIGINT) AS n_tokens FROM seg$k)"""
   }
 
+  /** Oracle CTEs: corpus word counts `wc(word, cnt)` and every word split
+    * into characters `seg0(word, cnt, s)` (chr(1)-separated symbols). */
+  private val bpeSeedSql =
+    s"""wc AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
+           FROM (SELECT unnest(string_split(text, ' ')) AS word
+             FROM documents)
+           WHERE len(word) > 0 GROUP BY 1),
+         seg0 AS (SELECT word, cnt,
+             regexp_replace(word, '(.)', chr(1) || '\\1', 'g') AS s
+           FROM wc)"""
+
   val oracles: Map[String, String] = Map(
     "llm_bpe_merges" -> {
       val steps = (1 to 5).map(bpeStepSql).mkString(",\n")
@@ -178,25 +189,13 @@ object Llm11 {
            b$k.b AS right_sym, b$k.pcnt AS pair_count,
            n$k.n_tokens AS n_tokens_after FROM b$k, n$k""")
         .mkString(" UNION ALL ")
-      s"""WITH wc AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
-           FROM (SELECT unnest(string_split(text, ' ')) AS word
-             FROM documents)
-           WHERE len(word) > 0 GROUP BY 1),
-         seg0 AS (SELECT word, cnt,
-             regexp_replace(word, '(.)', chr(1) || '\\1', 'g') AS s
-           FROM wc),
+      s"""WITH $bpeSeedSql,
          $steps
          $union ORDER BY step"""
     },
     "llm_bpe_tokenize" -> {
       val steps = (1 to 5).map(bpeStepSql).mkString(",\n")
-      s"""WITH wc AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
-           FROM (SELECT unnest(string_split(text, ' ')) AS word
-             FROM documents)
-           WHERE len(word) > 0 GROUP BY 1),
-         seg0 AS (SELECT word, cnt,
-             regexp_replace(word, '(.)', chr(1) || '\\1', 'g') AS s
-           FROM wc),
+      s"""WITH $bpeSeedSql,
          $steps,
          segn AS (SELECT word,
              CAST(len(string_split(s, chr(1))) - 1 AS BIGINT) AS n_sym

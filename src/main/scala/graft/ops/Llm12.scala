@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * equalization). */
 object Llm12 {
 
-  private val Dim = 64
   private val K = 8
 
   private def dot(a: Column, b: Column): Column =
@@ -150,11 +149,6 @@ object Llm12 {
     "mm_audio_resample" -> (audioResample _),
   )
 
-  /** DuckDB index-order dot product (the ArrayMath parity idiom). */
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, ${Dim + 1}), kc_i -> " +
-      s"CAST($a[kc_i] AS DOUBLE) * CAST($b[kc_i] AS DOUBLE)))"
-
   /** Unrolled greedy k-center twin: step j computes every remaining
     * point's round-6 min-d² to the selected set and takes the maximin
     * row (mind DESC, vec_id) — mechanically generated blocks, the
@@ -230,12 +224,7 @@ object Llm12 {
     // 80 samples of |y| = A after decimation (160/2), silence exactly 0;
     // the flips sit on even indices so no pair straddles one.
     "mm_audio_resample" ->
-      """WITH cls AS (SELECT doc_id, doc_id % 30 AS f FROM documents),
-         fam AS (SELECT DISTINCT f FROM cls),
-         w AS (SELECT f, wn FROM fam, (SELECT unnest(range(0, 50)) AS wn)),
-         sp AS (SELECT f, wn,
-             CASE WHEN (wn * 13 + f * 7) % 8 < 3 THEN 1 ELSE 0 END AS s
-           FROM w),
+      s"""WITH ${MmVad.speechWindowsSql},
          agg AS (SELECT f, CAST(SUM(s) AS BIGINT) AS n_speech
            FROM sp GROUP BY 1)
          SELECT doc_id, CAST(8000 AS BIGINT) AS n_in,

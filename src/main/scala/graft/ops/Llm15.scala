@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.Tables._
-import graft.functions.ArrayMath.{dotProduct, l2Norm}
+import graft.functions.ArrayMath.dotProduct
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,16 +36,33 @@ object Llm15 {
     * [[bandAudit]]'s scaladoc for the measured rationale. */
   private[graft] val StopShingleDf = 8
 
-  private def top5(scored: DataFrame, ord: Seq[Column]): DataFrame = {
+  private[ops] def top5(scored: DataFrame, ord: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(ord: _*)
     scored.withColumn("rn", row_number().over(w)).where(col("rn") <= K)
       .select(col("qid"), col("vec_id"))
   }
 
+  /** One recall row over the queries `qs`: the mean and minimum share of
+    * each query's `exact` top-5 that `retrieved` hits, and the mean
+    * candidate count in `cand` — (n_queries, avg_recall, min_recall,
+    * avg_candidates). */
+  private[ops] def recallRow(qs: DataFrame, exact: DataFrame, retrieved: DataFrame,
+      cand: DataFrame): DataFrame = {
+    val hits = retrieved.join(exact, Seq("qid", "vec_id"))
+      .groupBy("qid").agg(count(lit(1)).as("hits"))
+    val ncand = cand.groupBy("qid").agg(count(lit(1)).as("ncand"))
+    qs.join(hits, Seq("qid"), "left").join(ncand, Seq("qid"), "left")
+      .agg(count(lit(1)).as("n_queries"),
+        round(avg(coalesce(col("hits"), lit(0L)).cast("double") / K), 6)
+          .as("avg_recall"),
+        round(min(coalesce(col("hits"), lit(0L)).cast("double") / K), 6)
+          .as("min_recall"),
+        round(avg(coalesce(col("ncand"), lit(0L)).cast("double")), 6)
+          .as("avg_candidates"))
+  }
+
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(spark, dir)
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", l2Norm(col("emb")))
+    val e = Llm2.normedEmbeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("emb"), col("nrm"))
 
     val qs = e.where(col("vec_id") < K).select(col("vec_id").as("qid"))
@@ -82,21 +100,10 @@ object Llm15 {
         col("pqid") === col("qid") && col("label") === col("cell"))
       .select(col("qid"), col("vec_id"), col("adc"))
 
-    def methodRow(m: String, retrieved: DataFrame, cand: DataFrame): DataFrame = {
-      val hits = retrieved.join(exact, Seq("qid", "vec_id"))
-        .groupBy("qid").agg(count(lit(1)).as("hits"))
-      val ncand = cand.groupBy("qid").agg(count(lit(1)).as("ncand"))
-      qs.join(hits, Seq("qid"), "left").join(ncand, Seq("qid"), "left")
-        .agg(count(lit(1)).as("n_queries"),
-          round(avg(coalesce(col("hits"), lit(0L)).cast("double") / K), 6)
-            .as("avg_recall"),
-          round(min(coalesce(col("hits"), lit(0L)).cast("double") / K), 6)
-            .as("min_recall"),
-          round(avg(coalesce(col("ncand"), lit(0L)).cast("double")), 6)
-            .as("avg_candidates"))
+    def methodRow(m: String, retrieved: DataFrame, cand: DataFrame): DataFrame =
+      recallRow(qs, exact, retrieved, cand)
         .select(lit(m).as("method"), col("n_queries"), col("avg_recall"),
           col("min_recall"), col("avg_candidates"))
-    }
 
     // the exact row is the anchor: recall 1 by definition, candidates =
     // the full corpus minus self — the cost the approximate rows undercut
@@ -237,8 +244,7 @@ object Llm15 {
     val nTrue = truePairs.agg(count(lit(1)).as("n_true"))
     import spark.implicits._
     val dims = configs.map { case (b, r) =>
-      (b.toLong, r.toLong, BigDecimal(math.pow(1.0 / b, 1.0 / r))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      (b.toLong, r.toLong, round6(math.pow(1.0 / b, 1.0 / r)))
     }.toDF("bands", "rows_per_band", "s_star")
     dims.join(counts, Seq("bands"), "left")
       .crossJoin(broadcast(nTrue)).crossJoin(broadcast(nStop))
@@ -263,11 +269,10 @@ object Llm15 {
 
   // ---------- DuckDB oracle: the four index oracles' CTEs composed ----
 
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-
-  private def methodSql(m: String, five: String, cand: String): String =
-    s"""SELECT '$m' AS method,
+  /** DuckDB twin of [[recallRow]] under a leading `label` column: the
+    * top-5 CTE `five` against `ext5`, candidates counted in `cand`. */
+  private[ops] def recallRowSql(label: String, five: String, cand: String): String =
+    s"""SELECT $label,
         CAST(COUNT(*) AS BIGINT) AS n_queries,
         round(AVG(COALESCE(h.hits, 0) / 5.0), 6) AS avg_recall,
         round(MIN(COALESCE(h.hits, 0) / 5.0), 6) AS min_recall,
@@ -277,6 +282,17 @@ object Llm15 {
         FROM $five fv JOIN ext5 gt ON fv.qid = gt.qid AND fv.vec_id = gt.vec_id
         GROUP BY 1) h USING (qid)
       LEFT JOIN (SELECT qid, COUNT(*) AS ncand FROM $cand GROUP BY 1) nc USING (qid)"""
+
+  /** The queries `qs` and their exact cosine top-5 ground truth `ext5`
+    * (the llm_sim_topk oracle, q < 5), over [[Llm5.ivfProbeSql]]'s `e2`. */
+  private[ops] val exactTop5Sql =
+    s"""qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id < 5),
+        exsc AS (SELECT q.vec_id AS qid, c.vec_id,
+            round(${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm), 6) AS cos_r
+          FROM e2 q JOIN e2 c ON q.vec_id < 5 AND q.vec_id != c.vec_id),
+        ext5 AS (SELECT qid, vec_id FROM (SELECT *, ROW_NUMBER() OVER
+            (PARTITION BY qid ORDER BY cos_r DESC, vec_id ASC) AS rn FROM exsc)
+          WHERE rn <= 5)"""
 
   private def bandAuditOracle: String = {
     val mins = Llm.MinhashA.zipWithIndex.map { case (a, i) =>
@@ -288,8 +304,7 @@ object Llm15 {
           .mkString(" || '_' || ")
         s"SELECT doc_id, $j AS band, $sig AS sig FROM m"
       }.mkString(" UNION ALL ")
-      val sStar = BigDecimal(math.pow(1.0 / b, 1.0 / r))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val sStar = round6(math.pow(1.0 / b, 1.0 / r))
       s"""SELECT CAST($b AS BIGINT) AS bands, CAST($r AS BIGINT) AS rows_per_band,
           $sStar AS s_star,
           (SELECT CAST(COUNT(*) AS BIGINT) FROM (
@@ -330,28 +345,17 @@ object Llm15 {
       FROM ($rows) ORDER BY bands DESC"""
   }
 
+  private def methodSql(m: String, five: String, cand: String): String =
+    recallRowSql(s"'$m' AS method", five, cand)
+
   val oracles: Map[String, String] = Map(
     "llm_dedup_band_audit" -> bandAuditOracle,
-    "llm_ann_recall" -> {
-      val hw = s"(${graft.Tables.h48Sql("(j || '_' || i)")} % 2001 - 1000)"
+    "llm_ann_recall" ->
       s"""WITH ${Llm5.subSql},
         ${Llm5.ivfProbeSql},
-        qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id < 5),
-        -- exact cosine top-5 ground truth (the llm_sim_topk oracle, q < 5)
-        exsc AS (SELECT q.vec_id AS qid, c.vec_id,
-            round(${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm), 6) AS cos_r
-          FROM e2 q JOIN e2 c ON q.vec_id < 5 AND q.vec_id != c.vec_id),
-        ext5 AS (SELECT qid, vec_id FROM (SELECT *, ROW_NUMBER() OVER
-            (PARTITION BY qid ORDER BY cos_r DESC, vec_id ASC) AS rn FROM exsc)
-          WHERE rn <= 5),
+        $exactTop5Sql,
         -- LSH buckets (the llm_ann_lsh oracle)
-        bits AS (SELECT vec_id, j,
-            CASE WHEN list_sum(list_transform(range(1,65),
-                i -> CAST(embedding[i] AS DOUBLE) * CAST($hw AS DOUBLE))) >= 0
-              THEN CAST(1 AS BIGINT) << CAST(j AS INT) ELSE 0 END AS bit
-          FROM embeddings CROSS JOIN (SELECT unnest(range(0,6)) AS j) js),
-        buckets AS (SELECT vec_id, CAST(SUM(bit) AS BIGINT) AS bucket
-          FROM bits GROUP BY 1),
+        ${Llm.lshBucketsSql},
         eb AS (SELECT e2.vec_id, embedding, nrm, bucket
           FROM e2 JOIN buckets USING (vec_id)),
         lshsc AS (SELECT q.vec_id AS qid, c.vec_id,
@@ -370,15 +374,7 @@ object Llm15 {
             (PARTITION BY qid ORDER BY cos_r DESC, vec_id ASC) AS rn FROM ivfsc)
           WHERE rn <= 5),
         -- PQ ADC over all codes (the llm_pq_ann oracle)
-        lut AS (SELECT v.vec_id AS qid, v.s, c.j,
-            round(v.snn - 2 * list_sum(list_transform(range(1, 9),
-              i -> CAST(v.sv[i] * c.cemb[i] AS DOUBLE))) + c.cnn, 6) AS dr
-          FROM subn v JOIN cb c USING (s) WHERE v.vec_id < 5),
-        adc AS (SELECT l.qid, y.vec_id,
-            CAST(SUM(CAST(l.dr AS DECIMAL(18,6))) AS DOUBLE) AS adc
-          FROM codes y JOIN lut l ON y.s = l.s AND y.code = l.j
-            AND l.qid != y.vec_id
-          GROUP BY 1, 2),
+        ${Llm5.adcSql},
         pq5 AS (SELECT qid, vec_id FROM (SELECT *, ROW_NUMBER() OVER
             (PARTITION BY qid ORDER BY adc ASC, vec_id ASC) AS rn FROM adc)
           WHERE rn <= 5),
@@ -396,7 +392,6 @@ object Llm15 {
           UNION ALL ${methodSql("ivfpq", "ipq5", "ipqsc")}
           UNION ALL ${methodSql("lsh", "lsh5", "lshsc")}
           UNION ALL ${methodSql("pq", "pq5", "adc")})
-        ORDER BY method"""
-    },
+        ORDER BY method""",
   )
 }

@@ -1,9 +1,8 @@
 package graft.ops
 
 import graft.Tables._
-import graft.functions.ArrayMath.{dotProduct, l2Norm}
+import graft.functions.ArrayMath.dotProduct
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-17 ANN follow-through: MULTI-PROBE IVF recall sweep
@@ -34,9 +33,7 @@ object Llm19 {
   private[graft] val Probes = Seq(1, 2, 4, 10)
 
   def ivfMultiprobe(spark: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(spark, dir)
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", l2Norm(col("emb")))
+    val e = Llm2.normedEmbeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("emb"), col("nrm"))
     val qs = e.where(col("vec_id") < K).select(col("vec_id").as("qid"))
     // exact cosine top-5 ground truth — the L397 audit's anchor set
@@ -53,21 +50,8 @@ object Llm19 {
         .select(col("qid"), col("vec_id"),
           round(dotProduct(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")), 6)
             .as("cos_r"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_r").desc, col("vec_id").asc)
-      val retrieved = scored.withColumn("rn", row_number().over(w))
-        .where(col("rn") <= K).select(col("qid"), col("vec_id"))
-      val hits = retrieved.join(exact, Seq("qid", "vec_id"))
-        .groupBy("qid").agg(count(lit(1)).as("hits"))
-      val ncand = scored.groupBy("qid").agg(count(lit(1)).as("ncand"))
-      qs.join(hits, Seq("qid"), "left").join(ncand, Seq("qid"), "left")
-        .agg(count(lit(1)).as("n_queries"),
-          round(avg(coalesce(col("hits"), lit(0L)).cast("double") / K), 6)
-            .as("avg_recall"),
-          round(min(coalesce(col("hits"), lit(0L)).cast("double") / K), 6)
-            .as("min_recall"),
-          round(avg(coalesce(col("ncand"), lit(0L)).cast("double")), 6)
-            .as("avg_candidates"))
+      val retrieved = Llm15.top5(scored, Seq(col("cos_r").desc, col("vec_id").asc))
+      Llm15.recallRow(qs, exact, retrieved, scored)
         .select(lit(p.toLong).as("nprobe"), col("n_queries"),
           col("avg_recall"), col("min_recall"), col("avg_candidates"))
     }
@@ -80,20 +64,8 @@ object Llm19 {
 
   // ---------- DuckDB oracle ----------
 
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-
   private def probeRow(p: Int): String =
-    s"""SELECT CAST($p AS BIGINT) AS nprobe,
-        CAST(COUNT(*) AS BIGINT) AS n_queries,
-        round(AVG(COALESCE(h.hits, 0) / 5.0), 6) AS avg_recall,
-        round(MIN(COALESCE(h.hits, 0) / 5.0), 6) AS min_recall,
-        round(AVG(COALESCE(nc.ncand, 0) * 1.0), 6) AS avg_candidates
-      FROM qs
-      LEFT JOIN (SELECT fv.qid, COUNT(*) AS hits
-        FROM r5_$p fv JOIN ext5 gt ON fv.qid = gt.qid AND fv.vec_id = gt.vec_id
-        GROUP BY 1) h USING (qid)
-      LEFT JOIN (SELECT qid, COUNT(*) AS ncand FROM sc_$p GROUP BY 1) nc USING (qid)"""
+    Llm15.recallRowSql(s"CAST($p AS BIGINT) AS nprobe", s"r5_$p", s"sc_$p")
 
   private def cfgSql(p: Int): String =
     s"""sc_$p AS (SELECT c0.qid, c.vec_id,
@@ -108,13 +80,7 @@ object Llm19 {
   val oracles: Map[String, String] = Map(
     "llm_ivf_multiprobe" ->
       s"""WITH ${Llm5.ivfProbeSql},
-        qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id < 5),
-        exsc AS (SELECT q.vec_id AS qid, c.vec_id,
-            round(${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm), 6) AS cos_r
-          FROM e2 q JOIN e2 c ON q.vec_id < 5 AND q.vec_id != c.vec_id),
-        ext5 AS (SELECT qid, vec_id FROM (SELECT *, ROW_NUMBER() OVER
-            (PARTITION BY qid ORDER BY cos_r DESC, vec_id ASC) AS rn FROM exsc)
-          WHERE rn <= 5),
+        ${Llm15.exactTop5Sql},
         ${Probes.map(cfgSql).mkString(",\n        ")}
         SELECT * FROM (
           ${Probes.map(probeRow).mkString("\n          UNION ALL ")})

@@ -35,55 +35,41 @@ object Llm2 {
     * centroid = exact decimal-mean per dimension (deterministic across
     * engines and partition orders), probe = cosine over the broadcast
     * |labels|-row centroid table. Returns (qid, qemb, qnrm, cell). */
-  private[graft] def ivfProbe(spark: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(spark, dir)
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", l2Norm(col("emb")))
-
-    // Centroids: mean per (label, dim) via exact decimal sums, reassembled
-    // into an ordered array per label. |labels|·64 rows — broadcastable.
-    val centroids = e
-      .select(col("label"), posexplode(col("emb")).as(Seq("pos", "x")))
-      .groupBy("label", "pos")
-      .agg(davg(col("x")).as("c"))
-      .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        s => s.getField("c")).as("cemb"))
-      .withColumn("cnrm", l2Norm(col("cemb")))
-
-    val q = e.where(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("emb").as("qemb"), col("nrm").as("qnrm"))
-
-    // Probe: centroids ranked by cosine (broadcast nested-loop over k
-    // rows); rn = 1 is the classic single probe, [[Llm19]] keeps rn <= p
-    ivfProbeRankedFrom(q, centroids)
+  private[graft] def ivfProbe(spark: SparkSession, dir: String): DataFrame =
+    // rn = 1 is the classic single probe, [[Llm19]] keeps rn <= p
+    ivfProbeRanked(spark, dir)
       .where(col("rn") === 1)
       .select(col("qid"), col("qemb"), col("qnrm"), col("label").as("cell"))
-  }
 
-  /** All centroids ranked per query — (qid, qemb, qnrm, label, cos_c,
-    * rn); the multi-probe generalization reads rn <= nprobe. */
-  private[graft] def ivfProbeRanked(spark: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(spark, dir)
+  /** The embedding corpus with `emb` as array<double> and its L2 norm
+    * `nrm`. */
+  private[ops] def normedEmbeddings(spark: SparkSession, dir: String): DataFrame =
+    embeddings(spark, dir)
       .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
       .withColumn("nrm", l2Norm(col("emb")))
-    val centroids = e
-      .select(col("label"), posexplode(col("emb")).as(Seq("pos", "x")))
-      .groupBy("label", "pos")
-      .agg(davg(col("x")).as("c"))
-      .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        s => s.getField("c")).as("cemb"))
-      .withColumn("cnrm", l2Norm(col("cemb")))
+
+  /** Label-mean centroids (label, cemb, cnrm) of a [[normedEmbeddings]]
+    * frame: mean per (label, dim) via exact decimal sums, reassembled
+    * into an ordered array per label. |labels|·64 rows — broadcastable. */
+  private[ops] def labelCentroids(e: DataFrame): DataFrame = e
+    .select(col("label"), posexplode(col("emb")).as(Seq("pos", "x")))
+    .groupBy("label", "pos")
+    .agg(davg(col("x")).as("c"))
+    .groupBy("label")
+    .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
+      s => s.getField("c")).as("cemb"))
+    .withColumn("cnrm", l2Norm(col("cemb")))
+
+  /** All centroids ranked per query by cosine (a broadcast nested loop
+    * over k rows) — (qid, qemb, qnrm, label, cos_c, rn); the multi-probe
+    * generalization reads rn <= nprobe. */
+  private[graft] def ivfProbeRanked(spark: SparkSession, dir: String): DataFrame = {
+    val e = normedEmbeddings(spark, dir)
     val q = e.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("emb").as("qemb"), col("nrm").as("qnrm"))
-    ivfProbeRankedFrom(q, centroids)
-  }
-
-  private def ivfProbeRankedFrom(q: DataFrame, centroids: DataFrame): DataFrame = {
     val wProbe = Window.partitionBy(col("qid"))
       .orderBy(col("cos_c").desc, col("label").asc)
-    q.crossJoin(broadcast(centroids))
+    q.crossJoin(broadcast(labelCentroids(e)))
       .select(col("qid"), col("qemb"), col("qnrm"), col("label"),
         round(dotProduct(col("qemb"), col("cemb")) / (col("qnrm") * col("cnrm")), 6).as("cos_c"))
       .withColumn("rn", row_number().over(wProbe))
@@ -95,9 +81,7 @@ object Llm2 {
     * probed cell. Output: per query (vec_id<5) its probed cell and top-3
     * neighbors there. */
   def ivfAnn(spark: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(spark, dir)
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", l2Norm(col("emb")))
+    val e = normedEmbeddings(spark, dir)
     val probed = ivfProbe(spark, dir)
 
     // Search: equi-join on the probed cell, exact cosine top-3.
@@ -125,17 +109,8 @@ object Llm2 {
     * Centroid table stays broadcast-sized; the assignment is a broadcast
     * nested-loop over k rows — never a shuffle of the corpus. */
   private def centroidAssignment(spark: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(spark, dir)
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", l2Norm(col("emb")))
-    val centroids = e
-      .select(col("label"), posexplode(col("emb")).as(Seq("pos", "x")))
-      .groupBy("label", "pos")
-      .agg(davg(col("x")).as("c"))
-      .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        s => s.getField("c")).as("cemb"))
-      .withColumn("cnrm", l2Norm(col("cemb")))
+    val e = normedEmbeddings(spark, dir)
+    val centroids = labelCentroids(e)
       .select(col("label").as("cluster"), col("cemb"), col("cnrm"))
 
     val wAssign = Window.partitionBy(col("vec_id"))
@@ -307,24 +282,27 @@ object Llm2 {
     "llm_centroid_accuracy" -> (centroidAccuracy _),
   )
 
-
-  val oracles: Map[String, String] = Map(
-    "llm_centroid_accuracy" ->
-      s"""WITH ex AS (SELECT label, vec_id,
+  /** DuckDB twin of [[labelCentroids]]: `centn(label, cemb, cnrm)`. */
+  private[ops] val labelCentroidsSql =
+    s"""ex AS (SELECT label, vec_id,
             CAST(unnest(embedding) AS DOUBLE) AS x,
             CAST(unnest(range(0, len(embedding))) AS INT) AS pos
           FROM embeddings),
           cd AS (SELECT label, pos,
             ${dsumSql("x")} / CAST(COUNT(x) AS DOUBLE) AS c
           FROM ex GROUP BY 1, 2),
-          cent AS (SELECT label AS cluster, list(c ORDER BY pos) AS cemb FROM cd GROUP BY 1),
-          centn AS (SELECT cluster, cemb, ${normSql("cemb")} AS cnrm FROM cent),
+          cent AS (SELECT label, list(c ORDER BY pos) AS cemb FROM cd GROUP BY 1),
+          centn AS (SELECT label, cemb, ${normSql("cemb")} AS cnrm FROM cent)"""
+
+  val oracles: Map[String, String] = Map(
+    "llm_centroid_accuracy" ->
+      s"""WITH $labelCentroidsSql,
           e AS (SELECT vec_id, label, embedding, ${normSql("embedding")} AS nrm
             FROM embeddings),
-          scored AS (SELECT e.vec_id, e.label, c.cluster,
+          scored AS (SELECT e.vec_id, e.label, c.label AS cluster,
               ROW_NUMBER() OVER (PARTITION BY e.vec_id
                 ORDER BY round(${dotSql("e.embedding", "c.cemb")} / (e.nrm * c.cnrm), 6) DESC,
-                         c.cluster ASC) AS rn
+                         c.label ASC) AS rn
             FROM e CROSS JOIN centn c)
           SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
             CAST(SUM(CASE WHEN cluster = label THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
@@ -349,15 +327,7 @@ object Llm2 {
              - 256 * GREATEST(0, a + w - 256) AS DOUBLE) / w AS mean_gray
          FROM m ORDER BY doc_id, frame_idx""",
     "llm_ivf_ann" ->
-      s"""WITH ex AS (SELECT label, vec_id,
-            CAST(unnest(embedding) AS DOUBLE) AS x,
-            CAST(unnest(range(0, len(embedding))) AS INT) AS pos
-          FROM embeddings),
-          cd AS (SELECT label, pos,
-            ${dsumSql("x")} / CAST(COUNT(x) AS DOUBLE) AS c
-          FROM ex GROUP BY 1, 2),
-          cent AS (SELECT label, list(c ORDER BY pos) AS cemb FROM cd GROUP BY 1),
-          centn AS (SELECT label, cemb, ${normSql("cemb")} AS cnrm FROM cent),
+      s"""WITH $labelCentroidsSql,
           e AS (SELECT vec_id, label, embedding, ${normSql("embedding")} AS nrm FROM embeddings),
           q AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm FROM e WHERE vec_id < 5),
           probed0 AS (SELECT qid, qemb, qnrm, c.label,
@@ -386,21 +356,13 @@ object Llm2 {
          SELECT lang, CAST(rn AS INT) AS rn, bg, n
          FROM ranked WHERE rn <= 3 ORDER BY lang, rn""",
     "llm_kmeans_step" ->
-      s"""WITH ex AS (SELECT label, vec_id,
-            CAST(unnest(embedding) AS DOUBLE) AS x,
-            CAST(unnest(range(0, len(embedding))) AS INT) AS pos
-          FROM embeddings),
-          cd AS (SELECT label, pos,
-            ${dsumSql("x")} / CAST(COUNT(x) AS DOUBLE) AS c
-          FROM ex GROUP BY 1, 2),
-          cent AS (SELECT label AS cluster, list(c ORDER BY pos) AS cemb FROM cd GROUP BY 1),
-          centn AS (SELECT cluster, cemb, ${normSql("cemb")} AS cnrm FROM cent),
+      s"""WITH $labelCentroidsSql,
           e AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm FROM embeddings),
-          scored AS (SELECT e.vec_id, c.cluster,
+          scored AS (SELECT e.vec_id, c.label AS cluster,
               round(${dotSql("e.embedding", "c.cemb")} / (e.nrm * c.cnrm), 6) AS cos_c,
               ROW_NUMBER() OVER (PARTITION BY e.vec_id
                 ORDER BY round(${dotSql("e.embedding", "c.cemb")} / (e.nrm * c.cnrm), 6) DESC,
-                         c.cluster ASC) AS rn
+                         c.label ASC) AS rn
             FROM e CROSS JOIN centn c)
           SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_assigned,
             ${dsumSql("cos_c")} / CAST(COUNT(cos_c) AS DOUBLE) AS avg_cos

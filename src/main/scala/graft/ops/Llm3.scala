@@ -296,15 +296,7 @@ object Llm3 {
     * the corpus, so the gram equi-join broadcasts it — the standard
     * n-gram-hash decontamination layout at 100 TB. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    def grams(df: DataFrame) = df
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .where(size(col("ws")) >= 3)
-      .select(col("doc_id"), explode(arrays_zip(
-        slice(col("ws"), lit(1), size(col("ws")) - 2),
-        slice(col("ws"), lit(2), size(col("ws")) - 2),
-        slice(col("ws"), lit(3), size(col("ws")) - 2))).as("g"))
-      .select(col("doc_id"),
-        concat_ws(" ", col("g.0"), col("g.1"), col("g.2")).as("gram"))
+    def grams(df: DataFrame) = trigrams(df, "gram")
     val docs = documents(spark, dir)
     val bench = grams(docs.where(col("source") === "src0"))
       .select(col("gram")).distinct()
@@ -375,20 +367,26 @@ object Llm3 {
       .orderBy("doc_id")
   }
 
-  def dupSpans(spark: SparkSession, dir: String): DataFrame = {
-    // zipped-shifted-slices trigrams (codegen'd; an element_at lambda over
-    // `sequence` re-evaluates the split per element — measured 6.9 s vs
-    // 1.3 s at sf0.1), then distinct per (doc, shingle)
-    val sh = documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+  /** The word trigrams of each document of `docs(keys…, text)` with at
+    * least 3 words, as (keys…, `name`) rows, one per position. Zipped
+    * shifted slices keep it in codegen with zero shuffles (an element_at
+    * lambda over `sequence` re-evaluates the split per element — measured
+    * 6.9 s vs 1.3 s at sf0.1). */
+  private[ops] def trigrams(docs: DataFrame, name: String,
+      keys: Seq[String] = Seq("doc_id")): DataFrame = {
+    val k = keys.map(col)
+    docs.select(k :+ split(col("text"), " ").as("ws"): _*)
       .where(size(col("ws")) >= 3)
-      .select(col("doc_id"), explode(arrays_zip(
+      .select(k :+ explode(arrays_zip(
         slice(col("ws"), lit(1), size(col("ws")) - 2),
         slice(col("ws"), lit(2), size(col("ws")) - 2),
-        slice(col("ws"), lit(3), size(col("ws")) - 2))).as("g"))
-      .select(col("doc_id"),
-        concat_ws(" ", col("g.0"), col("g.1"), col("g.2")).as("s"))
-      .distinct()
+        slice(col("ws"), lit(3), size(col("ws")) - 2))).as("g"): _*)
+      .select(k :+ concat_ws(" ", col("g.0"), col("g.1"), col("g.2")).as(name): _*)
+  }
+
+  def dupSpans(spark: SparkSession, dir: String): DataFrame = {
+    // distinct per (doc, shingle)
+    val sh = trigrams(documents(spark, dir), "s").distinct()
     // df counts DOCS per shingle (rows are distinct per doc already)
     val dfreq = sh.groupBy("s").agg(count(lit(1)).as("df"))
     sh.join(dfreq, "s")
@@ -540,16 +538,8 @@ object Llm3 {
     require(nSrc <= 1000,
       s"llm_minhash_src_sim: $nSrc sources exceed the 1000-source pair-join " +
         "bound; band the signature join (as llm_dedup_near does) before lifting it")
-    val sh = documents(spark, dir)
-      .select(col("source"), split(col("text"), " ").as("ws"))
-      .where(size(col("ws")) >= 3)
-      .select(col("source"), explode(arrays_zip(
-        slice(col("ws"), lit(1), size(col("ws")) - 2),
-        slice(col("ws"), lit(2), size(col("ws")) - 2),
-        slice(col("ws"), lit(3), size(col("ws")) - 2))).as("g"))
-      .select(col("source"),
-        graft.Tables.h48(
-          concat_ws(" ", col("g.0"), col("g.1"), col("g.2"))).as("x"))
+    val sh = trigrams(documents(spark, dir), "gram", Seq("source"))
+      .select(col("source"), graft.Tables.h48(col("gram")).as("x"))
       .distinct()
     val sigs = sh.groupBy("source")
       .agg(graft.functions.MinHash.sig(col("x"), 16).as("sig"))
@@ -599,6 +589,20 @@ object Llm3 {
     "llm_minhash_src_sim" -> (minhashSourceSim _),
     "llm_dup_span_removal" -> (dupSpanRemoval _),
   )
+
+  /** Oracle twin of [[decontaminate]]'s gram sets: the benchmark
+    * (source 'src0') trigrams `bench(gram)` and every other doc's distinct
+    * trigrams `corp(doc_id, gram)`. */
+  private[ops] val benchGramsSql =
+    """g AS (
+           SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
+         tri AS (
+           SELECT doc_id, source,
+             unnest(list_transform(range(1, len(ws) - 1),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gram
+           FROM g WHERE len(ws) >= 3),
+         bench AS (SELECT DISTINCT gram FROM tri WHERE source = 'src0'),
+         corp AS (SELECT DISTINCT doc_id, gram FROM tri WHERE source <> 'src0')"""
 
   val oracles: Map[String, String] = Map(
     "llm_leakage_safe_split" -> {
@@ -705,15 +709,7 @@ object Llm3 {
          SELECT pair, CAST(COUNT(*) AS BIGINT) AS cnt
          FROM p GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20""",
     "llm_decontaminate" ->
-      """WITH g AS (
-           SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
-         tri AS (
-           SELECT doc_id, source,
-             unnest(list_transform(range(1, len(ws) - 1),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gram
-           FROM g WHERE len(ws) >= 3),
-         bench AS (SELECT DISTINCT gram FROM tri WHERE source = 'src0'),
-         corp AS (SELECT DISTINCT doc_id, gram FROM tri WHERE source <> 'src0')
+      s"""WITH $benchGramsSql
          SELECT doc_id, COUNT(*) AS n_shared_grams, COUNT(*) >= 3 AS contaminated
          FROM corp JOIN bench USING (gram)
          GROUP BY doc_id ORDER BY doc_id""",

@@ -34,19 +34,7 @@ object Llm4 {
     * this document. Exact-dup docs of earlier content score 0; the
     * doc_id order stands in for ingestion order. Docs need ≥3 words. */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    // zipped-shifted-slices trigrams — same codegen'd kernel as dupSpans
-    // (an element_at lambda over `sequence` re-evaluates the split per
-    // element; measured there: 6.9 s vs 1.3 s at sf0.1)
-    val sh = documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .where(size(col("ws")) >= 3)
-      .select(col("doc_id"), explode(arrays_zip(
-        slice(col("ws"), lit(1), size(col("ws")) - 2),
-        slice(col("ws"), lit(2), size(col("ws")) - 2),
-        slice(col("ws"), lit(3), size(col("ws")) - 2))).as("g"))
-      .select(col("doc_id"),
-        concat_ws(" ", col("g.0"), col("g.1"), col("g.2")).as("s"))
-      .distinct()
+    val sh = Llm3.trigrams(documents(spark, dir), "s").distinct()
     val firstDoc = sh.groupBy("s").agg(min(col("doc_id")).as("first_doc"))
     sh.join(firstDoc, "s")
       .groupBy("doc_id")

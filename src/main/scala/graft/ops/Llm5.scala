@@ -243,22 +243,29 @@ object Llm5 {
           SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
             ORDER BY d2 ASC, j ASC) AS rk FROM d2s) WHERE rk = 1)"""
 
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, ${M * Dsub + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+  /** `lut(qid, s, j, dr)`: each query's (vec_id < 5) round-6 distance to
+    * every codeword, over [[subSql]]. */
+  private[ops] val lutSql =
+    s"""lut AS (SELECT v.vec_id AS qid, v.s, c.j,
+            round(v.snn - 2 * list_sum(list_transform(range(1, ${Dsub + 1}),
+              i -> CAST(v.sv[i] * c.cemb[i] AS DOUBLE))) + c.cnn, 6) AS dr
+          FROM subn v JOIN cb c USING (s) WHERE v.vec_id < 5)"""
+
+  /** [[lutSql]] plus `adc(qid, vec_id, adc)`: the decimal-summed ADC
+    * distance from each query to every other coded vector. */
+  private[ops] val adcSql =
+    s"""$lutSql,
+          adc AS (SELECT l.qid, y.vec_id,
+            CAST(SUM(CAST(l.dr AS DECIMAL(18,6))) AS DOUBLE) AS adc
+          FROM codes y JOIN lut l ON y.s = l.s AND y.code = l.j
+            AND l.qid != y.vec_id
+          GROUP BY 1, 2)"""
 
   /** The IVF probe as DuckDB CTEs — text-identical math to the
     * `llm_ivf_ann` oracle in [[Llm2]] (decimal-mean centroids, 6-dp
     * rounded cosine, label-asc tiebreak). Ends in `probed(qid, cell)`. */
   private[ops] val ivfProbeSql =
-    s"""ex AS (SELECT label, vec_id,
-            CAST(unnest(embedding) AS DOUBLE) AS x,
-            CAST(unnest(range(0, len(embedding))) AS INT) AS pos
-          FROM embeddings),
-          cd AS (SELECT label, pos,
-            ${dsumSql("x")} / CAST(COUNT(x) AS DOUBLE) AS c
-          FROM ex GROUP BY 1, 2),
-          cent AS (SELECT label, list(c ORDER BY pos) AS cemb FROM cd GROUP BY 1),
-          centn AS (SELECT label, cemb, ${normSql("cemb")} AS cnrm FROM cent),
+    s"""${Llm2.labelCentroidsSql},
           e2 AS (SELECT vec_id, label, embedding, ${normSql("embedding")} AS nrm
             FROM embeddings),
           q2 AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm
@@ -309,15 +316,7 @@ object Llm5 {
           FROM codes GROUP BY label ORDER BY label""",
     "llm_pq_ann" ->
       s"""WITH $subSql,
-          lut AS (SELECT v.vec_id AS qid, v.s, c.j,
-            round(v.snn - 2 * list_sum(list_transform(range(1, ${Dsub + 1}),
-              i -> CAST(v.sv[i] * c.cemb[i] AS DOUBLE))) + c.cnn, 6) AS dr
-          FROM subn v JOIN cb c USING (s) WHERE v.vec_id < 5),
-          adc AS (SELECT l.qid, y.vec_id,
-            CAST(SUM(CAST(l.dr AS DECIMAL(18,6))) AS DOUBLE) AS adc
-          FROM codes y JOIN lut l ON y.s = l.s AND y.code = l.j
-            AND l.qid != y.vec_id
-          GROUP BY 1, 2),
+          $adcSql,
           ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
             ORDER BY adc ASC, vec_id ASC) AS rn FROM adc)
           SELECT qid, vec_id, adc, CAST(rn AS INT) AS rn
@@ -325,10 +324,7 @@ object Llm5 {
     "llm_ivfpq_ann" ->
       s"""WITH $subSql,
           $ivfProbeSql,
-          lut AS (SELECT v.vec_id AS qid, v.s, c.j,
-            round(v.snn - 2 * list_sum(list_transform(range(1, ${Dsub + 1}),
-              i -> CAST(v.sv[i] * c.cemb[i] AS DOUBLE))) + c.cnn, 6) AS dr
-          FROM subn v JOIN cb c USING (s) WHERE v.vec_id < 5),
+          $lutSql,
           adc AS (SELECT l.qid, p.cell, y.vec_id,
             CAST(SUM(CAST(l.dr AS DECIMAL(18,6))) AS DOUBLE) AS adc
           FROM codes y JOIN probed p ON y.label = p.cell

@@ -20,17 +20,9 @@ object Llm6 {
   // Bloom-prefiltered decontamination
   // ------------------------------------------------------------------
 
-  /** Word-trigram stream per doc — same construction as
-    * [[Llm3.decontaminate]] (zipped shifted slices, codegen'd). */
-  private def grams(df: DataFrame): DataFrame = df
-    .select(col("doc_id"), col("source"), split(col("text"), " ").as("ws"))
-    .where(size(col("ws")) >= 3)
-    .select(col("doc_id"), col("source"), explode(arrays_zip(
-      slice(col("ws"), lit(1), size(col("ws")) - 2),
-      slice(col("ws"), lit(2), size(col("ws")) - 2),
-      slice(col("ws"), lit(3), size(col("ws")) - 2))).as("g"))
-    .select(col("doc_id"), col("source"),
-      concat_ws(" ", col("g.0"), col("g.1"), col("g.2")).as("gram"))
+  /** Word-trigram stream per doc — [[Llm3.trigrams]], keeping the source. */
+  private def grams(df: DataFrame): DataFrame =
+    Llm3.trigrams(df, "gram", Seq("doc_id", "source"))
 
   /** `might_contain(bloomBytes, xxhash64(gram))` as a Column. The Bloom
     * side must be a CONSTANT (the expression contract Spark's own runtime
@@ -336,15 +328,7 @@ object Llm6 {
     // exact SQL — the bloom prefilter is a physical optimization whose
     // false positives the exact confirm join removes
     "llm_bloom_decontaminate" ->
-      """WITH g AS (
-           SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
-         tri AS (
-           SELECT doc_id, source,
-             unnest(list_transform(range(1, len(ws) - 1),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gram
-           FROM g WHERE len(ws) >= 3),
-         bench AS (SELECT DISTINCT gram FROM tri WHERE source = 'src0'),
-         corp AS (SELECT DISTINCT doc_id, gram FROM tri WHERE source <> 'src0'),
+      s"""WITH ${Llm3.benchGramsSql},
          shared AS (SELECT doc_id, COUNT(*) AS n FROM corp
            JOIN bench USING (gram) GROUP BY 1),
          flags AS (SELECT d.doc_id, d.source, COALESCE(s.n, 0) >= 3 AS cont

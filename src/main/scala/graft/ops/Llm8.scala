@@ -117,6 +117,16 @@ object Llm8 {
     * the L225 six-sums closed form with ln values rounded 6dp BEFORE
     * the decimal sums (absorbing cross-libm ulp, the PMI/PSI ln
     * contract). One row: n, slope, intercept, r2. */
+  /** The L225 six sums of round-6 (x, y) points — n, Σx, Σx², Σy, Σxy,
+    * Σy² — each product round-6 and every sum exact in decimal. */
+  private[ops] def sixSums(xy: DataFrame): DataFrame =
+    xy.agg(count(lit(1)).as("n"),
+      sum(col("x").cast("decimal(18,6)")).cast("double").as("sx"),
+      sum(round(col("x") * col("x"), 6).cast("decimal(18,6)")).cast("double").as("sxx"),
+      sum(col("y").cast("decimal(18,6)")).cast("double").as("sy"),
+      sum(round(col("x") * col("y"), 6).cast("decimal(18,6)")).cast("double").as("sxy"),
+      sum(round(col("y") * col("y"), 6).cast("decimal(18,6)")).cast("double").as("syy"))
+
   def zipfSlope(spark: SparkSession, dir: String): DataFrame = {
     val counts = documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("word"))
@@ -126,12 +136,7 @@ object Llm8 {
     val xy = counts.withColumn("r", row_number().over(w))
       .select(round(log(col("r")), 6).as("x"),
         round(log(col("cnt")), 6).as("y"))
-    val s = xy.agg(count(lit(1)).as("n"),
-      sum(col("x").cast("decimal(18,6)")).cast("double").as("sx"),
-      sum(round(col("x") * col("x"), 6).cast("decimal(18,6)")).cast("double").as("sxx"),
-      sum(col("y").cast("decimal(18,6)")).cast("double").as("sy"),
-      sum(round(col("x") * col("y"), 6).cast("decimal(18,6)")).cast("double").as("sxy"),
-      sum(round(col("y") * col("y"), 6).cast("decimal(18,6)")).cast("double").as("syy"))
+    val s = sixSums(xy)
     s.select(col("n"),
       round((col("n") * col("sxy") - col("sx") * col("sy")) /
         (col("n") * col("sxx") - col("sx") * col("sx")), 6).as("slope"),

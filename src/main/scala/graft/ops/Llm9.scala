@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -148,19 +148,11 @@ object Llm9 {
     * Java regex and RE2). Per-doc grades round-6, aggregated per
     * language with decimal means. */
   def readability(spark: SparkSession, dir: String): DataFrame = {
-    val words = size(split(col("text"), " ")).cast("long")
-    val sentences = greatest(
-      size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0))).cast("long"),
-      lit(1L))
-    val syllables = greatest(
-      size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"), lit(0)))
-        .cast("long"), lit(1L))
-    val wps = round(words.cast("double") / sentences.cast("double"), 6)
-    val spw = round(syllables.cast("double") / words.cast("double"), 6)
+    val (wps, spw) = fkRates
     val perDoc = documents(spark, dir)
       .select(col("lang"),
         round(lit(206.835) - lit(1.015) * wps - lit(84.6) * spw, 6).as("ease"),
-        round(lit(0.39) * wps + lit(11.8) * spw - lit(15.59), 6).as("grade"))
+        fkGrade.as("grade"))
     perDoc.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         round(davg(col("ease")), 6).as("avg_reading_ease"),
@@ -168,6 +160,28 @@ object Llm9 {
         round(min(col("grade")), 6).as("min_grade"),
         round(max(col("grade")), 6).as("max_grade"))
       .orderBy("lang")
+  }
+
+  /** Space-split word count of `text`. */
+  private[ops] def wordCount: Column = size(split(col("text"), " ")).cast("long")
+
+  /** Flesch–Kincaid's round-6 words per sentence and syllables per word
+    * of `text` (sentences and syllables floored at 1). */
+  private def fkRates: (Column, Column) = {
+    val sentences = greatest(
+      size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0))).cast("long"),
+      lit(1L))
+    val syllables = greatest(
+      size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"), lit(0)))
+        .cast("long"), lit(1L))
+    (round(wordCount.cast("double") / sentences.cast("double"), 6),
+      round(syllables.cast("double") / wordCount.cast("double"), 6))
+  }
+
+  /** Round-6 Flesch–Kincaid grade of `text`. */
+  private[ops] def fkGrade: Column = {
+    val (wps, spw) = fkRates
+    round(lit(0.39) * wps + lit(11.8) * spw - lit(15.59), 6)
   }
 
   /** L340 — dataset card summary (the auditable one-page statistics

@@ -179,15 +179,8 @@ object Ml {
     * broadcast nested loop, one label-keyed agg finishes. Distances and
     * s are round-6; means go through davg — fully hash-gated. */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(spark, dir)
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-    val centroids = e
-      .select(col("label"), posexplode(col("emb")).as(Seq("pos", "x")))
-      .groupBy("label", "pos")
-      .agg(davg(col("x")).as("c"))
-      .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        s => s.getField("c")).as("cemb"))
+    val e = Llm2.normedEmbeddings(spark, dir)
+    val centroids = Llm2.labelCentroids(e)
       .select(col("label").as("cluster"), col("cemb"))
     val dists = e.crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("label"), col("cluster"),

@@ -41,27 +41,7 @@ object Mm2 {
       .mapPartitions(_.map(id =>
         MmAHash.decodeHash(id, MmAHash.synthesize(id))))
       .toDF()
-      .localCheckpoint(true) // consumed by the band join AND both verify legs
-    val bands = hashes.select(col("doc_id"),
-      posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
-        .as(Seq("band_no", "bv")))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band_no") === col("y.band_no") &&
-          col("x.bv") === col("y.bv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
-    def side(tag: String) = hashes.select(col("doc_id").as(tag),
-      col("b0").as(s"${tag}_b0"), col("b1").as(s"${tag}_b1"),
-      col("b2").as(s"${tag}_b2"), col("b3").as(s"${tag}_b3"))
-    val ham = (0 to 3).map(i => expr(
-      s"bit_count(cast(d1_b$i as int) ^ cast(d2_b$i as int))"))
-      .reduce(_ + _)
-    cand.join(side("d1"), "d1").join(side("d2"), "d2")
-      .select(col("d1"), col("d2"), ham.cast("int").as("hamming"))
-      .where(col("hamming") <= 8)
-      .groupBy("hamming").agg(count(lit(1)).as("n_pairs"))
-      .orderBy("hamming")
+    Mm3.pairHistogram(hashes, maxHam = 8)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -70,7 +50,7 @@ object Mm2 {
 
   val oracles: Map[String, String] = Map(
     "mm_image_ahash_dedup" ->
-      """WITH cls AS (SELECT doc_id, doc_id % 50 AS f,
+      s"""WITH cls AS (SELECT doc_id, doc_id % 50 AS f,
              CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS p
            FROM documents),
          img AS (SELECT DISTINCT f, p FROM cls),
@@ -88,29 +68,7 @@ object Mm2 {
          bits AS (SELECT blk.f, blk.p, by * 8 + bx AS b,
              CASE WHEN bs * 64 >= total THEN 1 ELSE 0 END AS bit
            FROM blk JOIN tot ON blk.f = tot.f AND blk.p = tot.p),
-         band AS (SELECT f, p, b // 16 AS band_no,
-             CAST(SUM(bit * (CAST(1 AS BIGINT) << (b % 16))) AS INT) AS bv
-           FROM bits GROUP BY 1, 2, 3),
-         db AS (SELECT doc_id, band_no, bv
-           FROM cls JOIN band USING (f, p)),
-         cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
-           FROM db x JOIN db y
-           ON x.band_no = y.band_no AND x.bv = y.bv
-             AND x.doc_id < y.doc_id),
-         hb AS (SELECT doc_id,
-             MAX(CASE WHEN band_no = 0 THEN bv END) AS b0,
-             MAX(CASE WHEN band_no = 1 THEN bv END) AS b1,
-             MAX(CASE WHEN band_no = 2 THEN bv END) AS b2,
-             MAX(CASE WHEN band_no = 3 THEN bv END) AS b3
-           FROM db GROUP BY 1),
-         h AS (SELECT d1, d2,
-             CAST(bit_count(xor(h1.b0, h2.b0)) + bit_count(xor(h1.b1, h2.b1))
-               + bit_count(xor(h1.b2, h2.b2)) + bit_count(xor(h1.b3, h2.b3))
-               AS INT) AS hamming
-           FROM cand JOIN hb h1 ON cand.d1 = h1.doc_id
-             JOIN hb h2 ON cand.d2 = h2.doc_id)
-         SELECT hamming, CAST(COUNT(*) AS BIGINT) AS n_pairs
-         FROM h WHERE hamming <= 8 GROUP BY 1 ORDER BY 1""",
+         ${Mm3.histogramSql(8)}""",
   )
 }
 

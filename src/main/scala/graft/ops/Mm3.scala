@@ -43,7 +43,7 @@ object Mm3 {
     * four band XORs, keep Hamming ≤ maxHam, return the per-Hamming
     * pair histogram. The hash frame is localCheckpointed — it feeds
     * the band join and both verify legs. */
-  private def pairHistogram(hashes0: DataFrame, maxHam: Int): DataFrame = {
+  private[ops] def pairHistogram(hashes0: DataFrame, maxHam: Int): DataFrame = {
     val hashes = hashes0.localCheckpoint(true)
     val bands = hashes.select(col("doc_id"),
       posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
@@ -134,9 +134,12 @@ object Mm3 {
            (SELECT unnest(range(0, $h)) AS y) gy)"""
 
   /** Shared band→candidate→Hamming-histogram oracle tail over a
-    * `band(f, p, band_no, bv)` CTE (the L354 shape). */
-  private def histogramSql(maxHam: Int): String =
-    s"""db AS (SELECT doc_id, band_no, bv
+    * `bits(f, p, b, bit)` CTE (the L354 shape). */
+  private[ops] def histogramSql(maxHam: Int): String =
+    s"""band AS (SELECT f, p, b // 16 AS band_no,
+             CAST(SUM(bit * (CAST(1 AS BIGINT) << (b % 16))) AS INT) AS bv
+           FROM bits GROUP BY 1, 2, 3),
+         db AS (SELECT doc_id, band_no, bv
            FROM cls JOIN band USING (f, p)),
        cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
            FROM db x JOIN db y
@@ -176,9 +179,6 @@ object Mm3 {
          bits AS (SELECT ac.f, ac.p, ac.b,
              CASE WHEN ac.cf > med.md THEN 1 ELSE 0 END AS bit
            FROM ac JOIN med USING (f, p)),
-         band AS (SELECT f, p, b // 16 AS band_no,
-             CAST(SUM(bit * (CAST(1 AS BIGINT) << (b % 16))) AS INT) AS bv
-           FROM bits GROUP BY 1, 2, 3),
          ${histogramSql(10)}""",
     "mm_image_dhash_dedup" ->
       s"""WITH ${gridSql(36, 32)},
@@ -190,9 +190,6 @@ object Mm3 {
            FROM blk a JOIN blk b2
            ON a.f = b2.f AND a.p = b2.p AND a.r = b2.r AND b2.c = a.c + 1
            WHERE a.c < 8),
-         band AS (SELECT f, p, b // 16 AS band_no,
-             CAST(SUM(bit * (CAST(1 AS BIGINT) << (b % 16))) AS INT) AS bv
-           FROM bits GROUP BY 1, 2, 3),
          ${histogramSql(10)}""",
   )
 }

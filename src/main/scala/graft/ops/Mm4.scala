@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,9 +91,11 @@ object Mm4 {
     "mm_audio_vad" -> (audioVad _),
   )
 
-  val oracles: Map[String, String] = Map(
-    "mm_video_scene_cut" ->
-      """WITH cls AS (SELECT doc_id, doc_id % 40 AS f FROM documents),
+  /** Oracle CTEs of the planted video: per family `f` the 16 frames'
+    * cuts and shot index `sc(f, t, is_cut, s)`, and every frame's pixel
+    * field `grid(f, t, is_cut, x, y, v)`, with `cls(doc_id, f)` in scope. */
+  private val framesSql =
+    """cls AS (SELECT doc_id, doc_id % 40 AS f FROM documents),
          fam AS (SELECT DISTINCT f FROM cls),
          fr AS (SELECT f, t FROM fam, (SELECT unnest(range(0, 16)) AS t)),
          c AS (SELECT f, t,
@@ -107,7 +110,11 @@ object Mm4 {
                + s * 37 + f * 13) % 200 AS BIGINT) AS v
            FROM sc,
              (SELECT unnest(range(0, 32)) AS x) gx,
-             (SELECT unnest(range(0, 24)) AS y) gy),
+             (SELECT unnest(range(0, 24)) AS y) gy)"""
+
+  val oracles: Map[String, String] = Map(
+    "mm_video_scene_cut" ->
+      s"""WITH $framesSql,
          sad AS (SELECT a.f, a.t, CAST(SUM(ABS(a.v - b.v)) AS BIGINT) AS sad
            FROM grid a JOIN grid b
            ON a.f = b.f AND b.t = a.t - 1 AND a.x = b.x AND a.y = b.y
@@ -117,22 +124,7 @@ object Mm4 {
          FROM cls d JOIN cuts c2 USING (f)
          ORDER BY d.doc_id, c2.t""",
     "mm_video_keyframes" ->
-      """WITH cls AS (SELECT doc_id, doc_id % 40 AS f FROM documents),
-         fam AS (SELECT DISTINCT f FROM cls),
-         fr AS (SELECT f, t FROM fam, (SELECT unnest(range(0, 16)) AS t)),
-         c AS (SELECT f, t,
-             CASE WHEN t >= 1 AND (t * 31 + f * 17) % 16 < 4
-               THEN 1 ELSE 0 END AS is_cut
-           FROM fr),
-         sc AS (SELECT f, t, is_cut,
-             SUM(is_cut) OVER (PARTITION BY f ORDER BY t) AS s
-           FROM c),
-         grid AS (SELECT sc.f, sc.t, x, y,
-             CAST(16 + (x * (2 + s % 5) + y * (3 + s % 7)
-               + s * 37 + f * 13) % 200 AS BIGINT) AS v
-           FROM sc,
-             (SELECT unnest(range(0, 32)) AS x) gx,
-             (SELECT unnest(range(0, 24)) AS y) gy),
+      s"""WITH $framesSql,
          psum AS (SELECT f, t, CAST(SUM(v) AS BIGINT) AS pix
            FROM grid GROUP BY 1, 2),
          shots AS (SELECT f, CAST(s AS BIGINT) AS shot_no, t AS start_frame
@@ -148,12 +140,7 @@ object Mm4 {
            JOIN psum p ON l.f = p.f AND l.start_frame = p.t
          ORDER BY d.doc_id, l.shot_no""",
     "mm_audio_vad" ->
-      """WITH cls AS (SELECT doc_id, doc_id % 30 AS f FROM documents),
-         fam AS (SELECT DISTINCT f FROM cls),
-         w AS (SELECT f, wn FROM fam, (SELECT unnest(range(0, 50)) AS wn)),
-         sp AS (SELECT f, wn,
-             CASE WHEN (wn * 13 + f * 7) % 8 < 3 THEN 1 ELSE 0 END AS s
-           FROM w),
+      s"""WITH ${MmVad.speechWindowsSql},
          seg AS (SELECT f, wn, s,
              CASE WHEN s = 1 AND COALESCE(LAG(s) OVER
                  (PARTITION BY f ORDER BY wn), 0) = 0
@@ -291,6 +278,16 @@ object MmVideo {
   * writer+reader (the [[MmAudio]] convention). */
 object MmVad {
 
+  /** Oracle CTEs of the L367 planting rule: per family `f` of
+    * `cls(doc_id, f)` its 50 windows `sp(f, wn, s)`, s = 1 for speech. */
+  private[ops] val speechWindowsSql =
+    """cls AS (SELECT doc_id, doc_id % 30 AS f FROM documents),
+         fam AS (SELECT DISTINCT f FROM cls),
+         w AS (SELECT f, wn FROM fam, (SELECT unnest(range(0, 50)) AS wn)),
+         sp AS (SELECT f, wn,
+             CASE WHEN (wn * 13 + f * 7) % 8 < 3 THEN 1 ELSE 0 END AS s
+           FROM w)"""
+
   private val WinLen = 160
   private val NWin = 50
   /** speech ⟺ window energy ≥ 160·10⁴ (mean-square ≥ 10⁴). */
@@ -347,7 +344,6 @@ object MmVad {
       w += 1
     }
     VadRow(docId, NWin.toLong, nSpeech, nSeg,
-      new java.math.BigDecimal(nSpeech.toDouble / NWin)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue)
+      round6(nSpeech.toDouble / NWin))
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -97,12 +98,7 @@ object Mm5 {
     // half-periods); the boundary sample flips iff the PREVIOUS window
     // is also speech (the wave's parity at 160w is +, at 160w−1 is −).
     "mm_audio_zcr" ->
-      """WITH cls AS (SELECT doc_id, doc_id % 30 AS f FROM documents),
-         fam AS (SELECT DISTINCT f FROM cls),
-         w AS (SELECT f, wn FROM fam, (SELECT unnest(range(0, 50)) AS wn)),
-         sp AS (SELECT f, wn,
-             CASE WHEN (wn * 13 + f * 7) % 8 < 3 THEN 1 ELSE 0 END AS s
-           FROM w),
+      s"""WITH ${MmVad.speechWindowsSql},
          x AS (SELECT f, wn, s,
              COALESCE(LAG(s) OVER (PARTITION BY f ORDER BY wn), 0) AS ps
            FROM sp),
@@ -282,8 +278,7 @@ object MmZcr {
     }
     if (winHas) active += 1
     ZcrRow(docId, samples.length.toLong, crossings,
-      new java.math.BigDecimal(crossings.toDouble / (samples.length - 1))
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue,
+      round6(crossings.toDouble / (samples.length - 1)),
       active)
   }
 }
@@ -309,6 +304,28 @@ object MmEq {
       else 60 + (3 * x + 5 * y + 17 * f) % 40)
   }
 
+  /** Real decode of doc `docId`'s payload to its raster; `what` names
+    * the kernel in the error. */
+  private[ops] def decodeRaster(docId: Long, what: String): java.awt.image.Raster = {
+    val img = javax.imageio.ImageIO.read(
+      new java.io.ByteArrayInputStream(synthesize(docId)))
+    require(img != null && img.getWidth == Size && img.getHeight == Size,
+      s"bad $what payload for doc $docId")
+    img.getRaster
+  }
+
+  /** 256-bin gray-level histogram of a decoded raster. */
+  private[ops] def histogram(raster: java.awt.image.Raster): Array[Long] = {
+    val hist = new Array[Long](256)
+    var y = 0
+    while (y < Size) {
+      var x = 0
+      while (x < Size) { hist(raster.getSample(x, y, 0)) += 1; x += 1 }
+      y += 1
+    }
+    hist
+  }
+
   case class EqRow(doc_id: Long, n_levels_before: Long,
     lvl_min_before: Long, lvl_max_before: Long, n_levels_after: Long,
     lvl_min_after: Long, lvl_max_after: Long, eq_pixel_sum: Long)
@@ -318,18 +335,7 @@ object MmEq {
     * image (N == cdf_min) maps to 0 by convention (guarded; the
     * fixtures never produce one). */
   def equalizeOf(docId: Long): EqRow = {
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(synthesize(docId)))
-    require(img != null && img.getWidth == Size && img.getHeight == Size,
-      s"bad equalize payload for doc $docId")
-    val raster = img.getRaster
-    val hist = new Array[Long](256)
-    var y = 0
-    while (y < Size) {
-      var x = 0
-      while (x < Size) { hist(raster.getSample(x, y, 0)) += 1; x += 1 }
-      y += 1
-    }
+    val hist = histogram(decodeRaster(docId, "equalize"))
     val cdf = new Array[Long](256)
     var c = 0L
     var cmin = -1L

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -147,18 +148,7 @@ object MmOtsu {
     n_above: Long, mean_below: Double, mean_above: Double)
 
   def otsuOf(docId: Long): OtsuRow = {
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(MmEq.synthesize(docId)))
-    require(img != null && img.getWidth == Size && img.getHeight == Size,
-      s"bad otsu payload for doc $docId")
-    val raster = img.getRaster
-    val hist = new Array[Long](256)
-    var y = 0
-    while (y < Size) {
-      var x = 0
-      while (x < Size) { hist(raster.getSample(x, y, 0)) += 1; x += 1 }
-      y += 1
-    }
+    val hist = MmEq.histogram(MmEq.decodeRaster(docId, "otsu"))
     val sTot = (0 until 256).map(v => v.toLong * hist(v)).sum
     var bestT = -1
     var bestScore = BigInt(-1)
@@ -182,10 +172,8 @@ object MmOtsu {
       t += 1
     }
     val (bw0, bw1, bs0, bs1) = bestStats
-    def r6(x: Double) = BigDecimal.decimal(x)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     OtsuRow(docId, bestT.toLong, bw0, bw1,
-      r6(bs0.toDouble / bw0), r6(bs1.toDouble / bw1))
+      round6(bs0.toDouble / bw0), round6(bs1.toDouble / bw1))
   }
 }
 
@@ -197,11 +185,7 @@ object MmSobel {
     edge_density: Double, max_mag: Long, sum_mag: Long)
 
   def sobelOf(docId: Long): SobelRow = {
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(MmEq.synthesize(docId)))
-    require(img != null && img.getWidth == Size && img.getHeight == Size,
-      s"bad sobel payload for doc $docId")
-    val raster = img.getRaster
+    val raster = MmEq.decodeRaster(docId, "sobel")
     val v = Array.tabulate(Size, Size)((y, x) => raster.getSample(x, y, 0))
     var nEdges = 0L
     var maxMag = 0L
@@ -223,9 +207,7 @@ object MmSobel {
       }
       y += 1
     }
-    def r6(x0: Double) = BigDecimal.decimal(x0)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    SobelRow(docId, nInt, nEdges, r6(nEdges.toDouble / nInt), maxMag,
+    SobelRow(docId, nInt, nEdges, round6(nEdges.toDouble / nInt), maxMag,
       sumMag)
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,43 +92,38 @@ object MmSpectral {
   case class SpectralRow(doc_id: Long, n_speech: Long, e_fund: Long,
     e_h2: Long, e_h3: Long, fund_ratio: Double, centroid_hz: Double)
 
-  private def r6(x: Double): Double =
-    BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-      .toDouble
-
   /** Real decode via the shared [[MmAudio.samplesOf]] RIFF reader, then
-    * the exact-integer correlation sums per window and bin. */
-  def spectralOf(docId: Long): SpectralRow = {
+    * the exact-integer correlation sums: `e(w)(b)` is window w's energy
+    * at table stride `bins(b)`. */
+  private[ops] def windowEnergies(docId: Long, bins: Seq[Int]): Array[Array[Long]] = {
     val samples = MmAudio.samplesOf(MmAudio.Wav(docId, MmVad.synthesize(docId)))
     require(samples.length == NWin * WinLen, s"short decode for doc $docId")
-    val e = Array.fill(Bins.length)(0L)
-    var nSpeech = 0L
-    var w = 0
-    while (w < NWin) {
-      var b = 0
-      while (b < Bins.length) {
-        val kp = Bins(b)
-        var sc = 0L
-        var ss = 0L
-        var i = w * WinLen
-        val end = i + WinLen
-        while (i < end) {
-          val x = samples(i).toLong
-          sc += x * CosQ(((kp * i) % 16).toInt)
-          ss += x * CosQ(((kp * i + 12) % 16).toInt)
-          i += 1
-        }
-        val ek = ((BigInt(sc) * sc + BigInt(ss) * ss) / Norm).toLong
-        if (b == 0 && ek > 0) nSpeech += 1
-        e(b) += ek
-        b += 1
+    Array.tabulate(NWin, bins.length) { (w, b) =>
+      val kp = bins(b)
+      var sc = 0L
+      var ss = 0L
+      var i = w * WinLen
+      val end = i + WinLen
+      while (i < end) {
+        val x = samples(i).toLong
+        sc += x * CosQ((kp * i) % 16)
+        ss += x * CosQ((kp * i + 12) % 16)
+        i += 1
       }
-      w += 1
+      ((BigInt(sc) * sc + BigInt(ss) * ss) / Norm).toLong
     }
+  }
+
+  /** Per-doc bin energies summed over windows, the speech-window count
+    * (fundamental energy > 0), fundamental ratio and spectral centroid. */
+  def spectralOf(docId: Long): SpectralRow = {
+    val we = windowEnergies(docId, Bins)
+    val nSpeech = we.count(_(0) > 0).toLong
+    val e = Bins.indices.map(b => we.map(_(b)).sum)
     val tot = e.sum
     SpectralRow(docId, nSpeech, e(0), e(1), e(2),
-      r6(e(0).toDouble / tot),
-      r6(Bins.indices.map(b => hz(Bins(b)).toDouble * e(b)).sum / tot))
+      round6(e(0).toDouble / tot),
+      round6(Bins.indices.map(b => hz(Bins(b)).toDouble * e(b)).sum / tot))
   }
 
   /** Closed-form oracle: re-synthesize the sample values from the L367
@@ -135,27 +131,8 @@ object MmSpectral {
     * Division by a zero total cannot occur: (w·13 + f·7) mod 8 sweeps
     * all residues as w varies (13 is odd), so every family has speech
     * windows and e_fund > 0. */
-  private[graft] def oracleSql: String = {
-    val lst = CosQ.mkString("[", ", ", "]")
-    def sumTerm(kp: Int, phase: Int, as: String): String =
-      s"CAST(SUM(x * ($lst)[((($kp * i + $phase) % 16)) + 1]) AS BIGINT) AS $as"
-    def energy(kp: Int, as: String): String =
-      s"CAST((CAST(sc$kp AS HUGEINT) * sc$kp + CAST(ss$kp AS HUGEINT) * ss$kp) // $Norm AS BIGINT) AS $as"
-    s"""WITH cls AS (SELECT doc_id, doc_id % 30 AS f FROM documents),
-       fam AS (SELECT DISTINCT f FROM cls),
-       smp AS (SELECT f, i,
-           CASE WHEN ((i // $WinLen) * 13 + f * 7) % 8 < 3
-             THEN (CASE WHEN (i // 8) % 2 = 0 THEN 500 + 100 * (f % 10)
-                   ELSE -(500 + 100 * (f % 10)) END)
-             ELSE 0 END AS x
-         FROM fam, (SELECT unnest(range(0, ${NWin * WinLen})) AS i)),
-       win AS (SELECT f, i // $WinLen AS w,
-           ${Bins.map(k => sumTerm(k, 0, s"sc$k") + ",\n            " +
-             sumTerm(k, 12, s"ss$k")).mkString(",\n           ")}
-         FROM smp GROUP BY 1, 2),
-       we AS (SELECT f, w,
-           ${Bins.map(k => energy(k, s"e$k")).mkString(",\n           ")}
-         FROM win),
+  private[graft] def oracleSql: String =
+    s"""WITH ${windowEnergiesSql(Bins)},
        agg AS (SELECT f,
            CAST(SUM(CASE WHEN e1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_speech,
            CAST(SUM(e1) AS BIGINT) AS e_fund,
@@ -167,6 +144,31 @@ object MmSpectral {
          round((${hz(1)} * e_fund + ${hz(2)} * e_h2 + ${hz(3)} * e_h3)
            / CAST(e_fund + e_h2 + e_h3 AS DOUBLE), 6) AS centroid_hz
        FROM cls JOIN agg USING (f) ORDER BY doc_id"""
+
+  /** Oracle twin of [[windowEnergies]]: the planted samples re-synthesized
+    * per family, then `we(f, w, e<kp>...)` for each stride in `bins`, with
+    * `cls(doc_id, f)` in scope. */
+  private[ops] def windowEnergiesSql(bins: Seq[Int]): String = {
+    val lst = CosQ.mkString("[", ", ", "]")
+    def sumTerm(kp: Int, phase: Int, as: String): String =
+      s"CAST(SUM(x * ($lst)[((($kp * i + $phase) % 16)) + 1]) AS BIGINT) AS $as"
+    def energy(kp: Int): String =
+      s"CAST((CAST(sc$kp AS HUGEINT) * sc$kp + CAST(ss$kp AS HUGEINT) * ss$kp) // $Norm AS BIGINT) AS e$kp"
+    s"""cls AS (SELECT doc_id, doc_id % 30 AS f FROM documents),
+       fam AS (SELECT DISTINCT f FROM cls),
+       smp AS (SELECT f, i,
+           CASE WHEN ((i // $WinLen) * 13 + f * 7) % 8 < 3
+             THEN (CASE WHEN (i // 8) % 2 = 0 THEN 500 + 100 * (f % 10)
+                   ELSE -(500 + 100 * (f % 10)) END)
+             ELSE 0 END AS x
+         FROM fam, (SELECT unnest(range(0, ${NWin * WinLen})) AS i)),
+       win AS (SELECT f, i // $WinLen AS w,
+           ${bins.map(k => sumTerm(k, 0, s"sc$k") + ",\n            " +
+             sumTerm(k, 12, s"ss$k")).mkString(",\n           ")}
+         FROM smp GROUP BY 1, 2),
+       we AS (SELECT f, w,
+           ${bins.map(energy).mkString(",\n           ")}
+         FROM win)"""
   }
 }
 
@@ -199,24 +201,46 @@ object MmSpectral {
 object MmSsim {
   javax.imageio.ImageIO.setUseCache(false)
 
-  private val Size = 64
-  private val Win = 8
-  private val N = Win * Win // pixels per window
-  private val Shift = 16L
+  private[ops] val Size = 64
+  private[ops] val Win = 8
+  private[ops] val N = Win * Win // pixels per window
+  private[ops] val Shift = 16L
 
   /** Base pixel: vS(x,y) = 32 + (7x + 13y + 31·(doc%50)) mod 192. */
   private def base(f: Int)(x: Int, y: Int): Long =
     32L + (x * 7 + y * 13 + f * 31) % 192
 
   /** kind 0 = base, 1 = brightness twin (+16), 2 = checkerboard twin
-    * (±16 by (x+y) parity — same |Δ| as the shift, pure structure). */
+    * (±16 by (x+y) parity — same |Δ| as the shift, pure structure),
+    * 3 = ±16 2×2-block stripe (the [[MmMsSsim]] coarse-scale twin). */
   private def pixel(f: Int, kind: Int)(x: Int, y: Int): Long = kind match {
     case 0 => base(f)(x, y)
     case 1 => base(f)(x, y) + Shift
-    case _ => base(f)(x, y) + (if ((x + y) % 2 == 0) Shift else -Shift)
+    case 2 => base(f)(x, y) + (if ((x + y) % 2 == 0) Shift else -Shift)
+    case _ => base(f)(x, y) +
+      (if ((x / 2 + y / 2) % 2 == 0) Shift else -Shift)
   }
 
-  private def synthesize(f: Int, kind: Int): Array[Byte] =
+  /** Oracle CTEs: the families `cls(doc_id, f)` and every family's pixel
+    * coordinates `px(f, x, y)`. */
+  private[ops] val pixelGridSql =
+    s"""cls AS (SELECT doc_id, doc_id % 50 AS f FROM documents),
+       px AS (SELECT f, x, y
+         FROM (SELECT DISTINCT f FROM cls),
+           (SELECT unnest(range(0, $Size)) AS x),
+           (SELECT unnest(range(0, $Size)) AS y))"""
+
+  /** Oracle twin of [[pixel]]. */
+  private[ops] def pixelSql(kind: Int): String = kind match {
+    case 0 => "32 + (x * 7 + y * 13 + f * 31) % 192"
+    case 1 => s"32 + (x * 7 + y * 13 + f * 31) % 192 + $Shift"
+    case 2 => s"32 + (x * 7 + y * 13 + f * 31) % 192 + " +
+      s"(CASE WHEN (x + y) % 2 = 0 THEN $Shift ELSE -$Shift END)"
+    case _ => s"32 + (x * 7 + y * 13 + f * 31) % 192 + " +
+      s"(CASE WHEN ((x // 2) + (y // 2)) % 2 = 0 THEN $Shift ELSE -$Shift END)"
+  }
+
+  private[ops] def synthesize(f: Int, kind: Int): Array[Byte] =
     // direct BMP bytes (byte-identical to the ImageIO round trip —
     // FastCodec doc + Round17OptSpec); the DECODE side stays ImageIO
     FastCodec.bmpGray(Size, Size, (x, y) => pixel(f, kind)(x, y).toInt)
@@ -230,18 +254,22 @@ object MmSsim {
     Array.tabulate(Size, Size)((y, x) => raster.getSample(x, y, 0).toLong)
   }
 
-  private def r6(x: Double): Double =
-    BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-      .toDouble
-
   /** Mean windowed SSIM between two decoded rasters — the exact-rational
     * per-window form above, then a decimal mean of round-6 scores. */
-  private[graft] def ssim(a: Array[Array[Long]], b: Array[Array[Long]]): Double = {
+  private[graft] def ssim(a: Array[Array[Long]], b: Array[Array[Long]]): Double =
+    meanScore(a, b, Size, withL = true, 2601L, 23409L)
+
+  /** Mean windowed score over `size`² pixels: full l·cs SSIM when
+    * `withL`, contrast-structure only otherwise; `c1n`/`c2n` are the
+    * 400-scaled stability constants (16× at a 2×2-pooled scale). */
+  private[ops] def meanScore(a: Array[Array[Long]], b: Array[Array[Long]],
+      size: Int, withL: Boolean, c1n: Long, c2n: Long): Double = {
     var acc = BigDecimal(0)
+    val nw = size / Win
     var by = 0
-    while (by < Size / Win) {
+    while (by < nw) {
       var bx = 0
-      while (bx < Size / Win) {
+      while (bx < nw) {
         var sx, sy, sxx, syy, sxy = 0L
         var y = by * Win
         while (y < (by + 1) * Win) {
@@ -254,17 +282,20 @@ object MmSsim {
           y += 1
         }
         val n2 = N.toLong * N
-        val f1 = BigInt(800L * sx * sy + 2601L * n2)
-        val f2 = BigInt(800L * (N * sxy - sx * sy) + 23409L * n2)
-        val g1 = BigInt(400L * (sx * sx + sy * sy) + 2601L * n2)
-        val g2 = BigInt(400L * (N * sxx - sx * sx + N * syy - sy * sy) + 23409L * n2)
-        acc += BigDecimal(r6((f1 * f2).toDouble / (g1 * g2).toDouble))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP)
+        val f2 = BigInt(800L * (N * sxy - sx * sy) + c2n * n2)
+        val g2 = BigInt(400L * (N * sxx - sx * sx + N * syy - sy * sy) + c2n * n2)
+        val sw =
+          if (withL) {
+            val f1 = BigInt(800L * sx * sy + c1n * n2)
+            val g1 = BigInt(400L * (sx * sx + sy * sy) + c1n * n2)
+            round6((f1 * f2).toDouble / (g1 * g2).toDouble)
+          } else round6(f2.toDouble / g2.toDouble)
+        acc += BigDecimal(sw).setScale(6, BigDecimal.RoundingMode.HALF_UP)
         bx += 1
       }
       by += 1
     }
-    r6((acc / ((Size / Win) * (Size / Win))).toDouble)
+    round6((acc / (nw * nw)).toDouble)
   }
 
   case class SsimRow(doc_id: Long, ssim_self: Double, ssim_bright: Double,
@@ -282,12 +313,7 @@ object MmSsim {
     * 400-scaled rational per window, HUGEINT products, round-6 window
     * scores, exact decimal mean. */
   private[graft] def oracleSql: String = {
-    def v(kind: Int): String = kind match {
-      case 0 => "32 + (x * 7 + y * 13 + f * 31) % 192"
-      case 1 => s"32 + (x * 7 + y * 13 + f * 31) % 192 + $Shift"
-      case _ => s"32 + (x * 7 + y * 13 + f * 31) % 192 + " +
-        s"(CASE WHEN (x + y) % 2 = 0 THEN $Shift ELSE -$Shift END)"
-    }
+    def v(kind: Int): String = pixelSql(kind)
     def ssimCol(kind: Int, as: String): String = {
       val n2 = N.toLong * N
       s"""(SELECT round(CAST(SUM(CAST(sw AS DECIMAL(18,6))) AS DOUBLE)
@@ -307,11 +333,7 @@ object MmSsim {
                FROM px WHERE px.f = fam.f)
              GROUP BY wx, wy))) AS $as"""
     }
-    s"""WITH cls AS (SELECT doc_id, doc_id % 50 AS f FROM documents),
-       px AS (SELECT f, x, y
-         FROM (SELECT DISTINCT f FROM cls),
-           (SELECT unnest(range(0, $Size)) AS x),
-           (SELECT unnest(range(0, $Size)) AS y)),
+    s"""WITH $pixelGridSql,
        scores AS (SELECT fam.f,
            ${ssimCol(0, "ssim_self")},
            ${ssimCol(1, "ssim_bright")},

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,10 +82,6 @@ object Mm8 {
   * argmax with smallest-index tie-break. */
 object MmMel {
 
-  private val WinLen = 160
-  private val NWin = 50
-  private val Q = 4096L
-  private val Norm = Q * WinLen * Q * WinLen
   /** Table strides = bins 10·kp = 500·kp Hz. */
   private val Bins = 1 to 7
   private[ops] val NMel = 5
@@ -121,30 +118,8 @@ object MmMel {
     * RIFF reader, the [[MmSpectral]] exact correlation sums) — shared
     * with [[MmMfcc]]. */
   private[ops] def binEnergies(docId: Long): Array[Long] = {
-    val samples = MmAudio.samplesOf(MmAudio.Wav(docId, MmVad.synthesize(docId)))
-    require(samples.length == NWin * WinLen, s"short decode for doc $docId")
-    val e = Array.fill(Bins.length)(0L)
-    var w = 0
-    while (w < NWin) {
-      var b = 0
-      while (b < Bins.length) {
-        val kp = Bins(b)
-        var sc = 0L
-        var ss = 0L
-        var i = w * WinLen
-        val end = i + WinLen
-        while (i < end) {
-          val x = samples(i).toLong
-          sc += x * MmSpectral.CosQ((kp * i) % 16)
-          ss += x * MmSpectral.CosQ((kp * i + 12) % 16)
-          i += 1
-        }
-        e(b) += ((BigInt(sc) * sc + BigInt(ss) * ss) / Norm).toLong
-        b += 1
-      }
-      w += 1
-    }
-    e
+    val we = MmSpectral.windowEnergies(docId, Bins)
+    Array.tabulate(Bins.length)(b => we.map(_(b)).sum)
   }
 
   /** Band energies from bin energies — the integer filterbank. */
@@ -165,28 +140,9 @@ object MmMel {
   /** Shared oracle chain ending in `bands(f, e_fund, mel1..mel5)` (plus
     * `cls(doc_id, f)` in scope) — [[MmMfcc]] appends its cepstral CTEs. */
   private[ops] def bandsChainSql: String = {
-    val lst = MmSpectral.CosQ.mkString("[", ", ", "]")
-    def sumTerm(kp: Int, phase: Int, as: String): String =
-      s"CAST(SUM(x * ($lst)[((($kp * i + $phase) % 16)) + 1]) AS BIGINT) AS $as"
-    def energy(kp: Int): String =
-      s"CAST((CAST(sc$kp AS HUGEINT) * sc$kp + CAST(ss$kp AS HUGEINT) * ss$kp) // $Norm AS BIGINT) AS e$kp"
     def melCol(j: Int): String =
       Bins.map(kp => s"${WQ(j - 1)(kp - 1)} * e$kp").mkString(" + ")
-    s"""cls AS (SELECT doc_id, doc_id % 30 AS f FROM documents),
-       fam AS (SELECT DISTINCT f FROM cls),
-       smp AS (SELECT f, i,
-           CASE WHEN ((i // $WinLen) * 13 + f * 7) % 8 < 3
-             THEN (CASE WHEN (i // 8) % 2 = 0 THEN 500 + 100 * (f % 10)
-                   ELSE -(500 + 100 * (f % 10)) END)
-             ELSE 0 END AS x
-         FROM fam, (SELECT unnest(range(0, ${NWin * WinLen})) AS i)),
-       win AS (SELECT f, i // $WinLen AS w,
-           ${Bins.map(k => sumTerm(k, 0, s"sc$k") + ",\n            " +
-             sumTerm(k, 12, s"ss$k")).mkString(",\n           ")}
-         FROM smp GROUP BY 1, 2),
-       we AS (SELECT f, w,
-           ${Bins.map(energy).mkString(",\n           ")}
-         FROM win),
+    s"""${MmSpectral.windowEnergiesSql(Bins)},
        agg AS (SELECT f,
            ${Bins.map(k => s"CAST(SUM(e$k) AS BIGINT) AS e$k")
              .mkString(",\n           ")}
@@ -231,77 +187,16 @@ object MmMel {
 object MmMsSsim {
   javax.imageio.ImageIO.setUseCache(false)
 
-  private val Size = 64
-  private val Win = 8
-  private val N = Win * Win
-  private val Shift = 16L
+  import MmSsim.{N, Size, Win, meanScore, synthesize}
 
-  private def base(f: Int)(x: Int, y: Int): Long =
-    32L + (x * 7 + y * 13 + f * 31) % 192
-
-  /** kind 0 = base, 1 = +16 brightness, 2 = ±16 pixel checker,
-    * 3 = ±16 2×2-block stripe. */
-  private def pixel(f: Int, kind: Int)(x: Int, y: Int): Long = kind match {
-    case 0 => base(f)(x, y)
-    case 1 => base(f)(x, y) + Shift
-    case 2 => base(f)(x, y) + (if ((x + y) % 2 == 0) Shift else -Shift)
-    case _ => base(f)(x, y) +
-      (if ((x / 2 + y / 2) % 2 == 0) Shift else -Shift)
-  }
-
-  private def synthesize(f: Int, kind: Int): Array[Byte] =
-    // direct BMP bytes (byte-identical to the ImageIO round trip —
-    // FastCodec doc + Round17OptSpec); the DECODE side stays ImageIO
-    FastCodec.bmpGray(Size, Size, (x, y) => pixel(f, kind)(x, y).toInt)
+  // the planted kinds are MmSsim's: 0 = base, 1 = +16 brightness,
+  // 2 = ±16 pixel checker, 3 = ±16 2×2-block stripe
 
   /** 2×2 sum-pool — integer-exact downsample to 32×32. */
   private def pool(a: Array[Array[Long]]): Array[Array[Long]] =
     Array.tabulate(Size / 2, Size / 2)((y, x) =>
       a(2 * y)(2 * x) + a(2 * y)(2 * x + 1) +
         a(2 * y + 1)(2 * x) + a(2 * y + 1)(2 * x + 1))
-
-  private def r6(x: Double): Double =
-    BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-      .toDouble
-
-  /** Mean windowed score over `size`² pixels: full l·cs SSIM when
-    * `withL`, contrast-structure only otherwise; `c1n`/`c2n` are the
-    * 400-scaled stability constants (16× at the pooled scale). */
-  private def meanScore(a: Array[Array[Long]], b: Array[Array[Long]],
-      size: Int, withL: Boolean, c1n: Long, c2n: Long): Double = {
-    var acc = BigDecimal(0)
-    val nw = size / Win
-    var by = 0
-    while (by < nw) {
-      var bx = 0
-      while (bx < nw) {
-        var sx, sy, sxx, syy, sxy = 0L
-        var y = by * Win
-        while (y < (by + 1) * Win) {
-          var x = bx * Win
-          while (x < (bx + 1) * Win) {
-            val u = a(y)(x); val v = b(y)(x)
-            sx += u; sy += v; sxx += u * u; syy += v * v; sxy += u * v
-            x += 1
-          }
-          y += 1
-        }
-        val n2 = N.toLong * N
-        val f2 = BigInt(800L * (N * sxy - sx * sy) + c2n * n2)
-        val g2 = BigInt(400L * (N * sxx - sx * sx + N * syy - sy * sy) + c2n * n2)
-        val sw =
-          if (withL) {
-            val f1 = BigInt(800L * sx * sy + c1n * n2)
-            val g1 = BigInt(400L * (sx * sx + sy * sy) + c1n * n2)
-            r6((f1 * f2).toDouble / (g1 * g2).toDouble)
-          } else r6(f2.toDouble / g2.toDouble)
-        acc += BigDecimal(sw).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        bx += 1
-      }
-      by += 1
-    }
-    r6((acc / (nw * nw)).toDouble)
-  }
 
   case class MsSsimRow(doc_id: Long,
     ssim_bright: Double, ssim_checker: Double, ssim_stripe: Double,
@@ -317,7 +212,7 @@ object MmMsSsim {
       val s1 = meanScore(b1, a1, Size, withL = true, 2601L, 23409L)
       val cs1 = meanScore(b1, a1, Size, withL = false, 2601L, 23409L)
       val s2 = meanScore(b2, a2, Size / 2, withL = true, 41616L, 374544L)
-      (s1, r6((cs1 + 2 * s2) / 3))
+      (s1, round6((cs1 + 2 * s2) / 3))
     }
     val (sb, mb) = scores(1)
     val (sc, mc) = scores(2)
@@ -329,14 +224,7 @@ object MmMsSsim {
     * cs-only rationals, the 2×2 sum-pool CTE, scale-2 rational with the
     * 16×-scaled constants, and the same (cs₁ + 2·s₂)/3 combine. */
   private[graft] def oracleSql: String = {
-    def v(kind: Int): String = kind match {
-      case 0 => "32 + (x * 7 + y * 13 + f * 31) % 192"
-      case 1 => s"32 + (x * 7 + y * 13 + f * 31) % 192 + $Shift"
-      case 2 => s"32 + (x * 7 + y * 13 + f * 31) % 192 + " +
-        s"(CASE WHEN (x + y) % 2 = 0 THEN $Shift ELSE -$Shift END)"
-      case _ => s"32 + (x * 7 + y * 13 + f * 31) % 192 + " +
-        s"(CASE WHEN ((x // 2) + (y // 2)) % 2 = 0 THEN $Shift ELSE -$Shift END)"
-    }
+    def v(kind: Int): String = MmSsim.pixelSql(kind)
     val n2 = N.toLong * N
     // windowed moments of (base a, kind b) from a source of (x, y, a, b)
     def moments(src: String): String =
@@ -377,11 +265,7 @@ object MmMsSsim {
         Size / 2 / Win)
     def ms(kind: Int, as: String): String =
       s"round((${cs1(kind)} + 2 * ${s2(kind)}) / 3, 6) AS $as"
-    s"""WITH cls AS (SELECT doc_id, doc_id % 50 AS f FROM documents),
-       px AS (SELECT f, x, y
-         FROM (SELECT DISTINCT f FROM cls),
-           (SELECT unnest(range(0, $Size)) AS x),
-           (SELECT unnest(range(0, $Size)) AS y)),
+    s"""WITH ${MmSsim.pixelGridSql},
        scores AS (SELECT fam.f,
            ${s1(1, "ssim_bright")},
            ${s1(2, "ssim_checker")},

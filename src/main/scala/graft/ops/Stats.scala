@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -103,8 +104,7 @@ object Stats {
   /** The nine Benford probabilities as round-6 literals (JVM log10,
     * frozen at authoring time into both engines' plans). */
   private val BenfordP: Seq[(Int, Double)] =
-    (1 to 9).map(d => d -> BigDecimal(math.log10(1.0 + 1.0 / d))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    (1 to 9).map(d => d -> round6(math.log10(1.0 + 1.0 / d)))
   private def benfordP(spark: SparkSession): DataFrame = {
     import spark.implicits._
     BenfordP.toDF("digit", "p_benford")

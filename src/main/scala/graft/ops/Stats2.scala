@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,18 +18,10 @@ object Stats2 {
 
   private val evTs = "CAST(ts AS TIMESTAMP)"
 
-  /** L274 — Welch's two-sample t-test, click vs purchase event values
-    * (the unequal-variance form that is the safe default when group
-    * variances differ — the pairwise sibling of the L205 proportion
-    * z-test, which compares rates, not means). One conditional-agg
-    * scan produces both groups' (n, Σx, Σx²); mean/variance recovered
-    * in closed form, t = (m₁−m₂)/√(s₁²/n₁ + s₂²/n₂), df by
-    * Welch–Satterthwaite. No shuffle beyond the single 1-row partial
-    * aggregate; corpus cost is one filtered scan at any scale. The
-    * verdict column uses the z critical value 1.96 (df is in the
-    * thousands here, where t ≈ z; df is emitted so a reader can apply
-    * an exact table). */
-  def welchTTest(spark: SparkSession, dir: String): DataFrame = {
+  /** The L274 conditional-agg sums, click vs purchase event values: one
+    * scan gives each side's (n, Σx, Σx²); mean and sample variance are
+    * recovered in closed form. Shared by Welch's t and Cohen's d. */
+  private def clickPurchaseMoments(spark: SparkSession, dir: String): DataFrame = {
     val v = col("value")
     def side(t: String, tag: String) = Seq(
       sum(when(col("event_type") === t, 1L)).as(s"n_$tag"),
@@ -43,9 +36,50 @@ object Stats2 {
     def va(i: Int) = round(
       (col(s"ss_$i") - col(s"s_$i") * col(s"s_$i") / col(s"n_$i").cast("double")) /
         (col(s"n_$i") - 1).cast("double"), 6)
-    val stats = base.select(col("n_1").as("n_click"), col("n_2").as("n_purchase"),
+    base.select(col("n_1").as("n_click"), col("n_2").as("n_purchase"),
       m(1).as("mean_click"), m(2).as("mean_purchase"),
       va(1).as("var_click"), va(2).as("var_purchase"))
+  }
+
+  /** DuckDB twin of [[clickPurchaseMoments]]: CTEs `a` (the sums) and
+    * `st` (n, mean, variance per side). */
+  private val clickPurchaseMomentsSql =
+    s"""a AS (SELECT
+             CAST(SUM(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT)
+               AS n_1,
+             round(${dsumSql("CASE WHEN event_type = 'click' THEN value END")}, 6)
+               AS s_1,
+             round(${dsumSql("CASE WHEN event_type = 'click' THEN round(value * value, 6) END")}, 6)
+               AS ss_1,
+             CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT)
+               AS n_2,
+             round(${dsumSql("CASE WHEN event_type = 'purchase' THEN value END")}, 6)
+               AS s_2,
+             round(${dsumSql("CASE WHEN event_type = 'purchase' THEN round(value * value, 6) END")}, 6)
+               AS ss_2
+           FROM events WHERE event_type IN ('click', 'purchase')),
+         st AS (SELECT n_1 AS n_click, n_2 AS n_purchase,
+             round(s_1 / CAST(n_1 AS DOUBLE), 6) AS mean_click,
+             round(s_2 / CAST(n_2 AS DOUBLE), 6) AS mean_purchase,
+             round((ss_1 - s_1 * s_1 / CAST(n_1 AS DOUBLE))
+               / CAST(n_1 - 1 AS DOUBLE), 6) AS var_click,
+             round((ss_2 - s_2 * s_2 / CAST(n_2 AS DOUBLE))
+               / CAST(n_2 - 1 AS DOUBLE), 6) AS var_purchase
+           FROM a)"""
+
+  /** L274 — Welch's two-sample t-test, click vs purchase event values
+    * (the unequal-variance form that is the safe default when group
+    * variances differ — the pairwise sibling of the L205 proportion
+    * z-test, which compares rates, not means). One conditional-agg
+    * scan produces both groups' (n, Σx, Σx²); mean/variance recovered
+    * in closed form, t = (m₁−m₂)/√(s₁²/n₁ + s₂²/n₂), df by
+    * Welch–Satterthwaite. No shuffle beyond the single 1-row partial
+    * aggregate; corpus cost is one filtered scan at any scale. The
+    * verdict column uses the z critical value 1.96 (df is in the
+    * thousands here, where t ≈ z; df is emitted so a reader can apply
+    * an exact table). */
+  def welchTTest(spark: SparkSession, dir: String): DataFrame = {
+    val stats = clickPurchaseMoments(spark, dir)
     val vn1 = round(col("var_click") / col("n_click").cast("double"), 6)
     val vn2 = round(col("var_purchase") / col("n_purchase").cast("double"), 6)
     stats
@@ -59,6 +93,49 @@ object Stats2 {
       .withColumn("significant_95", abs(col("t_stat")) > 1.96)
       .drop("vn1", "vn2")
   }
+
+  /** The L275 scaled-deviation one-way ANOVA over `rows` (a value `x`
+    * per row, grouped by `keys`): per group n_g and mean_g (2-decimal
+    * money grain), the grand n, k and mean_t, and the exact-decimal
+    * within/total sums of squares as ssw_k and ssb_k = SST − SSW, in
+    * (thousand)² units. Shared by ANOVA F and Brown–Forsythe. */
+  private def scaledAnova(rows: DataFrame, keys: Seq[String]): DataFrame = {
+    val wAll = Window.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    val g = rows.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_g"), round(dsum(col("x")), 6).as("s_g"))
+      .withColumn("mean_g", round(col("s_g") / col("n_g").cast("double"), 2))
+      .withColumn("n", sum(col("n_g")).over(wAll))
+      .withColumn("k", count(lit(1)).over(wAll))
+      .withColumn("mean_t", round(sum(col("s_g").cast("decimal(18,6)"))
+        .over(wAll).cast("double") / sum(col("n_g")).over(wAll).cast("double"), 2))
+    val devg = (col("x") - col("mean_g")) / 1000.0
+    val devt = (col("x") - col("mean_t")) / 1000.0
+    rows.join(broadcast(g), keys)
+      .groupBy((keys ++ Seq("n_g", "mean_g", "n", "k")).map(col): _*)
+      .agg(sum(round(devg * devg, 6).cast("decimal(28,6)")).as("ssw_g"),
+        sum(round(devt * devt, 6).cast("decimal(28,6)")).as("sst_g"))
+      .withColumn("ssw_dec", sum(col("ssw_g")).over(wAll))
+      .withColumn("sst_dec", sum(col("sst_g")).over(wAll))
+      .withColumn("ssw_k", col("ssw_dec").cast("double"))
+      .withColumn("ssb_k", (col("sst_dec") - col("ssw_dec")).cast("double"))
+  }
+
+  /** DuckDB twins of [[scaledAnova]]'s grand-mean step (`w`, over the
+    * group frame `g`) and its sums-of-squares step (`f`, over `pg`). */
+  private val anovaMeansSql =
+    """w AS (SELECT *,
+             round(s_g / CAST(n_g AS DOUBLE), 2) AS mean_g,
+             CAST(SUM(n_g) OVER () AS BIGINT) AS n,
+             CAST(COUNT(*) OVER () AS BIGINT) AS k,
+             round(CAST(SUM(CAST(s_g AS DECIMAL(18,6))) OVER () AS DOUBLE)
+               / CAST(SUM(n_g) OVER () AS DOUBLE), 2) AS mean_t
+           FROM g)"""
+  private val anovaSumsSql =
+    """f AS (SELECT *,
+             CAST(SUM(ssw_g) OVER () AS DOUBLE) AS ssw_k,
+             CAST(SUM(sst_g) OVER () - SUM(ssw_g) OVER () AS DOUBLE) AS ssb_k
+           FROM pg)"""
 
   /** L275 — one-way ANOVA F-test of order value across the five order
     * priorities (does ANY group mean differ? — the k-group
@@ -77,29 +154,9 @@ object Stats2 {
     * units, which F and η² are invariant to. Corpus cost: two scans +
     * a 5-row broadcast join, map-combinable at any scale. */
   def anovaF(spark: SparkSession, dir: String): DataFrame = {
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val g = orders(spark, dir)
-      .groupBy(col("o_orderpriority").as("priority"))
-      .agg(count(lit(1)).as("n_g"), round(dsum(col("o_totalprice")), 6).as("s_g"))
-      .withColumn("mean_g", round(col("s_g") / col("n_g").cast("double"), 2))
-      .withColumn("n", sum(col("n_g")).over(wAll))
-      .withColumn("k", count(lit(1)).over(wAll))
-      .withColumn("mean_t", round(sum(col("s_g").cast("decimal(18,6)"))
-        .over(wAll).cast("double") / sum(col("n_g")).over(wAll).cast("double"), 2))
-    val devg = (col("o_totalprice") - col("mean_g")) / 1000.0
-    val devt = (col("o_totalprice") - col("mean_t")) / 1000.0
-    val perG = orders(spark, dir)
-      .join(broadcast(g), col("o_orderpriority") === col("priority"))
-      .groupBy(col("priority"), col("n_g"), col("mean_g"), col("n"), col("k"))
-      .agg(sum(round(devg * devg, 6).cast("decimal(28,6)")).as("ssw_g"),
-        sum(round(devt * devt, 6).cast("decimal(28,6)")).as("sst_g"))
-    val f = perG
-      .withColumn("ssw_dec", sum(col("ssw_g")).over(wAll))
-      .withColumn("sst_dec", sum(col("sst_g")).over(wAll))
-      .withColumn("ssw_k", col("ssw_dec").cast("double"))
-      .withColumn("ssb_k", (col("sst_dec") - col("ssw_dec")).cast("double"))
-    f.select(col("priority"), col("n_g"), col("mean_g"),
+    val rows = orders(spark, dir)
+      .select(col("o_orderpriority").as("priority"), col("o_totalprice").as("x"))
+    scaledAnova(rows, Seq("priority")).select(col("priority"), col("n_g"), col("mean_g"),
         col("ssb_k"), col("ssw_k"),
         (col("k") - 1).as("df_between"), (col("n") - col("k")).as("df_within"),
         round((col("ssb_k") / (col("k") - 1).cast("double")) /
@@ -265,38 +322,16 @@ object Stats2 {
     * is the robust way to find out). W = the one-way ANOVA F statistic
     * computed on z = |y − median_g|: group medians at the 2-decimal
     * money grain (the L21 percentile identity), then the L275
-    * scaled-deviation machinery applied verbatim to z. */
+    * scaled-deviation machinery ([[scaledAnova]]) applied to z. */
   def brownForsythe(spark: SparkSession, dir: String): DataFrame = {
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
     val med = orders(spark, dir)
       .groupBy(col("o_orderpriority").as("priority"))
       .agg(round(expr("percentile(o_totalprice, 0.5)"), 2).as("med_g"))
     val z = orders(spark, dir)
       .join(broadcast(med), col("o_orderpriority") === col("priority"))
-      .select(col("priority"), abs(col("o_totalprice") - col("med_g")).as("z"),
-        col("med_g"))
-    val g = z.groupBy(col("priority"), col("med_g"))
-      .agg(count(lit(1)).as("n_g"), round(dsum(col("z")), 6).as("s_g"))
-      .withColumn("mean_g", round(col("s_g") / col("n_g").cast("double"), 2))
-      .withColumn("n", sum(col("n_g")).over(wAll))
-      .withColumn("k", count(lit(1)).over(wAll))
-      .withColumn("mean_t", round(sum(col("s_g").cast("decimal(18,6)"))
-        .over(wAll).cast("double") / sum(col("n_g")).over(wAll).cast("double"),
-        2))
-    val devg = (col("z") - col("mean_g")) / 1000.0
-    val devt = (col("z") - col("mean_t")) / 1000.0
-    val perG = z.drop("med_g")
-      .join(broadcast(g), Seq("priority"))
-      .groupBy(col("priority"), col("med_g"), col("n_g"), col("mean_g"),
-        col("n"), col("k"))
-      .agg(sum(round(devg * devg, 6).cast("decimal(28,6)")).as("ssw_g"),
-        sum(round(devt * devt, 6).cast("decimal(28,6)")).as("sst_g"))
-    perG
-      .withColumn("ssw_dec", sum(col("ssw_g")).over(wAll))
-      .withColumn("sst_dec", sum(col("sst_g")).over(wAll))
-      .withColumn("ssw_k", col("ssw_dec").cast("double"))
-      .withColumn("ssb_k", (col("sst_dec") - col("ssw_dec")).cast("double"))
+      .select(col("priority"), col("med_g"),
+        abs(col("o_totalprice") - col("med_g")).as("x"))
+    scaledAnova(z, Seq("priority", "med_g"))
       .select(col("priority"), col("n_g"), col("med_g"), col("mean_g")
           .as("mean_absdev"),
         (col("k") - 1).as("df_between"), (col("n") - col("k")).as("df_within"),
@@ -306,25 +341,17 @@ object Stats2 {
       .orderBy("priority")
   }
 
-  /** L296 — Durbin–Watson autocorrelation diagnostic on the residuals
-    * of the hourly OLS revenue trend (the classic "can I trust my
-    * regression's error bars?" check — DW ≈ 2 means independent
-    * residuals, < 1.5 positive autocorrelation, the regime where L225's
-    * trend CIs would be overconfident). The L225 six-sums fit supplies
-    * slope/intercept; residuals round-6 on the calendar-bounded hourly
-    * frame; DW = Σ(e_t − e_{t−1})²/Σe_t² via one lag window over that
-    * bounded frame, decimal-summed. Corpus cost: one hourly aggregate
-    * scan at any scale. */
-  def durbinWatson(spark: SparkSession, dir: String): DataFrame = {
-    val wOrd = Window.orderBy(col("t"))
+  /** The L225 six-sums OLS fit of hourly event revenue `y` on the hour
+    * index `t`: slope/intercept over the calendar-bounded hourly frame and
+    * the round-6 residual `e`. Shared by Durbin–Watson and the runs test. */
+  private def hourlyTrendResiduals(spark: SparkSession, dir: String): DataFrame = {
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
-    val hourly = events(spark, dir)
+    events(spark, dir)
       .groupBy(date_trunc("hour", col("ts")).as("bucket"))
       .agg(round(dsum(col("value")), 6).as("y"))
       .withColumn("t", (row_number().over(Window.orderBy(col("bucket"))) - 1)
         .cast("double"))
-    val fit = hourly
       .withColumn("n", count(lit(1)).over(wAll).cast("double"))
       .withColumn("sx", sum(col("t").cast("decimal(18,6)")).over(wAll)
         .cast("double"))
@@ -339,8 +366,42 @@ object Stats2 {
       .withColumn("icept", (col("sy") - col("slope") * col("sx")) / col("n"))
       .withColumn("e", round(col("y") - (col("icept") +
         col("slope") * col("t")), 6))
-    val dw = fit
-      .withColumn("de", col("e") - lag(col("e"), 1).over(wOrd))
+  }
+
+  /** DuckDB twin of [[hourlyTrendResiduals]] up to the fit: CTEs ending in
+    * `f2` (y, t, slope, icept). */
+  private val hourlyTrendFitSql =
+    s"""hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
+             round(${dsumSql("value")}, 6) AS y
+           FROM events GROUP BY 1),
+         tt AS (SELECT y,
+             CAST(ROW_NUMBER() OVER (ORDER BY bucket) - 1 AS DOUBLE) AS t
+           FROM hourly),
+         s AS (SELECT *,
+             CAST(COUNT(*) OVER () AS DOUBLE) AS n,
+             CAST(SUM(CAST(t AS DECIMAL(18,6))) OVER () AS DOUBLE) AS sx,
+             CAST(SUM(CAST(y AS DECIMAL(18,6))) OVER () AS DOUBLE) AS sy,
+             CAST(SUM(CAST(t * t AS DECIMAL(18,6))) OVER () AS DOUBLE) AS sxx,
+             CAST(SUM(CAST(round(t * y, 6) AS DECIMAL(28,6))) OVER ()
+               AS DOUBLE) AS sxy
+           FROM tt),
+         ff AS (SELECT *,
+             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope
+           FROM s),
+         f2 AS (SELECT *, (sy - slope * sx) / n AS icept FROM ff)"""
+
+  /** L296 — Durbin–Watson autocorrelation diagnostic on the residuals
+    * of the hourly OLS revenue trend (the classic "can I trust my
+    * regression's error bars?" check — DW ≈ 2 means independent
+    * residuals, < 1.5 positive autocorrelation, the regime where L225's
+    * trend CIs would be overconfident). The L225 six-sums fit supplies
+    * slope/intercept; residuals round-6 on the calendar-bounded hourly
+    * frame; DW = Σ(e_t − e_{t−1})²/Σe_t² via one lag window over that
+    * bounded frame, decimal-summed. Corpus cost: one hourly aggregate
+    * scan at any scale. */
+  def durbinWatson(spark: SparkSession, dir: String): DataFrame = {
+    val dw = hourlyTrendResiduals(spark, dir)
+      .withColumn("de", col("e") - lag(col("e"), 1).over(Window.orderBy(col("t"))))
       .agg(count(lit(1)).as("n_hours"),
         round(max(col("slope")), 6).as("slope"),
         round(max(col("icept")), 6).as("intercept"),
@@ -401,36 +462,15 @@ object Stats2 {
   /** L302 — Wald–Wolfowitz runs test on the signs of the hourly-trend
     * residuals (is the residual SEQUENCE random, or do signs clump? —
     * the distribution-free companion to L296's Durbin–Watson, which
-    * measures the same clumping parametrically). Residual construction
-    * is byte-for-byte the L296 six-sums fit; signs (e ≥ 0), the run
+    * measures the same clumping parametrically). Residuals from
+    * [[hourlyTrendResiduals]], the L296 six-sums fit; signs (e ≥ 0), the run
     * count via one lag window over the calendar-bounded frame, then
     * the exact-integer run moments μ = 2n₊n₋/n + 1 and the classical
     * σ²; z round-6. */
   def runsTest(spark: SparkSession, dir: String): DataFrame = {
     val wOrd = Window.orderBy(col("t"))
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val hourly = events(spark, dir)
-      .groupBy(date_trunc("hour", col("ts")).as("bucket"))
-      .agg(round(dsum(col("value")), 6).as("y"))
-      .withColumn("t", (row_number().over(Window.orderBy(col("bucket"))) - 1)
-        .cast("double"))
-    val fit = hourly
-      .withColumn("n", count(lit(1)).over(wAll).cast("double"))
-      .withColumn("sx", sum(col("t").cast("decimal(18,6)")).over(wAll)
-        .cast("double"))
-      .withColumn("sy", sum(col("y").cast("decimal(18,6)")).over(wAll)
-        .cast("double"))
-      .withColumn("sxx", sum((col("t") * col("t")).cast("decimal(18,6)"))
-        .over(wAll).cast("double"))
-      .withColumn("sxy", sum(round(col("t") * col("y"), 6)
-        .cast("decimal(28,6)")).over(wAll).cast("double"))
-      .withColumn("slope", (col("n") * col("sxy") - col("sx") * col("sy")) /
-        (col("n") * col("sxx") - col("sx") * col("sx")))
-      .withColumn("icept", (col("sy") - col("slope") * col("sx")) / col("n"))
-      .withColumn("pos", (round(col("y") - (col("icept") +
-        col("slope") * col("t")), 6) >= 0).cast("long"))
-    val runs = fit
+    val runs = hourlyTrendResiduals(spark, dir)
+      .withColumn("pos", (col("e") >= 0).cast("long"))
       .withColumn("flip", when(lag(col("pos"), 1).over(wOrd).isNull, 1L)
         .otherwise((col("pos") =!= lag(col("pos"), 1).over(wOrd)).cast("long")))
       .agg(count(lit(1)).as("n"),
@@ -544,30 +584,13 @@ object Stats2 {
     * correction — the MAGNITUDE number read beside L274's Welch t,
     * which only says whether a difference exists, not whether anyone
     * should care; at corpus scale everything is "significant" and
-    * effect size is the only informative statistic left). Byte-for-
-    * byte the L274 conditional-agg sums; pooled SD from the two
+    * effect size is the only informative statistic left). The L274
+    * conditional-agg sums ([[clickPurchaseMoments]]); pooled SD from the two
     * sample variances in closed form; g = d·(1 − 3/(4N−9)); the
     * conventional |d| ∈ {0.2, 0.5, 0.8} magnitude label emitted as a
     * column. One map-combinable scan, 1-row output. */
   def cohensD(spark: SparkSession, dir: String): DataFrame = {
-    val v = col("value")
-    def side(t: String, tag: String) = Seq(
-      sum(when(col("event_type") === t, 1L)).as(s"n_$tag"),
-      round(dsum(when(col("event_type") === t, v)), 6).as(s"s_$tag"),
-      round(dsum(when(col("event_type") === t, round(v * v, 6))), 6)
-        .as(s"ss_$tag"))
-    val aggs = side("click", "1") ++ side("purchase", "2")
-    val base = events(spark, dir)
-      .where(col("event_type").isin("click", "purchase"))
-      .agg(aggs.head, aggs.tail: _*)
-    def nD(i: Int) = col(s"n_$i").cast("double")
-    def m(i: Int) = round(col(s"s_$i") / nD(i), 6)
-    def va(i: Int) = round((col(s"ss_$i") -
-      col(s"s_$i") * col(s"s_$i") / nD(i)) / (nD(i) - 1.0), 6)
-    val stats = base.select(col("n_1").as("n_click"),
-      col("n_2").as("n_purchase"),
-      m(1).as("mean_click"), m(2).as("mean_purchase"),
-      va(1).as("var_click"), va(2).as("var_purchase"))
+    val stats = clickPurchaseMoments(spark, dir)
     val n1 = col("n_click").cast("double")
     val n2 = col("n_purchase").cast("double")
     val pooled = sqrt(((n1 - 1.0) * col("var_click") +
@@ -620,8 +643,6 @@ object Stats2 {
         .as[(Long, Double)],
       4000, "theil-sen daily frame (calendar-bounded)")
       .sortBy(_._1)
-    def r6(v: Double): Double =
-      BigDecimal.decimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     def medianOf(sorted: Array[Double]): Double = {
       val n = sorted.length
       val x1 = sorted((n + 1) / 2 - 1)
@@ -637,7 +658,7 @@ object Stats2 {
     // HALF_UP) is MONOTONE NON-DECREASING, so rounding every slope before
     // the sort and selecting the two middle order statistics is
     // bit-identical to sorting the RAW slopes and rounding only the two
-    // selected elements: sorted(map(r6, xs))(k) == r6(sorted(xs)(k)).
+    // selected elements: sorted(map(r6, xs))(k) == round6(sorted(xs)(k)).
     // The median interpolation then runs on the same two rounded values.
     val slopes = new Array[Double](n * (n - 1) / 2)
     var k = 0
@@ -654,13 +675,13 @@ object Stats2 {
     java.util.Arrays.sort(slopes)
     def medianOfRoundedAt(sorted: Array[Double]): Double = {
       val m = sorted.length
-      val x1 = r6(sorted((m + 1) / 2 - 1))
-      val x2 = r6(sorted((m + 2) / 2 - 1))
+      val x1 = round6(sorted((m + 1) / 2 - 1))
+      val x2 = round6(sorted((m + 2) / 2 - 1))
       x1 + (x2 - x1) * 0.5
     }
-    val sen = r6(medianOfRoundedAt(slopes))
-    val resid = days.map { case (x, y) => r6(y - sen * x) }.sorted
-    val intercept = r6(medianOf(resid))
+    val sen = round6(medianOfRoundedAt(slopes))
+    val resid = days.map { case (x, y) => round6(y - sen * x) }.sorted
+    val intercept = round6(medianOf(resid))
     Seq((n.toLong, slopes.length.toLong, sen, intercept))
       .toDF("n_days", "n_pairs", "sen_slope", "sen_intercept")
   }
@@ -795,28 +816,7 @@ object Stats2 {
          SELECT n_days, n_pairs, sen_slope, sen_intercept
          FROM r WHERE n_pairs >= 1""",
     "stats_cohens_d" ->
-      s"""WITH a AS (SELECT
-             CAST(SUM(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT)
-               AS n_1,
-             round(${dsumSql("CASE WHEN event_type = 'click' THEN value END")}, 6)
-               AS s_1,
-             round(${dsumSql("CASE WHEN event_type = 'click' THEN round(value * value, 6) END")}, 6)
-               AS ss_1,
-             CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT)
-               AS n_2,
-             round(${dsumSql("CASE WHEN event_type = 'purchase' THEN value END")}, 6)
-               AS s_2,
-             round(${dsumSql("CASE WHEN event_type = 'purchase' THEN round(value * value, 6) END")}, 6)
-               AS ss_2
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         st AS (SELECT n_1 AS n_click, n_2 AS n_purchase,
-             round(s_1 / CAST(n_1 AS DOUBLE), 6) AS mean_click,
-             round(s_2 / CAST(n_2 AS DOUBLE), 6) AS mean_purchase,
-             round((ss_1 - s_1 * s_1 / CAST(n_1 AS DOUBLE))
-               / (CAST(n_1 AS DOUBLE) - 1.0), 6) AS var_click,
-             round((ss_2 - s_2 * s_2 / CAST(n_2 AS DOUBLE))
-               / (CAST(n_2 AS DOUBLE) - 1.0), 6) AS var_purchase
-           FROM a),
+      s"""WITH $clickPurchaseMomentsSql,
          p AS (SELECT *,
              sqrt(((CAST(n_click AS DOUBLE) - 1.0) * var_click
                + (CAST(n_purchase AS DOUBLE) - 1.0) * var_purchase)
@@ -945,24 +945,7 @@ object Stats2 {
            k - 1 AS df, chi2_f > 9.487729 AND k = 5 AS significant_95
          FROM f ORDER BY event_type""",
     "stats_runs_test" ->
-      s"""WITH hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
-             round(${dsumSql("value")}, 6) AS y
-           FROM events GROUP BY 1),
-         tt AS (SELECT y,
-             CAST(ROW_NUMBER() OVER (ORDER BY bucket) - 1 AS DOUBLE) AS t
-           FROM hourly),
-         s AS (SELECT *,
-             CAST(COUNT(*) OVER () AS DOUBLE) AS n,
-             CAST(SUM(CAST(t AS DECIMAL(18,6))) OVER () AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(18,6))) OVER () AS DOUBLE) AS sy,
-             CAST(SUM(CAST(t * t AS DECIMAL(18,6))) OVER () AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(round(t * y, 6) AS DECIMAL(28,6))) OVER ()
-               AS DOUBLE) AS sxy
-           FROM tt),
-         ff AS (SELECT *,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope
-           FROM s),
-         f2 AS (SELECT *, (sy - slope * sx) / n AS icept FROM ff),
+      s"""WITH $hourlyTrendFitSql,
          sg AS (SELECT t,
              CAST(round(y - (icept + slope * t), 6) >= 0 AS BIGINT) AS pos
            FROM f2),
@@ -1039,13 +1022,7 @@ object Stats2 {
          g AS (SELECT priority, med_g, CAST(COUNT(*) AS BIGINT) AS n_g,
              round(${dsumSql("z")}, 6) AS s_g
            FROM z GROUP BY 1, 2),
-         w AS (SELECT *,
-             round(s_g / CAST(n_g AS DOUBLE), 2) AS mean_g,
-             CAST(SUM(n_g) OVER () AS BIGINT) AS n,
-             CAST(COUNT(*) OVER () AS BIGINT) AS k,
-             round(CAST(SUM(CAST(s_g AS DECIMAL(18,6))) OVER () AS DOUBLE)
-               / CAST(SUM(n_g) OVER () AS DOUBLE), 2) AS mean_t
-           FROM g),
+         $anovaMeansSql,
          pg AS (SELECT z.priority, w.med_g, n_g, mean_g, n, k,
              SUM(CAST(round(((z - mean_g) / 1000.0)
                * ((z - mean_g) / 1000.0), 6) AS DECIMAL(28,6))) AS ssw_g,
@@ -1053,34 +1030,14 @@ object Stats2 {
                * ((z - mean_t) / 1000.0), 6) AS DECIMAL(28,6))) AS sst_g
            FROM z JOIN w ON z.priority = w.priority
            GROUP BY 1, 2, 3, 4, 5, 6),
-         f AS (SELECT *,
-             CAST(SUM(ssw_g) OVER () AS DOUBLE) AS ssw_k,
-             CAST(SUM(sst_g) OVER () - SUM(ssw_g) OVER () AS DOUBLE) AS ssb_k
-           FROM pg)
+         $anovaSumsSql
          SELECT priority, n_g, med_g, mean_g AS mean_absdev,
            k - 1 AS df_between, n - k AS df_within,
            round((ssb_k / CAST(k - 1 AS DOUBLE))
              / (ssw_k / CAST(n - k AS DOUBLE)), 6) AS w_stat
          FROM f ORDER BY priority""",
     "stats_durbin_watson" ->
-      s"""WITH hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
-             round(${dsumSql("value")}, 6) AS y
-           FROM events GROUP BY 1),
-         tt AS (SELECT y,
-             CAST(ROW_NUMBER() OVER (ORDER BY bucket) - 1 AS DOUBLE) AS t
-           FROM hourly),
-         s AS (SELECT *,
-             CAST(COUNT(*) OVER () AS DOUBLE) AS n,
-             CAST(SUM(CAST(t AS DECIMAL(18,6))) OVER () AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(18,6))) OVER () AS DOUBLE) AS sy,
-             CAST(SUM(CAST(t * t AS DECIMAL(18,6))) OVER () AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(round(t * y, 6) AS DECIMAL(28,6))) OVER ()
-               AS DOUBLE) AS sxy
-           FROM tt),
-         ff AS (SELECT *,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope
-           FROM s),
-         f2 AS (SELECT *, (sy - slope * sx) / n AS icept FROM ff),
+      s"""WITH $hourlyTrendFitSql,
          e AS (SELECT t, slope, icept,
              round(y - (icept + slope * t), 6) AS e
            FROM f2),
@@ -1098,28 +1055,7 @@ object Stats2 {
              THEN 'negative_autocorr' ELSE 'none' END AS verdict
          FROM d""",
     "stats_welch_ttest" ->
-      s"""WITH a AS (SELECT
-             CAST(SUM(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT)
-               AS n_1,
-             round(${dsumSql("CASE WHEN event_type = 'click' THEN value END")}, 6)
-               AS s_1,
-             round(${dsumSql("CASE WHEN event_type = 'click' THEN round(value * value, 6) END")}, 6)
-               AS ss_1,
-             CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT)
-               AS n_2,
-             round(${dsumSql("CASE WHEN event_type = 'purchase' THEN value END")}, 6)
-               AS s_2,
-             round(${dsumSql("CASE WHEN event_type = 'purchase' THEN round(value * value, 6) END")}, 6)
-               AS ss_2
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         st AS (SELECT n_1 AS n_click, n_2 AS n_purchase,
-             round(s_1 / CAST(n_1 AS DOUBLE), 6) AS mean_click,
-             round(s_2 / CAST(n_2 AS DOUBLE), 6) AS mean_purchase,
-             round((ss_1 - s_1 * s_1 / CAST(n_1 AS DOUBLE))
-               / CAST(n_1 - 1 AS DOUBLE), 6) AS var_click,
-             round((ss_2 - s_2 * s_2 / CAST(n_2 AS DOUBLE))
-               / CAST(n_2 - 1 AS DOUBLE), 6) AS var_purchase
-           FROM a),
+      s"""WITH $clickPurchaseMomentsSql,
          vn AS (SELECT *,
              round(var_click / CAST(n_click AS DOUBLE), 6) AS vn1,
              round(var_purchase / CAST(n_purchase AS DOUBLE), 6) AS vn2
@@ -1138,13 +1074,7 @@ object Stats2 {
              CAST(COUNT(*) AS BIGINT) AS n_g,
              round(${dsumSql("o_totalprice")}, 6) AS s_g
            FROM orders GROUP BY 1),
-         w AS (SELECT *,
-             round(s_g / CAST(n_g AS DOUBLE), 2) AS mean_g,
-             CAST(SUM(n_g) OVER () AS BIGINT) AS n,
-             CAST(COUNT(*) OVER () AS BIGINT) AS k,
-             round(CAST(SUM(CAST(s_g AS DECIMAL(18,6))) OVER () AS DOUBLE)
-               / CAST(SUM(n_g) OVER () AS DOUBLE), 2) AS mean_t
-           FROM g),
+         $anovaMeansSql,
          pg AS (SELECT priority, n_g, mean_g, n, k,
              SUM(CAST(round(((o_totalprice - mean_g) / 1000.0)
                * ((o_totalprice - mean_g) / 1000.0), 6) AS DECIMAL(28,6)))
@@ -1154,10 +1084,7 @@ object Stats2 {
                AS sst_g
            FROM orders JOIN w ON o_orderpriority = priority
            GROUP BY 1, 2, 3, 4, 5),
-         f AS (SELECT *,
-             CAST(SUM(ssw_g) OVER () AS DOUBLE) AS ssw_k,
-             CAST(SUM(sst_g) OVER () - SUM(ssw_g) OVER () AS DOUBLE) AS ssb_k
-           FROM pg)
+         $anovaSumsSql
          SELECT priority, n_g, mean_g, ssb_k, ssw_k,
            k - 1 AS df_between, n - k AS df_within,
            round((ssb_k / CAST(k - 1 AS DOUBLE))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,11 +16,8 @@ import org.apache.spark.sql.functions._
   * frame. */
 object Stats4 {
 
-  private def r6(x: Double): Double =
-    BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** The calendar-bounded daily micro series (the L287 frame). */
-  private def dailyMicros(spark: SparkSession, dir: String): Array[(Long, Long)] = {
+  private[ops] def dailyMicros(spark: SparkSession, dir: String): Array[(Long, Long)] = {
     import spark.implicits._
     boundedCollect(
       events(spark, dir)
@@ -28,7 +26,7 @@ object Stats4 {
           .cast("long").as("y_micro"))
         .orderBy("day_us")
         .as[(Long, Long)],
-      4000, "holt-winters daily frame (calendar-bounded)")
+      4000, "daily micro frame (calendar-bounded)")
   }
 
   private[graft] case class HwRow(rn: Long, day_us: Long, actual: Double,
@@ -53,8 +51,8 @@ object Stats4 {
     val ring = collection.mutable.Queue(
       daily.take(7).map(_._2 - l0).toIndexedSeq: _*)
     val head = daily.take(7).zipWithIndex.map { case ((d, y), i) =>
-      HwRow(i + 1L, d, r6(y / 1e6), r6(l0 / 1e6), 0.0,
-        r6((y - l0) / 1e6), None, None)
+      HwRow(i + 1L, d, round6(y / 1e6), round6(l0 / 1e6), 0.0,
+        round6((y - l0) / 1e6), None, None)
     }
     var l = l0
     var b = 0L
@@ -66,9 +64,9 @@ object Stats4 {
       val sNew = math.floor((y - lNew + 3 * s7) / 4.0).toLong
       ring.enqueue(sNew)
       l = lNew; b = bNew
-      HwRow(i + 8L, d, r6(y / 1e6), r6(lNew / 1e6), r6(bNew / 1e6),
-        r6(sNew / 1e6), Some(r6(fc / 1e6)),
-        Some(r6(math.abs(y - fc) / 1e6)))
+      HwRow(i + 8L, d, round6(y / 1e6), round6(lNew / 1e6), round6(bNew / 1e6),
+        round6(sNew / 1e6), Some(round6(fc / 1e6)),
+        Some(round6(math.abs(y - fc) / 1e6)))
     }
     (head ++ tail).toSeq
   }
@@ -125,10 +123,10 @@ object Stats4 {
     val (maeHw, maeNv) = (maeMicro(hwErrs), maeMicro(nvErrs))
     require(maeNv > 0, "degenerate fixture: seasonal-naive MAE is zero")
     Seq(
-      ("holt_winters", hwErrs.length.toLong, r6(maeHw / 1e6),
-        r6(maeHw.toDouble / maeNv)),
-      ("seasonal_naive", nvErrs.length.toLong, r6(maeNv / 1e6),
-        r6(maeNv.toDouble / maeNv)))
+      ("holt_winters", hwErrs.length.toLong, round6(maeHw / 1e6),
+        round6(maeHw.toDouble / maeNv)),
+      ("seasonal_naive", nvErrs.length.toLong, round6(maeNv / 1e6),
+        round6(maeNv.toDouble / maeNv)))
       .toDF("model", "n_forecasts", "mae", "mase")
       .orderBy("model")
   }
@@ -304,17 +302,21 @@ object Stats4 {
 
   private val evTs = "CAST(ts AS TIMESTAMP)"
 
-  /** Shared WITH RECURSIVE prefix for the Holt–Winters twin: the
-    * seasonal ring rides the recursion as a 7-element LIST column
-    * (s[1] = s_{t−7}; each step drops the head and appends s_t). */
-  private def hwCte: String =
-    s"""WITH RECURSIVE daily AS (SELECT
+  /** Oracle twin of [[dailyMicros]], numbered: `dr(day_us, y_micro, rn)`. */
+  private[ops] def dailyMicrosSql: String =
+    s"""daily AS (SELECT
            epoch_us(date_trunc('day', $evTs)) AS day_us,
            CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
              AS y_micro
          FROM events GROUP BY 1),
        dr AS (SELECT *, ROW_NUMBER() OVER (ORDER BY day_us) AS rn
-         FROM daily),
+         FROM daily)"""
+
+  /** Shared WITH RECURSIVE prefix for the Holt–Winters twin: the
+    * seasonal ring rides the recursion as a 7-element LIST column
+    * (s[1] = s_{t−7}; each step drops the head and appends s_t). */
+  private def hwCte: String =
+    s"""WITH RECURSIVE $dailyMicrosSql,
        init AS (SELECT CAST(SUM(y_micro) // 7 AS BIGINT) AS l0
          FROM dr WHERE rn <= 7),
        sinit AS (SELECT list(y_micro - l0 ORDER BY rn) AS s

@@ -579,12 +579,7 @@ object Warehouse {
     * the previous stage. One conditional-aggregation pass per user, then a
     * single global rollup — two shuffles, the second on one row. */
   def funnelStages(spark: SparkSession, dir: String): DataFrame = {
-    val perUser = events(spark, dir)
-      .groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-        min(when(col("event_type") === "click", col("ts"))).as("t_click"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
+    val perUser = firstStageTimes(spark, dir)
     perUser.agg(
       sum(when(col("t_view").isNotNull, 1L).otherwise(0L)).as("n_view"),
       sum(when(col("t_view").isNotNull && col("t_click") > col("t_view"), 1L)
@@ -610,12 +605,7 @@ object Warehouse {
     * re-aggregations. Scale = `funnel_stages` exactly: one user-keyed
     * shuffle, then one row. */
   def funnelTimeToConvert(spark: SparkSession, dir: String): DataFrame = {
-    val perUser = events(spark, dir)
-      .groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-        min(when(col("event_type") === "click", col("ts"))).as("t_click"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
+    val perUser = firstStageTimes(spark, dir)
     val vc = col("t_view").isNotNull && col("t_click") > col("t_view")
     val cp = vc && col("t_purchase") > col("t_click")
     val dvc = unix_micros(col("t_click")) - unix_micros(col("t_view"))
@@ -643,6 +633,15 @@ object Warehouse {
         col("r.p90_s"))
       .orderBy("transition")
   }
+
+  /** Per user the first view, click and purchase timestamps. */
+  private def firstStageTimes(spark: SparkSession, dir: String): DataFrame =
+    events(spark, dir)
+      .groupBy(col("user_id"))
+      .agg(
+        min(when(col("event_type") === "view", col("ts"))).as("t_view"),
+        min(when(col("event_type") === "click", col("ts"))).as("t_click"),
+        min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
 
   /** Spark's exact interpolated `percentile` over a conditional column
     * (nulls skipped — only converting users contribute). */
@@ -1280,6 +1279,29 @@ object Warehouse {
 
   private val evTs = "CAST(ts AS TIMESTAMP)"
 
+  /** `c`: each user's events where the event type changes (the SCD2
+    * version starts), over `t(user_id, event_id, ts_us, event_type)`. */
+  private val typeChangesSql =
+    s"""t AS (
+            SELECT user_id, event_id, epoch_us($evTs) AS ts_us, event_type,
+              lag(event_type) OVER (PARTITION BY user_id
+                ORDER BY $evTs, event_id) AS prev_type
+            FROM events),
+          c AS (SELECT * FROM t
+            WHERE prev_type IS NULL OR prev_type <> event_type)"""
+
+  /** `b`: each event flagged `is_new` when it opens a 2-hour-gap session,
+    * over `t(user_id, event_id, value, ts_us, prev_us)`. */
+  private val sessionStartsSql =
+    s"""t AS (
+            SELECT user_id, event_id, value, epoch_us($evTs) AS ts_us,
+              lag(epoch_us($evTs)) OVER (PARTITION BY user_id
+                ORDER BY $evTs, event_id) AS prev_us
+            FROM events),
+          b AS (
+            SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 7200000000
+              THEN 1 ELSE 0 END AS is_new FROM t)"""
+
   val oracles: Map[String, String] = Map(
     "tpch_q3_shipping_priority" ->
       s"""SELECT l_orderkey, ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue,
@@ -1340,13 +1362,7 @@ object Warehouse {
                 ORDER BY $evTs DESC, event_id DESC) AS rn
             FROM events) WHERE rn = 1 ORDER BY user_id, event_type""",
     "cdc_scd2_intervals" ->
-      s"""WITH t AS (
-            SELECT user_id, event_id, epoch_us($evTs) AS ts_us, event_type,
-              lag(event_type) OVER (PARTITION BY user_id
-                ORDER BY $evTs, event_id) AS prev_type
-            FROM events),
-          c AS (SELECT * FROM t
-            WHERE prev_type IS NULL OR prev_type <> event_type)
+      s"""WITH $typeChangesSql
           SELECT user_id, CAST(row_number() OVER w AS BIGINT) AS version,
             event_type, ts_us AS valid_from_us,
             lead(ts_us) OVER w AS valid_to_us,
@@ -1354,13 +1370,7 @@ object Warehouse {
           FROM c WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
           ORDER BY user_id, version""",
     "cdc_temporal_join" ->
-      s"""WITH t AS (
-            SELECT user_id, event_id, epoch_us($evTs) AS ts_us, event_type,
-              lag(event_type) OVER (PARTITION BY user_id
-                ORDER BY $evTs, event_id) AS prev_type
-            FROM events),
-          c AS (SELECT * FROM t
-            WHERE prev_type IS NULL OR prev_type <> event_type),
+      s"""WITH $typeChangesSql,
           dim AS (SELECT user_id, CAST(row_number() OVER w AS BIGINT) AS version,
             event_type, ts_us AS valid_from_us,
             lead(ts_us) OVER w AS valid_to_us
@@ -1375,14 +1385,7 @@ object Warehouse {
             AND (dim.valid_to_us IS NULL OR p.p_ts_us < dim.valid_to_us)
           ORDER BY purchase_id""",
     "sessionize_events" ->
-      s"""WITH t AS (
-            SELECT user_id, event_id, value, epoch_us($evTs) AS ts_us,
-              lag(epoch_us($evTs)) OVER (PARTITION BY user_id
-                ORDER BY $evTs, event_id) AS prev_us
-            FROM events),
-          b AS (
-            SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 7200000000
-              THEN 1 ELSE 0 END AS is_new FROM t),
+      s"""WITH $sessionStartsSql,
           s AS (
             SELECT *, CAST(SUM(is_new) OVER (PARTITION BY user_id
               ORDER BY ts_us, event_id) AS BIGINT) AS session_idx FROM b)
@@ -1392,14 +1395,7 @@ object Warehouse {
             MAX(ts_us) - MIN(ts_us) AS dur_us
           FROM s GROUP BY user_id, session_idx ORDER BY user_id, session_idx""",
     "sessionize_native_window" ->
-      s"""WITH t AS (
-            SELECT user_id, event_id, value, epoch_us($evTs) AS ts_us,
-              lag(epoch_us($evTs)) OVER (PARTITION BY user_id
-                ORDER BY $evTs, event_id) AS prev_us
-            FROM events),
-          b AS (
-            SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 7200000000
-              THEN 1 ELSE 0 END AS is_new FROM t),
+      s"""WITH $sessionStartsSql,
           s AS (
             SELECT *, SUM(is_new) OVER (PARTITION BY user_id
               ORDER BY ts_us, event_id) AS session_idx FROM b)

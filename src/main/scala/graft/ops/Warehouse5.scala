@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -143,7 +144,18 @@ object Warehouse5 {
     * the moving average is one window pass; the seasonal profile is a
     * 24-row agg; top-20 |residual| rows are a TakeOrdered. The L224
     * EWMA flags level shifts; this flags rhythm violations. */
-  def stlDecompose(spark: SparkSession, dir: String): DataFrame = {
+  def stlDecompose(spark: SparkSession, dir: String): DataFrame =
+    hourlyDecomposition(spark, dir)
+      .select(unix_micros(col("bucket")).as("bucket_us"), col("hod"),
+        col("x"), col("trend"), col("seasonal"), col("resid"))
+      .orderBy(abs(col("resid")).desc, col("bucket_us").asc)
+      .limit(20)
+
+  /** The L236 decomposition frame of the hourly revenue series `x`: the
+    * centered 25-hour `trend` (full windows only), the detrended `detr`,
+    * the hour-of-day (`hod`) `seasonal` mean and the `resid`, all
+    * round-6. Shared by the decomposition and its strength measures. */
+  private[ops] def hourlyDecomposition(spark: SparkSession, dir: String): DataFrame = {
     val hourly = events(spark, dir)
       .groupBy(date_trunc("hour", col("ts")).as("bucket"))
       .agg(round(dsum(col("value")), 6).as("x"))
@@ -159,10 +171,6 @@ object Warehouse5 {
       .agg(round(davg(col("detr")), 6).as("seasonal"))
     trended.join(broadcast(seasonal), "hod")
       .withColumn("resid", round(col("detr") - col("seasonal"), 6))
-      .select(unix_micros(col("bucket")).as("bucket_us"), col("hod"),
-        col("x"), col("trend"), col("seasonal"), col("resid"))
-      .orderBy(abs(col("resid")).desc, col("bucket_us").asc)
-      .limit(20)
   }
 
   /** L244 — last-touch revenue attribution (the marketing-analytics
@@ -482,30 +490,21 @@ object Warehouse5 {
     * formulation exercised against the same oracle semantics. */
   def holtDaily(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val daily = graft.Tables.boundedCollect(
-      events(spark, dir)
-        .groupBy(unix_micros(date_trunc("day", col("ts"))).as("day_us"))
-        .agg((sum(col("value").cast("decimal(18,6)")) * 1000000)
-          .cast("long").as("y_micro"))
-        .orderBy("day_us")
-        .as[(Long, Long)],
-      4000, "holt daily frame (calendar-bounded)")
-    def r6(x: Double): Double =
-      BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val daily = Stats4.dailyMicros(spark, dir)
     var l = 0L; var b = 0L
     val rows = daily.zipWithIndex.map { case ((d, y), i) =>
       val (pl, pb) = (l, b)
-      val forecast = if (i == 0) None else Some(r6((pl + pb) / 1e6))
+      val forecast = if (i == 0) None else Some(round6((pl + pb) / 1e6))
       // error from the exact micro difference, as the SQL twin computes it
       val absErr = if (i == 0) None
-        else Some(r6(math.abs(y - (pl + pb)).toDouble / 1e6))
+        else Some(round6(math.abs(y - (pl + pb)).toDouble / 1e6))
       if (i == 0) { l = y; b = 0L }
       else {
         val lNew = math.floor((y + l + b) / 2.0).toLong
         b = math.floor((lNew - l + b) / 2.0).toLong
         l = lNew
       }
-      (i + 1, d, r6(y / 1e6), r6(l / 1e6), r6(b / 1e6), forecast, absErr)
+      (i + 1, d, round6(y / 1e6), round6(l / 1e6), round6(b / 1e6), forecast, absErr)
     }
     rows.toSeq.toDF("rn", "day_us", "actual", "level", "trend", "forecast",
       "abs_err")
@@ -1123,13 +1122,7 @@ object Warehouse5 {
          FROM dau JOIN wau ON day_num = target_day
          ORDER BY day_num""",
     "ts_holt_daily" ->
-      s"""WITH RECURSIVE daily AS (SELECT
-             epoch_us(date_trunc('day', $evTs)) AS day_us,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-               AS y_micro
-           FROM events GROUP BY 1),
-         dr AS (SELECT *, ROW_NUMBER() OVER (ORDER BY day_us) AS rn
-           FROM daily),
+      s"""WITH RECURSIVE ${Stats4.dailyMicrosSql},
          holt(rn, day_us, y, l, b) AS (
            SELECT rn, day_us, y_micro, y_micro, CAST(0 AS BIGINT)
            FROM dr WHERE rn = 1

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,16 +70,8 @@ object Warehouse6 {
   def e2ePipeline(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("h")).orderBy(col("doc_id"))
-    val wc = size(split(col("text"), " ")).cast("long")
-    val sentences = greatest(
-      size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0))).cast("long"),
-      lit(1L))
-    val syllables = greatest(
-      size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"), lit(0)))
-        .cast("long"), lit(1L))
-    val wps = round(wc.cast("double") / sentences.cast("double"), 6)
-    val spw = round(syllables.cast("double") / wc.cast("double"), 6)
-    val grade = round(lit(0.39) * wps + lit(11.8) * spw - lit(15.59), 6)
+    val wc = Llm9.wordCount
+    val grade = Llm9.fkGrade
     val keepers = documents(spark, dir)
       .withColumn("h", md5(col("text")))
       .withColumn("rn", row_number().over(w))
@@ -180,17 +173,15 @@ object Warehouse6 {
       }
       x.getOrElse("start", 0L)
     }
-    def r6(v: Double): Double =
-      BigDecimal.decimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val baseCvr = solve(None)
     val rows = channels.map { c =>
       val cvr = solve(Some(c))
-      (c, r6(baseCvr / 1e6), r6(cvr / 1e6),
-        r6(1.0 - cvr.toDouble / baseCvr.toDouble))
+      (c, round6(baseCvr / 1e6), round6(cvr / 1e6),
+        round6(1.0 - cvr.toDouble / baseCvr.toDouble))
     }
     val totEffect = rows.map(r => BigDecimal.decimal(r._4)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum.toDouble
-    rows.map(r => (r._1, r._2, r._3, r._4, r6(r._4 / totEffect))).toSeq
+    rows.map(r => (r._1, r._2, r._3, r._4, round6(r._4 / totEffect))).toSeq
       .toDF("channel", "cvr_base", "cvr_removed", "removal_effect",
         "attribution_share")
       .orderBy("channel")
@@ -201,7 +192,7 @@ object Warehouse6 {
     * F_t likewise against T+R — the two numbers that say whether
     * L236's decomposition actually FOUND structure, read before
     * trusting any seasonal forecast or L187 deseasonalized alert).
-    * Rebuilds the L236 decomposition frame (centered 25-hour trend,
+    * Reads the L236 decomposition frame (centered 25-hour trend,
     * full windows only; hour-of-day seasonal; residual), then
     * two-pass variances: round-6 means first, decimal sums of round-6
     * squared deviations second — small-magnitude casts only, the
@@ -209,21 +200,8 @@ object Warehouse6 {
     * is the calendar-bounded frame. */
   def seasonalStrength(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val hourly = events(spark, dir)
-      .groupBy(date_trunc("hour", col("ts")).as("bucket"))
-      .agg(round(dsum(col("value")), 6).as("x"))
-    val w = Window.orderBy(col("bucket")).rowsBetween(-12, 12)
-    val trended = hourly
-      .withColumn("tsum", sum(col("x").cast("decimal(18,6)")).over(w))
-      .withColumn("tn", count(lit(1)).over(w))
-      .where(col("tn") === 25)
-      .withColumn("trend", round(col("tsum").cast("double") / 25.0, 6))
-      .withColumn("detr", round(col("x") - col("trend"), 6))
-      .withColumn("hod", hour(col("bucket")))
-    val seasonal = trended.groupBy("hod")
-      .agg(round(davg(col("detr")), 6).as("seasonal"))
-    val parts = trended.join(broadcast(seasonal), "hod")
-      .withColumn("r", round(col("detr") - col("seasonal"), 6))
+    val parts = Warehouse5.hourlyDecomposition(spark, dir)
+      .withColumnRenamed("resid", "r")
       .withColumn("sr", round(col("seasonal") + col("r"), 6))
       .withColumn("tr2", round(col("trend") + col("r"), 6))
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
@@ -264,9 +242,7 @@ object Warehouse6 {
   private val evTs = "CAST(ts AS TIMESTAMP)"
 
   val oracles: Map[String, String] = Map(
-    "ts_seasonal_strength" -> {
-      val dsumSql = (e: String) =>
-        s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
+    "ts_seasonal_strength" ->
       s"""WITH hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
              round(${dsumSql("value")}, 6) AS x
            FROM events GROUP BY 1),
@@ -308,8 +284,7 @@ object Warehouse6 {
            round(ss_tr / CAST(n_hours AS DOUBLE), 6) AS var_trend_resid,
            round(GREATEST(0.0, 1.0 - ss_r / ss_sr), 6) AS seasonal_strength,
            round(GREATEST(0.0, 1.0 - ss_r / ss_tr), 6) AS trend_strength
-         FROM s"""
-    },
+         FROM s""",
     "attribution_markov_removal" ->
       s"""WITH RECURSIVE base AS (
            SELECT user_id, $evTs AS tss, event_id, event_type,

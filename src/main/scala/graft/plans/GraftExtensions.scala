@@ -11,8 +11,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`):
   *
-  *  1. `injectFunction` — the codegen'd [[graft.functions.DotProduct]]
-  *     kernel is registered as `graft_dot_product` in every session built
+  *  1. `injectFunction` — every kernel of
+  *     [[graft.functions.ArrayMath.SqlFunctions]] (`graft_dot_product`,
+  *     `graft_sorted_intersect_size`) is registered in every session built
   *     with the extension (no per-session [[graft.Catalog.register]] call
   *     needed).
   *  2. `injectCheckRule` — [[CartesianGuard]]: refuse, at analysis time,
@@ -31,14 +32,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
   * point, exercised by ExtensionsSpec. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot_product"),
-      new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "graft_dot_product"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"graft_dot_product expects exactly 2 arguments, got ${exprs.length}")
-        graft.functions.DotProduct(exprs.head, exprs(1))
-      }))
+    graft.functions.ArrayMath.SqlFunctions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.checkedBuild))
+    }
     ext.injectCheckRule(_ => CartesianGuard)
     // tier-(c) extension point: the custom as-of join physical operator
     // ([[GraftAsOfJoinExec]]) becomes plannable in this session

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.ArrayMath.round6
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -1370,7 +1371,7 @@ object Streams {
       var (l, b, n) = Option(model.get()).getOrElse((0L, 0L, 0L))
       open.dropRight(1).foreach { day => // fold every CLOSED day in order
         val y = daySums.getValue(day)
-        val forecast = if (n == 0) None else Some(r6((l + b) / 1e6))
+        val forecast = if (n == 0) None else Some(round6((l + b) / 1e6))
         if (n == 0) { l = y; b = 0L }
         else {
           val lNew = math.floor((y + l + b) / 2.0).toLong
@@ -1378,7 +1379,7 @@ object Streams {
           l = lNew
         }
         n += 1
-        out += HoltPoint(day, r6(y / 1e6), r6(l / 1e6), r6(b / 1e6), forecast)
+        out += HoltPoint(day, round6(y / 1e6), round6(l / 1e6), round6(b / 1e6), forecast)
         daySums.removeKey(day)
       }
       model.update((l, b, n))
@@ -1432,8 +1433,8 @@ object Streams {
             val k = buf.length
             buf.zipWithIndex.foreach { case (t, i) =>
               val c = if (k == 1) 1.0 else if (k == 2) 0.5
-                else if (i == 0 || i == k - 1) 0.4 else r6(0.2 / (k - 2))
-              out += AttributedTouch(key, e.event_id, t, c, r6(c * e.value))
+                else if (i == 0 || i == k - 1) 0.4 else round6(0.2 / (k - 2))
+              out += AttributedTouch(key, e.event_id, t, c, round6(c * e.value))
             }
             buf = Vector.empty
           case "view" | "click" => buf = buf :+ e.event_type
@@ -1584,11 +1585,8 @@ object Streams {
   private[streaming] def microsOf(t: java.sql.Timestamp): Long =
     math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
-  /** Half-up to 6 dp — the DECIMAL(18,6) rounding the batch twins apply. */
-  private[streaming] def r6(x: Double): Double =
-    BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** [[r6]] as an exact ×10⁶ long, for state that sums DECIMAL(18,6) terms. */
+  /** `ArrayMath.round6` as an exact ×10⁶ long, for state that sums
+    * DECIMAL(18,6) terms. */
   private[streaming] def micro(x: Double): Long =
     (BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP) *
       BigDecimal(1000000)).toLongExact

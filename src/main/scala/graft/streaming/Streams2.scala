@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -19,7 +20,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * folding, ledger upserts). That is exactly how L273's PSI monitor
   * already ships its reference distribution. */
 object Streams2 {
-  import Streams.{Event, micro, microsOf, r6}
+  import Streams.{Event, micro, microsOf}
 
   // ----------------------------------------------------------------- HBOS
 
@@ -143,14 +144,14 @@ object Streams2 {
       var k = Option(nextIdx.get()).filter(_ > 0).getOrElse(3L).toInt
       val out = scala.collection.mutable.ArrayBuffer.empty[StlPoint]
       while (k + 3 <= nClosed - 1) {
-        val x = r6(daySums.getValue(days(k)) / 1e6)
+        val x = round6(daySums.getValue(days(k)) / 1e6)
         val sum7 = (k - 3 to k + 3).map(j => daySums.getValue(days(j))).sum
-        val trend = r6(sum7 / 1e6 / 7.0)
-        val detr = r6(x - trend)
+        val trend = round6(sum7 / 1e6 / 7.0)
+        val detr = round6(x - trend)
         val dow = Math.floorMod(days(k) + 4, 7L)
         val seasonal = seasonalByDow.getOrElse(dow, 0.0)
-        val residual = r6(detr - seasonal)
-        val z = if (mad != 0.0) r6(0.6745 * (residual - med) / mad) else 0.0
+        val residual = round6(detr - seasonal)
+        val z = if (mad != 0.0) round6(0.6745 * (residual - med) / mad) else 0.0
         out += StlPoint(days(k), dow, x, trend, seasonal, residual, z,
           math.abs(z) > 3.5)
         k += 1

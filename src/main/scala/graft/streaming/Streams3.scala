@@ -1,8 +1,8 @@
 package graft.streaming
 
+import graft.functions.ArrayMath.round6
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.OutputMode
-import Streams.r6
 
 /** Round-15 streaming twin for the exact-substring dedup family. */
 object Streams3 {
@@ -184,6 +184,39 @@ object Streams3 {
         OutputMode.Append())
   }
 
+  /** The hour-close-by-progress drain shared by [[PageHinkleyProcessor]]
+    * and [[AdwinProcessor]]: adds each row's micro partial to its open
+    * hour in `hourSums` — a partial for an hour at or below `frontier` is
+    * late for an already-folded hour and dropped — then hands every
+    * CLOSED hour (all but the newest open one) in order to
+    * `fold(bucket_us, x_micro)`, removes it, and moves the frontier to
+    * the last hour folded. Returns whether any hour closed. */
+  private def foldClosedHours(rows: Iterator[HourPoint],
+      hourSums: org.apache.spark.sql.streaming.MapState[Long, Long],
+      frontier: org.apache.spark.sql.streaming.ValueState[Long])(
+      fold: (Long, Long) => Unit): Boolean = {
+    // exists() guard: ValueState[Long].get() on absent state returns a
+    // null that primitive unboxing turns into 0L, so Option(get()) can
+    // never yield the MinValue default (round-17 ADVICE)
+    val closed = if (frontier.exists()) frontier.get() else Long.MinValue
+    rows.foreach { p =>
+      if (p.bucket_us > closed) {
+        val cur = if (hourSums.containsKey(p.bucket_us))
+          hourSums.getValue(p.bucket_us) else 0L
+        hourSums.updateValue(p.bucket_us, cur + p.x_micro)
+      }
+    }
+    val open = hourSums.keys().toSeq.sorted
+    if (open.length <= 1) return false
+    val closing = open.dropRight(1)
+    closing.foreach { bucket =>
+      fold(bucket, hourSums.getValue(bucket))
+      hourSums.removeKey(bucket)
+    }
+    frontier.update(closing.last)
+    true
+  }
+
   class PageHinkleyProcessor(lambdaMicro: Long, deltaMicro: Long)
       extends org.apache.spark.sql.streaming
       .StatefulProcessor[Long, HourPoint, PhPoint] {
@@ -212,24 +245,10 @@ object Streams3 {
 
     override def handleInputRows(key: Long, rows: Iterator[HourPoint],
         timerValues: streaming.TimerValues): Iterator[PhPoint] = {
-      // exists() guard: ValueState[Long].get() on absent state returns a
-      // null that primitive unboxing turns into 0L, so Option(get()) can
-      // never yield the MinValue default (round-17 ADVICE)
-      val closed = if (frontier.exists()) frontier.get() else Long.MinValue
-      rows.foreach { p =>
-        if (p.bucket_us > closed) {
-          val cur = if (hourSums.containsKey(p.bucket_us))
-            hourSums.getValue(p.bucket_us) else 0L
-          hourSums.updateValue(p.bucket_us, cur + p.x_micro)
-        } // else: late partial for an already-folded hour — dropped
-      }
-      val open = hourSums.keys().toSeq.sorted
-      if (open.length <= 1) return Iterator.empty
       val out = scala.collection.mutable.ArrayBuffer.empty[PhPoint]
       var (n, s, m, mMin) =
         Option(stat.get()).getOrElse((0L, 0L, 0L, Long.MaxValue))
-      open.dropRight(1).foreach { bucket => // fold every CLOSED hour
-        val x = hourSums.getValue(bucket)
+      val folded = foldClosedHours(rows, hourSums, frontier) { (bucket, x) =>
         n += 1
         s += x
         val mean = (2 * s + n) / (2 * n)
@@ -237,10 +256,8 @@ object Streams3 {
         if (m < mMin) mMin = m
         val ph = m - mMin
         out += PhPoint(n, bucket, x, mean, m, ph, ph > lambdaMicro)
-        hourSums.removeKey(bucket)
       }
-      stat.update((n, s, m, mMin))
-      if (out.nonEmpty) frontier.update(out.last.bucket_us)
+      if (folded) stat.update((n, s, m, mMin))
       out.iterator
     }
   }
@@ -303,37 +320,22 @@ object Streams3 {
 
     override def handleInputRows(key: Long, rows: Iterator[HourPoint],
         timerValues: streaming.TimerValues): Iterator[AdwinPoint] = {
-      // exists() guard: ValueState[Long].get() on absent state returns a
-      // null that primitive unboxing turns into 0L, so Option(get()) can
-      // never yield the MinValue default (round-17 ADVICE)
-      val closed = if (frontier.exists()) frontier.get() else Long.MinValue
-      rows.foreach { p =>
-        if (p.bucket_us > closed) {
-          val cur = if (hourSums.containsKey(p.bucket_us))
-            hourSums.getValue(p.bucket_us) else 0L
-          hourSums.updateValue(p.bucket_us, cur + p.x_micro)
-        } // else: late partial for an already-folded hour — dropped
-      }
-      val open = hourSums.keys().toSeq.sorted
-      if (open.length <= 1) return Iterator.empty
       val out = scala.collection.mutable.ArrayBuffer.empty[AdwinPoint]
       var bs: AdwinKernel.Buckets = buckets.get().toVector
       var n = Option(seen.get()).getOrElse(0L)
-      var lastClosed = Long.MinValue
-      open.dropRight(1).foreach { bucket =>
-        val x = hourSums.getValue(bucket) / 1e6
+      val folded = foldClosedHours(rows, hourSums, frontier) { (_, xMicro) =>
+        val x = xMicro / 1e6
         val (nbs, dropped) = AdwinKernel.step(bs, x, delta)
         bs = nbs
         n += 1
         val w = AdwinKernel.width(bs)
-        out += AdwinPoint(n, r6(x), w,
-          r6(AdwinKernel.total(bs) / w), dropped, dropped > 0)
-        hourSums.removeKey(bucket)
-        lastClosed = bucket
+        out += AdwinPoint(n, round6(x), w,
+          round6(AdwinKernel.total(bs) / w), dropped, dropped > 0)
       }
-      buckets.put(bs.toArray)
-      seen.update(n)
-      if (lastClosed != Long.MinValue) frontier.update(lastClosed)
+      if (folded) {
+        buckets.put(bs.toArray)
+        seen.update(n)
+      }
       out.iterator
     }
   }
@@ -402,7 +404,7 @@ object Streams3 {
         val (newCs, newR2, action) =
           KcenterDoubling.step(cs, r2, p.vec_id, pe, k)
         cs = newCs; r2 = newR2
-        out += KcLog(p.vec_id, action, cs.length, r6(r2))
+        out += KcLog(p.vec_id, action, cs.length, round6(r2))
       }
       centers.put(cs.map(c => VecPoint(c._1, c._2.toSeq)).toArray)
       r2state.update(r2)
@@ -478,8 +480,7 @@ object Streams3 {
       val twD = tw.toDouble
       ts.map { case (src, n) =>
         val wt = math.sqrt(n.toDouble)
-        val p = BigDecimal(wt / twD)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        val p = round6(wt / twD)
         val exp = BigDecimal(wt / twD * 1000)
           .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
         MixPoint(bucket, src, n, p, exp)
@@ -606,8 +607,6 @@ object AdwinKernel {
   * construction). */
 object KcenterDoubling {
 
-  /** [[Streams.r6]], public for the spec's replica. */
-  def r6(x: Double): Double = Streams.r6(x)
 
   /** Round-6 squared distance with the index-order dot fold (the L381
     * ArrayMath parity order). */
@@ -617,7 +616,7 @@ object KcenterDoubling {
       while (i < x.length) { s += x(i) * y(i); i += 1 }
       s
     }
-    r6(dot(a, a) + dot(b, b) - 2.0 * dot(a, b))
+    round6(dot(a, a) + dot(b, b) - 2.0 * dot(a, b))
   }
 
   /** One point through the doubling algorithm; returns (centers, r²,

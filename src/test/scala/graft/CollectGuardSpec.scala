@@ -2,12 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-tree guard: no bare driver-side `collect()` on any query path.
+/** Source-tree guards. No bare driver-side `collect()` on any query path.
   * The only sanctioned driver collect is [[graft.Tables.boundedCollect]],
   * which caps the transfer and fails loudly on overflow — a stray
   * `.collect()` in `src/main` is a latent driver OOM at warehouse scale
   * (this is exactly how llm_dedup_embed's unbounded collect slipped
-  * through round 4). */
+  * through round 4). And one copy of each shared kernel helper: the
+  * 6-dp rounding and the DuckDB dot product. */
 class CollectGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(dir: java.io.File): Seq[java.io.File] = {
@@ -42,5 +43,24 @@ class CollectGuardSpec extends AnyFunSuite {
         (h.contains("Llm17.scala") && h.contains(".collect().sortBy(_._1)")))
     assert(hits == allowed,
       s"bare collect() found — route through Tables.boundedCollect:\n${(hits.toSet -- allowed).mkString("\n")}")
+  }
+
+  private def sources: Seq[(String, String)] =
+    scalaFiles(new java.io.File("src/main/scala")).map { f =>
+      f.getPath -> scala.util.Using.resource(
+        scala.io.Source.fromFile(f, "UTF-8"))(_.mkString)
+    }
+
+  test("src/main has one 6-dp HALF_UP double rounding and one dotSql") {
+    // a private copy of ArrayMath.round6 or Tables.dotSql drifts from the
+    // one the oracle parity argument is about; call the shared one
+    val round6 = """setScale\(\s*6\s*,\s*(?:BigDecimal|java\.math)\.RoundingMode\.HALF_UP\s*\)\s*\.(?:toDouble|doubleValue)""".r
+    val dotSql = """def\s+dotSql\b""".r
+    def sites(re: scala.util.matching.Regex) = sources.flatMap { case (path, text) =>
+      re.findAllMatchIn(text).map(_ => path) }
+    assert(sites(round6).map(new java.io.File(_).getName) == Seq("ArrayMath.scala"),
+      s"6-dp HALF_UP roundings outside ArrayMath.round6: ${sites(round6)}")
+    assert(sites(dotSql).map(new java.io.File(_).getName) == Seq("Tables.scala"),
+      s"dotSql definitions outside Tables.dotSql: ${sites(dotSql)}")
   }
 }

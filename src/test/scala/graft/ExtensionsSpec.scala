@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** SparkSessionExtensions wiring (plans/GraftExtensions.scala): function
   * injection + the analysis-time cartesian guardrail. Runs on a separate
   * SparkSession (same SparkContext) so the guard never interferes with the
   * plain sessions the driver and the other suites use. */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends SparkTestBase {
 
   private lazy val ext: SparkSession = {
     val base = SparkTestSession.spark // ensures the shared context exists
@@ -84,6 +83,22 @@ class ExtensionsSpec extends AnyFunSuite {
   test("injected function rejects wrong arity with a clear message") {
     val e = intercept[Exception] {
       ext.sql("SELECT graft_dot_product(array(1.0d))").collect()
+    }
+    assert(e.getMessage.contains("exactly 2 arguments"), e.getMessage)
+  }
+
+  test("both sessions share one SQL-function list with its arity check") {
+    // the extension injects every kernel, not only graft_dot_product
+    val n = ext.sql("SELECT graft_sorted_intersect_size(array(1L, 2L, 5L), " +
+      "array(2L, 3L, 5L)) AS n").head().getLong(0)
+    assert(n === 2L)
+    // Catalog.register applies the same arity check: a third argument is
+    // refused, not silently dropped
+    val plain = SparkTestSession.spark.newSession()
+    Catalog.register(plain, sf0001)
+    val e = intercept[Exception] {
+      plain.sql("SELECT graft_dot_product(array(1.0d), array(2.0d), " +
+        "array(3.0d))").collect()
     }
     assert(e.getMessage.contains("exactly 2 arguments"), e.getMessage)
   }

@@ -25,6 +25,15 @@ class OperatorSpec extends SparkTestBase {
     assert(noOracle === Set.empty[String])
   }
 
+  test("module merge refuses a key two modules define, naming it") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.merged(Seq(Map("k_a" -> 1, "k_b" -> 2), Map("k_b" -> 3)))
+    }
+    assert(e.getMessage.contains("k_b"), e.getMessage)
+    assert(SparkEntry.merged(Seq(Map("k_a" -> 1), Map("k_b" -> 2))) ===
+      Map("k_a" -> 1, "k_b" -> 2))
+  }
+
   test("smoke: entry() flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -126,7 +126,7 @@ class Round15hSpec extends SparkTestBase {
       val (ncs, nr2, action) =
         streaming.KcenterDoubling.step(cs, r2, id, pe, 8)
       cs = ncs; r2 = nr2
-      (id, action, cs.length, streaming.KcenterDoubling.r6(r2))
+      (id, action, cs.length, graft.functions.ArrayMath.round6(r2))
     }.toSeq
     assert(log1 === want)
     assert(cs.length <= 8)

@@ -152,7 +152,7 @@ class WindowGuardSpec extends AnyFunSuite {
       "k = 5 fold panel"),
     ("Ml.scala", "daviesBouldin") -> (1,
       "label-grain cluster frame (|labels| dimension-bounded)"),
-    ("Warehouse6.scala", "seasonalStrength") -> (2,
+    ("Warehouse6.scala", "seasonalStrength") -> (1,
       "calendar: one row per hour"),
     ("Stats.scala", "benford") -> (1,
       "9-row leading-digit grid"),
@@ -164,22 +164,22 @@ class WindowGuardSpec extends AnyFunSuite {
       "32-row bootstrap-replica frame (BootB fixed)"),
     ("Stats.scala", "hillTail") -> (1,
       "201-row top-k frame (limit k+1 runs upstream)"),
-    ("Stats2.scala", "anovaF") -> (1,
-      "5-row order-priority panel"),
-    ("Stats2.scala", "brownForsythe") -> (1,
-      "5-row order-priority panel"),
-    ("Stats2.scala", "durbinWatson") -> (3,
+    ("Stats2.scala", "scaledAnova") -> (1,
+      "5-row order-priority panel (anovaF, brownForsythe)"),
+    ("Stats2.scala", "hourlyTrendResiduals") -> (2,
+      "calendar: one row per hour (durbinWatson, runsTest)"),
+    ("Stats2.scala", "durbinWatson") -> (1,
       "calendar: one row per hour"),
     ("Stats2.scala", "friedman") -> (1,
       "event_type × block panel (|types| rows after the per-type agg)"),
-    ("Stats2.scala", "runsTest") -> (3,
+    ("Stats2.scala", "runsTest") -> (1,
       "calendar: one row per hour"),
     ("Stats2.scala", "wilcoxonSignedRank") -> (1,
       "calendar: distinct daily |d| values, one row per day at most"),
     ("Warehouse5.scala", "ewmaDeviation") -> (1,
       "calendar: one row per hour"),
-    ("Warehouse5.scala", "stlDecompose") -> (1,
-      "calendar: one row per hour"),
+    ("Warehouse5.scala", "hourlyDecomposition") -> (1,
+      "calendar: one row per hour (stlDecompose, seasonalStrength)"),
     ("Warehouse5.scala", "crossCorrTypes") -> (1,
       "calendar: one row per hour"),
     ("Warehouse5.scala", "openOrdersCurve") -> (2,
