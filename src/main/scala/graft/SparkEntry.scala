@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The operator registry that `graft.Verify` and `graft.Bench` run — see
+  * SURVEY.md §7.
   *
-  * `queries` is the operator inventory of SURVEY.md §2: one entry per
-  * implemented operator, each with a DuckDB oracle in `oracleSql` (omissions
-  * are justified at the definition site in the owning ops module).
+  * [[registry]] is the operator inventory of SURVEY.md §2: one entry per
+  * implemented operator, each naming its Spark kernel and the DuckDB oracle
+  * that hash-gates it. `queries` and `oracleSql` are its two views.
   */
 object SparkEntry {
 
@@ -15,58 +16,23 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.StreamOps.tumblingCounts(spark, "/root/testdata/sf0.001")
 
-  /** Every ops module's (queries, oracles) pair. A key belongs to exactly
-    * one module: [[merged]] refuses a key that two modules define. */
-  private def modules
-      : Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] = Seq(
-    ops.StreamOps.queries -> ops.StreamOps.oracles,
-    ops.Relational.queries -> ops.Relational.oracles,
-    ops.Joins.queries -> ops.Joins.oracles,
-    ops.Scalars.queries -> ops.Scalars.oracles,
-    ops.Analytics.queries -> ops.Analytics.oracles,
-    ops.Llm.queries -> ops.Llm.oracles,
-    ops.Llm2.queries -> ops.Llm2.oracles,
-    ops.Llm3.queries -> ops.Llm3.oracles,
-    ops.Llm4.queries -> ops.Llm4.oracles,
-    ops.Llm5.queries -> ops.Llm5.oracles,
-    ops.Llm6.queries -> ops.Llm6.oracles,
-    ops.Llm7.queries -> ops.Llm7.oracles,
-    ops.Llm8.queries -> ops.Llm8.oracles,
-    ops.Llm9.queries -> ops.Llm9.oracles,
-    ops.Llm10.queries -> ops.Llm10.oracles,
-    ops.Llm11.queries -> ops.Llm11.oracles,
-    ops.Llm12.queries -> ops.Llm12.oracles,
-    ops.Llm13.queries -> ops.Llm13.oracles,
-    ops.Llm14.queries -> ops.Llm14.oracles,
-    ops.Llm15.queries -> ops.Llm15.oracles,
-    ops.Llm16.queries -> ops.Llm16.oracles,
-    ops.Llm17.queries -> ops.Llm17.oracles,
-    ops.Llm18.queries -> ops.Llm18.oracles,
-    ops.Llm19.queries -> ops.Llm19.oracles,
-    ops.Mm2.queries -> ops.Mm2.oracles,
-    ops.Mm3.queries -> ops.Mm3.oracles,
-    ops.Mm4.queries -> ops.Mm4.oracles,
-    ops.Mm5.queries -> ops.Mm5.oracles,
-    ops.Mm6.queries -> ops.Mm6.oracles,
-    ops.Mm7.queries -> ops.Mm7.oracles,
-    ops.Mm8.queries -> ops.Mm8.oracles,
-    ops.Warehouse5.queries -> ops.Warehouse5.oracles,
-    ops.Warehouse6.queries -> ops.Warehouse6.oracles,
-    ops.Layout.queries -> ops.Layout.oracles,
-    ops.Er.queries -> ops.Er.oracles,
-    ops.Audit.queries -> ops.Audit.oracles,
-    ops.Ml.queries -> ops.Ml.oracles,
-    ops.Ml2.queries -> ops.Ml2.oracles,
-    ops.Stats.queries -> ops.Stats.oracles,
-    ops.Stats2.queries -> ops.Stats2.oracles,
-    ops.Stats3.queries -> ops.Stats3.oracles,
-    ops.Stats4.queries -> ops.Stats4.oracles,
-    ops.Stats5.queries -> ops.Stats5.oracles,
-    ops.Warehouse.queries -> ops.Warehouse.oracles,
-    ops.Warehouse2.queries -> ops.Warehouse2.oracles,
-    ops.Warehouse3.queries -> ops.Warehouse3.oracles,
-    ops.Warehouse4.queries -> ops.Warehouse4.oracles,
-    ops.Warehouse7.queries -> ops.Warehouse7.oracles)
+  /** Every ops module's registry table. A key belongs to exactly one
+    * module: [[merged]] refuses a key that two modules define. */
+  private def modules: Seq[Map[String, ops.Op]] = Seq(
+    ops.StreamOps.entries, ops.Relational.entries, ops.Joins.entries,
+    ops.Scalars.entries, ops.Analytics.entries, ops.Llm.entries,
+    ops.Llm2.entries, ops.Llm3.entries, ops.Llm4.entries, ops.Llm5.entries,
+    ops.Llm6.entries, ops.Llm7.entries, ops.Llm8.entries, ops.Llm9.entries,
+    ops.Llm10.entries, ops.Llm11.entries, ops.Llm12.entries, ops.Llm13.entries,
+    ops.Llm14.entries, ops.Llm15.entries, ops.Llm16.entries, ops.Llm17.entries,
+    ops.Llm18.entries, ops.Llm19.entries, ops.Mm2.entries, ops.Mm3.entries,
+    ops.Mm4.entries, ops.Mm5.entries, ops.Mm6.entries, ops.Mm7.entries,
+    ops.Mm8.entries, ops.Warehouse5.entries, ops.Warehouse6.entries,
+    ops.Layout.entries, ops.Er.entries, ops.Audit.entries, ops.Ml.entries,
+    ops.Ml2.entries, ops.Stats.entries, ops.Stats2.entries, ops.Stats3.entries,
+    ops.Stats4.entries, ops.Stats5.entries, ops.Warehouse.entries,
+    ops.Warehouse2.entries, ops.Warehouse3.entries, ops.Warehouse4.entries,
+    ops.Warehouse7.entries)
 
   /** The union of `maps`, failing loudly, and naming the key, when two of
     * them define the same key — a silent override would drop one module's
@@ -79,12 +45,14 @@ object SparkEntry {
       acc ++ m
     }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    merged(modules.map(_._1))
+  /** One entry per implemented operator from SURVEY.md §2, merged once. */
+  lazy val registry: Map[String, ops.Op] = merged(modules)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** Each key's Spark kernel. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (k, op) => k -> op.run }
+
+  /** Each key's ANSI SQL, runnable by DuckDB on the same parquet tables. */
   def oracleSql: Map[String, String] =
-    merged(modules.map(_._2))
+    registry.map { case (k, op) => k -> op.oracle }
 }

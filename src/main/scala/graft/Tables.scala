@@ -160,18 +160,26 @@ object Tables {
       s"CAST(strpos('0123456789abcdef', substr(md5($e),hx_i,1)) - 1 AS BIGINT))), " +
       s"(hx_a,hx_b) -> hx_a*16 + hx_b)"
 
+  /** DuckDB text for `events.ts`. The column is TIMESTAMP_NS there; the
+    * CAST truncates to µs exactly like [[events]]' read (FIXTURES.md
+    * loading contract). */
+  val evTs = "CAST(ts AS TIMESTAMP)"
+
   /** DuckDB twin of [[dsum]]. */
   def dsumSql(e: String): String = s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
-  /** DuckDB twin of [[davg]]. */
-  def davgSql(e: String): String = s"${dsumSql(e)} / CAST(COUNT($e) AS DOUBLE)"
+  /** DuckDB twin of [[davg]], parenthesised so it composes as one term. */
+  def davgSql(e: String): String = s"(${dsumSql(e)} / CAST(COUNT($e) AS DOUBLE))"
 
-  /** DuckDB twin of `ArrayMath.dotProduct` over two 64-dim FLOAT[]
-    * embeddings: doubles, index order. */
-  def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1,65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+  /** DuckDB twin of `ArrayMath.dotProduct` over the first `dims` elements
+    * of two FLOAT[] embeddings: doubles, index order. */
+  def dotSql(a: String, b: String, dims: Int = 64): String =
+    s"list_sum(list_transform(range(1,${dims + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
   /** DuckDB twin of `ArrayMath.l2Norm`. */
   def normSql(a: String): String =
     s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
+
+  /** The L2 norm of the first `dims` elements of `a` (a matryoshka prefix). */
+  def normSql(a: String, dims: Int): String = s"sqrt(${dotSql(a, a, dims)})"
 }

@@ -1387,57 +1387,8 @@ object Analytics {
       .select(col("label").as("community"), col("n_nodes"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_rich_club" -> (richClub _),
-    "graph_lpa_communities" -> (lpaCommunities _),
-    "graph_adamic_adar" -> (adamicAdar _),
-    "graph_assortativity" -> (assortativity _),
-    "graph_local_clustering" -> (localClustering _),
-    "graph_hits_step" -> (hitsStep _),
-    "graph_kcore_peel" -> (kcorePeel _),
-    "graph_degree_hist" -> (degreeHistogram _),
-    "graph_connected_components" -> (connectedComponents _),
-    "graph_two_hop_reach" -> (twoHopReach _),
-    "pareto_frontier_parts" -> (paretoFrontier _),
-    "agg_corr_matrix" -> (corrMatrix _),
-    "graph_triangle_count" -> (triangleCount _),
-    "graph_modularity" -> (graphModularity _),
-    "graph_pagerank_step" -> (pagerankStep _),
-    "graph_pagerank_full" -> (pagerankFull _),
-    "graph_butterfly_count" -> (butterflyCount _),
-    "graph_butterfly_capped" -> (butterflyCountCapped _),
-    "ts_gapfill_hourly" -> (tsGapfillHourly _),
-    "scalar_array_ops" -> (scalarArrayOps _),
-    "flatmap_posexplode_words" -> (flatmapPosexplodeWords _),
-    "agg_extrema_by" -> (aggExtremaBy _),
-    "agg_bool_bit" -> (aggBoolBit _),
-    "agg_string_concat" -> (aggStringConcat _),
-    "pivot_value_by_type" -> (pivotValueByType _),
-    "unpivot_lineitem_measures" -> (unpivotLineitemMeasures _),
-    "agg_grouping_sets_ship" -> (aggGroupingSetsShip _),
-    "agg_percentiles_value" -> (aggPercentilesValue _),
-    "agg_stats_moments" -> (aggStatsMoments _),
-    "win_ntile_quartiles" -> (winNtileQuartiles _),
-    "win_moving_avg" -> (winMovingAvg _),
-    "win_ratio_to_report" -> (winRatioToReport _),
-    "win_first_last_nth" -> (winFirstLastNth _),
-    "join_full_outer_order_counts" -> (joinFullOuterOrderCounts _),
-    "join_semi_active_customers" -> (joinSemiActiveCustomers _),
-    "setop_intersect_all_buckets" -> (setopIntersectAllBuckets _),
-    "setop_except_all_buckets" -> (setopExceptAllBuckets _),
-    "sample_hash_events" -> (sampleHashEvents _),
-    "sample_stratified" -> (sampleStratified _),
-    "profile_events_columns" -> (profileEventsColumns _),
-    "scalar_cond_tiers" -> (scalarCondTiers _),
-    "scalar_string_distance" -> (scalarStringDistance _),
-    "scalar_map_metrics" -> (scalarMapMetrics _),
-    "scalar_map_roundtrip" -> (scalarMapRoundtrip _),
-  )
-
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
-  val oracles: Map[String, String] = Map(
-    "graph_rich_club" ->
+  val entries: Map[String, Op] = Map(
+    "graph_rich_club" -> Op(richClub,
       s"""WITH $coPurchaseEdgesSql,
          deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS deg FROM
            (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
@@ -1455,8 +1406,8 @@ object Analytics {
            CASE WHEN n_nodes >= 2 THEN
              round(2.0 * n_edges / (CAST(n_nodes AS DOUBLE) *
                (CAST(n_nodes AS DOUBLE) - 1.0)), 6) END AS phi
-         FROM nk JOIN ek USING (k) ORDER BY k""",
-    "graph_lpa_communities" ->
+         FROM nk JOIN ek USING (k) ORDER BY k"""),
+    "graph_lpa_communities" -> Op(lpaCommunities,
       s"""WITH $coPurchaseEdgesSql,
          und AS (SELECT a AS v, b AS nb FROM e
            UNION ALL SELECT b AS v, a AS nb FROM e),
@@ -1478,8 +1429,8 @@ object Analytics {
            FROM c3) WHERE rk = 1)
          SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_nodes
          FROM l3 GROUP BY 1
-         ORDER BY n_nodes DESC, community ASC LIMIT 20""",
-    "graph_adamic_adar" ->
+         ORDER BY n_nodes DESC, community ASC LIMIT 20"""),
+    "graph_adamic_adar" -> Op(adamicAdar,
       s"""WITH $coPurchaseEdgesSql,
          adj AS (SELECT a AS v, b AS u FROM e
            UNION ALL SELECT b AS v, a AS u FROM e),
@@ -1496,8 +1447,8 @@ object Analytics {
          SELECT u1, u2, n_common, score FROM s
          WHERE NOT EXISTS (SELECT 1 FROM e
            WHERE e.a = s.u1 AND e.b = s.u2)
-         ORDER BY score DESC, u1, u2 LIMIT 20""",
-    "graph_assortativity" ->
+         ORDER BY score DESC, u1, u2 LIMIT 20"""),
+    "graph_assortativity" -> Op(assortativity,
       s"""WITH $coPurchaseDegreesSql,
          joined AS (SELECT da.d AS x, db.d AS y
            FROM e JOIN deg da ON da.v = e.a JOIN deg db ON db.v = e.b),
@@ -1511,8 +1462,8 @@ object Analytics {
            (SELECT CAST(COUNT(*) AS BIGINT) FROM deg) AS n_nodes,
            round(CAST(n * sxy - sx * sx AS DOUBLE) /
              CAST(n * sxx - sx * sx AS DOUBLE), 6) AS assortativity
-         FROM s""",
-    "graph_local_clustering" ->
+         FROM s"""),
+    "graph_local_clustering" -> Op(localClustering,
       s"""WITH $orientedWedgesSql,
          t AS (SELECT apex, lo, hi FROM w WHERE EXISTS
            (SELECT 1 FROM o WHERE o.u = w.lo AND o.v = w.hi)),
@@ -1523,8 +1474,8 @@ object Analytics {
          SELECT pn.v AS node, deg.d AS degree, pn.t AS n_tri,
            round(2.0 * pn.t / CAST(deg.d * (deg.d - 1) AS DOUBLE), 6) AS lcc
          FROM pn JOIN deg ON deg.v = pn.v WHERE deg.d >= 2
-         ORDER BY n_tri DESC, lcc DESC, node ASC LIMIT 20""",
-    "graph_hits_step" ->
+         ORDER BY n_tri DESC, lcc DESC, node ASC LIMIT 20"""),
+    "graph_hits_step" -> Op(hitsStep,
       """WITH ed AS (SELECT DISTINCT l_suppkey AS s, o_custkey AS c
            FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
          auth AS (SELECT c AS node, CAST(COUNT(*) AS BIGINT) AS raw
@@ -1540,8 +1491,8 @@ object Analytics {
          SELECT role, node, raw, norm
          FROM (SELECT * FROM at WHERE rk <= 20
                UNION ALL SELECT * FROM ht WHERE rk <= 20)
-         ORDER BY role, raw DESC, node""",
-    "graph_kcore_peel" -> {
+         ORDER BY role, raw DESC, node"""),
+    "graph_kcore_peel" -> Op(kcorePeel, {
       def und(e: String) = s"(SELECT a AS v FROM $e UNION ALL SELECT b FROM $e)"
       def peel(e: String, k: String, en: String) =
         s"""$k AS (SELECT v FROM ${und(e)} GROUP BY v HAVING COUNT(*) >= 3),
@@ -1561,8 +1512,8 @@ object Analytics {
          ${stat(0, "e")} UNION ALL ${stat(1, "e1")}
          UNION ALL ${stat(2, "e2")} UNION ALL ${stat(3, "e3")}
          ORDER BY peel_round"""
-    },
-    "graph_degree_hist" ->
+    }),
+    "graph_degree_hist" -> Op(degreeHistogram,
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
          e AS (SELECT a.p AS a, b.p AS b FROM op a JOIN op b
              ON a.o = b.o AND a.p < b.p
@@ -1570,8 +1521,8 @@ object Analytics {
          d AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d
            FROM (SELECT a AS v FROM e UNION ALL SELECT b FROM e) GROUP BY 1)
          SELECT d AS degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
-         FROM d GROUP BY 1 ORDER BY 1""",
-    "agg_corr_matrix" -> {
+         FROM d GROUP BY 1 ORDER BY 1"""),
+    "agg_corr_matrix" -> Op(corrMatrix, {
       val names = Seq("quantity", "price_k", "discount", "tax")
       val sumCols = (names.map(n => s"round(${dsumSql(n)}, 6) AS s_$n") ++
         (for (i <- names.indices; j <- i until names.length) yield {
@@ -1594,8 +1545,8 @@ object Analytics {
              $sumCols
            FROM base)
          SELECT * FROM ($rows) ORDER BY var_a, var_b"""
-    },
-    "pareto_frontier_parts" ->
+    }),
+    "pareto_frontier_parts" -> Op(paretoFrontier,
       """WITH pts AS (SELECT p_retailprice AS price, p_size AS size,
              CAST(COUNT(*) AS BIGINT) AS n_parts,
              MIN(p_partkey) AS min_key
@@ -1610,8 +1561,8 @@ object Analytics {
          FROM pts JOIN cm ON pts.price = cm.price
          WHERE (cm.cheaper_max IS NULL OR cm.cheaper_max < pts.size)
            AND pts.size = cm.max_sz
-         ORDER BY pts.price""",
-    "graph_two_hop_reach" -> {
+         ORDER BY pts.price"""),
+    "graph_two_hop_reach" -> Op(twoHopReach, {
       val h = graft.Tables.h48Sql(
         "CAST(x AS VARCHAR) || ':' || CAST(y AS VARCHAR)")
       s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
@@ -1644,8 +1595,8 @@ object Analytics {
          FROM reach JOIN deg ON deg.x = reach.a
          LEFT JOIN hubm USING (a)
          ORDER BY reach_2hop DESC, node LIMIT 20"""
-    },
-    "graph_connected_components" ->
+    }),
+    "graph_connected_components" -> Op(connectedComponents,
       """WITH RECURSIVE op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
              FROM lineitem),
          e0 AS (SELECT a.p AS a, b.p AS b FROM op a JOIN op b
@@ -1663,8 +1614,8 @@ object Analytics {
          SELECT component_id, n_nodes,
            CAST(COUNT(*) OVER () AS BIGINT) AS n_components,
            CAST(SUM(n_nodes) OVER () AS BIGINT) AS n_covered_nodes
-         FROM sizes ORDER BY n_nodes DESC, component_id LIMIT 20""",
-    "graph_modularity" ->
+         FROM sizes ORDER BY n_nodes DESC, component_id LIMIT 20"""),
+    "graph_modularity" -> Op(graphModularity,
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
          e AS (SELECT a.p AS a, b.p AS b FROM op a JOIN op b
              ON a.o = b.o AND a.p < b.p
@@ -1688,8 +1639,8 @@ object Analytics {
          SELECT brand, e_c, d_c, m, q_term,
            round(CAST(SUM(CAST(q_term AS DECIMAL(18,6))) OVER () AS DOUBLE), 6)
              AS q_total
-         FROM q ORDER BY brand""",
-    "graph_triangle_count" ->
+         FROM q ORDER BY brand"""),
+    "graph_triangle_count" -> Op(triangleCount,
       s"""WITH $orientedWedgesSql,
          t AS (SELECT w.lo FROM w WHERE EXISTS
            (SELECT 1 FROM o WHERE o.u = w.lo AND o.v = w.hi))
@@ -1699,8 +1650,8 @@ object Analytics {
            (SELECT CAST(COUNT(*) AS BIGINT) FROM t) AS n_triangles,
            (SELECT CAST(SUM(d * (d - 1) // 2) AS BIGINT) FROM deg) AS wedges_all,
            round(3.0 * (SELECT COUNT(*) FROM t) /
-             (SELECT CAST(SUM(d * (d - 1) // 2) AS DOUBLE) FROM deg), 6) AS gcc""",
-    "graph_pagerank_full" -> {
+             (SELECT CAST(SUM(d * (d - 1) // 2) AS DOUBLE) FROM deg), 6) AS gcc"""),
+    "graph_pagerank_full" -> Op(pagerankFull, {
       val layers = (1 to PagerankRounds).map { k =>
         s"""r$k AS (SELECT ed.dst AS node,
              round(0.15 / CAST(nn AS DOUBLE) + 0.85 *
@@ -1725,8 +1676,8 @@ object Analytics {
          $layers
          SELECT node, rank FROM r$PagerankRounds
          ORDER BY rank DESC, node LIMIT 20"""
-    },
-    "graph_pagerank_step" ->
+    }),
+    "graph_pagerank_step" -> Op(pagerankStep,
       s"""WITH edges AS (
             SELECT DISTINCT l_suppkey AS src, -o_custkey - 1 AS dst
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -1742,8 +1693,8 @@ object Analytics {
           SELECT node,
             round(0.15 / n.n_nodes + 0.85 * COALESCE(in_sum, 0.0), 6) AS rank
           FROM nodes LEFT JOIN inbound USING (node) CROSS JOIN n
-          ORDER BY rank DESC, node ASC LIMIT 20""",
-    "graph_butterfly_count" ->
+          ORDER BY rank DESC, node ASC LIMIT 20"""),
+    "graph_butterfly_count" -> Op(butterflyCount,
       """WITH edges AS (
             SELECT DISTINCT l_suppkey AS s, o_custkey AS c
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -1753,8 +1704,8 @@ object Analytics {
             FROM wedge GROUP BY 1, 2)
           SELECT s1, s2, n_common,
             CAST(n_common * (n_common - 1) // 2 AS BIGINT) AS n_butterflies
-          FROM pairs ORDER BY n_butterflies DESC, s1 ASC, s2 ASC LIMIT 10""",
-    "graph_butterfly_capped" -> {
+          FROM pairs ORDER BY n_butterflies DESC, s1 ASC, s2 ASC LIMIT 10"""),
+    "graph_butterfly_capped" -> Op(butterflyCountCapped, {
       val h = graft.Tables.h48Sql(
         "CAST(s AS VARCHAR) || ':' || CAST(c AS VARCHAR)")
       s"""WITH edges AS (
@@ -1801,8 +1752,8 @@ object Analytics {
             bf_hubhub_est,
             bf_light_exact + bf_cross_est + bf_hubhub_est AS bf_est_total
           FROM bf, stats, samp"""
-    },
-    "ts_gapfill_hourly" ->
+    }),
+    "ts_gapfill_hourly" -> Op(tsGapfillHourly,
       s"""WITH ev AS (SELECT user_id, date_trunc('hour', $evTs) AS bucket FROM events),
           counts AS (SELECT user_id, bucket, CAST(COUNT(*) AS BIGINT) AS n
             FROM ev GROUP BY 1, 2),
@@ -1814,66 +1765,66 @@ object Analytics {
           SELECT d.user_id, epoch_us(d.bucket) AS bucket_us, COALESCE(n, 0) AS n
           FROM dense d LEFT JOIN counts c
             ON d.user_id = c.user_id AND d.bucket = c.bucket
-          ORDER BY 1, 2""",
-    "scalar_array_ops" ->
+          ORDER BY 1, 2"""),
+    "scalar_array_ops" -> Op(scalarArrayOps,
       """SELECT vec_id,
          len(list_filter(embedding, x -> CAST(x AS DOUBLE) < 0)) > 0 AS any_neg,
          len(list_filter(embedding, x -> NOT (abs(CAST(x AS DOUBLE)) < 10))) = 0 AS all_small,
          CAST(len(list_filter(embedding, x -> CAST(x AS DOUBLE) > 0)) AS INT) AS n_pos,
          round(list_sum(list_transform(embedding[1:3], x -> CAST(x AS DOUBLE))), 6) AS first3_sum
-         FROM embeddings WHERE vec_id < 20 ORDER BY vec_id""",
-    "flatmap_posexplode_words" ->
+         FROM embeddings WHERE vec_id < 20 ORDER BY vec_id"""),
+    "flatmap_posexplode_words" -> Op(flatmapPosexplodeWords,
       """SELECT doc_id,
          CAST(unnest(range(0, len(string_split(text, ' ')))) AS INT) AS pos,
          unnest(string_split(text, ' ')) AS word
-         FROM documents WHERE doc_id < 20 ORDER BY doc_id, pos""",
-    "agg_extrema_by" ->
+         FROM documents WHERE doc_id < 20 ORDER BY doc_id, pos"""),
+    "agg_extrema_by" -> Op(aggExtremaBy,
       """SELECT event_type,
          arg_max(user_id, event_id) AS latest_user,
          arg_min(user_id, event_id) AS first_user,
          MAX(event_id) AS max_id, MIN(event_id) AS min_id
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "agg_bool_bit" ->
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    "agg_bool_bit" -> Op(aggBoolBit,
       """SELECT event_type,
          bool_and(value > 0) AS all_pos,
          bool_or(value > 1000) AS any_big,
          bit_and(user_id) AS uid_band,
          bit_or(user_id) AS uid_bor,
          bit_xor(user_id) AS uid_bxor
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "agg_string_concat" ->
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    "agg_string_concat" -> Op(aggStringConcat,
       """SELECT lang,
          string_agg(DISTINCT source, ',' ORDER BY source) AS sources,
          CAST(COUNT(*) AS BIGINT) AS n_docs
-         FROM documents GROUP BY 1 ORDER BY 1""",
-    "pivot_value_by_type" -> {
+         FROM documents GROUP BY 1 ORDER BY 1"""),
+    "pivot_value_by_type" -> Op(pivotValueByType, {
       val cols = EventTypes.map { t =>
         s"CAST(SUM(CAST(CASE WHEN event_type = '$t' THEN value END AS DECIMAL(18,6))) AS DOUBLE) AS \"$t\""
       }.mkString(", ")
       s"SELECT user_id, $cols FROM events GROUP BY 1 ORDER BY 1"
-    },
-    "unpivot_lineitem_measures" -> {
+    }),
+    "unpivot_lineitem_measures" -> Op(unpivotLineitemMeasures, {
       val arms = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax").map { m =>
         s"SELECT l_orderkey, l_linenumber, '$m' AS measure, $m AS val FROM lineitem WHERE l_orderkey < 100"
       }.mkString(" UNION ALL ")
       s"$arms ORDER BY l_orderkey, l_linenumber, measure"
-    },
-    "agg_grouping_sets_ship" ->
+    }),
+    "agg_grouping_sets_ship" -> Op(aggGroupingSetsShip,
       s"""SELECT coalesce(l_returnflag, 'ALL') AS flag,
           coalesce(l_linestatus, 'ALL') AS status,
           CAST(2 * GROUPING(l_returnflag) + GROUPING(l_linestatus) AS BIGINT) AS gid,
           CAST(COUNT(*) AS BIGINT) AS n, ${dsumSql("l_quantity")} AS sum_qty
           FROM lineitem
           GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-          ORDER BY gid, flag, status""",
-    "agg_percentiles_value" ->
+          ORDER BY gid, flag, status"""),
+    "agg_percentiles_value" -> Op(aggPercentilesValue,
       """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
          round(quantile_cont(CAST(value AS DOUBLE), 0.25), 6) AS p25,
          round(quantile_cont(CAST(value AS DOUBLE), 0.5), 6) AS p50,
          round(quantile_cont(CAST(value AS DOUBLE), 0.75), 6) AS p75,
          round(quantile_cont(CAST(value AS DOUBLE), 0.9), 6) AS p90
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "agg_stats_moments" ->
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    "agg_stats_moments" -> Op(aggStatsMoments,
       s"""WITH t AS (SELECT event_type, value AS x,
             CAST(json_extract_string(props, '$$.k') AS DOUBLE) AS y FROM events),
           a AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1886,29 +1837,29 @@ object Analytics {
             round(sqrt((sxx - sx * sx / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1)), 6) AS std_value,
             round((CAST(n AS DOUBLE) * sxy - sx * sy)
               / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy)), 6) AS corr_vk
-          FROM a ORDER BY event_type""",
-    "win_moving_avg" ->
+          FROM a ORDER BY event_type"""),
+    "win_moving_avg" -> Op(winMovingAvg,
       s"""SELECT event_id, user_id,
           CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE)
             / CAST(COUNT(value) OVER w AS DOUBLE) AS mavg5
           FROM events
           WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id
             ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)
-          ORDER BY event_id""",
-    "win_ratio_to_report" ->
+          ORDER BY event_id"""),
+    "win_ratio_to_report" -> Op(winRatioToReport,
       """SELECT event_id, user_id,
          round(value / CAST(SUM(CAST(value AS DECIMAL(18,6)))
            OVER (PARTITION BY user_id) AS DOUBLE), 9) AS share
-         FROM events ORDER BY event_id""",
-    "win_ntile_quartiles" ->
+         FROM events ORDER BY event_id"""),
+    "win_ntile_quartiles" -> Op(winNtileQuartiles,
       """SELECT o_orderkey, o_orderpriority,
          CAST(ntile(4) OVER w AS INT) AS quartile,
          round(percent_rank() OVER w, 6) AS prnk,
          round(cume_dist() OVER w, 6) AS cdist
          FROM orders
          WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey ASC)
-         ORDER BY o_orderkey""",
-    "win_first_last_nth" ->
+         ORDER BY o_orderkey"""),
+    "win_first_last_nth" -> Op(winFirstLastNth,
       s"""SELECT event_id, user_id,
           first_value(value) OVER w AS first_value,
           last_value(value) OVER w AS last_value,
@@ -1916,8 +1867,8 @@ object Analytics {
           FROM events
           WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-          ORDER BY event_id""",
-    "join_full_outer_order_counts" ->
+          ORDER BY event_id"""),
+    "join_full_outer_order_counts" -> Op(joinFullOuterOrderCounts,
       s"""SELECT coalesce(c_custkey, o_custkey) AS custkey,
           c_mktsegment AS segment,
           coalesce(n_orders, 0) AS n_orders, sum_price
@@ -1926,37 +1877,37 @@ object Analytics {
             SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders,
               ${dsumSql("o_totalprice")} AS sum_price
             FROM orders GROUP BY 1) o ON c_custkey = o_custkey
-          ORDER BY custkey""",
-    "join_semi_active_customers" ->
+          ORDER BY custkey"""),
+    "join_semi_active_customers" -> Op(joinSemiActiveCustomers,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
          WHERE EXISTS (SELECT 1 FROM orders
            WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995)
-         ORDER BY c_custkey""",
-    "setop_intersect_all_buckets" ->
+         ORDER BY c_custkey"""),
+    "setop_intersect_all_buckets" -> Op(setopIntersectAllBuckets,
       """SELECT CAST(floor(value / 10) AS BIGINT) AS bucket FROM events WHERE event_type = 'purchase'
          INTERSECT ALL
          SELECT CAST(floor(value / 10) AS BIGINT) AS bucket FROM events WHERE event_type = 'view'
-         ORDER BY bucket""",
-    "setop_except_all_buckets" ->
+         ORDER BY bucket"""),
+    "setop_except_all_buckets" -> Op(setopExceptAllBuckets,
       """SELECT CAST(floor(value / 10) AS BIGINT) AS bucket FROM events WHERE event_type = 'purchase'
          EXCEPT ALL
          SELECT CAST(floor(value / 10) AS BIGINT) AS bucket FROM events WHERE event_type = 'view'
-         ORDER BY bucket""",
-    "sample_hash_events" -> {
+         ORDER BY bucket"""),
+    "sample_hash_events" -> Op(sampleHashEvents, {
       val h = graft.Tables.h48Sql("CAST(event_id AS VARCHAR)")
       s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, ${dsumSql("value")} AS sum_value
           FROM events WHERE $h % 100 < 10
           GROUP BY 1 ORDER BY 1"""
-    },
-    "sample_stratified" -> {
+    }),
+    "sample_stratified" -> Op(sampleStratified, {
       val h = graft.Tables.h48Sql("CAST(event_id AS VARCHAR)")
       s"""WITH h AS (SELECT event_id, event_type, value, $h AS hk FROM events),
           r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
               ORDER BY hk ASC, event_id ASC) AS rk FROM h)
           SELECT event_type, CAST(rk AS INT) AS rk, event_id, value
           FROM r WHERE rk <= 50 ORDER BY event_type, rk"""
-    },
-    "profile_events_columns" -> {
+    }),
+    "profile_events_columns" -> Op(profileEventsColumns, {
       val arms = Seq("event_id", "user_id", "event_type").map { c =>
         s"""SELECT '$c' AS "column", CAST(COUNT(*) AS BIGINT) AS n_rows,
             CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
@@ -1965,8 +1916,8 @@ object Analytics {
             FROM events"""
       }.mkString(" UNION ALL ")
       s"""$arms ORDER BY "column""""
-    },
-    "scalar_cond_tiers" ->
+    }),
+    "scalar_cond_tiers" -> Op(scalarCondTiers,
       s"""WITH t AS (SELECT
             CASE WHEN l_quantity < 10 THEN 'low'
                  WHEN l_quantity < 30 THEN 'mid' ELSE 'high' END AS tier,
@@ -1975,21 +1926,21 @@ object Analytics {
             FROM lineitem)
           SELECT tier, flag2, CAST(COUNT(*) AS BIGINT) AS n,
             ${dsumSql("gx")} AS sum_hi, ${dsumSql("lx")} AS sum_lo
-          FROM t GROUP BY 1, 2 ORDER BY 1, 2""",
-    "scalar_string_distance" ->
+          FROM t GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "scalar_string_distance" -> Op(scalarStringDistance,
       """WITH t AS (SELECT DISTINCT event_type FROM events)
          SELECT a.event_type AS t1, b.event_type AS t2,
            CAST(levenshtein(a.event_type, b.event_type) AS INT) AS lev,
            CAST(length(a.event_type) + length(b.event_type) AS INT) AS len_sum
-         FROM t a CROSS JOIN t b ORDER BY t1, t2""",
-    "scalar_map_metrics" ->
+         FROM t a CROSS JOIN t b ORDER BY t1, t2"""),
+    "scalar_map_metrics" -> Op(scalarMapMetrics,
       """SELECT event_type, 'n' AS metric, CAST(COUNT(*) AS BIGINT) AS val
          FROM events GROUP BY event_type
          UNION ALL
          SELECT event_type, 'users' AS metric, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS val
          FROM events GROUP BY event_type
-         ORDER BY event_type, metric""",
-    "scalar_map_roundtrip" ->
+         ORDER BY event_type, metric"""),
+    "scalar_map_roundtrip" -> Op(scalarMapRoundtrip,
       """WITH c AS (
            SELECT user_id, event_type, COUNT(*) AS cnt
            FROM events GROUP BY 1, 2)
@@ -2001,6 +1952,6 @@ object Analytics {
            string_agg(event_type, ',' ORDER BY event_type) AS keys_csv,
            CAST(COUNT(*) + 1 AS INT) AS merged_n,
            MAX(CASE WHEN event_type = 'click' THEN 2 * cnt END) AS doubled_clicks
-         FROM c GROUP BY user_id ORDER BY user_id""",
+         FROM c GROUP BY user_id ORDER BY user_id"""),
   )
 }

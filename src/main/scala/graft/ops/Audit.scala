@@ -676,28 +676,9 @@ object Audit {
       .limit(20)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_volume_anomaly" -> (volumeAnomaly _),
-    "audit_referential" -> (referentialAudit _),
-    "privacy_randomized_response" -> (randomizedResponse _),
-    "privacy_dp_counts" -> (dpCounts _),
-    "privacy_l_diversity" -> (lDiversity _),
-    "privacy_t_closeness" -> (tCloseness _),
-    "anomaly_hbos" -> (hbosAnomaly _),
-    "ts_stl_daily" -> (stlDaily _),
-    "anomaly_stl_residual" -> (stlResidualAnomaly _),
-    "anomaly_esd_residual" -> (esdResidual _),
-    "privacy_k_anonymity" -> (kAnonymity _),
-    "privacy_risk_profile" -> (riskProfile _),
-    "cdc_table_diff" -> (tableDiff _),
-    "ts_seasonal_hourly" -> (tsSeasonalHourly _),
-    "dq_expectations" -> (dqExpectations _),
-    "drift_psi_length" -> (psiDrift _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "dq_volume_anomaly" ->
-      """WITH daily AS (SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
+  val entries: Map[String, Op] = Map(
+    "dq_volume_anomaly" -> Op(volumeAnomaly,
+      s"""WITH daily AS (SELECT date_trunc('day', $evTs) AS day,
              CAST(COUNT(*) AS BIGINT) AS n_events
            FROM events GROUP BY 1),
          med AS (SELECT round(quantile_cont(n_events, 0.5), 6) AS med
@@ -714,8 +695,8 @@ object Audit {
          SELECT epoch_us(day) AS day_us, n_events, med, mad, robust_z,
            abs(robust_z) > 3.5 AS is_anomaly
          FROM z
-         ORDER BY abs(robust_z) DESC, day_us LIMIT 20""",
-    "audit_referential" ->
+         ORDER BY abs(robust_z) DESC, day_us LIMIT 20"""),
+    "audit_referential" -> Op(referentialAudit,
       """WITH checks AS (
            SELECT 'fk_lineitem_orders' AS constraint_name,
              (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem) AS n_rows,
@@ -753,8 +734,8 @@ object Audit {
              (SELECT CAST(COUNT(*) AS BIGINT) FROM
                (SELECT p_partkey FROM part GROUP BY 1 HAVING COUNT(*) > 1)))
          SELECT constraint_name, n_rows, n_violations, n_violations = 0 AS ok
-         FROM checks ORDER BY constraint_name""",
-    "privacy_randomized_response" -> {
+         FROM checks ORDER BY constraint_name"""),
+    "privacy_randomized_response" -> Op(randomizedResponse, {
       val h = h48Sql("'rr:' || CAST(event_id AS VARCHAR)")
       val eps = f"${math.log(0.75 / 0.25)}%.6f"
       s"""WITH b AS (SELECT
@@ -781,8 +762,8 @@ object Audit {
            round(abs(est_frac - true_frac), 6) AS abs_err,
            CAST($eps AS DOUBLE) AS epsilon
          FROM e"""
-    },
-    "privacy_dp_counts" -> {
+    }),
+    "privacy_dp_counts" -> Op(dpCounts, {
       val h = h48Sql("'dp:' || event_type")
       s"""WITH g AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_true
            FROM events GROUP BY 1),
@@ -797,9 +778,9 @@ object Audit {
            GREATEST(round(n_true + noise, 6), 0.0) AS n_noisy,
            CAST(1.0 AS DOUBLE) AS epsilon
          FROM n ORDER BY event_type"""
-    },
-    "ts_stl_daily" -> stlDailyOracleSql,
-    "anomaly_esd_residual" ->
+    }),
+    "ts_stl_daily" -> Op(stlDaily, stlDailyOracleSql),
+    "anomaly_esd_residual" -> Op(esdResidual,
       s"""WITH stl AS ($stlDailyOracleSql),
          s0 AS (SELECT day_num, residual FROM stl),
          m1 AS (SELECT round(quantile_cont(residual, 0.5), 6) AS med
@@ -854,8 +835,8 @@ object Audit {
            UNION ALL SELECT * FROM t3)
          SELECT round_no, day_num, residual, med, mad, robust_z,
            abs(robust_z) > 3.5 AS is_anomaly
-         FROM u ORDER BY round_no""",
-    "anomaly_stl_residual" ->
+         FROM u ORDER BY round_no"""),
+    "anomaly_stl_residual" -> Op(stlResidualAnomaly,
       s"""WITH stl AS ($stlDailyOracleSql),
          med AS (SELECT round(quantile_cont(residual, 0.5), 6) AS med
            FROM stl),
@@ -869,11 +850,11 @@ object Audit {
            FROM wm, mad)
          SELECT day_num, x, trend, seasonal, residual, robust_z,
            abs(robust_z) > 3.5 AS is_anomaly
-         FROM z ORDER BY abs(robust_z) DESC, day_num LIMIT 20""",
-    "anomaly_hbos" ->
-      """WITH ev AS (SELECT event_id,
-             CAST(hour(CAST(ts AS TIMESTAMP)) AS INT) AS hod,
-             CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS INT) AS dow,
+         FROM z ORDER BY abs(robust_z) DESC, day_num LIMIT 20"""),
+    "anomaly_hbos" -> Op(hbosAnomaly,
+      s"""WITH ev AS (SELECT event_id,
+             CAST(hour($evTs) AS INT) AS hod,
+             CAST(dayofweek($evTs) + 1 AS INT) AS dow,
              LEAST(CAST(floor(value / 20.0) AS BIGINT), 9) AS vband
            FROM events),
          n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM ev),
@@ -890,10 +871,10 @@ object Audit {
              6) AS hbos_score
          FROM ev JOIN h1 USING (hod) JOIN h2 USING (dow)
          JOIN h3 USING (vband), n
-         ORDER BY hbos_score DESC, event_id LIMIT 20""",
-    "privacy_t_closeness" ->
-      """WITH ev AS (SELECT event_type,
-             CAST(hour(CAST(ts AS TIMESTAMP)) AS INT) AS hod,
+         ORDER BY hbos_score DESC, event_id LIMIT 20"""),
+    "privacy_t_closeness" -> Op(tCloseness,
+      s"""WITH ev AS (SELECT event_type,
+             CAST(hour($evTs) AS INT) AS hod,
              LEAST(CAST(floor(value / 20.0) AS BIGINT), 9) AS vband
            FROM events),
          cls AS (SELECT event_type, hod, vband,
@@ -926,8 +907,8 @@ object Audit {
                AS emd
            FROM cum GROUP BY event_type, hod, n_g, n_total)
          SELECT event_type, hod, n_g, emd, emd > 0.2 AS violates_t
-         FROM e ORDER BY emd DESC, event_type, hod LIMIT 20""",
-    "privacy_risk_profile" ->
+         FROM e ORDER BY emd DESC, event_type, hod LIMIT 20"""),
+    "privacy_risk_profile" -> Op(riskProfile,
       """WITH cls AS (SELECT lang, source, n_chars // 100 AS len_b,
              CAST(COUNT(*) AS BIGINT) AS k
            FROM documents GROUP BY 1, 2, 3),
@@ -943,10 +924,10 @@ object Audit {
              AS avg_risk,
            round(CAST(docs_at_risk AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
              AS share_docs_k_lt5
-         FROM r WHERE n_docs >= 1""",
-    "privacy_l_diversity" ->
-      """WITH cls AS (SELECT event_type,
-             CAST(hour(CAST(ts AS TIMESTAMP)) AS INT) AS hod,
+         FROM r WHERE n_docs >= 1"""),
+    "privacy_l_diversity" -> Op(lDiversity,
+      s"""WITH cls AS (SELECT event_type,
+             CAST(hour($evTs) AS INT) AS hod,
              CAST(floor(value / 20.0) AS BIGINT) AS vband,
              CAST(COUNT(DISTINCT user_id) AS BIGINT) AS l,
              CAST(COUNT(*) AS BIGINT) AS n_rows
@@ -957,8 +938,8 @@ object Audit {
          SELECT band, CAST(COUNT(*) AS BIGINT) AS n_classes,
            CAST(SUM(n_rows) AS BIGINT) AS n_rows,
            MIN(l) AS min_l, MAX(l) AS max_l
-         FROM bands GROUP BY band ORDER BY band""",
-    "privacy_k_anonymity" ->
+         FROM bands GROUP BY band ORDER BY band"""),
+    "privacy_k_anonymity" -> Op(kAnonymity,
       """WITH cls AS (SELECT lang, source, n_chars // 100 AS len_b,
              COUNT(*) AS k
            FROM documents GROUP BY 1, 2, 3),
@@ -967,8 +948,8 @@ object Audit {
            FROM cls)
          SELECT band, CAST(COUNT(*) AS BIGINT) AS n_classes,
            CAST(SUM(k) AS BIGINT) AS n_docs
-         FROM bands GROUP BY band ORDER BY band""",
-    "cdc_table_diff" ->
+         FROM bands GROUP BY band ORDER BY band"""),
+    "cdc_table_diff" -> Op(tableDiff,
       """WITH a AS (SELECT event_id, value FROM events),
          b AS (
            SELECT event_id,
@@ -985,8 +966,8 @@ object Audit {
              WHEN a_value <> b_value THEN 'changed'
              ELSE 'unchanged' END AS status,
            CAST(COUNT(*) AS BIGINT) AS n
-         FROM d GROUP BY 1 ORDER BY 1""",
-    "ts_seasonal_hourly" ->
+         FROM d GROUP BY 1 ORDER BY 1"""),
+    "ts_seasonal_hourly" -> Op(tsSeasonalHourly,
       """WITH ev AS (SELECT CAST(EXTRACT(hour FROM ts) AS INT) AS h, value
            FROM events),
          base AS (SELECT h, CAST(COUNT(*) AS BIGINT) AS n,
@@ -997,8 +978,8 @@ object Audit {
            CAST(SUM(CASE WHEN e.value > b.mean_v + 50.0 THEN 1 ELSE 0 END)
              AS BIGINT) AS n_hi
          FROM ev e JOIN base b ON e.h = b.h
-         GROUP BY b.h, b.n, b.mean_v ORDER BY b.h""",
-    "dq_expectations" ->
+         GROUP BY b.h, b.n, b.mean_v ORDER BY b.h"""),
+    "dq_expectations" -> Op(dqExpectations,
       """WITH om AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
              CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v_nn,
              CAST(COUNT(o_orderkey) - COUNT(DISTINCT o_orderkey) AS BIGINT) AS v_uq,
@@ -1028,8 +1009,8 @@ object Audit {
            UNION ALL SELECT 'lineitem', 'positive(l_extendedprice)', v_ep, n_rows FROM lm)
          SELECT tbl, expectation, violations, n_rows,
            violations = 0 AS passed
-         FROM rows_ ORDER BY tbl, expectation""",
-    "drift_psi_length" ->
+         FROM rows_ ORDER BY tbl, expectation"""),
+    "drift_psi_length" -> Op(psiDrift,
       """WITH d AS (SELECT doc_id, n_chars,
              n_chars + CASE WHEN doc_id % 2 = 0 THEN 150 ELSE 0 END AS nc2
            FROM documents),
@@ -1059,7 +1040,7 @@ object Audit {
              AS psi,
            round(CAST(SUM(CAST(term AS DECIMAL(18,6))) OVER () AS DOUBLE), 6)
              > 0.1 AS drift
-         FROM terms ORDER BY bucket""",
+         FROM terms ORDER BY bucket"""),
   )
   /** DuckDB oracle for ts_stl_daily — also composed (as a CTE body)
     * by the anomaly_stl_residual oracle so the decomposition rule can

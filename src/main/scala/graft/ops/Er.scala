@@ -349,17 +349,8 @@ object Er {
       .limit(20)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "er_jaro_winkler" -> (jaroWinklerBlocked _),
-    "er_blocking_quality" -> (blockingQuality _),
-    "er_fellegi_sunter" -> (fellegiSunter _),
-    "er_sorted_neighborhood" -> (sortedNeighborhood _),
-    "er_snm_multipass" -> (snmMultipass _),
-    "er_golden_record" -> (goldenRecord _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "er_jaro_winkler" ->
+  val entries: Map[String, Op] = Map(
+    "er_jaro_winkler" -> Op(jaroWinklerBlocked,
       """WITH nm AS (SELECT p_brand, p_name,
              CAST(COUNT(*) AS BIGINT) AS n_parts
            FROM part GROUP BY 1, 2),
@@ -371,8 +362,8 @@ object Er {
              ON a.p_brand = b.p_brand AND a.p_name < b.p_name)
          SELECT p_brand, name_a, name_b, n_parts_a, n_parts_b, jw
          FROM pr WHERE jw >= 0.8
-         ORDER BY jw DESC, p_brand, name_a, name_b LIMIT 20""",
-    "er_blocking_quality" ->
+         ORDER BY jw DESC, p_brand, name_a, name_b LIMIT 20"""),
+    "er_blocking_quality" -> Op(blockingQuality,
       s"""WITH r1 AS (SELECT doc_id,
              ROW_NUMBER() OVER (ORDER BY text, doc_id) - 1 AS rank
            FROM documents),
@@ -421,8 +412,8 @@ object Er {
              AS pairs_completeness,
            round(CAST(n_hit AS DOUBLE) / CAST(n_cand AS DOUBLE), 6)
              AS pairs_quality
-         FROM agg ORDER BY scheme""",
-    "er_fellegi_sunter" -> {
+         FROM agg ORDER BY scheme"""),
+    "er_fellegi_sunter" -> Op(fellegiSunter, {
       def w(i: Int) = (f"${FsAgree(i)}%.6f", f"${FsDisagree(i)}%.6f")
       val terms = Seq(
         ("x.wb = y.wb", w(0)), ("x.fw = y.fw", w(1)),
@@ -449,8 +440,8 @@ object Er {
            ON x.lang = y.lang AND x.source = y.source AND x.cb = y.cb
            AND x.doc_id < y.doc_id
          ORDER BY score DESC, d1 ASC, d2 ASC LIMIT 20"""
-    },
-    "er_sorted_neighborhood" ->
+    }),
+    "er_sorted_neighborhood" -> Op(sortedNeighborhood,
       s"""WITH r AS (SELECT doc_id,
              ROW_NUMBER() OVER (ORDER BY text, doc_id) - 1 AS rank
            FROM documents),
@@ -466,8 +457,8 @@ object Er {
          JOIN sizes z1 ON d1 = z1.doc_id
          JOIN sizes z2 ON d2 = z2.doc_id
          WHERE 10 * inter >= 9 * (z1.sz + z2.sz - inter)
-         ORDER BY d1, d2""",
-    "er_snm_multipass" ->
+         ORDER BY d1, d2"""),
+    "er_snm_multipass" -> Op(snmMultipass,
       s"""WITH $snmMultipassCteSql
          SELECT i.d1, i.d2, CAST(i.inter AS BIGINT) AS inter,
            CAST(z1.sz + z2.sz - i.inter AS BIGINT) AS uni,
@@ -477,8 +468,8 @@ object Er {
          JOIN sizes z1 ON i.d1 = z1.doc_id
          JOIN sizes z2 ON i.d2 = z2.doc_id
          WHERE 10 * i.inter >= 9 * (z1.sz + z2.sz - i.inter)
-         ORDER BY i.d1, i.d2""",
-    "er_golden_record" ->
+         ORDER BY i.d1, i.d2"""),
+    "er_golden_record" -> Op(goldenRecord,
       s"""WITH RECURSIVE $snmMultipassCteSql,
          pr AS (SELECT i.d1, i.d2 FROM inter i
            JOIN sizes z1 ON i.d1 = z1.doc_id
@@ -511,7 +502,7 @@ object Er {
          SELECT g.cluster, n_members, golden_doc, golden_chars,
            majority_source, min_doc, max_doc, total_chars
          FROM g JOIN st USING (cluster) JOIN sm USING (cluster)
-         WHERE rk = 1 ORDER BY cluster""",
+         WHERE rk = 1 ORDER BY cluster"""),
   )
 
   /** Oracle CTEs over a candidate-pair CTE `cand(d1, d2)`: each doc's

@@ -428,29 +428,6 @@ object Joins {
         col("span_us"))
       .orderBy("purchase_id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cep_relaxed_blocks" -> (cepRelaxedBlocks _),
-    "cep_followed_by_relaxed" -> (cepFollowedByRelaxed _),
-    "cep_pattern_generic" -> (cepPatternGeneric _),
-    "cep_not_followed_by" -> (cepNotFollowedBy _),
-    "cep_click_click_purchase" -> (cepClickClickPurchase _),
-    "cep_skip_strategies" -> (cepSkipStrategies _),
-    "cep_kleene_timeout" -> (cepKleeneTimeout _),
-    "join_asof_click_before_purchase" -> (joinAsofClickBeforePurchase _),
-    "join_asof_next_purchase" -> (joinAsofNextPurchase _),
-    "join_asof_physical" -> (joinAsofPhysical _),
-    "join_orders_customer" -> (joinOrdersCustomer _),
-    "join_left_orders_wo_lineitem" -> (joinLeftOrdersWoLineitem _),
-    "join_right_orders_item_counts" -> (joinRightOrdersItemCounts _),
-    "join_anti_customers_no_orders" -> (joinAntiCustomersNoOrders _),
-    "join_theta_price_band" -> (joinThetaPriceBand _),
-    "join_window_events_selfpairs" -> (joinWindowEventsSelfpairs _),
-    "join_interval_purchase_after_click" -> (joinIntervalPurchaseAfterClick _),
-    "join_range_bucketed" -> (joinRangeBucketed _),
-  )
-
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
   /** `seq`: each event with the types, ids and time of its two
     * predecessors in the user's (ts, event_id) order — the strict
     * three-event chain oracles read t1/t2/id1/id2/ts1. */
@@ -478,8 +455,8 @@ object Joins {
             epoch_us(ts) - click_us AS age_us
           FROM tagged WHERE event_type = 'purchase' ORDER BY purchase_id"""
 
-  val oracles: Map[String, String] = Map(
-    "cep_relaxed_blocks" ->
+  val entries: Map[String, Op] = Map(
+    "cep_relaxed_blocks" -> Op(cepRelaxedBlocks,
       s"""WITH t AS (SELECT user_id, event_id, event_type,
               epoch_us($evTs) AS us,
               ROW_NUMBER() OVER (PARTITION BY user_id
@@ -500,8 +477,8 @@ object Joins {
               ORDER BY c2.last_us DESC, c2.last_id DESC LIMIT 1) b)
           SELECT * FROM sel
           WHERE span_us <= CAST(3 AS BIGINT) * 24 * 3600 * 1000000
-          ORDER BY purchase_id""",
-    "cep_followed_by_relaxed" ->
+          ORDER BY purchase_id"""),
+    "cep_followed_by_relaxed" -> Op(cepFollowedByRelaxed,
       s"""WITH t AS (SELECT user_id, event_id, event_type,
               epoch_us($evTs) AS us FROM events)
           SELECT p.user_id, v.view_id, c.click_id,
@@ -519,16 +496,16 @@ object Joins {
                      AND (v.us < c.click_us OR (v.us = c.click_us AND v.event_id < c.click_id))
                    ORDER BY v.us DESC, v.event_id DESC LIMIT 1) v
           WHERE p.us - v.view_us <= CAST(3 AS BIGINT) * 24 * 3600 * 1000000
-          ORDER BY purchase_id""",
-    "cep_pattern_generic" ->
+          ORDER BY purchase_id"""),
+    "cep_pattern_generic" -> Op(cepPatternGeneric,
       s"""WITH $lag3Sql
           SELECT user_id, id1 AS view_id, id2 AS click_id,
             event_id AS purchase_id, ts_us - ts1 AS span_us
           FROM seq
           WHERE t1 = 'view' AND t2 = 'click' AND event_type = 'purchase'
             AND ts_us - ts1 <= CAST(3 AS BIGINT) * 24 * 3600 * 1000000
-          ORDER BY purchase_id""",
-    "cep_not_followed_by" ->
+          ORDER BY purchase_id"""),
+    "cep_not_followed_by" -> Op(cepNotFollowedBy,
       s"""WITH seq AS (SELECT user_id, event_id, event_type,
               epoch_us($evTs) AS ts_us FROM events)
           SELECT user_id, event_id AS click_id, ts_us
@@ -539,8 +516,8 @@ object Joins {
               AND (p.ts_us > c.ts_us
                 OR (p.ts_us = c.ts_us AND p.event_id > c.event_id))
               AND p.ts_us - c.ts_us <= 1800000000)
-          ORDER BY click_id""",
-    "cep_skip_strategies" ->
+          ORDER BY click_id"""),
+    "cep_skip_strategies" -> Op(cepSkipStrategies,
       s"""WITH seq AS (
             SELECT user_id, event_id, event_type, epoch_us($evTs) AS ts_us,
               row_number() OVER w AS rn, lag(event_type) OVER w AS prev_type
@@ -558,8 +535,8 @@ object Joins {
             MAX(len) AS longest_run
           FROM runs GROUP BY user_id
           HAVING CAST(SUM(len - 1) AS BIGINT) > 0
-          ORDER BY user_id""",
-    "cep_kleene_timeout" ->
+          ORDER BY user_id"""),
+    "cep_kleene_timeout" -> Op(cepKleeneTimeout,
       s"""WITH seq AS (
             SELECT user_id, event_id, event_type, epoch_us($evTs) AS ts_us,
               row_number() OVER (PARTITION BY user_id ORDER BY $evTs, event_id) AS rn
@@ -586,15 +563,15 @@ object Joins {
             CASE WHEN COALESCE(next_type = 'purchase' AND next_ts - first_ts_us <= 172800000000, false)
               THEN next_ts - first_ts_us END AS span_us
           FROM v WHERE next_type IS NULL OR next_type <> 'view'
-          ORDER BY user_id, first_view_id""",
-    "cep_click_click_purchase" ->
+          ORDER BY user_id, first_view_id"""),
+    "cep_click_click_purchase" -> Op(cepClickClickPurchase,
       s"""WITH $lag3Sql
           SELECT user_id, id1, id2, event_id AS purchase_id, ts_us - ts1 AS span_us
           FROM seq
           WHERE t1 = 'click' AND t2 = 'click' AND event_type = 'purchase'
             AND ts_us - ts1 <= CAST(3 AS BIGINT) * 24 * 3600 * 1000000
-          ORDER BY purchase_id""",
-    "join_asof_next_purchase" ->
+          ORDER BY purchase_id"""),
+    "join_asof_next_purchase" -> Op(joinAsofNextPurchase,
       s"""WITH tagged AS (
             SELECT user_id, event_id, $evTs AS ts, event_type,
               first_value(CASE WHEN event_type = 'purchase' THEN event_id END IGNORE NULLS)
@@ -606,12 +583,13 @@ object Joins {
                          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
           SELECT user_id, event_id AS click_id, purchase_id,
             purchase_us - epoch_us(ts) AS wait_us
-          FROM tagged WHERE event_type = 'click' ORDER BY click_id""",
-    "join_asof_click_before_purchase" -> asOfClickBeforePurchaseSql,
+          FROM tagged WHERE event_type = 'click' ORDER BY click_id"""),
+    "join_asof_click_before_purchase" ->
+      Op(joinAsofClickBeforePurchase, asOfClickBeforePurchaseSql),
     // the physical-operator route has the SAME contract as the window
     // form — one oracle text, two Spark plans, both must hash-match it
-    "join_asof_physical" -> asOfClickBeforePurchaseSql,
-    "join_range_bucketed" ->
+    "join_asof_physical" -> Op(joinAsofPhysical, asOfClickBeforePurchaseSql),
+    "join_range_bucketed" -> Op(joinRangeBucketed,
       s"""WITH e AS (SELECT event_id AS err_id, epoch_us($evTs) AS err_us
             FROM events WHERE event_type = 'error' AND value >= 150),
           c AS (SELECT event_id AS click_id, epoch_us($evTs) AS click_us
@@ -619,35 +597,35 @@ object Joins {
           SELECT click_id, err_id, click_us - err_us AS lag_us
           FROM c JOIN e ON click_us >= err_us
             AND click_us < err_us + CAST(3600 AS BIGINT) * 1000000
-          ORDER BY click_id, err_id""",
-    "join_orders_customer" ->
+          ORDER BY click_id, err_id"""),
+    "join_orders_customer" -> Op(joinOrdersCustomer,
       s"""SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n_orders,
           ${dsumSql("o_totalprice")} AS sum_price
           FROM orders
           JOIN customer ON o_custkey = c_custkey
           JOIN nation ON c_nationkey = n_nationkey
-          GROUP BY 1 ORDER BY 1""",
-    "join_left_orders_wo_lineitem" ->
+          GROUP BY 1 ORDER BY 1"""),
+    "join_left_orders_wo_lineitem" -> Op(joinLeftOrdersWoLineitem,
       """SELECT o_orderkey, o_totalprice
          FROM orders LEFT JOIN lineitem ON o_orderkey = l_orderkey
-         WHERE l_orderkey IS NULL ORDER BY o_orderkey""",
-    "join_right_orders_item_counts" ->
+         WHERE l_orderkey IS NULL ORDER BY o_orderkey"""),
+    "join_right_orders_item_counts" -> Op(joinRightOrdersItemCounts,
       """SELECT o_orderkey, CAST(COUNT(l_orderkey) AS BIGINT) AS n_items
          FROM (SELECT l_orderkey FROM lineitem) l
          RIGHT JOIN orders ON l.l_orderkey = o_orderkey
-         GROUP BY 1 ORDER BY 1""",
-    "join_anti_customers_no_orders" ->
+         GROUP BY 1 ORDER BY 1"""),
+    "join_anti_customers_no_orders" -> Op(joinAntiCustomersNoOrders,
       """SELECT c_custkey, c_name FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
                            AND o_orderpriority = '1-URGENT')
-         ORDER BY c_custkey""",
-    "join_theta_price_band" ->
+         ORDER BY c_custkey"""),
+    "join_theta_price_band" -> Op(joinThetaPriceBand,
       """SELECT s_suppkey, CAST(COUNT(*) AS BIGINT) AS n_parts,
          MIN(p_partkey) AS min_partkey
          FROM part JOIN supplier
            ON s_acctbal >= p_retailprice * 3 AND s_acctbal <= p_retailprice * 5
-         GROUP BY 1 ORDER BY 1""",
-    "join_window_events_selfpairs" ->
+         GROUP BY 1 ORDER BY 1"""),
+    "join_window_events_selfpairs" -> Op(joinWindowEventsSelfpairs,
       s"""WITH ev AS (SELECT event_id, user_id,
             epoch_us(date_trunc('hour', $evTs)) AS bucket_us FROM events)
           SELECT e1.user_id AS user_id, e1.bucket_us AS bucket_us,
@@ -655,8 +633,8 @@ object Joins {
           FROM ev e1 JOIN ev e2
             ON e1.user_id = e2.user_id AND e1.bucket_us = e2.bucket_us
             AND e1.event_id < e2.event_id
-          GROUP BY 1, 2 ORDER BY 1, 2""",
-    "join_interval_purchase_after_click" ->
+          GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "join_interval_purchase_after_click" -> Op(joinIntervalPurchaseAfterClick,
       s"""WITH clicks AS (
             SELECT user_id, event_id AS click_id, epoch_us($evTs) AS click_us
             FROM events WHERE event_type = 'click'),
@@ -669,6 +647,6 @@ object Joins {
             ON c.user_id = p.user_id
             AND purchase_us >= click_us
             AND purchase_us <= click_us + 15 * 60 * 1000000
-          ORDER BY 1, 2, 3""",
+          ORDER BY 1, 2, 3"""),
   )
 }

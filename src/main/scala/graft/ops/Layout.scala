@@ -75,12 +75,8 @@ object Layout {
       .orderBy("layout")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "layout_zorder_prune" -> (zorderPrune _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "layout_zorder_prune" ->
+  val entries: Map[String, Op] = Map(
+    "layout_zorder_prune" -> Op(zorderPrune,
       s"""WITH base AS (SELECT o_orderkey,
              CAST(date_diff('day', DATE '1995-01-01',
                CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
@@ -118,6 +114,6 @@ object Layout {
                AND c_lo <= $CustHi AND c_hi >= $CustLo
              THEN n ELSE 0 END) AS BIGINT) AS rows_2d,
            CAST(SUM(n) AS BIGINT) AS rows_total
-         FROM zones GROUP BY 1 ORDER BY 1""",
+         FROM zones GROUP BY 1 ORDER BY 1"""),
   )
 }

@@ -853,28 +853,6 @@ object Llm {
 
   // ------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_dedup_exact" -> (dedupExact _),
-    "llm_dedup_near" -> (dedupNear _),
-    "llm_dedup_simhash" -> (dedupSimhash _),
-    "llm_dedup_simhash_verified" -> (dedupSimhashVerified _),
-    "llm_dedup_jaccard" -> (dedupJaccard _),
-    "llm_dedup_jaccard_prefix" -> (dedupJaccardPrefix _),
-    "llm_semdedup" -> (semDedup _),
-    "llm_dedup_embed" -> (dedupEmbed _),
-    "llm_sim_topk" -> (simTopk _),
-    "llm_ann_lsh" -> (annLsh _),
-    "llm_text_stats" -> (textStats _),
-    "llm_langid" -> (langId _),
-    "llm_quality_score" -> (qualityScore _),
-    "llm_token_count" -> (tokenCount _),
-    "llm_fingerprint" -> (fingerprint _),
-    "llm_multimodal_join" -> (multimodalJoin _),
-    "llm_pipeline" -> (pipeline _),
-    "llm_embed_quantize" -> (embedQuantize _),
-    "mm_decode_meta" -> (mmDecodeMeta _),
-  )
-
   // ---- DuckDB oracles ----
 
   private def h48S(e: String): String = graft.Tables.h48Sql(e)
@@ -933,12 +911,12 @@ object Llm {
           ON b1.band = b2.band AND b1.sig = b2.sig AND b1.doc_id < b2.doc_id)"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "llm_dedup_exact" ->
+  val entries: Map[String, Op] = Map(
+    "llm_dedup_exact" -> Op(dedupExact,
       """SELECT sha256(lower(trim(text))) AS content_hash,
          MIN(doc_id) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies
-         FROM documents GROUP BY 1 ORDER BY 1""",
-    "llm_dedup_near" -> {
+         FROM documents GROUP BY 1 ORDER BY 1"""),
+    "llm_dedup_near" -> Op(dedupNear, {
       val mins = MinhashA.zipWithIndex.map { case (a, i) =>
         s"MIN((c*$a + ${minhashB(i)}) % $P) AS m$i"
       }.mkString(", ")
@@ -956,16 +934,16 @@ object Llm {
           FROM bands b1 JOIN bands b2
             ON b1.band = b2.band AND b1.sig = b2.sig AND b1.doc_id < b2.doc_id
           GROUP BY 1, 2 ORDER BY 1, 2"""
-    },
-    "llm_dedup_simhash" ->
+    }),
+    "llm_dedup_simhash" -> Op(dedupSimhash,
       s"""WITH ${simhashBandsSql("documents")},
           pr AS (SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
             FROM bands b1 JOIN bands b2
               ON b1.band = b2.band AND b1.v = b2.v AND b1.doc_id != b2.doc_id),
           pc AS (SELECT d1 AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_partners FROM pr GROUP BY 1)
           SELECT s.doc_id, s.simhash, COALESCE(pc.n_partners, 0) AS n_partners
-          FROM sig s LEFT JOIN pc ON s.doc_id = pc.doc_id ORDER BY s.doc_id""",
-    "llm_dedup_simhash_verified" ->
+          FROM sig s LEFT JOIN pc ON s.doc_id = pc.doc_id ORDER BY s.doc_id"""),
+    "llm_dedup_simhash_verified" -> Op(dedupSimhashVerified,
       s"""WITH ${simhashBandsSql("documents WHERE doc_id < 1000")},
           cand AS (SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2,
               b1.simhash AS sh1, b2.simhash AS sh2
@@ -973,8 +951,8 @@ object Llm {
               ON b1.band = b2.band AND b1.v = b2.v AND b1.doc_id < b2.doc_id)
           SELECT doc1, doc2, CAST(bit_count(xor(sh1, sh2)) AS BIGINT) AS hamming
           FROM cand WHERE bit_count(xor(sh1, sh2)) <= 6
-          ORDER BY doc1, doc2""",
-    "llm_dedup_jaccard" ->
+          ORDER BY doc1, doc2"""),
+    "llm_dedup_jaccard" -> Op(dedupJaccard,
       """WITH w AS (SELECT doc_id, unnest(list_distinct(string_split(text,' '))) AS word
            FROM documents WHERE doc_id < 20),
          sizes AS (SELECT doc_id, COUNT(*) AS sz FROM w GROUP BY 1),
@@ -987,8 +965,8 @@ object Llm {
          FROM inter
          JOIN sizes z1 ON doc1 = z1.doc_id
          JOIN sizes z2 ON doc2 = z2.doc_id
-         ORDER BY doc1, doc2""",
-    "llm_dedup_jaccard_prefix" ->
+         ORDER BY doc1, doc2"""),
+    "llm_dedup_jaccard_prefix" -> Op(dedupJaccardPrefix,
       s"""WITH wr AS (SELECT doc_id, unnest(list_distinct(string_split(text,' '))) AS word
            FROM documents WHERE doc_id < 2000),
          w AS (SELECT DISTINCT doc_id, ${h48S("word")} AS word FROM wr),
@@ -1014,8 +992,8 @@ object Llm {
            round(CAST(inter AS DOUBLE) / CAST(sz1 + sz2 - inter AS DOUBLE), 6) AS jaccard
          FROM pairs
          WHERE 10*inter >= 9*(sz1 + sz2 - inter)
-         ORDER BY doc1, doc2""",
-    "llm_semdedup" ->
+         ORDER BY doc1, doc2"""),
+    "llm_semdedup" -> Op(semDedup,
       s"""WITH ee AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm
             FROM embeddings WHERE vec_id < 2000),
           cent AS (SELECT vec_id AS cid, embedding AS cemb, nrm AS cnrm
@@ -1033,8 +1011,8 @@ object Llm {
             WHERE round(${dotSql("ea.embedding", "eb.embedding")} / (ea.nrm * eb.nrm), 6) >= 0.35)
           SELECT a.vec_id, a.cell, (pr.vec_id IS NOT NULL) AS pruned
           FROM assign a LEFT JOIN pr ON a.vec_id = pr.vec_id
-          ORDER BY a.vec_id""",
-    "llm_sim_topk" ->
+          ORDER BY a.vec_id"""),
+    "llm_sim_topk" -> Op(simTopk,
       s"""WITH e AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm FROM embeddings),
           scored AS (SELECT q.vec_id AS qid, c.vec_id AS vec_id,
               round(${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm), 6) AS cos_r
@@ -1043,14 +1021,14 @@ object Llm {
               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC, vec_id ASC) AS rn
             FROM scored)
           SELECT qid, vec_id, cos_r, CAST(rn AS INT) AS rn
-          FROM ranked WHERE rn <= 5 ORDER BY qid, rn""",
-    "llm_dedup_embed" ->
+          FROM ranked WHERE rn <= 5 ORDER BY qid, rn"""),
+    "llm_dedup_embed" -> Op(dedupEmbed,
       s"""WITH e AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm FROM embeddings)
           SELECT a.vec_id AS v1, b.vec_id AS v2,
             round(${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 6) AS cos_r
           FROM e a JOIN e b ON a.vec_id < b.vec_id
-          ORDER BY cos_r DESC, v1 ASC, v2 ASC LIMIT 20""",
-    "llm_ann_lsh" -> {
+          ORDER BY cos_r DESC, v1 ASC, v2 ASC LIMIT 20"""),
+    "llm_ann_lsh" -> Op(annLsh, {
       s"""WITH $lshBucketsSql,
           e AS (SELECT em.vec_id, embedding, ${normSql("embedding")} AS nrm, bucket
             FROM embeddings em JOIN buckets b ON em.vec_id = b.vec_id),
@@ -1068,8 +1046,8 @@ object Llm {
             best.best_id, best.best_cos
           FROM e q LEFT JOIN best ON q.vec_id = best.qid
           WHERE q.vec_id < 10 ORDER BY qid"""
-    },
-    "llm_text_stats" ->
+    }),
+    "llm_text_stats" -> Op(textStats,
       """WITH tokens AS (SELECT lang, doc_id, unnest(string_split(text,' ')) AS word
            FROM documents),
          per_lang AS (SELECT lang, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
@@ -1082,8 +1060,8 @@ object Llm {
            FROM wc)
          SELECT p.lang, n_docs, n_words, n_distinct_words, top_word, top_word_n
          FROM per_lang p JOIN top t ON p.lang = t.lang AND t.rn = 1
-         ORDER BY p.lang""",
-    "llm_langid" ->
+         ORDER BY p.lang"""),
+    "llm_langid" -> Op(langId,
       """SELECT lang,
          CASE WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
               WHEN regexp_matches(text, '[ñ¿¡]') THEN 'es'
@@ -1091,8 +1069,8 @@ object Llm {
               WHEN regexp_matches(text, '[éèêç]') THEN 'fr'
               ELSE 'en' END AS pred_lang,
          CAST(COUNT(*) AS BIGINT) AS n
-         FROM documents GROUP BY 1, 2 ORDER BY 1, 2""",
-    "llm_quality_score" ->
+         FROM documents GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "llm_quality_score" -> Op(qualityScore,
       """WITH t AS (SELECT doc_id,
            CAST(len(string_split(text,' ')) AS BIGINT) AS n_words,
            CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
@@ -1104,8 +1082,8 @@ object Llm {
            round(0.4 * least(1.0, CAST(n_words AS DOUBLE) / 200.0)
              + 0.3 * (CAST(n_distinct AS DOUBLE) / CAST(n_words AS DOUBLE))
              + 0.3 * (CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE)), 6) AS score
-         FROM t ORDER BY doc_id""",
-    "llm_token_count" ->
+         FROM t ORDER BY doc_id"""),
+    "llm_token_count" -> Op(tokenCount,
       """WITH t AS (SELECT source,
            CAST(len(string_split(text,' ')) AS BIGINT) AS n_ws,
            CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT) AS n_re,
@@ -1114,8 +1092,8 @@ object Llm {
          SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_ws) AS BIGINT) AS sum_ws, CAST(SUM(n_re) AS BIGINT) AS sum_re,
            CAST(SUM(n_bpe) AS BIGINT) AS sum_bpe
-         FROM t GROUP BY 1 ORDER BY 1""",
-    "llm_fingerprint" ->
+         FROM t GROUP BY 1 ORDER BY 1"""),
+    "llm_fingerprint" -> Op(fingerprint,
       s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents
             WHERE len(string_split(text,' ')) >= 6),
           sh AS (SELECT doc_id, list_transform(range(1, len(ws)-1),
@@ -1127,15 +1105,15 @@ object Llm {
             CAST(len(fps) AS BIGINT) AS n_fp,
             list_reduce(list_prepend(CAST(0 AS BIGINT), fps), (a, b) -> xor(a, b)) AS fp_xor,
             list_min(fps) AS fp_min
-          FROM fp ORDER BY doc_id""",
-    "llm_multimodal_join" ->
+          FROM fp ORDER BY doc_id"""),
+    "llm_multimodal_join" -> Op(multimodalJoin,
       s"""SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
           CAST(SUM(n_chars) AS DOUBLE) / CAST(COUNT(n_chars) AS DOUBLE) AS avg_chars,
           ${dsumSql(normSql("embedding"))} / CAST(COUNT(*) AS DOUBLE) AS avg_norm,
           CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
           FROM documents JOIN embeddings ON doc_id = vec_id
-          GROUP BY 1 ORDER BY 1""",
-    "llm_pipeline" ->
+          GROUP BY 1 ORDER BY 1"""),
+    "llm_pipeline" -> Op(pipeline,
       """WITH kept AS (
            SELECT *, ROW_NUMBER() OVER (PARTITION BY sha256(lower(trim(text)))
              ORDER BY doc_id) AS rn
@@ -1154,8 +1132,8 @@ object Llm {
            CAST(SUM(CAST(score AS DECIMAL(18,6))) AS DOUBLE)
              / CAST(COUNT(score) AS DOUBLE) AS avg_score
          FROM scored WHERE score >= 0.28
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "llm_embed_quantize" ->
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "llm_embed_quantize" -> Op(embedQuantize,
       """WITH t AS (
            SELECT label,
              list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS maxabs,
@@ -1174,14 +1152,14 @@ object Llm {
            CAST(SUM(CAST(mse AS DECIMAL(18,6))) AS DOUBLE)
              / CAST(COUNT(mse) AS DOUBLE) AS avg_mse,
            MIN(round(maxabs, 6)) AS min_maxabs
-         FROM m GROUP BY 1 ORDER BY 1""",
-    "mm_decode_meta" ->
+         FROM m GROUP BY 1 ORDER BY 1"""),
+    "mm_decode_meta" -> Op(mmDecodeMeta,
       """SELECT doc_id,
           CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'bmp' END AS format,
           CAST(n_chars % 64 + 1 AS INT) AS width,
           CAST((n_chars // 64) % 48 + 1 AS INT) AS height,
           CAST(3 AS INT) AS channels
-          FROM documents ORDER BY doc_id""",
+          FROM documents ORDER BY doc_id"""),
   )
 }
 

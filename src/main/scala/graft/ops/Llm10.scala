@@ -221,13 +221,6 @@ object Llm10 {
           (col("n") * col("syy") - col("sy") * col("sy"))), 6).as("r2"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_dedup_substring" -> (dedupSubstring _),
-    "llm_dedup_substring_spans" -> (dedupSubstringSpans _),
-    "llm_dedup_substring_incr" -> (dedupSubstringIncr _),
-    "llm_heaps_law" -> (heapsLaw _),
-  )
-
   /** DuckDB CTE chain ending in `ss_doc(doc_id, nw, n_dup_spans,
     * dup_words)` — the [[perDocSpans]] twin, shared verbatim by the
     * `llm_dedup_substring` oracle and [[Llm9]]'s dataset-card oracle so
@@ -261,14 +254,14 @@ object Llm10 {
            CAST(SUM(sp_e - sp_s + 1) AS BIGINT) AS dup_words
          FROM ss_sp GROUP BY 1, 2)"""
 
-  val oracles: Map[String, String] = Map(
-    "llm_dedup_substring" ->
+  val entries: Map[String, Op] = Map(
+    "llm_dedup_substring" -> Op(dedupSubstring,
       s"""WITH $perDocSpansSql
          SELECT doc_id, nw AS n_words, n_dup_spans, dup_words,
            round(CAST(dup_words AS DOUBLE) / CAST(nw AS DOUBLE), 6)
              AS dup_ratio
-         FROM ss_doc ORDER BY doc_id""",
-    "llm_dedup_substring_spans" ->
+         FROM ss_doc ORDER BY doc_id"""),
+    "llm_dedup_substring_spans" -> Op(dedupSubstringSpans,
       s"""WITH $perDocSpansSql,
          top10 AS (SELECT sh, n_occ FROM ss_dup
            ORDER BY n_occ DESC, sh LIMIT 10),
@@ -286,8 +279,8 @@ object Llm10 {
            array_to_string(d.w[rep.pos + 1 : rep.pos + 16], ' ')
              AS span_text
          FROM ag JOIN rep USING (sh) JOIN ss_d d ON rep.doc_id = d.doc_id
-         ORDER BY ag.n_occ DESC, span_text""",
-    "llm_dedup_substring_incr" ->
+         ORDER BY ag.n_occ DESC, span_text"""),
+    "llm_dedup_substring_incr" -> Op(dedupSubstringIncr,
       s"""WITH $perDocSpansSql,
          inc_d AS (SELECT doc_id, nw, pos FROM
              (SELECT doc_id, nw, pos, ROW_NUMBER() OVER
@@ -310,8 +303,8 @@ object Llm10 {
            CAST(SUM(sp_e - sp_s + 1) AS BIGINT) AS dup_words,
            round(CAST(SUM(sp_e - sp_s + 1) AS BIGINT)
              / CAST(nw AS DOUBLE), 6) AS dup_ratio
-         FROM inc_s GROUP BY doc_id, nw ORDER BY doc_id""",
-    "llm_heaps_law" ->
+         FROM inc_s GROUP BY doc_id, nw ORDER BY doc_id"""),
+    "llm_heaps_law" -> Op(heapsLaw,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          dl AS (SELECT doc_id, w, CAST(len(w) AS BIGINT) AS nw FROM d),
          tok AS (SELECT doc_id // 25 AS cg, CAST(SUM(nw) AS BIGINT) AS toks
@@ -341,6 +334,6 @@ object Llm10 {
              / s.n, 6) AS ln_k,
            round(((s.n * sxy - sx * sy) * (s.n * sxy - sx * sy)) /
              ((s.n * sxx - sx * sx) * (s.n * syy - sy * sy)), 6) AS r2
-         FROM s, tot, vt""",
+         FROM s, tot, vt"""),
   )
 }

@@ -133,11 +133,6 @@ object Llm11 {
       .orderBy("lang")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_bpe_merges" -> (bpeMerges _),
-    "llm_bpe_tokenize" -> (bpeTokenize _),
-  )
-
   /** One BPE iteration as a DuckDB CTE block: pairs from seg$p, the
     * arg-max row b$k, the merged segmentation seg$k, and the post-merge
     * token count n$k. */
@@ -181,8 +176,8 @@ object Llm11 {
              regexp_replace(word, '(.)', chr(1) || '\\1', 'g') AS s
            FROM wc)"""
 
-  val oracles: Map[String, String] = Map(
-    "llm_bpe_merges" -> {
+  val entries: Map[String, Op] = Map(
+    "llm_bpe_merges" -> Op(bpeMerges, {
       val steps = (1 to 5).map(bpeStepSql).mkString(",\n")
       val union = (1 to 5).map(k =>
         s"""SELECT CAST($k AS BIGINT) AS step, b$k.a AS left_sym,
@@ -192,8 +187,8 @@ object Llm11 {
       s"""WITH $bpeSeedSql,
          $steps
          $union ORDER BY step"""
-    },
-    "llm_bpe_tokenize" -> {
+    }),
+    "llm_bpe_tokenize" -> Op(bpeTokenize, {
       val steps = (1 to 5).map(bpeStepSql).mkString(",\n")
       s"""WITH $bpeSeedSql,
          $steps,
@@ -210,6 +205,6 @@ object Llm11 {
              / CAST(SUM(cnt) AS DOUBLE), 6) AS fertility
          FROM bl JOIN segn USING (word)
          GROUP BY lang ORDER BY lang"""
-    },
+    }),
   )
 }

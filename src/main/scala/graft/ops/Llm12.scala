@@ -143,12 +143,6 @@ object Llm12 {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_kcenter_select" -> (kcenterSelect _),
-    "seq_pattern_support" -> (seqPatternSupport _),
-    "mm_audio_resample" -> (audioResample _),
-  )
-
   /** Unrolled greedy k-center twin: step j computes every remaining
     * point's round-6 min-d² to the selected set and takes the maximin
     * row (mind DESC, vec_id) — mechanically generated blocks, the
@@ -194,11 +188,9 @@ object Llm12 {
        FROM ord, rf ORDER BY sel_order"""
   }
 
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
-  val oracles: Map[String, String] = Map(
-    "llm_kcenter_select" -> kcenterSql,
-    "seq_pattern_support" ->
+  val entries: Map[String, Op] = Map(
+    "llm_kcenter_select" -> Op(kcenterSelect, kcenterSql),
+    "seq_pattern_support" -> Op(seqPatternSupport,
       s"""WITH ev AS (SELECT user_id, event_type AS t, epoch_us($evTs) AS us
            FROM events),
          nu AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_total
@@ -219,11 +211,11 @@ object Llm12 {
            FROM t3 GROUP BY 1)
          SELECT k, pattern, n_users,
            round(CAST(n_users AS DOUBLE) / n_total, 6) AS support
-         FROM sup, nu ORDER BY k, n_users DESC, pattern""",
+         FROM sup, nu ORDER BY k, n_users DESC, pattern"""),
     // closed-form from the L367 window rule: a speech window contributes
     // 80 samples of |y| = A after decimation (160/2), silence exactly 0;
     // the flips sit on even indices so no pair straddles one.
-    "mm_audio_resample" ->
+    "mm_audio_resample" -> Op(audioResample,
       s"""WITH ${MmVad.speechWindowsSql},
          agg AS (SELECT f, CAST(SUM(s) AS BIGINT) AS n_speech
            FROM sp GROUP BY 1)
@@ -233,7 +225,7 @@ object Llm12 {
              ELSE 0 END AS BIGINT) AS peak_out,
            CAST(n_speech * 80 * (500 + 100 * (f % 10)) AS BIGINT)
              AS sum_abs_out
-         FROM cls JOIN agg USING (f) ORDER BY doc_id""",
+         FROM cls JOIN agg USING (f) ORDER BY doc_id"""),
   )
 }
 

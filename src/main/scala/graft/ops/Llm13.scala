@@ -49,12 +49,8 @@ object Llm13 {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_min_k_prob" -> (minKProb _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "llm_min_k_prob" ->
+  val entries: Map[String, Op] = Map(
+    "llm_min_k_prob" -> Op(minKProb,
       """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
            FROM documents),
          freq AS (SELECT word, COUNT(*) AS c FROM w GROUP BY 1),
@@ -74,6 +70,6 @@ object Llm13 {
            round(CAST(SUM(CAST(lp AS DECIMAL(18,6))) AS DOUBLE)
              / MAX(k_cnt), 6) AS min_k_avg_logprob
          FROM rk WHERE rr <= k_cnt
-         GROUP BY doc_id ORDER BY doc_id""",
+         GROUP BY doc_id ORDER BY doc_id"""),
   )
 }

@@ -231,11 +231,6 @@ object Llm14 {
       case Some((_, _, _, dp2)) => dp2
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_unigram_tokenizer" -> (unigramTokenizer _),
-    "llm_unigram_loss" -> (unigramLoss _),
-  )
-
   // ---------- DuckDB oracle ----------
 
   /** One oracle DP block: best path to position `i` of round `r`, from
@@ -313,14 +308,14 @@ object Llm14 {
            ${qlogDuck("t")} - ${qlogDuck("c")} AS cost FROM v1, t1),
        ${roundSql(2, "vc1")}"""
 
-  val oracles: Map[String, String] = Map(
-    "llm_unigram_tokenizer" ->
+  val entries: Map[String, Op] = Map(
+    "llm_unigram_tokenizer" -> Op(unigramTokenizer,
       s"""WITH $trainSql
          SELECT v.piece, CAST(len(v.piece) AS BIGINT) AS piece_len,
            CAST(COALESCE(c2.c, 0) AS BIGINT) AS n_uses, v.cost AS cost_q
          FROM vc1 v LEFT JOIN c2 ON c2.piece = v.piece
-         ORDER BY n_uses DESC, v.piece ASC""",
-    "llm_unigram_loss" ->
+         ORDER BY n_uses DESC, v.piece ASC"""),
+    "llm_unigram_loss" -> Op(unigramLoss,
       s"""WITH $trainSql
          SELECT * FROM (
            SELECT CAST(1 AS BIGINT) AS em_round,
@@ -334,6 +329,6 @@ object Llm14 {
              CAST(SUM(cnt * (len(string_split(seg, chr(1))) - 1)) AS BIGINT) AS n_tokens,
              (SELECT CAST(COUNT(*) AS BIGINT) FROM vc1) AS n_vocab
            FROM r2best)
-         ORDER BY em_round""",
+         ORDER BY em_round"""),
   )
 }

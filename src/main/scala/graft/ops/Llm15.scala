@@ -262,11 +262,6 @@ object Llm15 {
       .orderBy(col("bands").desc)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_ann_recall" -> (annRecall _),
-    "llm_dedup_band_audit" -> (bandAudit _),
-  )
-
   // ---------- DuckDB oracle: the four index oracles' CTEs composed ----
 
   /** DuckDB twin of [[recallRow]] under a leading `label` column: the
@@ -348,9 +343,9 @@ object Llm15 {
   private def methodSql(m: String, five: String, cand: String): String =
     recallRowSql(s"'$m' AS method", five, cand)
 
-  val oracles: Map[String, String] = Map(
-    "llm_dedup_band_audit" -> bandAuditOracle,
-    "llm_ann_recall" ->
+  val entries: Map[String, Op] = Map(
+    "llm_dedup_band_audit" -> Op(bandAudit, bandAuditOracle),
+    "llm_ann_recall" -> Op(annRecall,
       s"""WITH ${Llm5.subSql},
         ${Llm5.ivfProbeSql},
         $exactTop5Sql,
@@ -392,6 +387,6 @@ object Llm15 {
           UNION ALL ${methodSql("ivfpq", "ipq5", "ipqsc")}
           UNION ALL ${methodSql("lsh", "lsh5", "lshsc")}
           UNION ALL ${methodSql("pq", "pq5", "adc")})
-        ORDER BY method""",
+        ORDER BY method"""),
   )
 }

@@ -54,12 +54,8 @@ object Llm16 {
       .orderBy("lang")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_tokenizer_bakeoff" -> (tokenizerBakeoff _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "llm_tokenizer_bakeoff" ->
+  val entries: Map[String, Op] = Map(
+    "llm_tokenizer_bakeoff" -> Op(tokenizerBakeoff,
       s"""WITH ${Llm14.wcSql},
          ${Llm11.bpeChainSql},
          ${Llm14.trainSqlBody},
@@ -83,6 +79,6 @@ object Llm16 {
                   > CAST(SUM(cnt * un.uni_sym) AS BIGINT) THEN 'unigram'
                 ELSE 'tie' END AS winner
          FROM bl JOIN segn USING (word) JOIN un USING (word)
-         GROUP BY lang ORDER BY lang""",
+         GROUP BY lang ORDER BY lang"""),
   )
 }

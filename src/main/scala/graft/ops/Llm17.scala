@@ -900,11 +900,6 @@ object Llm17 {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_suffix_lrs" -> (suffixLrs _),
-    "llm_suffix_coverage" -> (suffixCoverage _),
-  )
-
   // ---------- DuckDB oracle: the same doubling rounds, fixed-unrolled ----------
   //
   // The oracle unrolls ALL RMax rounds (the L393 unrolled-CTE pattern)
@@ -968,8 +963,8 @@ object Llm17 {
   /** Coverage grain's level index: log₂(MinDupWords). */
   private val KCov = java.lang.Integer.numberOfTrailingZeros(MinDupWords)
 
-  val oracles: Map[String, String] = Map(
-    "llm_suffix_lrs" ->
+  val entries: Map[String, Op] = Map(
+    "llm_suffix_lrs" -> Op(suffixLrs,
       s"""WITH $lcpChainSql,
          cand AS (
            SELECT 'any' AS scope, i, doc_a, pos_a, doc_b, pos_b, lcp
@@ -984,8 +979,8 @@ object Llm17 {
            array_to_string(list_slice(dd.ws, pos_a + 1, pos_a + lcp), ' ')
              AS lrs_text
          FROM cand JOIN w dd ON dd.doc_id = cand.doc_a
-         ORDER BY scope""",
-    "llm_suffix_coverage" ->
+         ORDER BY scope"""),
+    "llm_suffix_coverage" -> Op(suffixCoverage,
       s"""WITH ${levelsChainSql(KCov)},
          dl AS (SELECT l.doc_id, l.pos FROM l$KCov l
            JOIN (SELECT r FROM l$KCov GROUP BY r HAVING COUNT(*) >= 2) sh
@@ -1004,6 +999,6 @@ object Llm17 {
            round(CAST(SUM(sp_e - sp_s + 1) AS DOUBLE) / d.nw, 6) AS dup_ratio
          FROM sp JOIN d ON d.doc_id = sp.doc_id
          GROUP BY sp.doc_id, d.nw
-         ORDER BY sp.doc_id""",
+         ORDER BY sp.doc_id"""),
   )
 }

@@ -76,12 +76,8 @@ object Llm18 {
       .orderBy("doc_id", "chunk_no")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_chunk_embed" -> (chunkEmbed _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "llm_chunk_embed" ->
+  val entries: Map[String, Op] = Map(
+    "llm_chunk_embed" -> Op(chunkEmbed,
       s"""WITH d AS (SELECT doc_id,
              CAST(len(list_filter(string_split(text, ' '), w -> w != ''))
                AS BIGINT) AS n
@@ -114,6 +110,6 @@ object Llm18 {
            CAST(list_sum(list_transform(c, v -> abs(v))) AS BIGINT) AS l1_q,
            CAST(list_sum(list_transform(range(0, $Dim), d ->
              c[d + 1] * q[d + 1])) AS BIGINT) AS dot_doc_q
-         FROM pooled ORDER BY doc_id, chunk_no""",
+         FROM pooled ORDER BY doc_id, chunk_no"""),
   )
 }

@@ -58,10 +58,6 @@ object Llm19 {
     rows.reduce(_ unionByName _).orderBy("nprobe")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_ivf_multiprobe" -> (ivfMultiprobe _),
-  )
-
   // ---------- DuckDB oracle ----------
 
   private def probeRow(p: Int): String =
@@ -77,13 +73,13 @@ object Llm19 {
           (PARTITION BY qid ORDER BY cos_r DESC, vec_id ASC) AS rn FROM sc_$p)
         WHERE rn <= 5)"""
 
-  val oracles: Map[String, String] = Map(
-    "llm_ivf_multiprobe" ->
+  val entries: Map[String, Op] = Map(
+    "llm_ivf_multiprobe" -> Op(ivfMultiprobe,
       s"""WITH ${Llm5.ivfProbeSql},
         ${Llm15.exactTop5Sql},
         ${Probes.map(cfgSql).mkString(",\n        ")}
         SELECT * FROM (
           ${Probes.map(probeRow).mkString("\n          UNION ALL ")})
-        ORDER BY nprobe""",
+        ORDER BY nprobe"""),
   )
 }

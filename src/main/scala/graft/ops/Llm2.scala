@@ -271,17 +271,6 @@ object Llm2 {
 
   // ------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_frame_sample" -> (mmFrameSample _),
-    "llm_kmeans_step" -> (kmeansStep _),
-    "mm_resize_feature" -> (mmResizeFeature _),
-    "llm_ivf_ann" -> (ivfAnn _),
-    "llm_ngram_bigrams" -> (ngramBigrams _),
-    "agg_approx_percentile" -> (approxPercentileValue _),
-    "mm_chunk_text" -> (mmChunkText _),
-    "llm_centroid_accuracy" -> (centroidAccuracy _),
-  )
-
   /** DuckDB twin of [[labelCentroids]]: `centn(label, cemb, cnrm)`. */
   private[ops] val labelCentroidsSql =
     s"""ex AS (SELECT label, vec_id,
@@ -294,8 +283,8 @@ object Llm2 {
           cent AS (SELECT label, list(c ORDER BY pos) AS cemb FROM cd GROUP BY 1),
           centn AS (SELECT label, cemb, ${normSql("cemb")} AS cnrm FROM cent)"""
 
-  val oracles: Map[String, String] = Map(
-    "llm_centroid_accuracy" ->
+  val entries: Map[String, Op] = Map(
+    "llm_centroid_accuracy" -> Op(centroidAccuracy,
       s"""WITH $labelCentroidsSql,
           e AS (SELECT vec_id, label, embedding, ${normSql("embedding")} AS nrm
             FROM embeddings),
@@ -309,8 +298,8 @@ object Llm2 {
             round(CAST(SUM(CASE WHEN cluster = label THEN 1 ELSE 0 END) AS DOUBLE)
               / COUNT(*), 6) AS acc
           FROM scored WHERE rn = 1
-          GROUP BY 1 ORDER BY 1""",
-    "mm_frame_sample" ->
+          GROUP BY 1 ORDER BY 1"""),
+    "mm_frame_sample" -> Op(mmFrameSample,
       """WITH f AS (
            SELECT doc_id, CAST((n_chars % 12) + 2 AS BIGINT) AS n_frames,
              CAST((n_chars % 16) + 1 AS BIGINT) AS w
@@ -325,8 +314,8 @@ object Llm2 {
          SELECT doc_id, n_frames, frame_idx, frame_idx * 40 AS frame_ts_ms,
            CAST(w * a + (w * (w - 1)) // 2
              - 256 * GREATEST(0, a + w - 256) AS DOUBLE) / w AS mean_gray
-         FROM m ORDER BY doc_id, frame_idx""",
-    "llm_ivf_ann" ->
+         FROM m ORDER BY doc_id, frame_idx"""),
+    "llm_ivf_ann" -> Op(ivfAnn,
       s"""WITH $labelCentroidsSql,
           e AS (SELECT vec_id, label, embedding, ${normSql("embedding")} AS nrm FROM embeddings),
           q AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm FROM e WHERE vec_id < 5),
@@ -343,8 +332,8 @@ object Llm2 {
           ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
               ORDER BY cos_r DESC, vec_id ASC) AS rn FROM scored)
           SELECT qid, cell, vec_id, cos_r, CAST(rn AS INT) AS rn
-          FROM ranked WHERE rn <= 3 ORDER BY qid, rn""",
-    "llm_ngram_bigrams" ->
+          FROM ranked WHERE rn <= 3 ORDER BY qid, rn"""),
+    "llm_ngram_bigrams" -> Op(ngramBigrams,
       """WITH w AS (SELECT lang, doc_id, string_split(text, ' ') AS ws FROM documents),
          bg AS (SELECT lang, unnest(list_transform(range(1, len(ws)),
              i -> ws[i] || ' ' || ws[i+1])) AS bg
@@ -354,8 +343,8 @@ object Llm2 {
              ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n DESC, bg ASC) AS rn
            FROM cnt)
          SELECT lang, CAST(rn AS INT) AS rn, bg, n
-         FROM ranked WHERE rn <= 3 ORDER BY lang, rn""",
-    "llm_kmeans_step" ->
+         FROM ranked WHERE rn <= 3 ORDER BY lang, rn"""),
+    "llm_kmeans_step" -> Op(kmeansStep,
       s"""WITH $labelCentroidsSql,
           e AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm FROM embeddings),
           scored AS (SELECT e.vec_id, c.label AS cluster,
@@ -367,8 +356,8 @@ object Llm2 {
           SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_assigned,
             ${dsumSql("cos_c")} / CAST(COUNT(cos_c) AS DOUBLE) AS avg_cos
           FROM scored WHERE rn = 1
-          GROUP BY 1 ORDER BY 1""",
-    "mm_resize_feature" ->
+          GROUP BY 1 ORDER BY 1"""),
+    "mm_resize_feature" -> Op(mmResizeFeature,
       // closed-form prediction of the REAL decode: dims from n_chars,
       // channel means as exact-integer-sum averages over the synthetic
       // pixels r=(id+y)%256 (x-invariant), g=(2id+x)%256 (y-invariant),
@@ -389,14 +378,14 @@ object Llm2 {
             list_sum(list_transform(range(w0),
               x -> CAST((doc_id * 3 + x + y) % 256 AS DOUBLE)))))
             / (w0 * h0) AS mean_b
-        FROM d ORDER BY doc_id""",
-    "agg_approx_percentile" ->
+        FROM d ORDER BY doc_id"""),
+    "agg_approx_percentile" -> Op(approxPercentileValue,
       """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
          round(quantile_cont(CAST(value AS DOUBLE), 0.5), 6) AS p50,
          round(quantile_cont(CAST(value AS DOUBLE), 0.9), 6) AS p90,
          TRUE AS ap50_in_band, TRUE AS ap90_in_band
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "mm_chunk_text" -> {
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    "mm_chunk_text" -> Op(mmChunkText, {
       val h = graft.Tables.h48Sql("chunk")
       s"""WITH c AS (SELECT doc_id,
             CAST(unnest(range(0, greatest(1, CAST(ceil(n_chars / 256.0) AS INT)))) AS INT) AS idx,
@@ -406,6 +395,6 @@ object Llm2 {
           SELECT doc_id, idx, CAST(length(chunk) AS INT) AS chunk_len,
             $h AS chunk_h48
           FROM ch ORDER BY doc_id, idx"""
-    },
+    }),
   )
 }

@@ -572,24 +572,6 @@ object Llm3 {
       .select(col("doc_id"), col("cluster"), col("split"))
       .orderBy("doc_id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_leakage_safe_split" -> (leakageSafeSplit _),
-    "sample_shard_assign" -> (shardAssign _),
-    "llm_pack_context" -> (packContext _),
-    "llm_repetition_filter" -> (repetitionFilter _),
-    "llm_bpe_pairs" -> (bpePairs _),
-    "llm_decontaminate" -> (decontaminate _),
-    "llm_dup_spans" -> (dupSpans _),
-    "sample_weighted_mix" -> (sampleWeightedMix _),
-    "llm_tfidf_topterms" -> (tfidfTopterms _),
-    "llm_wordcount_top20" -> (wordcountTop20 _),
-    "llm_pii_redact" -> (piiRedact _),
-    "llm_dedup_clusters" -> (dedupClusters _),
-    "llm_vocab_nucleus" -> (vocabNucleus _),
-    "llm_minhash_src_sim" -> (minhashSourceSim _),
-    "llm_dup_span_removal" -> (dupSpanRemoval _),
-  )
-
   /** Oracle twin of [[decontaminate]]'s gram sets: the benchmark
     * (source 'src0') trigrams `bench(gram)` and every other doc's distinct
     * trigrams `corp(doc_id, gram)`. */
@@ -604,8 +586,8 @@ object Llm3 {
          bench AS (SELECT DISTINCT gram FROM tri WHERE source = 'src0'),
          corp AS (SELECT DISTINCT doc_id, gram FROM tri WHERE source <> 'src0')"""
 
-  val oracles: Map[String, String] = Map(
-    "llm_leakage_safe_split" -> {
+  val entries: Map[String, Op] = Map(
+    "llm_leakage_safe_split" -> Op(leakageSafeSplit, {
       val h = graft.Tables.h48Sql("'split:' || CAST(cluster AS VARCHAR)")
       s"""WITH RECURSIVE $dedupClustersCcSql
          SELECT doc_id, cluster,
@@ -613,8 +595,8 @@ object Llm3 {
                 WHEN ($h) % 10 = 8 THEN 'val'
                 ELSE 'test' END AS split
          FROM cc ORDER BY doc_id"""
-    },
-    "llm_dup_span_removal" ->
+    }),
+    "llm_dup_span_removal" -> Op(dupSpanRemoval,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
            base AS (SELECT doc_id, ws, len(ws) AS n FROM d),
            sh AS (SELECT doc_id, unnest(list_transform(range(1, n - 1),
@@ -636,8 +618,8 @@ object Llm3 {
          SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_words,
            CAST(b.n - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
            COALESCE(a.clean_text, '') AS clean_text
-         FROM base b LEFT JOIN agg a USING (doc_id) ORDER BY doc_id""",
-    "llm_minhash_src_sim" ->
+         FROM base b LEFT JOIN agg a USING (doc_id) ORDER BY doc_id"""),
+    "llm_minhash_src_sim" -> Op(minhashSourceSim,
       s"""WITH d AS (SELECT source, string_split(text, ' ') AS ws FROM documents
              WHERE len(string_split(text, ' ')) >= 3),
           sh AS (SELECT DISTINCT source,
@@ -652,16 +634,16 @@ object Llm3 {
             CAST(SUM(CASE WHEN a.m = b.m THEN 1.0 ELSE 0.0 END) / 16.0 AS DOUBLE)
               AS est_jaccard
           FROM mins a JOIN mins b ON a.i = b.i AND a.source < b.source
-          GROUP BY 1, 2 ORDER BY 1, 2""",
-    "sample_shard_assign" ->
+          GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "sample_shard_assign" -> Op(shardAssign,
       s"""WITH d AS (
             SELECT (${graft.Tables.h48Sql("CAST(doc_id AS VARCHAR)")}) % 16 AS shard,
               CAST(len(list_filter(string_split(text, ' '), w -> w <> '')) AS BIGINT)
                 AS n_tokens
             FROM documents)
           SELECT shard, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-          FROM d GROUP BY shard ORDER BY shard""",
-    "llm_pack_context" ->
+          FROM d GROUP BY shard ORDER BY shard"""),
+    "llm_pack_context" -> Op(packContext,
       """WITH d AS (
            SELECT doc_id, source,
              CAST(len(list_filter(string_split(text, ' '), w -> w <> '')) AS BIGINT)
@@ -676,8 +658,8 @@ object Llm3 {
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
            MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         FROM s GROUP BY 1, 2 ORDER BY 1, 2""",
-    "llm_repetition_filter" ->
+         FROM s GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "llm_repetition_filter" -> Op(repetitionFilter,
       """WITH g AS (
            SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS ws
            FROM documents),
@@ -700,20 +682,20 @@ object Llm3 {
              AND (CASE WHEN n_grams > 0
                THEN 1.0 - CAST(n_distinct_grams AS DOUBLE) / n_grams
                ELSE 0.0 END) <= 0.2 AS keep
-         FROM s ORDER BY doc_id""",
-    "llm_bpe_pairs" ->
+         FROM s ORDER BY doc_id"""),
+    "llm_bpe_pairs" -> Op(bpePairs,
       """WITH w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
          p AS (SELECT substr(word, CAST(i AS INT), 2) AS pair
                FROM w, LATERAL (SELECT unnest(range(1, length(word))) AS i) t
                WHERE length(word) >= 2)
          SELECT pair, CAST(COUNT(*) AS BIGINT) AS cnt
-         FROM p GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20""",
-    "llm_decontaminate" ->
+         FROM p GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20"""),
+    "llm_decontaminate" -> Op(decontaminate,
       s"""WITH $benchGramsSql
          SELECT doc_id, COUNT(*) AS n_shared_grams, COUNT(*) >= 3 AS contaminated
          FROM corp JOIN bench USING (gram)
-         GROUP BY doc_id ORDER BY doc_id""",
-    "llm_dup_spans" ->
+         GROUP BY doc_id ORDER BY doc_id"""),
+    "llm_dup_spans" -> Op(dupSpans,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
              WHERE len(string_split(text, ' ')) >= 3),
          sh AS (SELECT doc_id,
@@ -726,8 +708,8 @@ object Llm3 {
            round(CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE), 6) AS dup_frac
          FROM sh JOIN dfreq USING (s)
-         GROUP BY 1 ORDER BY 1""",
-    "sample_weighted_mix" ->
+         GROUP BY 1 ORDER BY 1"""),
+    "sample_weighted_mix" -> Op(sampleWeightedMix,
       s"""WITH t AS (
             SELECT source, doc_id,
               CAST(CAST(substring(source, 4, 8) AS INT) % 4 + 1 AS DOUBLE) * 0.05 AS rate
@@ -735,8 +717,8 @@ object Llm3 {
           SELECT source, rate, COUNT(*) AS n_total,
             CAST(SUM(CASE WHEN (${graft.Tables.h48Sql("CAST(doc_id AS VARCHAR)")}) % 10000
               < rate * 10000 THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
-          FROM t GROUP BY source, rate ORDER BY source""",
-    "llm_tfidf_topterms" ->
+          FROM t GROUP BY source, rate ORDER BY source"""),
+    "llm_tfidf_topterms" -> Op(tfidfTopterms,
       """WITH w AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
          tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM w GROUP BY 1, 2),
@@ -752,18 +734,18 @@ object Llm3 {
              ORDER BY tfidf DESC, word) AS rn
            FROM scored WHERE doc_id < 30)
          SELECT doc_id, CAST(rn AS INT) AS rn, word, tfidf
-         FROM rk WHERE rn <= 3 ORDER BY doc_id, rn""",
-    "llm_wordcount_top20" ->
+         FROM rk WHERE rn <= 3 ORDER BY doc_id, rn"""),
+    "llm_wordcount_top20" -> Op(wordcountTop20,
       """SELECT word, COUNT(*) AS n
          FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-         GROUP BY word ORDER BY n DESC, word LIMIT 20""",
-    "llm_pii_redact" ->
+         GROUP BY word ORDER BY n DESC, word LIMIT 20"""),
+    "llm_pii_redact" -> Op(piiRedact,
       """SELECT c_custkey,
          regexp_replace(c_name, '[0-9]', '#', 'g') AS masked_name,
          CAST(length(regexp_replace(c_name, '[^0-9]', '', 'g')) AS INT) AS n_digits,
          substring(md5(c_name), 1, 8) AS name_fp
-         FROM customer ORDER BY c_custkey""",
-    "llm_vocab_nucleus" ->
+         FROM customer ORDER BY c_custkey"""),
+    "llm_vocab_nucleus" -> Op(vocabNucleus,
       """WITH w AS (SELECT unnest(string_split(text, ' ')) AS word
              FROM documents),
          c AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -779,12 +761,12 @@ object Llm3 {
              AS cum_share
          FROM cum, tot
          WHERE 10 * (cum_mass - cnt) < 9 * total
-         ORDER BY rank""",
-    "llm_dedup_clusters" ->
+         ORDER BY rank"""),
+    "llm_dedup_clusters" -> Op(dedupClusters,
       s"""WITH RECURSIVE $dedupClustersCcSql
          SELECT doc_id, cluster,
            COUNT(*) OVER (PARTITION BY cluster) AS cluster_size
-         FROM cc ORDER BY doc_id""",
+         FROM cc ORDER BY doc_id"""),
   )
 
   /** Shared DuckDB CTE chain ending in `cc(doc_id, cluster)` — the

@@ -292,19 +292,9 @@ object Llm4 {
       .orderBy("qid")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_ngram_novelty" -> (ngramNovelty _),
-    "llm_unigram_logprob" -> (unigramLogprob _),
-    "llm_ccnet_ppl_buckets" -> (ccnetPplBuckets _),
-    "llm_stupid_backoff" -> (stupidBackoff _),
-    "llm_pmi_collocations" -> (pmiCollocations _),
-    "llm_temperature_mix" -> (temperatureMix _),
-    "llm_knn_label" -> (knnLabel _),
-  )
 
-
-  val oracles: Map[String, String] = Map(
-    "llm_knn_label" ->
+  val entries: Map[String, Op] = Map(
+    "llm_knn_label" -> Op(knnLabel,
       s"""WITH e AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm
               FROM embeddings),
           scored AS (SELECT q.vec_id AS qid, c.vec_id AS vec_id,
@@ -320,8 +310,8 @@ object Llm4 {
               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY votes DESC, label ASC) AS rk
             FROM votes)
           SELECT qid, label AS pred_label, CAST(votes AS BIGINT) AS votes
-          FROM best WHERE rk = 1 ORDER BY qid""",
-    "llm_ngram_novelty" ->
+          FROM best WHERE rk = 1 ORDER BY qid"""),
+    "llm_ngram_novelty" -> Op(ngramNovelty,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
            base AS (SELECT doc_id, ws, len(ws) AS n FROM d WHERE len(ws) >= 3),
            sh AS (SELECT DISTINCT doc_id,
@@ -334,8 +324,8 @@ object Llm4 {
              AS n_novel,
            ROUND(CAST(SUM(CASE WHEN fo.first_doc = sh.doc_id THEN 1 ELSE 0 END)
              AS DOUBLE) / COUNT(*), 6) AS novelty
-         FROM sh JOIN fo USING (s) GROUP BY 1 ORDER BY 1""",
-    "llm_ccnet_ppl_buckets" ->
+         FROM sh JOIN fo USING (s) GROUP BY 1 ORDER BY 1"""),
+    "llm_ccnet_ppl_buckets" -> Op(ccnetPplBuckets,
       """WITH w AS (SELECT doc_id, lang,
              unnest(string_split(text, ' ')) AS word
            FROM documents),
@@ -358,8 +348,8 @@ object Llm4 {
            round(CAST(SUM(CAST(ppl AS DECIMAL(18,6))) AS DOUBLE)
              / COUNT(ppl), 6) AS mean_ppl,
            MAX(t1) AS cut_head, MAX(t2) AS cut_middle
-         FROM b GROUP BY 1, 2 ORDER BY lang, bucket""",
-    "llm_unigram_logprob" ->
+         FROM b GROUP BY 1, 2 ORDER BY lang, bucket"""),
+    "llm_unigram_logprob" -> Op(unigramLogprob,
       """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
                     FROM documents),
            freq AS (SELECT word, COUNT(*) AS c FROM w GROUP BY 1),
@@ -368,8 +358,8 @@ object Llm4 {
            ROUND(CAST(SUM(CAST(LN(CAST(c AS DOUBLE) / t) AS DECIMAL(18,6)))
              AS DOUBLE) / COUNT(*), 6) AS avg_logprob
          FROM w JOIN freq USING (word) CROSS JOIN tot
-         WHERE doc_id < 100 GROUP BY doc_id ORDER BY doc_id""",
-    "llm_pmi_collocations" ->
+         WHERE doc_id < 100 GROUP BY doc_id ORDER BY doc_id"""),
+    "llm_pmi_collocations" -> Op(pmiCollocations,
       """WITH d AS (SELECT string_split(text, ' ') AS ws FROM documents
            WHERE len(string_split(text, ' ')) >= 2),
          pairs AS (SELECT ws[i] AS a, ws[i+1] AS b
@@ -386,8 +376,8 @@ object Llm4 {
              / (CAST(cl.cl AS DOUBLE) * CAST(cr.cr AS DOUBLE))), 6) AS pmi
          FROM cab JOIN cl USING (a) JOIN cr USING (b) CROSS JOIN n
          WHERE cab.cab >= 5
-         ORDER BY pmi DESC, bigram LIMIT 20""",
-    "llm_stupid_backoff" ->
+         ORDER BY pmi DESC, bigram LIMIT 20"""),
+    "llm_stupid_backoff" -> Op(stupidBackoff,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
            tr AS (SELECT ws FROM d WHERE doc_id >= 100),
            w AS (SELECT unnest(ws) AS word FROM tr),
@@ -440,14 +430,14 @@ object Llm4 {
              AS BIGINT) AS n_bo_uni,
            ROUND(CAST(SUM(CAST(s AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6)
              AS avg_logprob
-         FROM sc GROUP BY doc_id ORDER BY doc_id""",
-    "llm_temperature_mix" ->
+         FROM sc GROUP BY doc_id ORDER BY doc_id"""),
+    "llm_temperature_mix" -> Op(temperatureMix,
       """WITH s AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1),
            w AS (SELECT source, n_docs, SQRT(CAST(n_docs AS DOUBLE)) AS wt FROM s),
            tot AS (SELECT CAST(SUM(CAST(wt AS DECIMAL(18,6))) AS DOUBLE) AS tw FROM w)
          SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
            ROUND(wt / tw, 6) AS p,
            CAST(ROUND(wt / tw * 1000, 0) AS BIGINT) AS expected_docs
-         FROM w CROSS JOIN tot ORDER BY source""",
+         FROM w CROSS JOIN tot ORDER BY source"""),
   )
 }

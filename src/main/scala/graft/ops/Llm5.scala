@@ -215,13 +215,6 @@ object Llm5 {
       .orderBy("pair_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_pq_encode" -> (pqEncode _),
-    "llm_pq_ann" -> (pqAnn _),
-    "llm_ivfpq_ann" -> (ivfpqAnn _),
-    "llm_random_projection" -> (randomProjection _),
-  )
-
   /** DuckDB twins: same subspace slicing, same left-to-right double
     * arithmetic (`snn - 2*dot + cnn`), same 6-dp rounding before
     * argmin/rank, same decimal-quantized ADC sum. */
@@ -277,8 +270,8 @@ object Llm5 {
             FROM q2 CROSS JOIN centn c),
           probed AS (SELECT qid, label AS cell FROM probed0 WHERE rn = 1)"""
 
-  val oracles: Map[String, String] = Map(
-    "llm_random_projection" -> {
+  val entries: Map[String, Op] = Map(
+    "llm_random_projection" -> Op(randomProjection, {
       val s = "((" + graft.Tables.h48Sql(
         "CAST(i AS VARCHAR) || ':' || CAST(j AS VARCHAR)") +
         ") % 2) * 2 - 1"
@@ -306,22 +299,22 @@ object Llm5 {
            CASE WHEN d2_orig > 0 THEN round(d2_proj / d2_orig, 6) END
              BETWEEN 0.3 AND 2.2 AS in_band
          FROM d ORDER BY pair_id"""
-    },
-    "llm_pq_encode" ->
+    }),
+    "llm_pq_encode" -> Op(pqEncode,
       s"""WITH $subSql
           SELECT label, COUNT(DISTINCT vec_id) AS n_vecs,
             round(CAST(SUM(CAST(d2 AS DECIMAL(18,6))) AS DOUBLE)
               / COUNT(DISTINCT vec_id), 6) AS avg_recon_d2,
             COUNT(DISTINCT s * $K + code) AS n_codes_used
-          FROM codes GROUP BY label ORDER BY label""",
-    "llm_pq_ann" ->
+          FROM codes GROUP BY label ORDER BY label"""),
+    "llm_pq_ann" -> Op(pqAnn,
       s"""WITH $subSql,
           $adcSql,
           ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
             ORDER BY adc ASC, vec_id ASC) AS rn FROM adc)
           SELECT qid, vec_id, adc, CAST(rn AS INT) AS rn
-          FROM ranked WHERE rn <= 3 ORDER BY qid, rn""",
-    "llm_ivfpq_ann" ->
+          FROM ranked WHERE rn <= 3 ORDER BY qid, rn"""),
+    "llm_ivfpq_ann" -> Op(ivfpqAnn,
       s"""WITH $subSql,
           $ivfProbeSql,
           $lutSql,
@@ -334,6 +327,6 @@ object Llm5 {
           ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
             ORDER BY adc ASC, vec_id ASC) AS rn FROM adc)
           SELECT qid, cell, vec_id, adc, CAST(rn AS INT) AS rn
-          FROM ranked WHERE rn <= 3 ORDER BY qid, rn""",
+          FROM ranked WHERE rn <= 3 ORDER BY qid, rn"""),
   )
 }

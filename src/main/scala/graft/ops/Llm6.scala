@@ -313,21 +313,12 @@ object Llm6 {
 
   // ------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_audio_energy" -> (mmAudioEnergy _),
-    "llm_bloom_decontaminate" -> (bloomDecontaminate _),
-    "llm_cms_heavy_hitters" -> (cmsHeavyHitters _),
-    "agg_kmv_setops" -> (kmvSetops _),
-    "llm_text_normalize" -> (textNormalize _),
-    "mm_audio_decode" -> (mmAudioDecode _),
-  )
-
   private def h48S(e: String): String = graft.Tables.h48Sql(e)
 
-  val oracles: Map[String, String] = Map(
+  val entries: Map[String, Op] = Map(
     // exact SQL — the bloom prefilter is a physical optimization whose
     // false positives the exact confirm join removes
-    "llm_bloom_decontaminate" ->
+    "llm_bloom_decontaminate" -> Op(bloomDecontaminate,
       s"""WITH ${Llm3.benchGramsSql},
          shared AS (SELECT doc_id, COUNT(*) AS n FROM corp
            JOIN bench USING (gram) GROUP BY 1),
@@ -337,8 +328,8 @@ object Llm6 {
          SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CASE WHEN cont THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
            CAST(SUM(CASE WHEN cont THEN 0 ELSE 1 END) AS BIGINT) AS n_clean
-         FROM flags GROUP BY source ORDER BY source""",
-    "llm_cms_heavy_hitters" -> {
+         FROM flags GROUP BY source ORDER BY source"""),
+    "llm_cms_heavy_hitters" -> Op(cmsHeavyHitters, {
       val w = CmsWidth
       val cell = graft.functions.CountMin.cellSql("h", "j", w)
       s"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token
@@ -357,8 +348,8 @@ object Llm6 {
              CAST(e.n_cms - t.n_exact AS BIGINT) AS overcount
            FROM top t JOIN est e USING (token)
            ORDER BY n_exact DESC, token"""
-    },
-    "agg_kmv_setops" -> {
+    }),
+    "agg_kmv_setops" -> Op(kmvSetops, {
       val k = KmvK
       val h = h48S("CAST(o_custkey AS VARCHAR)")
       import graft.functions.Kmv.estimateDuck
@@ -411,8 +402,8 @@ object Llm6 {
              * (est.n_union_kmv - ex.n_union_exact) * ${k - 2}
              <= 9 * ex.n_union_exact * ex.n_union_exact AS union_in_3rsd
          FROM ex, est"""
-    },
-    "llm_text_normalize" -> {
+    }),
+    "llm_text_normalize" -> Op(textNormalize, {
       val h = h48S("norm")
       val hOrig = h48S("text")
       s"""WITH m AS (SELECT doc_id, text,
@@ -443,8 +434,8 @@ object Llm6 {
            CAST(SUM($h) AS BIGINT) = CAST(SUM($hOrig) AS BIGINT)
              AS h_sum_match
          FROM n"""
-    },
-    "mm_audio_energy" ->
+    }),
+    "mm_audio_energy" -> Op(mmAudioEnergy,
       """WITH d AS (SELECT doc_id, 256 + (n_chars % 512) AS n,
              (doc_id % 37) + 3 AS st
            FROM documents),
@@ -467,8 +458,8 @@ object Llm6 {
          SELECT agg.doc_id, n_windows, CAST(pk.w AS BIGINT) AS peak_window,
            pk.rms AS peak_rms, mean_rms
          FROM agg JOIN pk ON agg.doc_id = pk.doc_id AND pk.rn = 1
-         ORDER BY agg.doc_id""",
-    "mm_audio_decode" ->
+         ORDER BY agg.doc_id"""),
+    "mm_audio_decode" -> Op(mmAudioDecode,
       """WITH d AS (SELECT doc_id, 256 + (n_chars % 512) AS n,
              8000 + 1000 * (doc_id % 3) AS rate,
              (doc_id % 37) + 3 AS st
@@ -487,7 +478,7 @@ object Llm6 {
            CAST(a.peak AS INT) AS peak,
            a.sabs / d.n AS mean_abs,
            sqrt(a.ssq / d.n) AS rms
-         FROM d JOIN agg a USING (doc_id) ORDER BY d.doc_id""",
+         FROM d JOIN agg a USING (doc_id) ORDER BY d.doc_id"""),
   )
 }
 

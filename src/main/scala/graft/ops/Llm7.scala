@@ -268,14 +268,6 @@ object Llm7 {
       .limit(20)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_inverted_index" -> (invertedIndex _),
-    "llm_bm25_topk" -> (bm25Topk _),
-    "llm_hybrid_rrf" -> (hybridRrf _),
-    "llm_mmr_rerank" -> (mmrRerank _),
-    "llm_dsir_weights" -> (dsirWeights _),
-  )
-
   /** Shared oracle CTE text for the fixed-point BM25 leg; `tfWhere`
     * optionally excludes the probe doc from retrieval (never from df). */
   private def bm25Sql(qCte: String, tfWhere: String): String =
@@ -295,15 +287,12 @@ object Llm7 {
            CAST(SUM((a // b)*1000 + ((a % b)*1000) // b) AS BIGINT) AS milli
          FROM sc GROUP BY 1)"""
 
-  private def dotQSql =
-    "list_sum(list_transform(range(1,65), i -> " +
-      "CAST(c.embedding[i] AS DOUBLE) * CAST(qe.embedding[i] AS DOUBLE)))"
-  private def normSql(a: String) =
-    s"sqrt(list_sum(list_transform(range(1,65), i -> " +
-      s"CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE))))"
+  /** Cosine of candidate `c` to the query `qe`, rounded to 6 dp. */
+  private val cosQSql =
+    s"round(${dotSql("c.embedding", "qe.embedding")} / (qe.nrm * c.nrm), 6)"
 
-  val oracles: Map[String, String] = Map(
-    "llm_inverted_index" ->
+  val entries: Map[String, Op] = Map(
+    "llm_inverted_index" -> Op(invertedIndex,
       """WITH tf AS (
            SELECT term, doc_id, COUNT(*) AS tf FROM (
              SELECT doc_id, unnest(string_split(text, ' ')) AS term
@@ -316,14 +305,14 @@ object Llm7 {
                ',' ORDER BY doc_id) AS postings
            FROM tf GROUP BY 1)
          SELECT term, df, ctf, postings FROM idx
-         ORDER BY ctf DESC, term LIMIT 20""",
-    "llm_bm25_topk" -> (
+         ORDER BY ctf DESC, term LIMIT 20"""),
+    "llm_bm25_topk" -> Op(bm25Topk,
       "WITH " + bm25Sql(
         "q AS (SELECT unnest(['window','merge','stream','dup']) AS term)", "") +
       """
        SELECT doc_id, n_terms, milli AS bm25_milli
        FROM bm ORDER BY bm25_milli DESC, doc_id LIMIT 10"""),
-    "llm_hybrid_rrf" -> (
+    "llm_hybrid_rrf" -> Op(hybridRrf,
       "WITH " + bm25Sql(
         """qt AS (SELECT DISTINCT unnest(string_split(text,' ')) AS term
              FROM documents WHERE doc_id = 0),
@@ -336,7 +325,7 @@ object Llm7 {
        e AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm FROM embeddings),
        qe AS (SELECT embedding, nrm FROM e WHERE vec_id = 0),
        semr AS (SELECT c.vec_id AS doc_id,
-           ROW_NUMBER() OVER (ORDER BY round($dotQSql / (qe.nrm * c.nrm), 6) DESC,
+           ROW_NUMBER() OVER (ORDER BY $cosQSql DESC,
              c.vec_id) AS sem_rank
          FROM e c CROSS JOIN qe WHERE c.vec_id <> 0),
        sem AS (SELECT doc_id, sem_rank FROM semr WHERE sem_rank <= 20),
@@ -347,13 +336,10 @@ object Llm7 {
          CAST(COALESCE(1000000 // (60 + lex_rank), 0)
             + COALESCE(1000000 // (60 + sem_rank), 0) AS BIGINT) AS rrf_micro
        FROM f ORDER BY rrf_micro DESC, doc_id LIMIT 10"""),
-    "llm_mmr_rerank" -> {
+    "llm_mmr_rerank" -> Op(mmrRerank, {
       // the greedy selection unrolled: step s picks the argmax of
       // 0.5·rel − 0.5·max(sim to picked_{s−1}) over the un-picked pool —
       // the same loop the driver runs, replayed as k−1 mechanical CTEs
-      val dotCE =
-        "list_sum(list_transform(range(1,65), i -> " +
-          "CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))"
       val steps = (2 to MmrK).map { s =>
         s"""st$s AS (SELECT $s AS rank, c.vec_id, c.rel,
              0.5*c.rel - 0.5*(SELECT MAX(p.sim) FROM pair p
@@ -370,12 +356,12 @@ object Llm7 {
              FROM embeddings),
          qe AS (SELECT embedding, nrm FROM e WHERE vec_id = 0),
          cand AS (SELECT c.vec_id,
-             round($dotQSql / (qe.nrm * c.nrm), 6) AS rel
+             $cosQSql AS rel
            FROM e c CROSS JOIN qe WHERE c.vec_id <> 0
            ORDER BY rel DESC, c.vec_id LIMIT $MmrPool),
          ce AS (SELECT c.vec_id, e.embedding, e.nrm FROM cand c JOIN e USING (vec_id)),
          pair AS (SELECT a.vec_id AS va, b.vec_id AS vb,
-             round($dotCE / (a.nrm * b.nrm), 6) AS sim
+             round(${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 6) AS sim
            FROM ce a JOIN ce b ON a.vec_id <> b.vec_id),
          st1 AS (SELECT 1 AS rank, vec_id, rel, 0.5*rel - 0.5*0 AS mmr
            FROM cand ORDER BY rel DESC, vec_id LIMIT 1),
@@ -383,8 +369,8 @@ object Llm7 {
          $steps
          SELECT CAST(rank AS INT) AS rank, vec_id, rel AS rel_r, mmr AS mmr_r
          FROM ($union) ORDER BY rank"""
-    },
-    "llm_dsir_weights" ->
+    }),
+    "llm_dsir_weights" -> Op(dsirWeights,
       """WITH tok AS (SELECT doc_id, source,
              unnest(string_split(text, ' ')) AS w FROM documents),
          v AS (SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS nv FROM tok),
@@ -408,6 +394,6 @@ object Llm7 {
        SELECT doc_id, source, CAST(COUNT(*) AS BIGINT) AS n_tokens,
          round(CAST(SUM(CAST(lr AS DECIMAL(18,6))) AS DOUBLE), 6) AS log_ratio_r
        FROM sc GROUP BY doc_id, source
-       ORDER BY log_ratio_r DESC, doc_id LIMIT 20""",
+       ORDER BY log_ratio_r DESC, doc_id LIMIT 20"""),
   )
 }

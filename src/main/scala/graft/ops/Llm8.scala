@@ -411,22 +411,9 @@ object Llm8 {
       .limit(20)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_containment_dedup" -> (containmentDedup _),
-    "llm_lexical_diversity" -> (lexicalDiversity _),
-    "llm_pii_scan" -> (piiScan _),
-    "llm_vocab_coverage" -> (vocabCoverage _),
-    "llm_span_corrupt" -> (spanCorrupt _),
-    "llm_bleu_overlap" -> (bleuOverlap _),
-    "llm_rake_keywords" -> (rakeKeywords _),
-    "llm_zipf_slope" -> (zipfSlope _),
-    "llm_hard_negatives" -> (hardNegatives _),
-    "llm_dedup_keep_best" -> (dedupKeepBest _),
-  )
 
-
-  val oracles: Map[String, String] = Map(
-    "llm_containment_dedup" ->
+  val entries: Map[String, Op] = Map(
+    "llm_containment_dedup" -> Op(containmentDedup,
       """WITH w AS (SELECT doc_id,
              unnest(list_distinct(string_split(text, ' '))) AS word
            FROM documents WHERE doc_id < 100),
@@ -448,8 +435,8 @@ object Llm8 {
                / CAST(a.sz + b.sz - inter AS DOUBLE), 6) AS jaccard
            FROM p JOIN sz a ON d1 = a.doc_id JOIN sz b ON d2 = b.doc_id)
          SELECT *, containment >= 0.9 AND jaccard < 0.9 AS is_partial_copy
-         FROM j ORDER BY containment DESC, d1, d2 LIMIT 20""",
-    "llm_lexical_diversity" ->
+         FROM j ORDER BY containment DESC, d1, d2 LIMIT 20"""),
+    "llm_lexical_diversity" -> Op(lexicalDiversity,
       """WITH w AS (SELECT lang, unnest(string_split(text, ' ')) AS word
            FROM documents),
          wc AS (SELECT lang, word, CAST(COUNT(*) AS BIGINT) AS c
@@ -466,8 +453,8 @@ object Llm8 {
              / round(ln(CAST(n_tokens AS DOUBLE)), 6), 6) AS herdan_c,
            round(CAST(v_types AS DOUBLE) / sqrt(CAST(n_tokens AS DOUBLE)), 6)
              AS guiraud_r
-         FROM a ORDER BY lang""",
-    "llm_pii_scan" ->
+         FROM a ORDER BY lang"""),
+    "llm_pii_scan" -> Op(piiScan,
       """WITH planted AS (SELECT doc_id,
            text || CASE WHEN doc_id % 7 = 0
                THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
@@ -491,8 +478,8 @@ object Llm8 {
            CAST(SUM(planted) AS BIGINT) AS n_planted,
            round(CAST(SUM(CASE WHEN hits > 0 AND planted = 1 THEN 1 ELSE 0 END)
                AS DOUBLE) / CAST(SUM(planted) AS DOUBLE), 6) AS recall
-         FROM s GROUP BY 1 ORDER BY 1""",
-    "llm_vocab_coverage" ->
+         FROM s GROUP BY 1 ORDER BY 1"""),
+    "llm_vocab_coverage" -> Op(vocabCoverage,
       s"""WITH toks AS (SELECT lang, u.word FROM documents,
              LATERAL (SELECT unnest(string_split(text, ' ')) AS word) u),
          v AS (SELECT word FROM (SELECT word, COUNT(*) AS cnt FROM toks
@@ -505,8 +492,8 @@ object Llm8 {
            CAST(n_tokens - n_covered AS BIGINT) AS n_oov,
            round(CAST(n_covered AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6)
              AS coverage
-         FROM f ORDER BY lang""",
-    "llm_span_corrupt" -> {
+         FROM f ORDER BY lang"""),
+    "llm_span_corrupt" -> Op(spanCorrupt, {
       val h = h48Sql("'span:' || CAST(doc_id AS VARCHAR)")
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws,
              CAST(len(string_split(text, ' ')) AS INT) AS n
@@ -519,11 +506,11 @@ object Llm8 {
            array_to_string(['<X>'] || list_slice(ws, s, s + ${SpanLen - 1}), ' ')
              AS target
          FROM f ORDER BY doc_id"""
-    },
-    "llm_dedup_keep_best" -> {
+    }),
+    "llm_dedup_keep_best" -> Op(dedupKeepBest, {
       // compose the committed cluster oracle verbatim as a subquery so
       // the two keys can never drift
-      val clusters = Llm3.oracles("llm_dedup_clusters")
+      val clusters = Llm3.entries("llm_dedup_clusters").oracle
       s"""WITH clusters AS ($clusters),
          q AS (SELECT doc_id,
              CAST(len(string_split(text,' ')) AS DOUBLE) AS nw,
@@ -542,8 +529,8 @@ object Llm8 {
          SELECT cluster, cluster_size, doc_id AS kept_doc, score AS kept_score,
            CAST(cluster_size - 1 AS BIGINT) AS n_dropped
          FROM ranked WHERE rk = 1 ORDER BY cluster"""
-    },
-    "llm_hard_negatives" ->
+    }),
+    "llm_hard_negatives" -> Op(hardNegatives,
       s"""WITH e AS (SELECT vec_id, label, embedding,
              ${normSql("embedding")} AS nrm FROM embeddings),
          scored AS (SELECT q.vec_id AS qid, q.label AS q_label,
@@ -554,8 +541,8 @@ object Llm8 {
          ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
              ORDER BY cos_r DESC, vec_id ASC) AS rn FROM scored)
          SELECT qid, q_label, vec_id, neg_label, cos_r, CAST(rn AS INT) AS rn
-         FROM ranked WHERE rn <= 5 ORDER BY qid, rn""",
-    "llm_zipf_slope" ->
+         FROM ranked WHERE rn <= 5 ORDER BY qid, rn"""),
+    "llm_zipf_slope" -> Op(zipfSlope,
       s"""WITH cnts AS (SELECT u.word, CAST(COUNT(*) AS BIGINT) AS cnt
            FROM documents, LATERAL (SELECT unnest(string_split(text, ' '))
              AS word) u
@@ -575,8 +562,8 @@ object Llm8 {
              CAST(n AS DOUBLE), 6) AS intercept,
            round(((n * sxy - sx * sy) * (n * sxy - sx * sy)) /
              ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
-         FROM s""",
-    "llm_bleu_overlap" -> {
+         FROM s"""),
+    "llm_bleu_overlap" -> Op(bleuOverlap, {
       def clipped(c: String, r: String) =
         s"COALESCE(list_sum(list_transform(list_distinct($c), w -> " +
           s"LEAST(len(list_filter($c, x -> x = w)), len(list_filter($r, x -> x = w))))), 0)"
@@ -603,8 +590,8 @@ object Llm8 {
            CASE WHEN clip1 = 0 OR clip2 = 0 THEN 0.0
              ELSE round(bp0 * sqrt(p1 * p2), 6) END AS bleu2
          FROM m ORDER BY bleu2 DESC, ref_id ASC LIMIT 20"""
-    },
-    "llm_rake_keywords" -> {
+    }),
+    "llm_rake_keywords" -> Op(rakeKeywords, {
       val stop = RakeStop.map(s => s"'$s'").mkString(", ")
       s"""WITH words AS (SELECT doc_id, i.pos, string_split(text, ' ')[i.pos] AS w
            FROM documents,
@@ -633,6 +620,6 @@ object Llm8 {
            CAST(n_word_occ // len AS BIGINT) AS n_occur,
            round(score0 / CAST(n_word_occ // len AS DOUBLE), 6) AS score
          FROM psc ORDER BY score DESC, phrase ASC LIMIT 20"""
-    },
+    }),
   )
 }

@@ -587,30 +587,8 @@ object Llm9 {
         coalesce(col("mcnemar_chi2") > 3.841, lit(false)).as("significant"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_filter_agreement" -> (filterAgreement _),
-    "stats_mcnemar_filters" -> (mcnemarFilters _),
-    "llm_embed_anisotropy" -> (embedAnisotropy _),
-    "llm_matryoshka_recall" -> (matryoshkaRecall _),
-    "llm_gopher_rules" -> (gopherRules _),
-    "llm_bigram_entropy" -> (bigramEntropy _),
-    "llm_kneser_ney_ppl" -> (kneserNeyPpl _),
-    "llm_dataset_card" -> (datasetCard _),
-    "llm_tokenizer_fertility" -> (tokenizerFertility _),
-    "llm_readability" -> (readability _),
-    "llm_cdc_chunks" -> (cdcChunks _),
-    "ml_feature_hashing" -> (featureHashing _),
-    "ml_ols_multi" -> (olsMulti _),
-  )
-
-
-  private def dotNSql(a: String, b: String, n: Int): String =
-    s"list_sum(list_transform(range(1,${n + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-  private def normNSql(a: String, n: Int): String =
-    s"sqrt(list_sum(list_transform(range(1,${n + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE))))"
-
-  val oracles: Map[String, String] = Map(
-    "stats_mcnemar_filters" ->
+  val entries: Map[String, Op] = Map(
+    "stats_mcnemar_filters" -> Op(mcnemarFilters,
       s"""WITH $filterFlagsSql,
          cm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(CASE WHEN g AND NOT q THEN 1 ELSE 0 END) AS BIGINT)
@@ -628,8 +606,8 @@ object Llm9 {
            FROM cm WHERE n_docs >= 1)
          SELECT n_docs, gopher_only, quality_only, mcnemar_chi2,
            COALESCE(mcnemar_chi2 > 3.841, FALSE) AS significant
-         FROM t""",
-    "llm_filter_agreement" ->
+         FROM t"""),
+    "llm_filter_agreement" -> Op(filterAgreement,
       s"""WITH $filterFlagsSql,
          cm AS (SELECT
              CAST(SUM(CASE WHEN g AND q THEN 1 ELSE 0 END) AS BIGINT)
@@ -658,10 +636,10 @@ object Llm9 {
            round(CAST(both_keep AS DOUBLE) /
              CAST(both_keep + gopher_only + quality_only AS DOUBLE), 6)
              AS jaccard_keep
-         FROM t""",
-    "llm_embed_anisotropy" ->
+         FROM t"""),
+    "llm_embed_anisotropy" -> Op(embedAnisotropy,
       s"""WITH x AS (SELECT embedding AS emb,
-             ${normNSql("embedding", 64)} AS nrm
+             ${normSql("embedding", 64)} AS nrm
            FROM embeddings),
          xh AS (SELECT list_transform(range(1, 65),
              i -> round(CAST(emb[i] AS DOUBLE) / nrm, 6)) AS eh
@@ -673,15 +651,15 @@ object Llm9 {
          s2 AS (SELECT round(${dsumSql("round(sd * sd, 6)")}, 6) AS sum_sq
            FROM ds),
          r AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             round(${dsumSql(s"round(${dotNSql("eh", "eh", 64)}, 6)")}, 6)
+             round(${dsumSql(s"round(${dotSql("eh", "eh", 64)}, 6)")}, 6)
                AS qsum
            FROM xh)
          SELECT n AS n_vectors,
            round(qsum / CAST(n AS DOUBLE), 6) AS mean_sq_norm,
            round((sum_sq - qsum) / CAST(n * (n - 1) AS DOUBLE), 6)
              AS mean_pairwise_cosine
-         FROM r, s2 WHERE n >= 2""",
-    "llm_dataset_card" ->
+         FROM r, s2 WHERE n >= 2"""),
+    "llm_dataset_card" -> Op(datasetCard,
       s"""WITH ${graft.ops.Llm10.perDocSpansSql},
          d AS (SELECT doc_id, lang, source, text,
              CAST(n_chars AS BIGINT) AS nc,
@@ -707,8 +685,8 @@ object Llm9 {
            substr_dup_words,
            round(CAST(substr_dup_words AS DOUBLE)
              / CAST(n_tokens AS DOUBLE), 6) AS substr_dup_rate
-         FROM card ORDER BY lang""",
-    "llm_tokenizer_fertility" ->
+         FROM card ORDER BY lang"""),
+    "llm_tokenizer_fertility" -> Op(tokenizerFertility,
       """WITH d AS (SELECT lang,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws,
              CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT)
@@ -729,8 +707,8 @@ object Llm9 {
              AS fertility_bpe,
            round(CAST(sum_chars AS DOUBLE) / CAST(sum_re AS DOUBLE), 6)
              AS chars_per_token
-         FROM s ORDER BY lang""",
-    "llm_kneser_ney_ppl" ->
+         FROM s ORDER BY lang"""),
+    "llm_kneser_ney_ppl" -> Op(kneserNeyPpl,
       """WITH bgd AS (SELECT doc_id, string_split(text, ' ') AS ws
              FROM documents WHERE len(string_split(text, ' ')) >= 2),
          bg AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
@@ -756,16 +734,16 @@ object Llm9 {
                / CAST(COUNT(*) AS DOUBLE), 6) AS mean_lnp
            FROM scored GROUP BY 1)
          SELECT doc_id, n_bigrams, mean_lnp, round(exp(-mean_lnp), 6) AS ppl
-         FROM perdoc ORDER BY ppl DESC, doc_id LIMIT 20""",
-    "llm_matryoshka_recall" ->
+         FROM perdoc ORDER BY ppl DESC, doc_id LIMIT 20"""),
+    "llm_matryoshka_recall" -> Op(matryoshkaRecall,
       s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
            WHERE vec_id < 10),
          p AS (SELECT q.qid, c.vec_id,
-             round(${dotNSql("q.qe", "c.embedding", 64)}
-               / (${normNSql("q.qe", 64)} * ${normNSql("c.embedding", 64)}),
+             round(${dotSql("q.qe", "c.embedding", 64)}
+               / (${normSql("q.qe", 64)} * ${normSql("c.embedding", 64)}),
                6) AS cos_full,
-             round(${dotNSql("q.qe", "c.embedding", 16)}
-               / (${normNSql("q.qe", 16)} * ${normNSql("c.embedding", 16)}),
+             round(${dotSql("q.qe", "c.embedding", 16)}
+               / (${normSql("q.qe", 16)} * ${normSql("c.embedding", 16)}),
                6) AS cos_trunc
            FROM q JOIN embeddings c ON q.qid != c.vec_id),
          tf AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
@@ -785,8 +763,8 @@ object Llm9 {
            round(CAST(n_overlap AS DOUBLE) / 10.0, 6) AS recall_at_10,
            round(CAST(SUM(n_overlap) OVER () AS DOUBLE)
              / CAST(COUNT(*) OVER () * 10 AS DOUBLE), 6) AS mean_recall
-         FROM ov ORDER BY qid""",
-    "llm_gopher_rules" ->
+         FROM ov ORDER BY qid"""),
+    "llm_gopher_rules" -> Op(gopherRules,
       """WITH f AS (SELECT lang,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS nw,
              n_chars,
@@ -817,8 +795,8 @@ object Llm9 {
            round(CAST(SUM(CASE WHEN ok_words AND ok_wordlen AND ok_stopwords
                AND ok_ttr THEN 1 ELSE 0 END) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE), 6) AS keep_rate
-         FROM g GROUP BY lang ORDER BY lang""",
-    "llm_readability" ->
+         FROM g GROUP BY lang ORDER BY lang"""),
+    "llm_readability" -> Op(readability,
       s"""WITH perdoc AS (SELECT lang,
              round(206.835
                - 1.015 * round(CAST(len(string_split(text, ' ')) AS DOUBLE)
@@ -840,8 +818,8 @@ object Llm9 {
            round(${dsumSql("grade")} / COUNT(grade), 6) AS avg_fk_grade,
            round(MIN(grade), 6) AS min_grade,
            round(MAX(grade), 6) AS max_grade
-         FROM perdoc GROUP BY 1 ORDER BY 1""",
-    "llm_bigram_entropy" ->
+         FROM perdoc GROUP BY 1 ORDER BY 1"""),
+    "llm_bigram_entropy" -> Op(bigramEntropy,
       """WITH w0 AS (SELECT doc_id, lang,
              CAST(unnest(range(0, len(string_split(text, ' ')))) AS BIGINT)
                AS pos,
@@ -868,8 +846,8 @@ object Llm9 {
            FROM terms GROUP BY 1, 2)
          SELECT lang, t AS n_bigrams, n_distinct_bigrams, h_cond,
            round(exp(h_cond), 6) AS perplexity
-         FROM agg ORDER BY lang""",
-    "llm_cdc_chunks" ->
+         FROM agg ORDER BY lang"""),
+    "llm_cdc_chunks" -> Op(cdcChunks,
       s"""WITH w0 AS (SELECT doc_id,
              CAST(unnest(range(0, len(string_split(text, ' ')))) AS BIGINT)
                AS pos,
@@ -897,8 +875,8 @@ object Llm9 {
            round(CAST(n_chunks - n_distinct AS DOUBLE)
              / CAST(n_chunks AS DOUBLE), 6) AS dup_ratio
          FROM g WHERE n_occ >= 2
-         ORDER BY n_occ DESC, chunk_text LIMIT 15""",
-    "ml_feature_hashing" ->
+         ORDER BY n_occ DESC, chunk_text LIMIT 15"""),
+    "ml_feature_hashing" -> Op(featureHashing,
       s"""WITH w AS (SELECT doc_id, word, ${h48Sql("word")} % 64 AS bucket
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
              FROM documents)),
@@ -909,8 +887,8 @@ object Llm9 {
            FROM w GROUP BY 1)
          SELECT doc_id, pd.bucket, cnt, n_distinct_words
          FROM pd JOIN ld ON pd.bucket = ld.bucket
-         ORDER BY doc_id, pd.bucket""",
-    "ml_ols_multi" ->
+         ORDER BY doc_id, pd.bucket"""),
+    "ml_ols_multi" -> Op(olsMulti,
       """WITH j AS (SELECT CAST(l_quantity AS BIGINT) AS x1,
              CAST(round(p_retailprice * 100, 0) AS BIGINT) AS x2,
              CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS y
@@ -944,6 +922,6 @@ object Llm9 {
            round(bet1 / 100.0, 6) AS beta_quantity,
            round(bet2, 6) AS beta_retailprice,
            round((bet1 * b1 + bet2 * b2) / sst, 6) AS r2
-         FROM b""",
+         FROM b"""),
   )
 }

@@ -942,30 +942,6 @@ object Ml {
       .orderBy("dim")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ml_feature_drift" -> (featureDrift _),
-    "ml_gains_table" -> (gainsTable _),
-    "ml_davies_bouldin" -> (daviesBouldin _),
-    "ml_kfold_cv" -> (kfoldCv _),
-    "ml_learning_curve" -> (learningCurve _),
-    "ml_feature_stats" -> (featureStats _),
-    "ml_threshold_sweep" -> (thresholdSweep _),
-    "ml_avg_precision" -> (avgPrecision _),
-    "ml_pca_power" -> (pcaPower _),
-    "ml_auc_roc" -> (aucRoc _),
-    "ml_average_precision" -> (averagePrecision _),
-    "ml_calibration_bins" -> (calibrationBins _),
-    "ml_cohens_kappa" -> (cohensKappa _),
-    "ml_ndcg" -> (ndcg _),
-    "ml_farthest_first" -> (farthestFirstInit _),
-    "ml_brier_decomposition" -> (brierDecomposition _),
-    "ml_chi2_terms" -> (chi2Terms _),
-    "ml_naive_bayes" -> (naiveBayes _),
-    "ml_gini_split" -> (giniSplit _),
-    "ml_logreg_gradient" -> (logregGradient _),
-    "llm_silhouette" -> (silhouette _),
-  )
-
   private val Dim = 64
 
   /** DuckDB twin of [[scoredDocs]] (shared CTE text for the eval rows). */
@@ -978,8 +954,8 @@ object Ml {
            6) AS s
        FROM documents)"""
 
-  val oracles: Map[String, String] = Map(
-    "ml_feature_drift" ->
+  val entries: Map[String, Op] = Map(
+    "ml_feature_drift" -> Op(featureDrift,
       """WITH ex AS (SELECT vec_id % 2 AS half,
              CAST(unnest(range(0, len(embedding))) AS INT) AS dim,
              CAST(unnest(embedding) AS DOUBLE) AS x
@@ -1008,8 +984,8 @@ object Ml {
                AS psi
            FROM terms GROUP BY 1, 2, 3)
          SELECT dim, t0 AS n_train, t1 AS n_serve, psi, psi > 0.1 AS drifted
-         FROM agg ORDER BY dim""",
-    "ml_gains_table" ->
+         FROM agg ORDER BY dim"""),
+    "ml_gains_table" -> Op(gainsTable,
       s"""WITH $scoredSql,
          bys AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS c,
              CAST(SUM(y) AS BIGINT) AS pos
@@ -1038,8 +1014,8 @@ object Ml {
            round(pos_at_depth / CAST(p AS DOUBLE), 6) AS gain,
            round(round(pos_at_depth / CAST(p AS DOUBLE), 6) * 10.0
              / CAST(decile AS DOUBLE), 6) AS lift
-         FROM j ORDER BY decile""",
-    "ml_davies_bouldin" ->
+         FROM j ORDER BY decile"""),
+    "ml_davies_bouldin" -> Op(daviesBouldin,
       s"""WITH ex AS (SELECT vec_id, label,
              CAST(unnest(range(0, len(embedding))) AS INT) AS dim,
              CAST(unnest(embedding) AS DOUBLE) AS x
@@ -1069,8 +1045,8 @@ object Ml {
              round(CAST(SUM(CAST(r_max AS DECIMAL(18,6))) OVER () AS DOUBLE)
                / CAST(COUNT(*) OVER () AS DOUBLE), 6) AS db_index
            FROM sigma JOIN peri ON sigma.label = peri.label)
-         SELECT * FROM f ORDER BY label""",
-    "ml_learning_curve" -> {
+         SELECT * FROM f ORDER BY label"""),
+    "ml_learning_curve" -> Op(learningCurve, {
       val sseOf = (n: String, sx: String, sxx: String, sy: String,
           sxy: String, syy: String) =>
         s"""($syy - 2.0 * alpha * $sy - 2.0 * beta * $sxy
@@ -1129,8 +1105,8 @@ object Ml {
              "CAST(sxx_h AS DOUBLE)", "sy_h", "sxy_h", "syy_h")}
              / CAST(n_h AS DOUBLE)), 6) AS rmse_test
          FROM ab ORDER BY frac_pct"""
-    },
-    "ml_kfold_cv" ->
+    }),
+    "ml_kfold_cv" -> Op(kfoldCv,
       s"""WITH base AS (SELECT o_totalprice AS y,
              ${graft.Tables.h48Sql("CAST(o_orderkey AS VARCHAR)")} % 5 AS fold
            FROM orders),
@@ -1153,8 +1129,8 @@ object Ml {
            GROUP BY 1, 2, 3)
          SELECT fold, n_test, train_mean,
            round(sqrt(ssq / CAST(n_test AS DOUBLE)), 6) AS rmse_k
-         FROM d ORDER BY fold""",
-    "ml_feature_stats" ->
+         FROM d ORDER BY fold"""),
+    "ml_feature_stats" -> Op(featureStats,
       s"""WITH xe AS (SELECT i - 1 AS dim,
              CAST(embedding[i] AS DOUBLE) * 8.0 AS x
            FROM embeddings CROSS JOIN
@@ -1183,8 +1159,8 @@ object Ml {
            round(m3 / (std8 * std8 * std8), 6) AS skewness,
            round(m4 / (std8 * std8 * std8 * std8) - 3.0, 6) AS kurtosis_ex,
            std8 / 8.0 < 0.001 AS near_constant
-         FROM c ORDER BY dim""",
-    "ml_threshold_sweep" ->
+         FROM c ORDER BY dim"""),
+    "ml_threshold_sweep" -> Op(thresholdSweep,
       s"""WITH $scoredSql,
          ps AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(y) AS BIGINT) AS n_pos
@@ -1209,8 +1185,8 @@ object Ml {
              / CAST(tp + fp + p_tot AS DOUBLE), 6) END AS f1,
            round(CAST(tp + n_tot - p_tot - fp AS DOUBLE)
              / CAST(n_tot AS DOUBLE), 6) AS accuracy
-         FROM j ORDER BY threshold""",
-    "ml_avg_precision" ->
+         FROM j ORDER BY threshold"""),
+    "ml_avg_precision" -> Op(avgPrecision,
       s"""WITH $scoredSql,
          ps AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(y) AS BIGINT) AS n_pos
@@ -1230,8 +1206,8 @@ object Ml {
            round(CAST(n_pos AS DOUBLE) / CAST(n_pos + n_neg AS DOUBLE), 6)
              AS prevalence,
            avg_precision
-         FROM a""",
-    "ml_pca_power" ->
+         FROM a"""),
+    "ml_pca_power" -> Op(pcaPower,
       s"""WITH x AS (SELECT vec_id,
              list_transform(embedding, t -> CAST(t AS DOUBLE)) AS e
            FROM embeddings),
@@ -1264,8 +1240,8 @@ object Ml {
          v2 AS (SELECT dim, round(y2 / nrm2, 6) AS v2 FROM t2, l)
          SELECT mu.dim, mu.mu, v1.v1, v2.v2,
            (SELECT round(nrm2 / 1024.0, 6) FROM l) AS lambda
-         FROM mu JOIN v1 USING (dim) JOIN v2 USING (dim) ORDER BY dim""",
-    "ml_average_precision" ->
+         FROM mu JOIN v1 USING (dim) JOIN v2 USING (dim) ORDER BY dim"""),
+    "ml_average_precision" -> Op(averagePrecision,
       s"""WITH $scoredSql,
          ps AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(y) AS BIGINT) AS np
@@ -1285,8 +1261,8 @@ object Ml {
            round(CAST(SUM(CAST(round(CAST(np AS DOUBLE) * p_at, 6)
                AS DECIMAL(18,6))) AS DOUBLE) / CAST(np_t AS DOUBLE), 6)
              AS average_precision
-         FROM t, tot GROUP BY np_t, n_t HAVING np_t >= 1""",
-    "ml_auc_roc" ->
+         FROM t, tot GROUP BY np_t, n_t HAVING np_t >= 1"""),
+    "ml_auc_roc" -> Op(aucRoc,
       s"""WITH $scoredSql,
          ps AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(y) AS BIGINT) AS n_pos
@@ -1307,8 +1283,8 @@ object Ml {
            round(2.0 * round((CAST(sum_mid2 AS DOUBLE) / 2.0 -
                CAST(np AS DOUBLE) * CAST(np + 1 AS DOUBLE) / 2.0) /
              CAST(np * nn AS DOUBLE), 6) - 1.0, 6) AS gini
-         FROM agg""",
-    "ml_brier_decomposition" ->
+         FROM agg"""),
+    "ml_brier_decomposition" -> Op(brierDecomposition,
       s"""WITH $scoredSql,
          b AS (SELECT LEAST(CAST(floor(s * 10) AS BIGINT), 9) AS bin, s, y
            FROM scored),
@@ -1341,10 +1317,9 @@ object Ml {
            round(mean_y * (1.0 - mean_y), 6) AS uncertainty,
            round(brier - (reliability - resolution
              + round(mean_y * (1.0 - mean_y), 6)), 6) AS decomp_gap
-         FROM a""",
-    "ml_farthest_first" -> {
-      def dotSC = "list_sum(list_transform(range(1,65), i -> " +
-        "CAST(s.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))"
+         FROM a"""),
+    "ml_farthest_first" -> Op(farthestFirstInit, {
+      val dotSC = dotSql("s.embedding", "c.embedding")
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
          sq AS (SELECT vec_id, embedding,
              list_sum(list_transform(embedding,
@@ -1373,8 +1348,8 @@ object Ml {
          UNION ALL SELECT CAST(2 AS INT), vec_id, d2 FROM p2
          UNION ALL SELECT CAST(3 AS INT), vec_id, d2 FROM p3
          ORDER BY pick_round"""
-    },
-    "ml_ndcg" ->
+    }),
+    "ml_ndcg" -> Op(ndcg,
       s"""WITH $scoredSql,
          top AS (SELECT y, row_number() OVER (ORDER BY s DESC, doc_id) AS i
            FROM scored ORDER BY s DESC, doc_id LIMIT 20),
@@ -1405,8 +1380,8 @@ object Ml {
            UNION ALL
            SELECT 20 AS k, n_pos, dcg_20 AS dcg, idcg_20 AS idcg FROM u)
          SELECT k, n_pos, dcg, idcg, round(dcg / idcg, 6) AS ndcg
-         FROM rows_k ORDER BY k""",
-    "ml_cohens_kappa" ->
+         FROM rows_k ORDER BY k"""),
+    "ml_cohens_kappa" -> Op(cohensKappa,
       s"""WITH $scoredSql,
          cm AS (SELECT
              CAST(SUM(CASE WHEN s >= 0.5 AND y = 1 THEN 1 ELSE 0 END)
@@ -1433,8 +1408,8 @@ object Ml {
              / sqrt(CAST(tp + fp AS DOUBLE) * CAST(tp + fn AS DOUBLE)
                * CAST(tn + fp AS DOUBLE) * CAST(tn + fn AS DOUBLE)), 6)
              AS mcc
-         FROM d""",
-    "ml_calibration_bins" ->
+         FROM d"""),
+    "ml_calibration_bins" -> Op(calibrationBins,
       s"""WITH $scoredSql,
          b AS (SELECT LEAST(CAST(floor(s * 10) AS BIGINT), 9) AS bin, s, y
            FROM scored),
@@ -1446,8 +1421,8 @@ object Ml {
            round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS frac_pos,
            round(mean_pred - round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6),
              6) AS gap
-         FROM g ORDER BY bin""",
-    "ml_chi2_terms" ->
+         FROM g ORDER BY bin"""),
+    "ml_chi2_terms" -> Op(chi2Terms,
       """WITH dw AS (SELECT DISTINCT doc_id, lang, u.word
            FROM documents, LATERAL (SELECT unnest(string_split(text, ' '))
              AS word) u),
@@ -1468,8 +1443,8 @@ object Ml {
                * CAST(a * d - b * c AS DOUBLE) /
              (CAST((a + b) * (c + d) AS DOUBLE)
                * CAST((a + c) * (b + d) AS DOUBLE)), 6) AS chi2
-         FROM t ORDER BY chi2 DESC, word ASC, lang ASC LIMIT 20""",
-    "ml_naive_bayes" ->
+         FROM t ORDER BY chi2 DESC, word ASC, lang ASC LIMIT 20"""),
+    "ml_naive_bayes" -> Op(naiveBayes,
       """WITH train AS (SELECT doc_id, lang, text FROM documents WHERE doc_id % 5 <> 0),
          test AS (SELECT doc_id, lang, text FROM documents WHERE doc_id % 5 = 0),
          ttok AS (SELECT lang, unnest(string_split(text, ' ')) AS word FROM train),
@@ -1503,8 +1478,8 @@ object Ml {
                ORDER BY score DESC, lang_c ASC) AS rn
            FROM sc)
          SELECT lang_true, lang_c AS lang_pred, CAST(COUNT(*) AS BIGINT) AS n
-         FROM best WHERE rn = 1 GROUP BY 1, 2 ORDER BY 1, 2""",
-    "ml_gini_split" ->
+         FROM best WHERE rn = 1 GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "ml_gini_split" -> Op(giniSplit,
       """WITH ev AS (SELECT LEAST(CAST(FLOOR(value / 20.0) AS BIGINT), 9) AS b,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
            FROM events),
@@ -1532,8 +1507,8 @@ object Ml {
            FROM cand)
          SELECT threshold, n_left, pos_left, n_right, pos_right, wgini,
            ROW_NUMBER() OVER (ORDER BY wgini ASC, threshold ASC) = 1 AS is_best
-         FROM g ORDER BY threshold""",
-    "ml_logreg_gradient" -> {
+         FROM g ORDER BY threshold"""),
+    "ml_logreg_gradient" -> Op(logregGradient, {
       val z = "(0.1 * 1.0 + (-0.05) * x2 + 0.02 * x3)"
       s"""WITH d AS (SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
              1.0 AS x1, CAST(n_chars AS DOUBLE) / 100.0 AS x2,
@@ -1552,8 +1527,8 @@ object Ml {
            round(gs / CAST(n AS DOUBLE), 6) AS grad_mean, w_old,
            round(w_old - 0.1 * round(gs / CAST(n AS DOUBLE), 6), 6) AS w_new
          FROM g ORDER BY feature"""
-    },
-    "llm_silhouette" -> {
+    }),
+    "llm_silhouette" -> Op(silhouette, {
       val dist = (a: String, b: String) =>
         s"sqrt(list_sum(list_transform(range(1,${Dim + 1}), " +
           s"i -> (CAST($a[i] AS DOUBLE) - $b[i]) * (CAST($a[i] AS DOUBLE) - $b[i]))))"
@@ -1576,6 +1551,6 @@ object Ml {
            round(${dsumSql("s")} / CAST(COUNT(*) AS DOUBLE), 6) AS avg_sil,
            round(MIN(s), 6) AS min_sil, round(MAX(s), 6) AS max_sil
          FROM s GROUP BY label ORDER BY label""".stripMargin
-    },
+    }),
   )
 }

@@ -100,15 +100,11 @@ object Ml2 {
       .orderBy("vec_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ml_dbscan_grid" -> (dbscanGrid _),
-  )
-
-  val oracles: Map[String, String] = Map(
+  val entries: Map[String, Op] = Map(
     // Brute-force ε-pairs (oracle side only — grid ≡ brute force is a
     // THEOREM: any pair within ε is within one cell step on both axes)
     // and transitive closure over core-core edges for the cluster ids.
-    "ml_dbscan_grid" ->
+    "ml_dbscan_grid" -> Op(dbscanGrid,
       """WITH RECURSIVE pts AS (SELECT vec_id,
              CAST(embedding[1] AS DOUBLE) AS x,
              CAST(embedding[2] AS DOUBLE) AS y
@@ -146,6 +142,6 @@ object Ml2 {
          FROM deg d
            LEFT JOIN clab cl ON d.vec_id = cl.vec_id
            LEFT JOIN blab bl ON d.vec_id = bl.vec_id
-         ORDER BY d.vec_id""",
+         ORDER BY d.vec_id"""),
   )
 }

@@ -44,12 +44,8 @@ object Mm2 {
     Mm3.pairHistogram(hashes, maxHam = 8)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_image_ahash_dedup" -> (imageAHashDedup _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "mm_image_ahash_dedup" ->
+  val entries: Map[String, Op] = Map(
+    "mm_image_ahash_dedup" -> Op(imageAHashDedup,
       s"""WITH cls AS (SELECT doc_id, doc_id % 50 AS f,
              CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS p
            FROM documents),
@@ -68,7 +64,7 @@ object Mm2 {
          bits AS (SELECT blk.f, blk.p, by * 8 + bx AS b,
              CASE WHEN bs * 64 >= total THEN 1 ELSE 0 END AS bit
            FROM blk JOIN tot ON blk.f = tot.f AND blk.p = tot.p),
-         ${Mm3.histogramSql(8)}""",
+         ${Mm3.histogramSql(8)}"""),
   )
 }
 

@@ -110,11 +110,6 @@ object Mm3 {
       maxHam = 10)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_image_phash_dedup" -> (imagePHashDedup _),
-    "mm_image_dhash_dedup" -> (imageDHashDedup _),
-  )
-
   /** The closed-form pixel field both oracles predict hashes from
     * (WxH supplied per hash): v(x,y) = 16 + (x·(3+f%7) + y·(5+f%11)
     * + 31f) mod 200, ±8 checkerboard for every third doc — range
@@ -160,8 +155,8 @@ object Mm3 {
        SELECT hamming, CAST(COUNT(*) AS BIGINT) AS n_pairs
        FROM h WHERE hamming <= $maxHam GROUP BY 1 ORDER BY 1"""
 
-  val oracles: Map[String, String] = Map(
-    "mm_image_phash_dedup" ->
+  val entries: Map[String, Op] = Map(
+    "mm_image_phash_dedup" -> Op(imagePHashDedup,
       s"""WITH ${gridSql(32, 32)},
          ct AS (SELECT * FROM (VALUES ${MmPHash.cosTableValues}) t(u, i, c)),
          s1 AS (SELECT g.f, g.p, g.x, ct.u AS vv,
@@ -179,8 +174,8 @@ object Mm3 {
          bits AS (SELECT ac.f, ac.p, ac.b,
              CASE WHEN ac.cf > med.md THEN 1 ELSE 0 END AS bit
            FROM ac JOIN med USING (f, p)),
-         ${histogramSql(10)}""",
-    "mm_image_dhash_dedup" ->
+         ${histogramSql(10)}"""),
+    "mm_image_dhash_dedup" -> Op(imageDHashDedup,
       s"""WITH ${gridSql(36, 32)},
          blk AS (SELECT f, p, y // 4 AS r, x // 4 AS c,
              CAST(SUM(v) AS BIGINT) AS s
@@ -190,7 +185,7 @@ object Mm3 {
            FROM blk a JOIN blk b2
            ON a.f = b2.f AND a.p = b2.p AND a.r = b2.r AND b2.c = a.c + 1
            WHERE a.c < 8),
-         ${histogramSql(10)}""",
+         ${histogramSql(10)}"""),
   )
 }
 

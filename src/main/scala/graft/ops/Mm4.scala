@@ -85,12 +85,6 @@ object Mm4 {
       .orderBy("doc_id", "shot_no")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_video_scene_cut" -> (videoSceneCut _),
-    "mm_video_keyframes" -> (videoKeyframes _),
-    "mm_audio_vad" -> (audioVad _),
-  )
-
   /** Oracle CTEs of the planted video: per family `f` the 16 frames'
     * cuts and shot index `sc(f, t, is_cut, s)`, and every frame's pixel
     * field `grid(f, t, is_cut, x, y, v)`, with `cls(doc_id, f)` in scope. */
@@ -112,8 +106,8 @@ object Mm4 {
              (SELECT unnest(range(0, 32)) AS x) gx,
              (SELECT unnest(range(0, 24)) AS y) gy)"""
 
-  val oracles: Map[String, String] = Map(
-    "mm_video_scene_cut" ->
+  val entries: Map[String, Op] = Map(
+    "mm_video_scene_cut" -> Op(videoSceneCut,
       s"""WITH $framesSql,
          sad AS (SELECT a.f, a.t, CAST(SUM(ABS(a.v - b.v)) AS BIGINT) AS sad
            FROM grid a JOIN grid b
@@ -122,8 +116,8 @@ object Mm4 {
          cuts AS (SELECT f, t, sad FROM sad WHERE sad >= 6144)
          SELECT d.doc_id, c2.t AS frame_no, c2.sad
          FROM cls d JOIN cuts c2 USING (f)
-         ORDER BY d.doc_id, c2.t""",
-    "mm_video_keyframes" ->
+         ORDER BY d.doc_id, c2.t"""),
+    "mm_video_keyframes" -> Op(videoKeyframes,
       s"""WITH $framesSql,
          psum AS (SELECT f, t, CAST(SUM(v) AS BIGINT) AS pix
            FROM grid GROUP BY 1, 2),
@@ -138,8 +132,8 @@ object Mm4 {
            p.pix AS key_pixel_sum
          FROM cls d JOIN len l USING (f)
            JOIN psum p ON l.f = p.f AND l.start_frame = p.t
-         ORDER BY d.doc_id, l.shot_no""",
-    "mm_audio_vad" ->
+         ORDER BY d.doc_id, l.shot_no"""),
+    "mm_audio_vad" -> Op(audioVad,
       s"""WITH ${MmVad.speechWindowsSql},
          seg AS (SELECT f, wn, s,
              CASE WHEN s = 1 AND COALESCE(LAG(s) OVER
@@ -151,7 +145,7 @@ object Mm4 {
            FROM seg GROUP BY 1)
          SELECT doc_id, CAST(50 AS BIGINT) AS n_windows, n_speech,
            n_segments, round(n_speech / 50.0, 6) AS speech_ratio
-         FROM cls JOIN agg USING (f) ORDER BY doc_id""",
+         FROM cls JOIN agg USING (f) ORDER BY doc_id"""),
   )
 }
 

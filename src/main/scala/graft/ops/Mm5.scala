@@ -85,19 +85,13 @@ object Mm5 {
       .orderBy("doc_id", "blob_no")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_audio_zcr" -> (audioZcr _),
-    "mm_image_equalize" -> (imageEqualize _),
-    "mm_image_blobs" -> (imageBlobs _),
-  )
-
-  val oracles: Map[String, String] = Map(
+  val entries: Map[String, Op] = Map(
     // Predicted from the planted window rule (w·13 + f·7) mod 8 < 3 of
     // the L367 fixture: a speech window contributes 19 interior sign
     // flips (±A square wave, period 16, window = 160 samples = 20
     // half-periods); the boundary sample flips iff the PREVIOUS window
     // is also speech (the wave's parity at 160w is +, at 160w−1 is −).
-    "mm_audio_zcr" ->
+    "mm_audio_zcr" -> Op(audioZcr,
       s"""WITH ${MmVad.speechWindowsSql},
          x AS (SELECT f, wn, s,
              COALESCE(LAG(s) OVER (PARTITION BY f ORDER BY wn), 0) AS ps
@@ -108,12 +102,12 @@ object Mm5 {
            FROM x GROUP BY 1)
          SELECT doc_id, CAST(8000 AS BIGINT) AS n_samples, n_crossings,
            round(n_crossings / 7999.0, 6) AS zcr, n_active_windows
-         FROM cls JOIN agg USING (f) ORDER BY doc_id""",
+         FROM cls JOIN agg USING (f) ORDER BY doc_id"""),
     // Predicted from the pixel formulas: low-contrast class
     // v = 60 + (3x + 5y + 17f) mod 40, high-contrast control (doc%4=0)
     // v = (9x + 11y + 23f) mod 250; histogram/CDF over the 4096-pixel
     // grid, then the integer transfer function.
-    "mm_image_equalize" ->
+    "mm_image_equalize" -> Op(imageEqualize,
       """WITH cls AS (SELECT doc_id, CAST(doc_id % 20 AS INTEGER) AS f,
              CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END AS hi
            FROM documents),
@@ -145,10 +139,10 @@ object Mm5 {
            FROM eqv GROUP BY 1, 2)
          SELECT doc_id, n_levels_before, lvl_min_before, lvl_max_before,
            n_levels_after, lvl_min_after, lvl_max_after, eq_pixel_sum
-         FROM cls JOIN agg USING (f, hi) ORDER BY doc_id""",
+         FROM cls JOIN agg USING (f, hi) ORDER BY doc_id"""),
     // the planted rectangles in closed form: k = f%5+1 strips at
     // y0 = 2+9r, x0 = 3+2((f+3r)%10), w = 6+((3f+r)%5), h = 4+((f+r)%3)
-    "mm_image_blobs" ->
+    "mm_image_blobs" -> Op(imageBlobs,
       """WITH cls AS (SELECT doc_id, CAST(doc_id % 20 AS INTEGER) AS f
            FROM documents),
          fam AS (SELECT DISTINCT f FROM cls),
@@ -165,7 +159,7 @@ object Mm5 {
            CAST(rc.x0 + rc.w - 1 AS BIGINT) AS x1,
            CAST(rc.y0 + rc.h - 1 AS BIGINT) AS y1
          FROM cls d JOIN rects rc USING (f)
-         ORDER BY d.doc_id, rc.blob_no""",
+         ORDER BY d.doc_id, rc.blob_no"""),
   )
 }
 

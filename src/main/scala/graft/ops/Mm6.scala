@@ -60,11 +60,6 @@ object Mm6 {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_image_otsu" -> (imageOtsu _),
-    "mm_image_sobel" -> (imageSobel _),
-  )
-
   /** The L375 pixel field in SQL at an (x, y) offset — shared by both
     * oracles (low-contrast 60 + (3x+5y+17f) mod 40; every 4th doc the
     * high-contrast control (9x+11y+23f) mod 250). */
@@ -72,8 +67,8 @@ object Mm6 {
     s"(CASE WHEN hi = 1 THEN (9 * ($x) + 11 * ($y) + 23 * f) % 250 " +
       s"ELSE 60 + (3 * ($x) + 5 * ($y) + 17 * f) % 40 END)"
 
-  val oracles: Map[String, String] = Map(
-    "mm_image_otsu" ->
+  val entries: Map[String, Op] = Map(
+    "mm_image_otsu" -> Op(imageOtsu,
       s"""WITH cls AS (SELECT doc_id, CAST(doc_id % 20 AS INTEGER) AS f,
              CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END AS hi
            FROM documents),
@@ -106,8 +101,8 @@ object Mm6 {
            round(CAST(b.s0 AS DOUBLE) / b.w0, 6) AS mean_below,
            round(CAST(b.s1 AS DOUBLE) / b.w1, 6) AS mean_above
          FROM cls d JOIN best b USING (f, hi) WHERE b.rr = 1
-         ORDER BY d.doc_id""",
-    "mm_image_sobel" ->
+         ORDER BY d.doc_id"""),
+    "mm_image_sobel" -> Op(imageSobel,
       s"""WITH cls AS (SELECT doc_id, CAST(doc_id % 20 AS INTEGER) AS f,
              CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END AS hi
            FROM documents),
@@ -135,7 +130,7 @@ object Mm6 {
          SELECT doc_id, n_interior, n_edges,
            round(CAST(n_edges AS DOUBLE) / n_interior, 6) AS edge_density,
            max_mag, sum_mag
-         FROM cls JOIN agg USING (f, hi) ORDER BY doc_id""",
+         FROM cls JOIN agg USING (f, hi) ORDER BY doc_id"""),
   )
 }
 

@@ -37,14 +37,9 @@ object Mm7 {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_audio_spectral" -> (audioSpectral _),
-    "mm_image_ssim" -> (imageSsim _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "mm_audio_spectral" -> MmSpectral.oracleSql,
-    "mm_image_ssim" -> MmSsim.oracleSql,
+  val entries: Map[String, Op] = Map(
+    "mm_audio_spectral" -> Op(audioSpectral, MmSpectral.oracleSql),
+    "mm_image_ssim" -> Op(imageSsim, MmSsim.oracleSql),
   )
 }
 
@@ -309,37 +304,53 @@ object MmSsim {
       ssim(b, decode(synthesize(f, 2))))
   }
 
+  // ---- oracle SQL pieces, shared with MmMsSsim ----
+  private[ops] val n2 = N.toLong * N // scale of the SSIM constants
+
+  /** Windowed moments of (base a, kind b) from a source of (x, y, a, b). */
+  private[ops] def momentsSql(src: String): String =
+    s"""SELECT CAST(SUM(a) AS BIGINT) AS sx, CAST(SUM(b) AS BIGINT) AS sy,
+           CAST(SUM(a * a) AS BIGINT) AS sxx, CAST(SUM(b * b) AS BIGINT) AS syy,
+           CAST(SUM(a * b) AS BIGINT) AS sxy
+         FROM $src GROUP BY x // $Win, y // $Win"""
+
+  /** The exact decimal mean of `inner`'s window scores `sw` over an
+    * `nw`×`nw` window grid, rounded to 6 dp. */
+  private[ops] def meanSql(inner: String, nw: Int): String =
+    s"""(SELECT round(CAST(SUM(CAST(sw AS DECIMAL(18,6))) AS DOUBLE)
+             / ${nw * nw}, 6) FROM ($inner))"""
+
+  /** The 400-scaled full SSIM rational per window, HUGEINT products,
+    * rounded to 6 dp, with the n²-scaled constants `c1n`, `c2n`. */
+  private[ops] def fullSwSql(c1n: Long, c2n: Long): String =
+    s"""SELECT round(
+           CAST((CAST(800 * sx * sy + $c1n * $n2 AS HUGEINT)
+               * (800 * ($N * sxy - sx * sy) + $c2n * $n2)) AS DOUBLE)
+           / CAST((CAST(400 * (sx * sx + sy * sy) + $c1n * $n2 AS HUGEINT)
+               * (400 * ($N * sxx - sx * sx + $N * syy - sy * sy)
+                 + $c2n * $n2)) AS DOUBLE), 6) AS sw"""
+
+  /** The (x, y, base, kind) pixels of the current family `fam.f`. */
+  private[ops] def pxSql(kind: Int): String =
+    s"""(SELECT x, y, CAST(${pixelSql(0)} AS BIGINT) AS a,
+           CAST(${pixelSql(kind)} AS BIGINT) AS b
+         FROM px WHERE px.f = fam.f)"""
+
+  /** Full-scale SSIM of base vs `kind` as column `as`. */
+  private[ops] def ssimColSql(kind: Int, as: String): String =
+    meanSql(s"${fullSwSql(2601L, 23409L)} FROM (${momentsSql(pxSql(kind))})",
+      Size / Win) + s" AS $as"
+
   /** Closed-form oracle: pixel formulas per (family, kind), the same
     * 400-scaled rational per window, HUGEINT products, round-6 window
     * scores, exact decimal mean. */
-  private[graft] def oracleSql: String = {
-    def v(kind: Int): String = pixelSql(kind)
-    def ssimCol(kind: Int, as: String): String = {
-      val n2 = N.toLong * N
-      s"""(SELECT round(CAST(SUM(CAST(sw AS DECIMAL(18,6))) AS DOUBLE)
-             / ${(Size / Win) * (Size / Win)}, 6) FROM (
-           SELECT round(
-               CAST((CAST(800 * sx * sy + 2601 * $n2 AS HUGEINT)
-                   * (800 * ($N * sxy - sx * sy) + 23409 * $n2)) AS DOUBLE)
-               / CAST((CAST(400 * (sx * sx + sy * sy) + 2601 * $n2 AS HUGEINT)
-                   * (400 * ($N * sxx - sx * sx + $N * syy - sy * sy)
-                     + 23409 * $n2)) AS DOUBLE), 6) AS sw
-           FROM (
-             SELECT CAST(SUM(a) AS BIGINT) AS sx, CAST(SUM(b) AS BIGINT) AS sy,
-               CAST(SUM(a * a) AS BIGINT) AS sxx, CAST(SUM(b * b) AS BIGINT) AS syy,
-               CAST(SUM(a * b) AS BIGINT) AS sxy
-             FROM (SELECT x // $Win AS wx, y // $Win AS wy,
-                 CAST(${v(0)} AS BIGINT) AS a, CAST(${v(kind)} AS BIGINT) AS b
-               FROM px WHERE px.f = fam.f)
-             GROUP BY wx, wy))) AS $as"""
-    }
+  private[graft] def oracleSql: String =
     s"""WITH $pixelGridSql,
        scores AS (SELECT fam.f,
-           ${ssimCol(0, "ssim_self")},
-           ${ssimCol(1, "ssim_bright")},
-           ${ssimCol(2, "ssim_noise")}
+           ${ssimColSql(0, "ssim_self")},
+           ${ssimColSql(1, "ssim_bright")},
+           ${ssimColSql(2, "ssim_noise")}
          FROM (SELECT DISTINCT f FROM cls) fam)
        SELECT doc_id, ssim_self, ssim_bright, ssim_noise
        FROM cls JOIN scores USING (f) ORDER BY doc_id"""
-  }
 }

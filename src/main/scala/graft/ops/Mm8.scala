@@ -57,16 +57,10 @@ object Mm8 {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_audio_mel" -> (audioMel _),
-    "mm_audio_mfcc" -> (audioMfcc _),
-    "mm_image_mssim" -> (imageMssim _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "mm_audio_mel" -> MmMel.oracleSql,
-    "mm_audio_mfcc" -> MmMfcc.oracleSql,
-    "mm_image_mssim" -> MmMsSsim.oracleSql,
+  val entries: Map[String, Op] = Map(
+    "mm_audio_mel" -> Op(audioMel, MmMel.oracleSql),
+    "mm_audio_mfcc" -> Op(audioMfcc, MmMfcc.oracleSql),
+    "mm_image_mssim" -> Op(imageMssim, MmMsSsim.oracleSql),
   )
 }
 
@@ -224,52 +218,29 @@ object MmMsSsim {
     * cs-only rationals, the 2×2 sum-pool CTE, scale-2 rational with the
     * 16×-scaled constants, and the same (cs₁ + 2·s₂)/3 combine. */
   private[graft] def oracleSql: String = {
+    import MmSsim.{fullSwSql, meanSql, momentsSql, n2, pxSql, ssimColSql}
     def v(kind: Int): String = MmSsim.pixelSql(kind)
-    val n2 = N.toLong * N
-    // windowed moments of (base a, kind b) from a source of (x, y, a, b)
-    def moments(src: String): String =
-      s"""SELECT CAST(SUM(a) AS BIGINT) AS sx, CAST(SUM(b) AS BIGINT) AS sy,
-           CAST(SUM(a * a) AS BIGINT) AS sxx, CAST(SUM(b * b) AS BIGINT) AS syy,
-           CAST(SUM(a * b) AS BIGINT) AS sxy
-         FROM $src GROUP BY x // $Win, y // $Win"""
-    def meanOf(inner: String, nw: Int): String =
-      s"""(SELECT round(CAST(SUM(CAST(sw AS DECIMAL(18,6))) AS DOUBLE)
-             / ${nw * nw}, 6) FROM ($inner))"""
-    def fullSw(c1n: Long, c2n: Long): String =
-      s"""SELECT round(
-           CAST((CAST(800 * sx * sy + $c1n * $n2 AS HUGEINT)
-               * (800 * ($N * sxy - sx * sy) + $c2n * $n2)) AS DOUBLE)
-           / CAST((CAST(400 * (sx * sx + sy * sy) + $c1n * $n2 AS HUGEINT)
-               * (400 * ($N * sxx - sx * sx + $N * syy - sy * sy)
-                 + $c2n * $n2)) AS DOUBLE), 6) AS sw"""
     def csSw(c2n: Long): String =
       s"""SELECT round(
            CAST(800 * ($N * sxy - sx * sy) + $c2n * $n2 AS DOUBLE)
            / CAST(400 * ($N * sxx - sx * sx + $N * syy - sy * sy)
                + $c2n * $n2 AS DOUBLE), 6) AS sw"""
-    def px1(kind: Int): String =
-      s"""(SELECT x, y, CAST(${v(0)} AS BIGINT) AS a,
-           CAST(${v(kind)} AS BIGINT) AS b
-         FROM px WHERE px.f = fam.f)"""
     def px2(kind: Int): String =
       s"""(SELECT x // 2 AS x, y // 2 AS y, CAST(SUM(${v(0)}) AS BIGINT) AS a,
            CAST(SUM(${v(kind)}) AS BIGINT) AS b
          FROM px WHERE px.f = fam.f GROUP BY 1, 2)"""
-    def s1(kind: Int, as: String): String =
-      meanOf(s"${fullSw(2601L, 23409L)} FROM (${moments(px1(kind))})",
-        Size / Win) + s" AS $as"
     def cs1(kind: Int): String =
-      meanOf(s"${csSw(23409L)} FROM (${moments(px1(kind))})", Size / Win)
+      meanSql(s"${csSw(23409L)} FROM (${momentsSql(pxSql(kind))})", Size / Win)
     def s2(kind: Int): String =
-      meanOf(s"${fullSw(41616L, 374544L)} FROM (${moments(px2(kind))})",
+      meanSql(s"${fullSwSql(41616L, 374544L)} FROM (${momentsSql(px2(kind))})",
         Size / 2 / Win)
     def ms(kind: Int, as: String): String =
       s"round((${cs1(kind)} + 2 * ${s2(kind)}) / 3, 6) AS $as"
     s"""WITH ${MmSsim.pixelGridSql},
        scores AS (SELECT fam.f,
-           ${s1(1, "ssim_bright")},
-           ${s1(2, "ssim_checker")},
-           ${s1(3, "ssim_stripe")},
+           ${ssimColSql(1, "ssim_bright")},
+           ${ssimColSql(2, "ssim_checker")},
+           ${ssimColSql(3, "ssim_stripe")},
            ${ms(1, "mssim_bright")},
            ${ms(2, "mssim_checker")},
            ${ms(3, "mssim_stripe")}

@@ -267,56 +267,30 @@ object Relational {
       .orderBy("user_id", "bucket_us")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "src_events_scan" -> (srcEventsScan _),
-    "map_enrich_value" -> (mapEnrichValue _),
-    "flatmap_tokenize" -> (flatmapTokenize _),
-    "filter_purchases" -> (filterPurchases _),
-    "agg_value_by_type" -> (aggValueByType _),
-    "agg_pricing_summary" -> (aggPricingSummary _),
-    "agg_distinct_users_per_type" -> (aggDistinctUsersPerType _),
-    "agg_approx_distinct_users" -> (aggApproxDistinctUsers _),
-    "agg_rollup_nation_region" -> (aggRollupNationRegion _),
-    "agg_cube_status_priority" -> (aggCubeStatusPriority _),
-    "win_range_1h_sum" -> (winRange1hSum _),
-    "topk_orders_page2" -> (topkOrdersPage2 _),
-    "agg_udaf_weighted_avg" -> (aggUdafWeightedAvg _),
-    "win_rank_dense" -> (winRankDense _),
-    "win_event_gaps" -> (winEventGaps _),
-    "win_running_total" -> (winRunningTotal _),
-    "topk_orders_by_price" -> (topkOrdersByPrice _),
-    "topk_events_per_user" -> (topkEventsPerUser _),
-    "setop_union_hi_lo" -> (setopUnionHiLo _),
-    "setop_intersect_buyers_clickers" -> (setopIntersectBuyersClickers _),
-    "setop_except_viewers_not_buyers" -> (setopExceptViewersNotBuyers _),
-  )
-
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
-  val oracles: Map[String, String] = Map(
-    "src_events_scan" ->
+  val entries: Map[String, Op] = Map(
+    "src_events_scan" -> Op(srcEventsScan,
       s"""SELECT CAST(COUNT(*) AS BIGINT) AS n,
           CAST(SUM(event_id) AS BIGINT) AS id_sum,
           MIN(epoch_us($evTs)) AS ts_min_us, MAX(epoch_us($evTs)) AS ts_max_us
-          FROM events""",
-    "map_enrich_value" ->
+          FROM events"""),
+    "map_enrich_value" -> Op(mapEnrichValue,
       """SELECT event_id, user_id, upper(event_type) AS event_type_uc,
          CAST(floor(value / 50) AS BIGINT) AS value_bucket,
          round(value, 2) AS value_r
-         FROM events ORDER BY event_id""",
-    "flatmap_tokenize" ->
+         FROM events ORDER BY event_id"""),
+    "flatmap_tokenize" -> Op(flatmapTokenize,
       """SELECT word, CAST(COUNT(*) AS BIGINT) AS n
          FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-         GROUP BY word ORDER BY word""",
-    "filter_purchases" ->
+         GROUP BY word ORDER BY word"""),
+    "filter_purchases" -> Op(filterPurchases,
       """SELECT event_id, user_id, value FROM events
-         WHERE event_type = 'purchase' AND value > 100 ORDER BY event_id""",
-    "agg_value_by_type" ->
+         WHERE event_type = 'purchase' AND value > 100 ORDER BY event_id"""),
+    "agg_value_by_type" -> Op(aggValueByType,
       s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
           ${dsumSql("value")} AS sum_value, ${davgSql("value")} AS avg_value,
           MIN(value) AS min_value, MAX(value) AS max_value
-          FROM events GROUP BY 1 ORDER BY 1""",
-    "agg_pricing_summary" ->
+          FROM events GROUP BY 1 ORDER BY 1"""),
+    "agg_pricing_summary" -> Op(aggPricingSummary,
       s"""SELECT l_returnflag, l_linestatus,
           ${dsumSql("l_quantity")} AS sum_qty,
           ${dsumSql("l_extendedprice")} AS sum_base_price,
@@ -327,16 +301,16 @@ object Relational {
           ${davgSql("l_discount")} AS avg_disc,
           CAST(COUNT(*) AS BIGINT) AS count_order
           FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-          GROUP BY 1, 2 ORDER BY 1, 2""",
-    "agg_distinct_users_per_type" ->
+          GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "agg_distinct_users_per_type" -> Op(aggDistinctUsersPerType,
       """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
          CAST(COUNT(*) AS BIGINT) AS n
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "agg_approx_distinct_users" ->
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    "agg_approx_distinct_users" -> Op(aggApproxDistinctUsers,
       """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
          TRUE AS approx_within_3rsd
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "agg_rollup_nation_region" ->
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    "agg_rollup_nation_region" -> Op(aggRollupNationRegion,
       s"""SELECT COALESCE(r_name, 'ALL') AS region, COALESCE(n_name, 'ALL') AS nation,
           CAST(2 * GROUPING(r_name) + GROUPING(n_name) AS BIGINT) AS gid,
           CAST(COUNT(*) AS BIGINT) AS n_cust, ${dsumSql("c_acctbal")} AS sum_acctbal
@@ -344,31 +318,31 @@ object Relational {
           JOIN nation ON c_nationkey = n_nationkey
           JOIN region ON n_regionkey = r_regionkey
           GROUP BY ROLLUP(r_name, n_name)
-          ORDER BY gid, region, nation""",
-    "agg_cube_status_priority" ->
+          ORDER BY gid, region, nation"""),
+    "agg_cube_status_priority" -> Op(aggCubeStatusPriority,
       s"""SELECT COALESCE(o_orderstatus, 'ALL') AS status,
           COALESCE(o_orderpriority, 'ALL') AS priority,
           CAST(2 * GROUPING(o_orderstatus) + GROUPING(o_orderpriority) AS BIGINT) AS gid,
           CAST(COUNT(*) AS BIGINT) AS n, ${dsumSql("o_totalprice")} AS sum_price
           FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-          ORDER BY gid, status, priority""",
-    "win_range_1h_sum" ->
+          ORDER BY gid, status, priority"""),
+    "win_range_1h_sum" -> Op(winRange1hSum,
       s"""SELECT event_id, user_id,
           CAST(SUM(CAST(value AS DECIMAL(18,6)))
             OVER (PARTITION BY user_id ORDER BY epoch_us($evTs)
                   RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS DOUBLE) AS sum_1h
-          FROM events ORDER BY event_id""",
-    "topk_orders_page2" ->
+          FROM events ORDER BY event_id"""),
+    "topk_orders_page2" -> Op(topkOrdersPage2,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10 OFFSET 10""",
-    "agg_udaf_weighted_avg" ->
+         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10 OFFSET 10"""),
+    "agg_udaf_weighted_avg" -> Op(aggUdafWeightedAvg,
       s"""SELECT user_id,
           CAST(SUM(CAST(value * (CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1) AS DECIMAL(18,6))) AS DOUBLE)
             / CAST(SUM(CAST(CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1 AS DECIMAL(18,6))) AS DOUBLE)
             AS wavg_value,
           CAST(COUNT(*) AS BIGINT) AS n
-          FROM events GROUP BY 1 ORDER BY 1""",
-    "win_rank_dense" ->
+          FROM events GROUP BY 1 ORDER BY 1"""),
+    "win_rank_dense" -> Op(winRankDense,
       s"""WITH ranked AS (
             SELECT user_id, event_id, value,
               ROW_NUMBER() OVER w AS rn, RANK() OVER w AS rnk,
@@ -378,47 +352,47 @@ object Relational {
             WINDOW w AS (PARTITION BY user_id ORDER BY value DESC, event_id ASC))
           SELECT user_id, event_id, value, CAST(rn AS INT) AS rn,
             CAST(rnk AS INT) AS rnk, CAST(drnk AS INT) AS drnk, prnk
-          FROM ranked WHERE rn <= 5 ORDER BY user_id, rn""",
-    "win_event_gaps" ->
+          FROM ranked WHERE rn <= 5 ORDER BY user_id, rn"""),
+    "win_event_gaps" -> Op(winEventGaps,
       s"""SELECT event_id, user_id,
           epoch_us($evTs) - lag(epoch_us($evTs), 1)
             OVER (PARTITION BY user_id ORDER BY $evTs, event_id) AS gap_us
-          FROM events ORDER BY event_id""",
-    "win_running_total" ->
+          FROM events ORDER BY event_id"""),
+    "win_running_total" -> Op(winRunningTotal,
       s"""SELECT event_id, user_id,
           CAST(SUM(CAST(value AS DECIMAL(18,6)))
             OVER (PARTITION BY user_id ORDER BY $evTs, event_id
                   ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_value
-          FROM events ORDER BY event_id""",
-    "topk_orders_by_price" ->
+          FROM events ORDER BY event_id"""),
+    "topk_orders_by_price" -> Op(topkOrdersByPrice,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-    "topk_events_per_user" ->
+         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10"""),
+    "topk_events_per_user" -> Op(topkEventsPerUser,
       """WITH ranked AS (
            SELECT user_id, event_id, value,
              ROW_NUMBER() OVER (PARTITION BY user_id
                ORDER BY value DESC, event_id ASC) AS rn
            FROM events)
          SELECT user_id, CAST(rn AS INT) AS rn, event_id, value
-         FROM ranked WHERE rn <= 3 ORDER BY user_id, rn""",
-    "setop_union_hi_lo" ->
+         FROM ranked WHERE rn <= 3 ORDER BY user_id, rn"""),
+    "setop_union_hi_lo" -> Op(setopUnionHiLo,
       """SELECT event_id, user_id, 'hi_purchase' AS tag FROM events
          WHERE event_type = 'purchase' AND value > 150
          UNION ALL
          SELECT event_id, user_id, 'error' AS tag FROM events
          WHERE event_type = 'error'
-         ORDER BY event_id, tag""",
-    "setop_intersect_buyers_clickers" ->
+         ORDER BY event_id, tag"""),
+    "setop_intersect_buyers_clickers" -> Op(setopIntersectBuyersClickers,
       """SELECT user_id FROM events WHERE event_type = 'purchase'
          INTERSECT
          SELECT user_id FROM events WHERE event_type = 'click'
-         ORDER BY user_id""",
-    "setop_except_viewers_not_buyers" ->
+         ORDER BY user_id"""),
+    "setop_except_viewers_not_buyers" -> Op(setopExceptViewersNotBuyers,
       s"""SELECT user_id, epoch_us(date_trunc('hour', $evTs)) AS bucket_us
           FROM events WHERE event_type = 'view'
           EXCEPT
           SELECT user_id, epoch_us(date_trunc('hour', $evTs)) AS bucket_us
           FROM events WHERE event_type = 'purchase'
-          ORDER BY user_id, bucket_us""",
+          ORDER BY user_id, bucket_us"""),
   )
 }

@@ -64,49 +64,41 @@ object Scalars {
            min(size(col("embedding"))).as("dim"))
       .orderBy("label")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "scalar_string_docs" -> (scalarStringDocs _),
-    "scalar_date_orders" -> (scalarDateOrders _),
-    "scalar_math_events" -> (scalarMathEvents _),
-    "scalar_json_props" -> (scalarJsonProps _),
-    "scalar_array_embedding_norm" -> (scalarArrayEmbeddingNorm _),
-  )
 
-
-  val oracles: Map[String, String] = Map(
-    "scalar_string_docs" ->
+  val entries: Map[String, Op] = Map(
+    "scalar_string_docs" -> Op(scalarStringDocs,
       """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM(length(text)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_len,
          CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
          MIN(substr(text, 1, 10)) AS min_prefix
          FROM documents
          WHERE strpos(lower(trim(text)), 'merge') > 0
-         GROUP BY 1 ORDER BY 1""",
-    "scalar_date_orders" ->
+         GROUP BY 1 ORDER BY 1"""),
+    "scalar_date_orders" -> Op(scalarDateOrders,
       s"""SELECT CAST(year(o_orderdate) AS INT) AS y,
           CAST(month(o_orderdate) AS INT) AS m,
           CAST(COUNT(*) AS BIGINT) AS n_orders,
           ${dsumSql("o_totalprice")} AS sum_price
-          FROM orders GROUP BY 1, 2 ORDER BY 1, 2""",
-    "scalar_math_events" ->
+          FROM orders GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "scalar_math_events" -> Op(scalarMathEvents,
       s"""SELECT event_type,
           ${dsumSql("round(sqrt(abs(value)), 6)")} AS sum_sqrt,
           ${dsumSql("round(ln(value + 1), 6)")} AS sum_log1p,
           ${dsumSql("round(pow(value, 2), 6)")} AS sum_sq,
           CAST(SUM(CAST(floor(value) AS BIGINT) % 7) AS BIGINT) AS sum_mod7
-          FROM events GROUP BY 1 ORDER BY 1""",
-    "scalar_json_props" ->
+          FROM events GROUP BY 1 ORDER BY 1"""),
+    "scalar_json_props" -> Op(scalarJsonProps,
       """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod,
          CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
            / CAST(COUNT(value) AS DOUBLE) AS avg_value
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "scalar_array_embedding_norm" ->
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    "scalar_array_embedding_norm" -> Op(scalarArrayEmbeddingNorm,
       """SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(CAST(sqrt(list_sum(list_transform(embedding,
              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS DECIMAL(18,6))) AS DOUBLE)
            / CAST(COUNT(*) AS DOUBLE) AS avg_norm,
          CAST(MIN(len(embedding)) AS INT) AS dim
-         FROM embeddings GROUP BY 1 ORDER BY 1""",
+         FROM embeddings GROUP BY 1 ORDER BY 1"""),
   )
 }

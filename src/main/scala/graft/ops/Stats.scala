@@ -22,8 +22,6 @@ import org.apache.spark.sql.functions._
   * [[graft.Tables.dsum]] decimal quantization. */
 object Stats {
 
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
   /** L251 — Gini coefficient + Lorenz curve of customer revenue (the
     * canonical inequality readout; completes the concentration family
     * beside L211's top-decile share). Revenue per customer = round-6
@@ -449,22 +447,8 @@ object Stats {
       .orderBy("p")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stats_qq_deciles" -> (qqDeciles _),
-    "stats_kendall_tau" -> (kendallTau _),
-    "stats_hill_tail" -> (hillTail _),
-    "stats_theil_decomposition" -> (theilDecomposition _),
-    "stats_mann_kendall" -> (mannKendall _),
-    "stats_chi2_independence" -> (chi2Independence _),
-    "stats_poisson_bootstrap" -> (poissonBootstrap _),
-    "stats_gini_lorenz" -> (giniLorenz _),
-    "stats_benford" -> (benford _),
-    "stats_ks_test" -> (ksTest _),
-    "stats_kaplan_meier" -> (kaplanMeier _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stats_qq_deciles" -> {
+  val entries: Map[String, Op] = Map(
+    "stats_qq_deciles" -> Op(qqDeciles, {
       val ps = (1 to 9).map(i => s"CAST($i AS DOUBLE) / 10").mkString(", ")
       s"""WITH q AS (SELECT
              quantile_cont(CASE WHEN event_type = 'click' THEN value END,
@@ -480,8 +464,8 @@ object Stats {
            CAST(CAST(round(qc[i], 6) AS DECIMAL(18,6))
              - CAST(round(qp[i], 6) AS DECIMAL(18,6)) AS DOUBLE) AS qq_gap
          FROM x ORDER BY p"""
-    },
-    "stats_kendall_tau" ->
+    }),
+    "stats_kendall_tau" -> Op(kendallTau,
       s"""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
              CAST(COUNT(*) AS BIGINT) AS x,
              round(${dsumSql("o_totalprice")}, 6) AS y
@@ -503,8 +487,8 @@ object Stats {
              sqrt((CAST(n_pairs AS DOUBLE) - CAST(tied_x AS DOUBLE))
                * (CAST(n_pairs AS DOUBLE) - CAST(tied_y AS DOUBLE))), 6)
              AS tau_b
-         FROM p""",
-    "stats_hill_tail" ->
+         FROM p"""),
+    "stats_hill_tail" -> Op(hillTail,
       s"""WITH top AS (SELECT o_totalprice AS x, o_orderkey AS okey
            FROM orders ORDER BY x DESC, okey LIMIT 201),
          rk AS (SELECT x, ROW_NUMBER() OVER (ORDER BY x DESC, okey) AS rn
@@ -517,8 +501,8 @@ object Stats {
            FROM rk, thr WHERE rn <= 200)
          SELECT k, x_threshold, mean_log_excess,
            round(1.0 / mean_log_excess, 6) AS alpha
-         FROM a""",
-    "stats_theil_decomposition" ->
+         FROM a"""),
+    "stats_theil_decomposition" -> Op(theilDecomposition,
       s"""WITH x AS (SELECT n.n_name,
              round(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 6)
                AS x
@@ -549,8 +533,8 @@ object Stats {
            FROM pn)
          SELECT n_name, n_cust, rev_share, theil_within_g, between_g,
            theil_between, theil_within, theil_total
-         FROM pn, parts, tt ORDER BY n_name""",
-    "stats_mann_kendall" ->
+         FROM pn, parts, tt ORDER BY n_name"""),
+    "stats_mann_kendall" -> Op(mannKendall,
       s"""WITH hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
              round(${dsumSql("value")}, 6) AS y
            FROM events GROUP BY 1),
@@ -576,8 +560,8 @@ object Stats {
          SELECT n_hours, s, tie_adj, var_s, z,
            CASE WHEN z > 1.96 THEN 'increasing'
              WHEN z < -1.96 THEN 'decreasing' ELSE 'none' END AS trend
-         FROM z""",
-    "stats_chi2_independence" ->
+         FROM z"""),
+    "stats_chi2_independence" -> Op(chi2Independence,
       s"""WITH cells AS (SELECT event_type, hour($evTs) AS hr,
              CAST(COUNT(*) AS BIGINT) AS o
            FROM events GROUP BY 1, 2),
@@ -602,8 +586,8 @@ object Stats {
          SELECT n, n_rows, n_cols, (n_rows - 1) * (n_cols - 1) AS dof, chi2,
            round(sqrt(chi2 / (CAST(n AS DOUBLE)
              * CAST(LEAST(n_rows - 1, n_cols - 1) AS DOUBLE))), 6) AS cramers_v
-         FROM a""",
-    "stats_poisson_bootstrap" -> {
+         FROM a"""),
+    "stats_poisson_bootstrap" -> Op(poissonBootstrap, {
       val cList = PoissonC.map(c => f"$c%.12f").mkString("[", ", ", "]")
       val seed = "CAST(event_id AS VARCHAR) || ':' || CAST(g.b AS VARCHAR)"
       s"""WITH ev AS (SELECT event_id, value FROM events
@@ -630,8 +614,8 @@ object Stats {
            FROM rk)
          SELECT CAST(b AS INT) AS replica, n_eff, mean_b, mean_full,
            ci_lo, ci_hi
-         FROM rk, ci, full_m ORDER BY replica""" },
-    "stats_gini_lorenz" ->
+         FROM rk, ci, full_m ORDER BY replica""" }),
+    "stats_gini_lorenz" -> Op(giniLorenz,
       """WITH rev AS (SELECT c.c_custkey,
              COALESCE(r.r0, 0.0) AS v
            FROM customer c LEFT JOIN (
@@ -663,8 +647,8 @@ object Stats {
              AS cum_rev_share,
            gini
          FROM dec JOIN f ON cum_c - c < k AND k <= cum_c
-         ORDER BY decile""",
-    "stats_benford" -> {
+         ORDER BY decile"""),
+    "stats_benford" -> Op(benford, {
       val pRows = BenfordP.map { case (d, p) => f"($d, $p%.6f)" }.mkString(", ")
       s"""WITH p(digit, p_benford) AS (VALUES $pRows),
          obs AS (SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
@@ -682,8 +666,8 @@ object Stats {
            FROM t)
          SELECT digit, n_obs, p_benford, expected, chi2_term,
            round(SUM(chi2_term) OVER (), 6) AS chi2_total
-         FROM c ORDER BY digit""" },
-    "stats_ks_test" ->
+         FROM c ORDER BY digit""" }),
+    "stats_ks_test" -> Op(ksTest,
       """WITH per AS (SELECT round(value, 6) AS v,
              CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
                AS BIGINT) AS n1,
@@ -708,8 +692,8 @@ object Stats {
            LEAST(1.0, round(2.0 * round(exp(-2.0 * d_stat * d_stat
              * CAST(n_click AS DOUBLE) * CAST(n_purchase AS DOUBLE)
              / CAST(n_click + n_purchase AS DOUBLE)), 6), 6)) AS p_value
-         FROM d""",
-    "stats_kaplan_meier" ->
+         FROM d"""),
+    "stats_kaplan_meier" -> Op(kaplanMeier,
       s"""WITH h AS (SELECT MAX(epoch_us($evTs)) AS t_max FROM events),
          u AS (SELECT (MAX(epoch_us($evTs)) - MIN(epoch_us($evTs)))
                // 3600000000 AS t_h,
@@ -733,6 +717,6 @@ object Stats {
          SELECT t_h AS t_hours, CAST(n_risk AS BIGINT) AS n_risk,
            d AS n_events, c_all - d AS n_censored_at_t,
            round(exp(log_s), 6) AS survival
-         FROM s WHERE d >= 1 ORDER BY t_hours""",
+         FROM s WHERE d >= 1 ORDER BY t_hours"""),
   )
 }

@@ -16,8 +16,6 @@ import org.apache.spark.sql.functions._
   * site and every double sum goes through [[graft.Tables.dsum]]. */
 object Stats2 {
 
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
   /** The L274 conditional-agg sums, click vs purchase event values: one
     * scan gives each side's (n, Σx, Σx²); mean and sample variance are
     * recovered in closed form. Shared by Welch's t and Cohen's d. */
@@ -744,25 +742,8 @@ object Stats2 {
         coalesce(abs(col("z")) > 1.96, lit(false)).as("significant"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stats_mann_whitney_u" -> (mannWhitneyU _),
-    "stats_theil_sen" -> (theilSen _),
-    "stats_cohens_d" -> (cohensD _),
-    "stats_wilcoxon_signed_rank" -> (wilcoxonSignedRank _),
-    "stats_jarque_bera" -> (jarqueBera _),
-    "stats_friedman" -> (friedman _),
-    "stats_runs_test" -> (runsTest _),
-    "stats_kruskal_wallis" -> (kruskalWallis _),
-    "stats_brown_forsythe" -> (brownForsythe _),
-    "stats_durbin_watson" -> (durbinWatson _),
-    "stats_welch_ttest" -> (welchTTest _),
-    "stats_anova_f" -> (anovaF _),
-    "stats_spearman" -> (spearman _),
-    "stats_jsd_sources" -> (jsdSources _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stats_mann_whitney_u" ->
+  val entries: Map[String, Op] = Map(
+    "stats_mann_whitney_u" -> Op(mannWhitneyU,
       """WITH per AS (SELECT round(value, 6) AS v,
              CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
                AS BIGINT) AS n1,
@@ -798,8 +779,8 @@ object Stats2 {
              6) AS u_purchase,
            z,
            COALESCE(abs(z) > 1.96, FALSE) AS significant
-         FROM z""",
-    "stats_theil_sen" ->
+         FROM z"""),
+    "stats_theil_sen" -> Op(theilSen,
       s"""WITH daily AS (SELECT CAST(date_diff('day', DATE '1995-01-01',
              CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
              round(${dsumSql("o_totalprice")} / 1e6, 6) AS y
@@ -814,8 +795,8 @@ object Stats2 {
                AS sen_intercept
            FROM daily, sen GROUP BY 1, 2)
          SELECT n_days, n_pairs, sen_slope, sen_intercept
-         FROM r WHERE n_pairs >= 1""",
-    "stats_cohens_d" ->
+         FROM r WHERE n_pairs >= 1"""),
+    "stats_cohens_d" -> Op(cohensD,
       s"""WITH $clickPurchaseMomentsSql,
          p AS (SELECT *,
              sqrt(((CAST(n_click AS DOUBLE) - 1.0) * var_click
@@ -838,8 +819,8 @@ object Stats2 {
              WHEN abs(round((mean_click - mean_purchase) / pooled_raw, 6))
                < 0.8 THEN 'medium'
              ELSE 'large' END AS magnitude
-         FROM p""",
-    "stats_wilcoxon_signed_rank" ->
+         FROM p"""),
+    "stats_wilcoxon_signed_rank" -> Op(wilcoxonSignedRank,
       s"""WITH daily AS (SELECT date_trunc('day', $evTs) AS day,
              round(${dsumSql("CASE WHEN event_type = 'click' THEN value END")}, 6)
                AS xc,
@@ -871,8 +852,8 @@ object Stats2 {
              / sqrt(CAST(n_pairs AS DOUBLE) * (CAST(n_pairs AS DOUBLE) + 1.0)
                * (2.0 * CAST(n_pairs AS DOUBLE) + 1.0) / 6.0
                - CAST(t_adj AS DOUBLE) / 12.0), 6)) > 1.96 AS significant_95
-         FROM a, t""",
-    "stats_jarque_bera" ->
+         FROM a, t"""),
+    "stats_jarque_bera" -> Op(jarqueBera,
       s"""WITH t AS (SELECT event_type, value / 100.0 AS x FROM events),
          a AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
              round(${dsumSql("x")}, 6) AS s1,
@@ -910,8 +891,8 @@ object Stats2 {
            round(CAST(n AS DOUBLE) / 6.0 * (skewness * skewness
              + (kurtosis - 3.0) * (kurtosis - 3.0) / 4.0), 6) <= 5.991465
              AS normal_at_95
-         FROM m ORDER BY event_type""",
-    "stats_friedman" ->
+         FROM m ORDER BY event_type"""),
+    "stats_friedman" -> Op(friedman,
       s"""WITH daily AS (SELECT
              epoch_us(date_trunc('day', $evTs)) // 86400000000 AS day,
              event_type, round(${dsumSql("value")}, 6) AS r
@@ -943,8 +924,8 @@ object Stats2 {
          SELECT event_type, b AS n_blocks, r_j,
            round(r_j / CAST(b AS DOUBLE), 6) AS mean_rank, chi2_f,
            k - 1 AS df, chi2_f > 9.487729 AND k = 5 AS significant_95
-         FROM f ORDER BY event_type""",
-    "stats_runs_test" ->
+         FROM f ORDER BY event_type"""),
+    "stats_runs_test" -> Op(runsTest,
       s"""WITH $hourlyTrendFitSql,
          sg AS (SELECT t,
              CAST(round(y - (icept + slope * t), 6) >= 0 AS BIGINT) AS pos
@@ -973,8 +954,8 @@ object Stats2 {
                * (2.0 * n_pos * n_neg - CAST(n AS DOUBLE))
                / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
                  * (CAST(n AS DOUBLE) - 1.0))), 6)) <= 1.96 AS random_at_95
-         FROM agg""",
-    "stats_kruskal_wallis" ->
+         FROM agg"""),
+    "stats_kruskal_wallis" -> Op(kruskalWallis,
       s"""WITH vals AS (SELECT event_type, round(value, 6) AS v FROM events),
          byv AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS c FROM vals GROUP BY 1),
          rk AS (SELECT v, c,
@@ -1011,8 +992,8 @@ object Stats2 {
            FROM hh)
          SELECT n, k, h, tie_correction, h_corrected, k - 1 AS df,
            h_corrected > 9.487729 AND k - 1 = 4 AS significant_95
-         FROM a""",
-    "stats_brown_forsythe" ->
+         FROM a"""),
+    "stats_brown_forsythe" -> Op(brownForsythe,
       s"""WITH med AS (SELECT o_orderpriority AS priority,
              round(quantile_cont(CAST(o_totalprice AS DOUBLE), 0.5), 2)
                AS med_g
@@ -1035,8 +1016,8 @@ object Stats2 {
            k - 1 AS df_between, n - k AS df_within,
            round((ssb_k / CAST(k - 1 AS DOUBLE))
              / (ssw_k / CAST(n - k AS DOUBLE)), 6) AS w_stat
-         FROM f ORDER BY priority""",
-    "stats_durbin_watson" ->
+         FROM f ORDER BY priority"""),
+    "stats_durbin_watson" -> Op(durbinWatson,
       s"""WITH $hourlyTrendFitSql,
          e AS (SELECT t, slope, icept,
              round(y - (icept + slope * t), 6) AS e
@@ -1053,8 +1034,8 @@ object Stats2 {
              WHEN round(${dsumSql("round(de * de, 6)")}
                / ${dsumSql("round(e * e, 6)")}, 6) > 2.5
              THEN 'negative_autocorr' ELSE 'none' END AS verdict
-         FROM d""",
-    "stats_welch_ttest" ->
+         FROM d"""),
+    "stats_welch_ttest" -> Op(welchTTest,
       s"""WITH $clickPurchaseMomentsSql,
          vn AS (SELECT *,
              round(var_click / CAST(n_click AS DOUBLE), 6) AS vn1,
@@ -1068,8 +1049,8 @@ object Stats2 {
                + vn2 * vn2 / CAST(n_purchase - 1 AS DOUBLE)), 6) AS df_welch,
            abs(round((mean_click - mean_purchase) / sqrt(vn1 + vn2), 6)) > 1.96
              AS significant_95
-         FROM vn""",
-    "stats_anova_f" ->
+         FROM vn"""),
+    "stats_anova_f" -> Op(anovaF,
       s"""WITH g AS (SELECT o_orderpriority AS priority,
              CAST(COUNT(*) AS BIGINT) AS n_g,
              round(${dsumSql("o_totalprice")}, 6) AS s_g
@@ -1090,8 +1071,8 @@ object Stats2 {
            round((ssb_k / CAST(k - 1 AS DOUBLE))
              / (ssw_k / CAST(n - k AS DOUBLE)), 6) AS f_stat,
            round(ssb_k / (ssb_k + ssw_k), 6) AS eta_sq
-         FROM f ORDER BY priority""",
-    "stats_spearman" ->
+         FROM f ORDER BY priority"""),
+    "stats_spearman" -> Op(spearman,
       s"""WITH li AS (SELECT l_quantity AS q, round(l_extendedprice, 6) AS v
            FROM lineitem),
          rq AS (SELECT q,
@@ -1116,8 +1097,8 @@ object Stats2 {
            round((CAST(n AS DOUBLE) * sxy - sx * sy)
              / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx)
                * (CAST(n AS DOUBLE) * syy - sy * sy)), 6) AS rho_spearman
-         FROM s""",
-    "stats_jsd_sources" ->
+         FROM s"""),
+    "stats_jsd_sources" -> Op(jsdSources,
       s"""WITH tot AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS t
            FROM documents GROUP BY 1),
          nl AS (SELECT CAST(COUNT(DISTINCT lang) AS BIGINT) AS nl
@@ -1142,6 +1123,6 @@ object Stats2 {
            FROM pr GROUP BY 1, 2)
          SELECT src_a, src_b,
            CAST((x_micro + 1) // 2 AS DOUBLE) / 1e6 AS jsd
-         FROM mic ORDER BY jsd DESC, src_a, src_b LIMIT 20""",
+         FROM mic ORDER BY jsd DESC, src_a, src_b LIMIT 20"""),
   )
 }

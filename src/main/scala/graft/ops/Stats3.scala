@@ -115,15 +115,10 @@ object Stats3 {
       .orderBy(col("true_count").desc, col("user_id").asc)
       .limit(10)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stats_burstiness_memory" -> (burstinessMemory _),
-    "sketch_count_min" -> (countMinSketch _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stats_burstiness_memory" ->
-      """WITH g0 AS (SELECT event_type, user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
+  val entries: Map[String, Op] = Map(
+    "stats_burstiness_memory" -> Op(burstinessMemory,
+      s"""WITH g0 AS (SELECT event_type, user_id,
+             epoch_us($evTs) AS us, event_id
            FROM events),
          g AS (SELECT event_type, user_id, us, event_id,
              (us - lag(us, 1) OVER (PARTITION BY event_type, user_id
@@ -161,8 +156,8 @@ object Stats3 {
              ELSE round((sigma - mean) / (sigma + mean), 6) END AS burstiness,
            CASE WHEN mden = 0.0 THEN NULL
              ELSE round(mnum / mden, 6) END AS memory
-         FROM j ORDER BY event_type""",
-    "sketch_count_min" ->
+         FROM j ORDER BY event_type"""),
+    "sketch_count_min" -> Op(countMinSketch,
       s"""WITH kc AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS cnt
            FROM events GROUP BY 1),
          rws AS (SELECT user_id, cnt, r,
@@ -174,6 +169,6 @@ object Stats3 {
            FROM rws JOIN cells USING (r, c) GROUP BY 1, 2)
          SELECT user_id, cnt AS true_count, cms_est,
            cms_est - cnt AS overestimate
-         FROM est ORDER BY true_count DESC, user_id ASC LIMIT 10""",
+         FROM est ORDER BY true_count DESC, user_id ASC LIMIT 10"""),
   )
 }

@@ -293,15 +293,6 @@ object Stats4 {
       .orderBy("kind", "rank")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_holt_winters" -> (holtWintersDaily _),
-    "ts_forecast_mase" -> (forecastMase _),
-    "drift_page_hinkley" -> (pageHinkley _),
-    "ts_matrix_profile" -> (matrixProfile _),
-  )
-
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
   /** Oracle twin of [[dailyMicros]], numbered: `dr(day_us, y_micro, rn)`. */
   private[ops] def dailyMicrosSql: String =
     s"""daily AS (SELECT
@@ -338,8 +329,8 @@ object Stats4 {
              AS BIGINT)]
          FROM hw h JOIN dr d ON d.rn = h.rn + 1)"""
 
-  val oracles: Map[String, String] = Map(
-    "ts_holt_winters" ->
+  val entries: Map[String, Op] = Map(
+    "ts_holt_winters" -> Op(holtWintersDaily,
       s"""$hwCte
          SELECT rn, day_us, actual, level, trend, seasonal, forecast,
            abs_err FROM (
@@ -355,8 +346,8 @@ object Stats4 {
              round(h.seas / 1e6, 6), round(h.fc / 1e6, 6),
              round(abs(h.y - h.fc) / 1e6, 6)
            FROM hw h JOIN dr d ON d.rn = h.rn WHERE h.rn >= 8)
-         ORDER BY rn""",
-    "ts_forecast_mase" ->
+         ORDER BY rn"""),
+    "ts_forecast_mase" -> Op(forecastMase,
       s"""$hwCte,
          err AS (SELECT abs(y - fc) AS e FROM hw WHERE rn >= 8),
          nv AS (SELECT abs(d.y_micro - p.y_micro) AS e
@@ -378,8 +369,8 @@ object Stats4 {
            SELECT 'seasonal_naive', mn.n, round(mn.mae_m / 1e6, 6),
              round(CAST(mn.mae_m AS DOUBLE) / mn.mae_m, 6)
            FROM mn)
-         ORDER BY model""",
-    "ts_matrix_profile" ->
+         ORDER BY model"""),
+    "ts_matrix_profile" -> Op(matrixProfile,
       s"""WITH hourly AS (SELECT
              epoch_us(date_trunc('hour', $evTs)) AS bucket_us,
              round(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6)
@@ -430,8 +421,8 @@ object Stats4 {
            FROM p1 ORDER BY d2 DESC, i_sub ASC LIMIT 3)
          SELECT kind, rank, i_sub, j_sub, d2 FROM mot
          UNION ALL SELECT kind, rank, i_sub, j_sub, d2 FROM dis
-         ORDER BY kind, rank""",
-    "drift_page_hinkley" ->
+         ORDER BY kind, rank"""),
+    "drift_page_hinkley" -> Op(pageHinkley,
       s"""WITH hourly AS (SELECT
              epoch_us(date_trunc('hour', $evTs)) AS bucket_us,
              CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -466,6 +457,6 @@ object Stats4 {
            round(ph / 1e6, 6) AS ph,
            round(mu_micro * 12 / 1e6, 6) AS lambda
          FROM ph0 WHERE ph > mu_micro * 12
-         ORDER BY rn LIMIT 24""",
+         ORDER BY rn LIMIT 24"""),
   )
 }

@@ -161,15 +161,8 @@ object Stats5 {
         lit(0.9).as("target"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stats_bh_fdr" -> (bhFdr _),
-    "ml_conformal_interval" -> (conformalInterval _),
-  )
-
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
-  val oracles: Map[String, String] = Map(
-    "stats_bh_fdr" ->
+  val entries: Map[String, Op] = Map(
+    "stats_bh_fdr" -> Op(bhFdr,
       s"""WITH ev AS (SELECT event_type,
              value + CASE WHEN event_type = 'purchase'
                AND (epoch_us($evTs) // 86400000000) % 2 = 1
@@ -214,8 +207,8 @@ object Stats5 {
            FROM cr)
          SELECT event_type, n_odd, n_even, mean_odd, mean_even, z, rank,
            crit, rank <= cutoff AS rejected
-         FROM cut ORDER BY rank""",
-    "ml_conformal_interval" ->
+         FROM cut ORDER BY rank"""),
+    "ml_conformal_interval" -> Op(conformalInterval,
       s"""WITH daily AS (SELECT
              epoch_us(date_trunc('day', $evTs)) AS day_us,
              round(${dsumSql("value")}, 6) AS y
@@ -257,6 +250,6 @@ object Stats5 {
            round(CAST(tr.n_covered AS DOUBLE) / tr.n_train2, 6)
              AS coverage_train,
            0.9 AS target
-         FROM fit f, kq, q, tr""",
+         FROM fit f, kq, q, tr"""),
   )
 }

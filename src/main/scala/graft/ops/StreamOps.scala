@@ -189,43 +189,26 @@ object StreamOps {
       .orderBy("user_id", "event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_tumbling_counts" -> (tumblingCounts _),
-    "stream_daily_global_stats" -> (dailyGlobalStats _),
-    "stream_sliding_avg" -> (slidingAvg _),
-    "stream_cumulate_counts" -> (cumulateCounts _),
-    "stream_session_stats" -> (sessionStats _),
-    "stream_count_window_sum" -> (countWindowSum _),
-    "stream_count_trigger_evict" -> (countTriggerEvict _),
-    "stream_rate_limit" -> (rateLimit _),
-    "stream_user_first_last" -> (userFirstLast _),
-    "stream_dedup_first_event" -> (dedupFirstEvent _),
-  )
-
-  // DuckDB oracle SQL. `events.ts` is TIMESTAMP_NS there; CAST truncates to
-  // µs exactly like our `ts div 1000` read (FIXTURES.md loading contract).
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
-  val oracles: Map[String, String] = Map(
-    "stream_tumbling_counts" ->
+  val entries: Map[String, Op] = Map(
+    "stream_tumbling_counts" -> Op(tumblingCounts,
       s"""SELECT epoch_us(time_bucket(INTERVAL '1 hour', $evTs)) AS ws_us,
           event_type, CAST(COUNT(*) AS BIGINT) AS n
-          FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "stream_daily_global_stats" ->
+          FROM events GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "stream_daily_global_stats" -> Op(dailyGlobalStats,
       s"""SELECT epoch_us(time_bucket(INTERVAL '1 day', $evTs)) AS ws_us,
           CAST(COUNT(*) AS BIGINT) AS n,
           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-          FROM events GROUP BY 1 ORDER BY 1""",
-    "stream_sliding_avg" ->
+          FROM events GROUP BY 1 ORDER BY 1"""),
+    "stream_sliding_avg" -> Op(slidingAvg,
       s"""SELECT epoch_us(time_bucket(INTERVAL '15 minutes', $evTs)
                  - k * INTERVAL '15 minutes') AS ws_us,
           CAST(COUNT(*) AS BIGINT) AS n,
           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
             / CAST(COUNT(value) AS DOUBLE) AS avg_value
           FROM events CROSS JOIN (SELECT unnest([0,1,2,3]) AS k) shifts
-          GROUP BY 1 ORDER BY 1""",
-    "stream_cumulate_counts" ->
+          GROUP BY 1 ORDER BY 1"""),
+    "stream_cumulate_counts" -> Op(cumulateCounts,
       s"""WITH e AS (SELECT epoch_us($evTs) AS ts_us, value FROM events),
             b AS (SELECT ts_us, value,
                 (ts_us // 3600000000) * 3600000000 AS ws_us FROM e),
@@ -234,8 +217,8 @@ object StreamOps {
                 ws_us + 3600000001, 900000000)) AS we_us FROM b)
           SELECT ws_us, we_us, CAST(COUNT(*) AS BIGINT) AS n,
             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-          FROM x GROUP BY 1, 2 ORDER BY 1, 2""",
-    "stream_session_stats" ->
+          FROM x GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "stream_session_stats" -> Op(sessionStats,
       s"""WITH flagged AS (
             SELECT user_id, $evTs AS ts,
               CASE WHEN epoch_us($evTs)
@@ -255,8 +238,8 @@ object StreamOps {
             CAST(SUM(n_events) AS BIGINT) AS n_events,
             CAST(SUM(last_us - first_us) AS DOUBLE)
               / CAST(COUNT(*) AS DOUBLE) AS avg_span_us
-          FROM per_session GROUP BY 1 ORDER BY 1""",
-    "stream_count_window_sum" ->
+          FROM per_session GROUP BY 1 ORDER BY 1"""),
+    "stream_count_window_sum" -> Op(countWindowSum,
       s"""WITH numbered AS (
             SELECT user_id, value,
               (ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY $evTs, event_id)
@@ -265,8 +248,8 @@ object StreamOps {
           SELECT user_id, CAST(bucket AS BIGINT) AS bucket,
             CAST(COUNT(*) AS BIGINT) AS n,
             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-          FROM numbered GROUP BY 1, 2 ORDER BY 1, 2""",
-    "stream_count_trigger_evict" ->
+          FROM numbered GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "stream_count_trigger_evict" -> Op(countTriggerEvict,
       s"""WITH numbered AS (
             SELECT user_id, value,
               ROW_NUMBER() OVER w AS rn,
@@ -277,8 +260,8 @@ object StreamOps {
             WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id))
           SELECT user_id, CAST(rn // 3 AS BIGINT) AS fire_seq,
             CAST(LEAST(rn, 5) AS BIGINT) AS n_in_window, win_sum
-          FROM numbered WHERE rn % 3 = 0 ORDER BY user_id, fire_seq""",
-    "stream_rate_limit" ->
+          FROM numbered WHERE rn % 3 = 0 ORDER BY user_id, fire_seq"""),
+    "stream_rate_limit" -> Op(rateLimit,
       s"""WITH numbered AS (
             SELECT user_id, value,
               epoch_us(date_trunc('day', $evTs)) AS day_us,
@@ -293,20 +276,20 @@ object StreamOps {
             round(CAST(SUM(CASE WHEN rn <= 5
               THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE), 6)
               AS admitted_value
-          FROM numbered GROUP BY 1, 2 ORDER BY 1, 2""",
-    "stream_user_first_last" ->
+          FROM numbered GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "stream_user_first_last" -> Op(userFirstLast,
       s"""SELECT user_id, MIN(epoch_us($evTs)) AS first_us,
             MAX(epoch_us($evTs)) AS last_us,
             CAST(COUNT(*) AS BIGINT) AS n_events,
             CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types
-          FROM events GROUP BY 1 ORDER BY 1""",
-    "stream_dedup_first_event" ->
+          FROM events GROUP BY 1 ORDER BY 1"""),
+    "stream_dedup_first_event" -> Op(dedupFirstEvent,
       s"""WITH numbered AS (
             SELECT user_id, event_type, event_id, epoch_us($evTs) AS ts_us,
               ROW_NUMBER() OVER (PARTITION BY user_id, event_type
                 ORDER BY $evTs, event_id) AS rn
             FROM events)
           SELECT user_id, event_type, event_id, ts_us
-          FROM numbered WHERE rn = 1 ORDER BY user_id, event_type""",
+          FROM numbered WHERE rn = 1 ORDER BY user_id, event_type"""),
   )
 }

@@ -1232,53 +1232,6 @@ object Warehouse {
   // registry
   // ------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tpch_q3_shipping_priority" -> (tpchQ3 _),
-    "tpch_q5_local_supplier" -> (tpchQ5 _),
-    "tpch_q10_returned_items" -> (tpchQ10 _),
-    "tpch_q14_promo_effect" -> (tpchQ14 _),
-    "tpch_q18_large_volume" -> (tpchQ18 _),
-    "cdc_latest_per_key" -> (cdcLatestPerKey _),
-    "cdc_scd2_intervals" -> (cdcScd2Intervals _),
-    "cdc_temporal_join" -> (cdcTemporalJoin _),
-    "sessionize_events" -> (sessionizeEvents _),
-    "sessionize_native_window" -> (sessionizeNativeWindow _),
-    "sessionize_dynamic_gap" -> (sessionizeDynamicGap _),
-    "ts_time_weighted_avg" -> (tsTimeWeightedAvg _),
-    "ts_pct_change_daily" -> (tsPctChangeDaily _),
-    "agg_histogram_value" -> (aggHistogramValue _),
-    "anomaly_zscore_events" -> (anomalyZscoreEvents _),
-    "agg_user_entropy" -> (aggUserEntropy _),
-    "stream_topk_per_window" -> (streamTopkPerWindow _),
-    "join_salted_hotkey" -> (joinSaltedHotkey _),
-    "topk_with_ties" -> (topkWithTies _),
-    "sql_correlated_scalar" -> (sqlCorrelatedScalar _),
-    "dau_daily" -> (dauDaily _),
-    "scalar_variant_props" -> (scalarVariantProps _),
-    "sql_lateral_topn" -> (sqlLateralTopn _),
-    "sql_recursive_spine" -> (sqlRecursiveSpine _),
-    "cohort_day1_retention" -> (cohortRetention _),
-    "funnel_stages" -> (funnelStages _),
-    "funnel_time_to_convert" -> (funnelTimeToConvert _),
-    "markov_event_transitions" -> (markovTransitions _),
-    "basket_lift_pairs" -> (basketLift _),
-    "rec_item_item_cf" -> (itemItemCf _),
-    "cohort_revenue_ltv" -> (cohortLtv _),
-    "ab_test_ztest" -> (abTestZtest _),
-    "cohort_retention_matrix" -> (cohortMatrix _),
-    "rfm_segments" -> (rfmSegments _),
-    "agg_winsorized_stats" -> (winsorizedStats _),
-    "session_top_paths" -> (sessionPaths _),
-    "trending_decayed_parts" -> (trendingDecayed _),
-    "concentration_revenue" -> (revenueConcentration _),
-    "win_moving_median" -> (winMovingMedian _),
-    "scalar_string_format" -> (scalarStringFormat _),
-    "scalar_regexp_extract" -> (scalarRegexpExtract _),
-    "scalar_null_semantics" -> (scalarNullSemantics _),
-  )
-
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
   /** `c`: each user's events where the event type changes (the SCD2
     * version starts), over `t(user_id, event_id, ts_us, event_type)`. */
   private val typeChangesSql =
@@ -1302,8 +1255,8 @@ object Warehouse {
             SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 7200000000
               THEN 1 ELSE 0 END AS is_new FROM t)"""
 
-  val oracles: Map[String, String] = Map(
-    "tpch_q3_shipping_priority" ->
+  val entries: Map[String, Op] = Map(
+    "tpch_q3_shipping_priority" -> Op(tpchQ3,
       s"""SELECT l_orderkey, ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue,
           strftime(o_orderdate, '%Y-%m-%d') AS o_date
           FROM customer JOIN orders ON c_custkey = o_custkey
@@ -1312,8 +1265,8 @@ object Warehouse {
             AND o_orderdate < TIMESTAMP '1998-01-01'
             AND l_shipdate > TIMESTAMP '1998-01-01'
           GROUP BY l_orderkey, o_orderdate
-          ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "tpch_q5_local_supplier" ->
+          ORDER BY revenue DESC, l_orderkey LIMIT 10"""),
+    "tpch_q5_local_supplier" -> Op(tpchQ5,
       s"""SELECT n_name, ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue,
           COUNT(*) AS n_items
           FROM region JOIN nation ON n_regionkey = r_regionkey
@@ -1324,8 +1277,8 @@ object Warehouse {
           WHERE r_name = 'ASIA'
             AND o_orderdate >= TIMESTAMP '1996-01-01'
             AND o_orderdate < TIMESTAMP '1997-01-01'
-          GROUP BY n_name ORDER BY revenue DESC, n_name""",
-    "tpch_q10_returned_items" ->
+          GROUP BY n_name ORDER BY revenue DESC, n_name"""),
+    "tpch_q10_returned_items" -> Op(tpchQ10,
       s"""SELECT c_custkey, c_name, c_acctbal, n_name,
           ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue
           FROM customer JOIN orders ON o_custkey = c_custkey
@@ -1335,8 +1288,8 @@ object Warehouse {
             AND o_orderdate >= TIMESTAMP '1996-01-01'
             AND o_orderdate < TIMESTAMP '1996-07-01'
           GROUP BY c_custkey, c_name, c_acctbal, n_name
-          ORDER BY revenue DESC, c_custkey LIMIT 20""",
-    "tpch_q14_promo_effect" ->
+          ORDER BY revenue DESC, c_custkey LIMIT 20"""),
+    "tpch_q14_promo_effect" -> Op(tpchQ14,
       s"""SELECT
           ${dsumSql("CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")} AS promo_revenue,
           ${dsumSql("l_extendedprice * (1 - l_discount)")} AS total_revenue,
@@ -1344,8 +1297,8 @@ object Warehouse {
             / ${dsumSql("l_extendedprice * (1 - l_discount)")}, 6) AS promo_pct
           FROM lineitem JOIN part ON l_partkey = p_partkey
           WHERE l_shipdate >= TIMESTAMP '1996-03-01'
-            AND l_shipdate < TIMESTAMP '1996-04-01'""",
-    "tpch_q18_large_volume" ->
+            AND l_shipdate < TIMESTAMP '1996-04-01'"""),
+    "tpch_q18_large_volume" -> Op(tpchQ18,
       s"""WITH big AS (
             SELECT l_orderkey, ${dsumSql("l_quantity")} AS total_qty
             FROM lineitem GROUP BY 1 HAVING total_qty > 150)
@@ -1353,23 +1306,23 @@ object Warehouse {
             strftime(o_orderdate, '%Y-%m-%d') AS o_date, o_totalprice, total_qty
           FROM big JOIN orders ON o_orderkey = l_orderkey
           JOIN customer ON c_custkey = o_custkey
-          ORDER BY total_qty DESC, o_orderkey LIMIT 20""",
-    "cdc_latest_per_key" ->
+          ORDER BY total_qty DESC, o_orderkey LIMIT 20"""),
+    "cdc_latest_per_key" -> Op(cdcLatestPerKey,
       s"""SELECT user_id, event_type, last_event_id, last_ts_us, last_value FROM (
             SELECT user_id, event_type, event_id AS last_event_id,
               epoch_us($evTs) AS last_ts_us, value AS last_value,
               row_number() OVER (PARTITION BY user_id, event_type
                 ORDER BY $evTs DESC, event_id DESC) AS rn
-            FROM events) WHERE rn = 1 ORDER BY user_id, event_type""",
-    "cdc_scd2_intervals" ->
+            FROM events) WHERE rn = 1 ORDER BY user_id, event_type"""),
+    "cdc_scd2_intervals" -> Op(cdcScd2Intervals,
       s"""WITH $typeChangesSql
           SELECT user_id, CAST(row_number() OVER w AS BIGINT) AS version,
             event_type, ts_us AS valid_from_us,
             lead(ts_us) OVER w AS valid_to_us,
             lead(ts_us) OVER w IS NULL AS is_current
           FROM c WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-          ORDER BY user_id, version""",
-    "cdc_temporal_join" ->
+          ORDER BY user_id, version"""),
+    "cdc_temporal_join" -> Op(cdcTemporalJoin,
       s"""WITH $typeChangesSql,
           dim AS (SELECT user_id, CAST(row_number() OVER w AS BIGINT) AS version,
             event_type, ts_us AS valid_from_us,
@@ -1383,8 +1336,8 @@ object Warehouse {
           FROM p JOIN dim ON p.user_id = dim.user_id
             AND p.p_ts_us >= dim.valid_from_us
             AND (dim.valid_to_us IS NULL OR p.p_ts_us < dim.valid_to_us)
-          ORDER BY purchase_id""",
-    "sessionize_events" ->
+          ORDER BY purchase_id"""),
+    "sessionize_events" -> Op(sessionizeEvents,
       s"""WITH $sessionStartsSql,
           s AS (
             SELECT *, CAST(SUM(is_new) OVER (PARTITION BY user_id
@@ -1393,8 +1346,8 @@ object Warehouse {
             MIN(ts_us) AS start_us, MAX(ts_us) AS end_us,
             ${dsumSql("value")} AS sum_value,
             MAX(ts_us) - MIN(ts_us) AS dur_us
-          FROM s GROUP BY user_id, session_idx ORDER BY user_id, session_idx""",
-    "sessionize_native_window" ->
+          FROM s GROUP BY user_id, session_idx ORDER BY user_id, session_idx"""),
+    "sessionize_native_window" -> Op(sessionizeNativeWindow,
       s"""WITH $sessionStartsSql,
           s AS (
             SELECT *, SUM(is_new) OVER (PARTITION BY user_id
@@ -1402,8 +1355,8 @@ object Warehouse {
           SELECT user_id, MIN(ts_us) AS start_us,
             MAX(ts_us) + 7200000000 AS end_us,
             COUNT(*) AS n_events, ${dsumSql("value")} AS sum_value
-          FROM s GROUP BY user_id, session_idx ORDER BY user_id, start_us""",
-    "sessionize_dynamic_gap" ->
+          FROM s GROUP BY user_id, session_idx ORDER BY user_id, start_us"""),
+    "sessionize_dynamic_gap" -> Op(sessionizeDynamicGap,
       s"""WITH t AS (
             SELECT user_id, event_id, value, epoch_us($evTs) AS ts_us,
               CASE WHEN event_type = 'purchase' THEN 14400000000
@@ -1426,8 +1379,8 @@ object Warehouse {
           SELECT user_id, session_idx, COUNT(*) AS n_events,
             MIN(ts_us) AS start_us, MAX(end_us_e) AS end_us,
             ${dsumSql("value")} AS sum_value
-          FROM s GROUP BY user_id, session_idx ORDER BY user_id, session_idx""",
-    "ts_time_weighted_avg" ->
+          FROM s GROUP BY user_id, session_idx ORDER BY user_id, session_idx"""),
+    "ts_time_weighted_avg" -> Op(tsTimeWeightedAvg,
       s"""WITH t AS (
             SELECT user_id, value, epoch_us($evTs) AS ts_us,
               lead(epoch_us($evTs)) OVER (PARTITION BY user_id
@@ -1439,21 +1392,21 @@ object Warehouse {
             FROM t WHERE next_us IS NOT NULL)
           SELECT user_id, COUNT(*) AS n_intervals,
             round(${dsumSql("value * dt_s")} / ${dsumSql("dt_s")}, 6) AS twa
-          FROM d GROUP BY user_id ORDER BY user_id""",
-    "ts_pct_change_daily" ->
+          FROM d GROUP BY user_id ORDER BY user_id"""),
+    "ts_pct_change_daily" -> Op(tsPctChangeDaily,
       s"""WITH daily AS (
             SELECT date_trunc('day', $evTs) AS day, ${dsumSql("value")} AS total
             FROM events GROUP BY 1)
           SELECT strftime(day, '%Y-%m-%d') AS day, total,
             round((total - lag(total) OVER (ORDER BY day))
               / lag(total) OVER (ORDER BY day), 6) AS pct_change
-          FROM daily ORDER BY day""",
-    "agg_histogram_value" ->
+          FROM daily ORDER BY day"""),
+    "agg_histogram_value" -> Op(aggHistogramValue,
       s"""SELECT GREATEST(LEAST(CAST(FLOOR(value / 50) AS INT), 9), 0) AS bin,
           COUNT(*) AS n, MIN(value) AS min_v, MAX(value) AS max_v,
           ${dsumSql("value")} AS sum_v
-          FROM events GROUP BY 1 ORDER BY 1""",
-    "anomaly_zscore_events" ->
+          FROM events GROUP BY 1 ORDER BY 1"""),
+    "anomaly_zscore_events" -> Op(anomalyZscoreEvents,
       s"""WITH t AS (
             SELECT user_id, value,
               CAST(COUNT(*) OVER w AS DOUBLE) AS nd,
@@ -1470,8 +1423,8 @@ object Warehouse {
           SELECT user_id, COUNT(*) AS n_events,
             CAST(SUM(CASE WHEN abs(z) > 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies,
             round(MAX(z), 6) AS max_z
-          FROM z GROUP BY user_id ORDER BY user_id""",
-    "agg_user_entropy" ->
+          FROM z GROUP BY user_id ORDER BY user_id"""),
+    "agg_user_entropy" -> Op(aggUserEntropy,
       """WITH c AS (
            SELECT user_id, event_type, COUNT(*) AS n
            FROM events GROUP BY 1, 2),
@@ -1481,31 +1434,31 @@ object Warehouse {
            FROM c)
          SELECT user_id, COUNT(*) AS n_types, CAST(SUM(n) AS BIGINT) AS n_events,
            CAST(-SUM(CAST(p * ln(p) AS DECIMAL(18,6))) AS DOUBLE) AS entropy
-         FROM p GROUP BY user_id ORDER BY user_id""",
-    "stream_topk_per_window" ->
+         FROM p GROUP BY user_id ORDER BY user_id"""),
+    "stream_topk_per_window" -> Op(streamTopkPerWindow,
       s"""SELECT win_us, user_id, total, n, rn FROM (
             SELECT *, row_number() OVER (PARTITION BY win_us
               ORDER BY total DESC, user_id) AS rn FROM (
               SELECT epoch_us(date_trunc('day', $evTs)) AS win_us, user_id,
                 ${dsumSql("value")} AS total, COUNT(*) AS n
               FROM events GROUP BY 1, 2))
-          WHERE rn <= 3 ORDER BY win_us, rn""",
-    "sql_correlated_scalar" -> CorrelatedScalarSql,
-    "scalar_variant_props" ->
+          WHERE rn <= 3 ORDER BY win_us, rn"""),
+    "sql_correlated_scalar" -> Op(sqlCorrelatedScalar, CorrelatedScalarSql),
+    "scalar_variant_props" -> Op(scalarVariantProps,
       """SELECT event_type, COUNT(k) AS n, MIN(k) AS min_k, MAX(k) AS max_k,
          CAST(SUM(k) AS BIGINT) AS sum_k FROM (
            SELECT event_type, TRY_CAST(json_extract_string(props, '$.k') AS INT) AS k
            FROM events)
-         GROUP BY event_type ORDER BY event_type""",
-    "sql_lateral_topn" ->
+         GROUP BY event_type ORDER BY event_type"""),
+    "sql_lateral_topn" -> Op(sqlLateralTopn,
       """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
          FROM customer c,
          LATERAL (SELECT o_orderkey, o_totalprice FROM orders
                   WHERE o_custkey = c.c_custkey
                   ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
          WHERE c.c_custkey < 50
-         ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""",
-    "sql_recursive_spine" ->
+         ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey"""),
+    "sql_recursive_spine" -> Op(sqlRecursiveSpine,
       s"""WITH RECURSIVE spine(day, hi) AS (
             SELECT date_trunc('day', MIN($evTs)), date_trunc('day', MAX($evTs)) FROM events
             UNION ALL
@@ -1516,12 +1469,12 @@ object Warehouse {
             FROM events GROUP BY 1)
           SELECT strftime(spine.day, '%Y-%m-%d') AS day, COALESCE(n, 0) AS n
           FROM spine LEFT JOIN daily ON spine.day = daily.day
-          ORDER BY day""",
-    "dau_daily" ->
+          ORDER BY day"""),
+    "dau_daily" -> Op(dauDaily,
       s"""SELECT strftime(date_trunc('day', $evTs), '%Y-%m-%d') AS day,
           COUNT(DISTINCT user_id) AS dau, COUNT(*) AS n_events
-          FROM events GROUP BY 1 ORDER BY 1""",
-    "cohort_day1_retention" ->
+          FROM events GROUP BY 1 ORDER BY 1"""),
+    "cohort_day1_retention" -> Op(cohortRetention,
       s"""WITH daily AS (
             SELECT DISTINCT date_trunc('day', $evTs) AS day, user_id FROM events),
           ret AS (
@@ -1533,8 +1486,8 @@ object Warehouse {
           SELECT strftime(act.day, '%Y-%m-%d') AS day, active,
             COALESCE(retained, 0) AS retained,
             round(CAST(COALESCE(retained, 0) AS DOUBLE) / CAST(active AS DOUBLE), 6) AS rate
-          FROM act LEFT JOIN ret ON act.day = ret.day ORDER BY 1""",
-    "funnel_stages" ->
+          FROM act LEFT JOIN ret ON act.day = ret.day ORDER BY 1"""),
+    "funnel_stages" -> Op(funnelStages,
       s"""WITH pu AS (
             SELECT user_id,
               MIN(CASE WHEN event_type = 'view' THEN $evTs END) AS t_view,
@@ -1547,8 +1500,8 @@ object Warehouse {
               THEN 1 ELSE 0 END) AS BIGINT) AS n_click_after_view,
             CAST(SUM(CASE WHEN t_view IS NOT NULL AND t_click > t_view
               AND t_purchase > t_click THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase_after_click
-          FROM pu""",
-    "funnel_time_to_convert" ->
+          FROM pu"""),
+    "funnel_time_to_convert" -> Op(funnelTimeToConvert,
       s"""WITH pu AS (
             SELECT user_id,
               MIN(CASE WHEN event_type = 'view' THEN $evTs END) AS t_view,
@@ -1577,8 +1530,8 @@ object Warehouse {
             vc50 AS p50_s, vc90 AS p90_s FROM a
           UNION ALL SELECT '2_click_to_purchase', n_cp, cp50, cp90 FROM a
           UNION ALL SELECT '3_view_to_purchase', n_cp, vp50, vp90 FROM a
-          ORDER BY transition""",
-    "concentration_revenue" ->
+          ORDER BY transition"""),
+    "concentration_revenue" -> Op(revenueConcentration,
       s"""WITH per AS (SELECT o_custkey,
              round(${dsumSql("o_totalprice")}, 6) AS rev
            FROM orders GROUP BY 1),
@@ -1595,8 +1548,8 @@ object Warehouse {
          SELECT n_customers, n_top, total_rev, top_rev, max_rev, p90,
            round(top_rev / total_rev, 6) AS top_share,
            round(max_rev / total_rev, 6) AS max_share
-         FROM a""",
-    "trending_decayed_parts" ->
+         FROM a"""),
+    "trending_decayed_parts" -> Op(trendingDecayed,
       """WITH m AS (SELECT MAX(o_orderdate) AS max_d FROM orders),
          t AS (SELECT l.l_partkey,
              LEAST(CAST(FLOOR(date_diff('day', o.o_orderdate, m.max_d) / 7)
@@ -1605,8 +1558,8 @@ object Warehouse {
            CROSS JOIN m)
          SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS n_lineitems,
            SUM(CAST(1.0 AS DOUBLE) / (CAST(1 AS BIGINT) << weeks)) AS decayed
-         FROM t GROUP BY 1 ORDER BY decayed DESC, l_partkey LIMIT 20""",
-    "session_top_paths" ->
+         FROM t GROUP BY 1 ORDER BY decayed DESC, l_partkey LIMIT 20"""),
+    "session_top_paths" -> Op(sessionPaths,
       s"""WITH seq AS (SELECT user_id, event_id, event_type,
              epoch_us($evTs) AS us,
              LAG(epoch_us($evTs)) OVER w AS prev_us
@@ -1627,8 +1580,8 @@ object Warehouse {
            FROM (SELECT types, unnest(range(1, len(types) - 1)) AS i
              FROM arrs WHERE len(types) >= 3))
          SELECT path, CAST(COUNT(*) AS BIGINT) AS n
-         FROM grams GROUP BY 1 ORDER BY n DESC, path LIMIT 10""",
-    "agg_winsorized_stats" ->
+         FROM grams GROUP BY 1 ORDER BY n DESC, path LIMIT 10"""),
+    "agg_winsorized_stats" -> Op(winsorizedStats,
       s"""WITH b AS (SELECT
              round(quantile_cont(CAST(value AS DOUBLE), 0.01), 6) AS lo,
              round(quantile_cont(CAST(value AS DOUBLE), 0.99), 6) AS hi
@@ -1646,8 +1599,8 @@ object Warehouse {
              AS mean_raw,
            round(${dsumSql("wv")} / CAST(COUNT(*) AS DOUBLE), 6)
              AS mean_winsor
-         FROM w GROUP BY 1 ORDER BY 1""",
-    "rfm_segments" ->
+         FROM w GROUP BY 1 ORDER BY 1"""),
+    "rfm_segments" -> Op(rfmSegments,
       s"""WITH per AS (SELECT o_custkey,
              CAST(MAX(epoch_us(o_orderdate)) AS DOUBLE) AS rec,
              CAST(COUNT(*) AS DOUBLE) AS freq,
@@ -1677,8 +1630,8 @@ object Warehouse {
            CAST(r AS INT) AS r, CAST(f AS INT) AS f, CAST(m AS INT) AS m,
            CAST(COUNT(*) AS BIGINT) AS n_customers,
            CAST(SUM(CAST(mon AS DECIMAL(18,6))) AS DOUBLE) AS sum_spend
-         FROM scored GROUP BY r, f, m ORDER BY segment""",
-    "cohort_retention_matrix" ->
+         FROM scored GROUP BY r, f, m ORDER BY segment"""),
+    "cohort_retention_matrix" -> Op(cohortMatrix,
       s"""WITH act AS (SELECT DISTINCT user_id,
              date_trunc('day', $evTs) AS day
            FROM events),
@@ -1697,8 +1650,8 @@ object Warehouse {
            round(CAST(m.n_active AS DOUBLE) / CAST(s.n_cohort AS DOUBLE), 6)
              AS rate
          FROM m JOIN sizes s USING (cohort_day)
-         ORDER BY cohort, day_offset""",
-    "ab_test_ztest" -> {
+         ORDER BY cohort, day_offset"""),
+    "ab_test_ztest" -> Op(abTestZtest, {
       val arm = s"(${graft.Tables.h48Sql("CAST(user_id AS VARCHAR)")}) % 2"
       def z(nA: String, xA: String, nB: String, xB: String) =
         s"""round((CAST($xA AS DOUBLE) / CAST($nA AS DOUBLE)
@@ -1744,8 +1697,8 @@ object Warehouse {
          SELECT metric, n_a, x_a, n_b, x_b, p_a, p_b, z,
            abs(z) > 1.96 AS significant_95
          FROM rows_ ORDER BY metric"""
-    },
-    "cohort_revenue_ltv" ->
+    }),
+    "cohort_revenue_ltv" -> Op(cohortLtv,
       s"""WITH om AS (SELECT o_custkey,
              date_trunc('month', CAST(o_orderdate AS DATE)) AS month,
              o_totalprice
@@ -1774,8 +1727,8 @@ object Warehouse {
            CAST((2 * CAST(cum_dec * 1000000 AS BIGINT) + n_cohort)
              // (2 * n_cohort) AS DOUBLE) / 1e6 AS ltv_per_user_k
          FROM cum JOIN sz USING (m0)
-         ORDER BY cohort_month, age_months""",
-    "rec_item_item_cf" -> {
+         ORDER BY cohort_month, age_months"""),
+    "rec_item_item_cf" -> Op(itemItemCf, {
       val h = graft.Tables.h48Sql(
         "CAST(c AS VARCHAR) || ':' || CAST(p AS VARCHAR)")
       s"""WITH cp AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p
@@ -1800,8 +1753,8 @@ object Warehouse {
              AS cosine, n_capped_custs
          FROM co JOIN ni na ON co.item_a = na.p JOIN ni nb ON co.item_b = nb.p
          ORDER BY cosine DESC, item_a, item_b LIMIT 20"""
-    },
-    "basket_lift_pairs" ->
+    }),
+    "basket_lift_pairs" -> Op(basketLift,
       """WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
             FROM lineitem),
           pairs AS (SELECT x.p AS pa, y.p AS pb,
@@ -1818,8 +1771,8 @@ object Warehouse {
           JOIN parts a ON pr.pa = a.p
           JOIN parts b ON pr.pb = b.p
           CROSS JOIN n
-          ORDER BY lift DESC, pa, pb LIMIT 20""",
-    "markov_event_transitions" ->
+          ORDER BY lift DESC, pa, pb LIMIT 20"""),
+    "markov_event_transitions" -> Op(markovTransitions,
       s"""WITH seq AS (SELECT user_id, event_type,
             LAG(event_type) OVER (PARTITION BY user_id
               ORDER BY $evTs, event_id) AS from_type
@@ -1832,28 +1785,28 @@ object Warehouse {
         SELECT t.from_type, t.to_type, t.n,
           round(CAST(t.n AS DOUBLE) / CAST(tt.row_n AS DOUBLE), 6) AS p
         FROM trans t JOIN totals tt USING (from_type)
-        ORDER BY from_type, to_type""",
-    "win_moving_median" ->
+        ORDER BY from_type, to_type"""),
+    "win_moving_median" -> Op(winMovingMedian,
       s"""SELECT user_id, event_id,
           round(quantile_cont(value, 0.5) OVER (PARTITION BY user_id
             ORDER BY $evTs, event_id
             ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING), 6) AS med7
-          FROM events ORDER BY user_id, event_id""",
-    "topk_with_ties" ->
+          FROM events ORDER BY user_id, event_id"""),
+    "topk_with_ties" -> Op(topkWithTies,
       """SELECT o_orderstatus, o_orderkey, price_k, CAST(rnk AS INT) AS rnk FROM (
            SELECT o_orderstatus, o_orderkey,
              round(o_totalprice / 1000, 0) AS price_k,
              rank() OVER (PARTITION BY o_orderstatus
                ORDER BY round(o_totalprice / 1000, 0) DESC) AS rnk
            FROM orders)
-         WHERE rnk <= 3 ORDER BY o_orderstatus, rnk, o_orderkey""",
-    "join_salted_hotkey" ->
+         WHERE rnk <= 3 ORDER BY o_orderstatus, rnk, o_orderkey"""),
+    "join_salted_hotkey" -> Op(joinSaltedHotkey,
       s"""SELECT o_orderstatus, c_mktsegment, COUNT(*) AS n,
           ${dsumSql("o_totalprice")} AS sum_price
           FROM orders JOIN customer ON o_custkey = c_custkey
           GROUP BY o_orderstatus, c_mktsegment
-          ORDER BY o_orderstatus, c_mktsegment""",
-    "scalar_string_format" ->
+          ORDER BY o_orderstatus, c_mktsegment"""),
+    "scalar_string_format" -> Op(scalarStringFormat,
       """SELECT n_name,
          lpad(n_name, 20, '.') AS padded,
          rpad(n_name, 20, '_') AS rpadded,
@@ -1862,8 +1815,8 @@ object Warehouse {
          repeat(substring(n_name, 1, 3), 2) AS prefix2,
          concat_ws('-', lower(n_name), upper(n_name)) AS both_cases,
          CAST(length(n_name) AS INT) AS len
-         FROM nation ORDER BY n_name""",
-    "scalar_null_semantics" ->
+         FROM nation ORDER BY n_name"""),
+    "scalar_null_semantics" -> Op(scalarNullSemantics,
       """WITH t AS (
            SELECT CAST(year(l_shipdate) AS INT) AS yr,
              NULLIF(l_returnflag, 'N') AS rf, NULLIF(l_linestatus, 'F') AS ls
@@ -1872,8 +1825,8 @@ object Warehouse {
            CAST(SUM(CASE WHEN rf IS NOT DISTINCT FROM ls THEN 1 ELSE 0 END) AS BIGINT) AS n_null_safe_eq,
            CAST(SUM(CASE WHEN rf IS DISTINCT FROM ls THEN 1 ELSE 0 END) AS BIGINT) AS n_distinct_from,
            CAST(SUM(CASE WHEN COALESCE(rf, 'A') = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_coalesced_a
-         FROM t GROUP BY yr ORDER BY yr""",
-    "scalar_regexp_extract" ->
+         FROM t GROUP BY yr ORDER BY yr"""),
+    "scalar_regexp_extract" -> Op(scalarRegexpExtract,
       s"""WITH t AS (
             SELECT event_type,
               TRY_CAST(regexp_extract(props, '"k":\\s*([0-9]+)', 1) AS INT) AS k
@@ -1881,6 +1834,6 @@ object Warehouse {
           SELECT event_type, COUNT(k) AS n_matched, MIN(k) AS min_k,
             MAX(k) AS max_k,
             ${dsumSql("k")} / CAST(COUNT(k) AS DOUBLE) AS avg_k
-          FROM t GROUP BY event_type ORDER BY event_type""",
+          FROM t GROUP BY event_type ORDER BY event_type"""),
   )
 }

@@ -189,18 +189,9 @@ object Warehouse2 {
       .limit(10)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tpch_q7_nation_volume" -> (tpchQ7 _),
-    "tpch_q8_market_share" -> (tpchQ8 _),
-    "tpch_q4_priority_returns" -> (tpchQ4 _),
-    "tpch_q21_sole_blame" -> (tpchQ21 _),
-    "tpch_q6_forecast_revenue" -> (tpchQ6 _),
-    "tpch_q19_discount_bands" -> (tpchQ19 _),
-  )
 
-
-  val oracles: Map[String, String] = Map(
-    "tpch_q7_nation_volume" ->
+  val entries: Map[String, Op] = Map(
+    "tpch_q7_nation_volume" -> Op(tpchQ7,
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
             CAST(date_part('year', l_shipdate) AS BIGINT) AS l_year,
             ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue
@@ -213,8 +204,8 @@ object Warehouse2 {
               OR (n1.n_name = 'NATION_10' AND n2.n_name = 'NATION_12'))
             AND l_shipdate >= TIMESTAMP '1996-01-01'
             AND l_shipdate < TIMESTAMP '1998-01-01'
-          GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "tpch_q8_market_share" ->
+          GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""),
+    "tpch_q8_market_share" -> Op(tpchQ8,
       s"""SELECT CAST(date_part('year', o_orderdate) AS BIGINT) AS o_year,
             ${dsumSql("CASE WHEN sn.n_name = 'NATION_3' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")}
               AS nation_volume,
@@ -230,15 +221,15 @@ object Warehouse2 {
           JOIN supplier ON l_suppkey = s_suppkey
           JOIN nation sn ON s_nationkey = sn.n_nationkey
           WHERE r_name = 'ASIA' AND p_type LIKE 'ECONOMY%'
-          GROUP BY 1 ORDER BY 1""",
-    "tpch_q6_forecast_revenue" ->
+          GROUP BY 1 ORDER BY 1"""),
+    "tpch_q6_forecast_revenue" -> Op(tpchQ6,
       s"""SELECT ${dsumSql("l_extendedprice * l_discount")} AS revenue,
             COUNT(*) AS n_items
           FROM lineitem
           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
             AND l_shipdate < TIMESTAMP '1997-01-01'
-            AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""",
-    "tpch_q19_discount_bands" ->
+            AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24"""),
+    "tpch_q19_discount_bands" -> Op(tpchQ19,
       s"""SELECT ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue,
             COUNT(*) AS n_items
           FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -247,16 +238,16 @@ object Warehouse2 {
              OR (p_brand = 'Brand#25' AND p_size BETWEEN 1 AND 30
                  AND l_quantity BETWEEN 10 AND 35)
              OR (p_brand = 'Brand#22' AND p_size BETWEEN 1 AND 40
-                 AND l_quantity BETWEEN 20 AND 50)""",
-    "tpch_q4_priority_returns" ->
+                 AND l_quantity BETWEEN 20 AND 50)"""),
+    "tpch_q4_priority_returns" -> Op(tpchQ4,
       """SELECT o_orderpriority, COUNT(*) AS order_count
          FROM orders
          WHERE o_orderdate >= TIMESTAMP '1996-01-01'
            AND o_orderdate < TIMESTAMP '1996-04-01'
            AND EXISTS (SELECT 1 FROM lineitem
                        WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-         GROUP BY 1 ORDER BY 1""",
-    "tpch_q21_sole_blame" ->
+         GROUP BY 1 ORDER BY 1"""),
+    "tpch_q21_sole_blame" -> Op(tpchQ21,
       """WITH l1 AS (SELECT DISTINCT l_orderkey AS o1, l_suppkey AS s1
                      FROM lineitem WHERE l_returnflag = 'R')
          SELECT s_name, COUNT(DISTINCT o1) AS numwait
@@ -271,6 +262,6 @@ object Warehouse2 {
            AND NOT EXISTS (SELECT 1 FROM lineitem l3
                            WHERE l3.l_orderkey = o1 AND l3.l_suppkey <> s1
                              AND l3.l_returnflag = 'R')
-         GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 10""",
+         GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 10"""),
   )
 }

@@ -260,24 +260,8 @@ object Warehouse3 {
       .orderBy("cntrycode")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tpch_q2_min_cost_supp" -> (tpchQ2 _),
-    "tpch_q9_profit" -> (tpchQ9 _),
-    "tpch_q11_important_parts" -> (tpchQ11 _),
-    "tpch_q12_ship_delay" -> (tpchQ12 _),
-    "tpch_q13_cust_distribution" -> (tpchQ13 _),
-    "tpch_q15_top_supplier" -> (tpchQ15 _),
-    "tpch_q16_supplier_cnt" -> (tpchQ16 _),
-    "tpch_q17_small_qty_revenue" -> (tpchQ17 _),
-    "tpch_q20_promo_suppliers" -> (tpchQ20 _),
-    "tpch_q22_idle_customers" -> (tpchQ22 _),
-  )
-
-  private def davgSql(e: String) =
-    s"(${dsumSql(e)} / CAST(COUNT($e) AS DOUBLE))"
-
-  val oracles: Map[String, String] = Map(
-    "tpch_q2_min_cost_supp" ->
+  val entries: Map[String, Op] = Map(
+    "tpch_q2_min_cost_supp" -> Op(tpchQ2,
       s"""WITH sr AS (
             SELECT s_suppkey, s_name FROM supplier
             JOIN nation ON s_nationkey = n_nationkey
@@ -295,8 +279,8 @@ object Warehouse3 {
           FROM offers o
           JOIN (SELECT p_partkey, MIN(price) AS mp FROM offers GROUP BY 1) m
             ON o.p_partkey = m.p_partkey AND o.price = m.mp
-          ORDER BY 1, 2""",
-    "tpch_q9_profit" ->
+          ORDER BY 1, 2"""),
+    "tpch_q9_profit" -> Op(tpchQ9,
       s"""SELECT n_name AS nation,
             CAST(date_part('year', o_orderdate) AS BIGINT) AS o_year,
             ${dsumSql("l_extendedprice * (1 - l_discount)")} AS sum_profit
@@ -306,8 +290,8 @@ object Warehouse3 {
           JOIN nation ON s_nationkey = n_nationkey
           JOIN orders ON l_orderkey = o_orderkey
           WHERE p_name LIKE '%widget%'
-          GROUP BY 1, 2 ORDER BY nation ASC, o_year DESC""",
-    "tpch_q11_important_parts" ->
+          GROUP BY 1, 2 ORDER BY nation ASC, o_year DESC"""),
+    "tpch_q11_important_parts" -> Op(tpchQ11,
       s"""WITH per_part AS (
             SELECT l_partkey AS p_partkey,
               ${dsumSql("l_extendedprice * l_quantity")} AS part_value
@@ -321,8 +305,8 @@ object Warehouse3 {
           SELECT p_partkey, part_value FROM per_part
           WHERE part_value >
             (SELECT ${dsumSql("part_value")} FROM per_part) * 0.001
-          ORDER BY part_value DESC, p_partkey ASC""",
-    "tpch_q12_ship_delay" ->
+          ORDER BY part_value DESC, p_partkey ASC"""),
+    "tpch_q12_ship_delay" -> Op(tpchQ12,
       """SELECT CASE WHEN date_diff('day', o_orderdate, l_shipdate) <= 30 THEN 'FAST'
                      WHEN date_diff('day', o_orderdate, l_shipdate) <= 90 THEN 'MEDIUM'
                      ELSE 'SLOW' END AS delay_class,
@@ -333,16 +317,16 @@ object Warehouse3 {
           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
             AND l_shipdate < TIMESTAMP '1997-01-01'
-          GROUP BY 1 ORDER BY 1""",
-    "tpch_q13_cust_distribution" ->
+          GROUP BY 1 ORDER BY 1"""),
+    "tpch_q13_cust_distribution" -> Op(tpchQ13,
       """WITH per_cust AS (
            SELECT c_custkey, COUNT(o_orderkey) AS c_count
            FROM customer LEFT JOIN orders
              ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
            GROUP BY 1)
          SELECT c_count, COUNT(*) AS custdist FROM per_cust
-         GROUP BY 1 ORDER BY custdist DESC, c_count DESC""",
-    "tpch_q15_top_supplier" ->
+         GROUP BY 1 ORDER BY custdist DESC, c_count DESC"""),
+    "tpch_q15_top_supplier" -> Op(tpchQ15,
       s"""WITH rev AS (
             SELECT l_suppkey,
               ${dsumSql("l_extendedprice * (1 - l_discount)")} AS total_revenue
@@ -353,8 +337,8 @@ object Warehouse3 {
           SELECT s_suppkey, s_name, total_revenue
           FROM rev JOIN supplier ON l_suppkey = s_suppkey
           WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
-          ORDER BY s_suppkey""",
-    "tpch_q16_supplier_cnt" ->
+          ORDER BY s_suppkey"""),
+    "tpch_q16_supplier_cnt" -> Op(tpchQ16,
       """SELECT p_brand, p_type, p_size,
             COUNT(DISTINCT l_suppkey) AS supplier_cnt
           FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -363,8 +347,8 @@ object Warehouse3 {
             AND l_suppkey NOT IN
               (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
           GROUP BY 1, 2, 3
-          ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
-    "tpch_q17_small_qty_revenue" ->
+          ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""),
+    "tpch_q17_small_qty_revenue" -> Op(tpchQ17,
       s"""WITH li AS (
             SELECT l_partkey, l_quantity, l_extendedprice FROM lineitem
             WHERE l_partkey IN
@@ -375,8 +359,8 @@ object Warehouse3 {
             FROM li GROUP BY 1)
           SELECT ${dsumSql("l_extendedprice")} / 7.0 AS avg_yearly
           FROM li JOIN ag ON l_partkey = ak
-          WHERE 5.0 * l_quantity * cq < sq""",
-    "tpch_q20_promo_suppliers" ->
+          WHERE 5.0 * l_quantity * cq < sq"""),
+    "tpch_q20_promo_suppliers" -> Op(tpchQ20,
       """SELECT s_suppkey, s_name FROM supplier
           WHERE s_nationkey IN
               (SELECT n_nationkey FROM nation
@@ -389,8 +373,8 @@ object Warehouse3 {
                 AND l_shipdate >= TIMESTAMP '1996-01-01'
                 AND l_shipdate < TIMESTAMP '1997-01-01'
               GROUP BY 1 HAVING CAST(SUM(l_quantity) AS DOUBLE) > 400.0)
-          ORDER BY s_suppkey""",
-    "tpch_q22_idle_customers" ->
+          ORDER BY s_suppkey"""),
+    "tpch_q22_idle_customers" -> Op(tpchQ22,
       s"""WITH cust AS (
             SELECT c_custkey, c_acctbal,
               CAST(c_nationkey % 10 AS BIGINT) AS cntrycode
@@ -403,6 +387,6 @@ object Warehouse3 {
             AND NOT EXISTS
               (SELECT 1 FROM orders WHERE o_custkey = c_custkey
                  AND o_orderdate >= TIMESTAMP '2000-01-01')
-          GROUP BY 1 ORDER BY 1""",
+          GROUP BY 1 ORDER BY 1"""),
   )
 }

@@ -205,26 +205,16 @@ object Warehouse4 {
       .select(col("o_orderkey"), col("o_totalprice"), col("key"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sample_weighted_reservoir" -> (weightedReservoir _),
-    "anomaly_cusum" -> (cusumAnomaly _),
-    "ts_autocorr_hourly" -> (autocorrHourly _),
-    "mv_incremental_update" -> (mvIncrementalUpdate _),
-    "agg_hll_merge_rollup" -> (hllMergeRollup _),
-  )
-
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
-  val oracles: Map[String, String] = Map(
-    "sample_weighted_reservoir" -> {
+  val entries: Map[String, Op] = Map(
+    "sample_weighted_reservoir" -> Op(weightedReservoir, {
       val h = h48Sql("'res:' || CAST(o_orderkey AS VARCHAR)")
       s"""SELECT o_orderkey, o_totalprice,
            round(ln((($h) + 1) / ${math.pow(2.0, 48)}) * 1e6 / o_totalprice, 9)
              AS key
          FROM orders
          ORDER BY key DESC, o_orderkey ASC LIMIT 50"""
-    },
-    "anomaly_cusum" ->
+    }),
+    "anomaly_cusum" -> Op(cusumAnomaly,
       s"""WITH t AS (SELECT event_type, $evTs AS ts, event_id,
              CAST(round(value - 55.0, 6) AS DECIMAL(18,6)) AS term
            FROM events),
@@ -242,8 +232,8 @@ object Warehouse4 {
            round(MAX(s), 6) AS max_s,
            COALESCE(CAST(epoch_us(MIN(CASE WHEN s > 200.0 THEN ts END))
              AS BIGINT), -1) AS first_alarm_us
-         FROM s GROUP BY event_type ORDER BY event_type""",
-    "ts_autocorr_hourly" ->
+         FROM s GROUP BY event_type ORDER BY event_type"""),
+    "ts_autocorr_hourly" -> Op(autocorrHourly,
       s"""WITH ev AS (SELECT date_trunc('hour', $evTs) AS bucket, value FROM events),
          counts AS (SELECT bucket, ${dsumSql("value")} AS v FROM ev GROUP BY 1),
          bounds AS (SELECT MIN(bucket) AS mn, MAX(bucket) AS mx FROM ev),
@@ -265,8 +255,8 @@ object Warehouse4 {
            round((n_pairs * sxy - sx * sy) /
              (sqrt(n_pairs * sxx - sx * sx) * sqrt(n_pairs * syy - sy * sy)), 6)
              AS r
-         FROM agg ORDER BY lag""",
-    "mv_incremental_update" ->
+         FROM agg ORDER BY lag"""),
+    "mv_incremental_update" -> Op(mvIncrementalUpdate,
       s"""WITH ev AS (SELECT event_type, $evTs AS ts, value FROM events),
          base AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_base,
              SUM(CAST(value AS DECIMAL(18,6))) AS sv_base
@@ -286,8 +276,8 @@ object Warehouse4 {
            round(CAST(m.sv_merged AS DOUBLE), 6) AS sum_merged,
            m.n_merged = f.n_full AND m.sv_merged = f.sv_full AS consistent
          FROM merged m FULL JOIN fullv f ON m.event_type = f.event_type
-         ORDER BY m.event_type""",
-    "agg_hll_merge_rollup" -> {
+         ORDER BY m.event_type"""),
+    "agg_hll_merge_rollup" -> Op(hllMergeRollup, {
       val h = h48Sql("'hll:' || CAST(user_id AS VARCHAR)")
       s"""WITH du AS (SELECT DISTINCT strftime($evTs, '%Y-%m-%d') AS day, user_id
            FROM events WHERE $evTs < TIMESTAMP '2024-01-08'),
@@ -315,6 +305,6 @@ object Warehouse4 {
            abs(hll_est - CAST(exact_distinct AS DOUBLE)) <=
              ${3.0 * 1.04 / 8.0} * CAST(exact_distinct AS DOUBLE) AS within_3sigma
          FROM est ORDER BY period"""
-    },
+    }),
   )
 }

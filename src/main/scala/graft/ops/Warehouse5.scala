@@ -874,34 +874,8 @@ object Warehouse5 {
       .orderBy("bucket")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_interarrival_dist" -> (interarrivalDist _),
-    "ts_hurst_exponent" -> (hurstExponent _),
-    "ts_periodogram" -> (periodogram _),
-    "ts_changepoint_binseg" -> (changepointBinseg _),
-    "ts_bollinger" -> (bollingerBands _),
-    "profile_key_skew" -> (keySkewProfile _),
-    "dau_rolling_7d" -> (dauRolling7d _),
-    "ts_holt_daily" -> (holtDaily _),
-    "attribution_position" -> (positionAttribution _),
-    "ts_open_orders_curve" -> (openOrdersCurve _),
-    "win_activity_streaks" -> (activityStreaks _),
-    "agg_mode_top_user" -> (modeTopUser _),
-    "ts_dow_hour_profile" -> (dowHourProfile _),
-    "ts_ohlc_hourly" -> (ohlcHourly _),
-    "ts_crosscorr_types" -> (crossCorrTypes _),
-    "win_sliding_distinct" -> (slidingDistinct _),
-    "attr_last_touch" -> (lastTouchAttribution _),
-    "ts_ewma_deviation" -> (ewmaDeviation _),
-    "ml_ols_daily_trend" -> (olsDailyTrend _),
-    "anomaly_mad_robust" -> (madOutliers _),
-    "ts_stl_decompose" -> (stlDecompose _),
-  )
-
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
-  val oracles: Map[String, String] = Map(
-    "ts_interarrival_dist" ->
+  val entries: Map[String, Op] = Map(
+    "ts_interarrival_dist" -> Op(interarrivalDist,
       s"""WITH g0 AS (SELECT
              (epoch_us($evTs) - lag(epoch_us($evTs), 1)
                OVER (PARTITION BY user_id ORDER BY epoch_us($evTs), event_id))
@@ -929,8 +903,8 @@ object Warehouse5 {
              / 1e6 AS pct,
            MAX(mean_gap_s) AS mean_gap_s,
            MAX(p50_gap_s) AS p50_gap_s, MAX(p90_gap_s) AS p90_gap_s
-         FROM b, gm GROUP BY bucket ORDER BY bucket""",
-    "ts_hurst_exponent" ->
+         FROM b, gm GROUP BY bucket ORDER BY bucket"""),
+    "ts_hurst_exponent" -> Op(hurstExponent,
       s"""WITH hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
              round(${dsumSql("value")}, 6) AS x
            FROM events GROUP BY 1),
@@ -980,8 +954,8 @@ object Warehouse5 {
            FROM persize)
          SELECT m AS block_size, n_blocks, ln_m, mean_ln_rs,
            round((nf * sxy - sx * sy) / (nf * sxx - sx * sx), 6) AS hurst
-         FROM fit ORDER BY block_size""",
-    "ts_periodogram" ->
+         FROM fit ORDER BY block_size"""),
+    "ts_periodogram" -> Op(periodogram,
       s"""WITH hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
              round(${dsumSql("value")}, 6) AS x
            FROM events GROUP BY 1),
@@ -1016,8 +990,8 @@ object Warehouse5 {
            FROM perk)
          SELECT k, a_k, b_k, power, hours_per_cycle,
            power = MAX(power) OVER () AS dominant
-         FROM p ORDER BY k""",
-    "ts_changepoint_binseg" ->
+         FROM p ORDER BY k"""),
+    "ts_changepoint_binseg" -> Op(changepointBinseg,
       s"""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
              round(${dsumSql("o_totalprice")} / 1e6, 6) AS y
            FROM orders GROUP BY 1),
@@ -1042,8 +1016,8 @@ object Warehouse5 {
            round((sn - sk) / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)), 6)
              AS mean_right_m,
            round(gain, 6) AS gain
-         FROM g ORDER BY gain DESC, split_day LIMIT 3""",
-    "ts_bollinger" ->
+         FROM g ORDER BY gain DESC, split_day LIMIT 3"""),
+    "ts_bollinger" -> Op(bollingerBands,
       s"""WITH hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
              round(${dsumSql("value")}, 6) AS x
            FROM events GROUP BY 1),
@@ -1076,8 +1050,8 @@ object Warehouse5 {
              - CAST(2 AS DECIMAL(18,6)) * CAST(sigma_k AS DECIMAL(18,6))
              AS DOUBLE) AS lower_k,
            z, abs(z) > 2.0 AS breakout
-         FROM b ORDER BY abs(z) DESC, bucket_us LIMIT 20""",
-    "profile_key_skew" ->
+         FROM b ORDER BY abs(z) DESC, bucket_us LIMIT 20"""),
+    "profile_key_skew" -> Op(keySkewProfile,
       """WITH pk AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS c
            FROM events GROUP BY 1),
          bc AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS k FROM pk GROUP BY 1),
@@ -1103,10 +1077,10 @@ object Warehouse5 {
            ORDER BY c DESC, user_id LIMIT 10)
          SELECT user_id AS hot_key, c AS hot_count, n_keys, n_rows, avg_c,
            p99_c, max_c, skew_ratio, salt_factor
-         FROM top10, st3 ORDER BY hot_count DESC, hot_key""",
-    "dau_rolling_7d" ->
-      """WITH du AS (SELECT DISTINCT
-             epoch_us(date_trunc('day', CAST(ts AS TIMESTAMP))) // 86400000000
+         FROM top10, st3 ORDER BY hot_count DESC, hot_key"""),
+    "dau_rolling_7d" -> Op(dauRolling7d,
+      s"""WITH du AS (SELECT DISTINCT
+             epoch_us(date_trunc('day', $evTs)) // 86400000000
                AS day_num, user_id
            FROM events),
          md AS (SELECT MAX(day_num) AS max_day FROM du),
@@ -1120,8 +1094,8 @@ object Warehouse5 {
          SELECT day_num, dau, wau_7d,
            round(CAST(dau AS DOUBLE) / CAST(wau_7d AS DOUBLE), 6) AS stickiness
          FROM dau JOIN wau ON day_num = target_day
-         ORDER BY day_num""",
-    "ts_holt_daily" ->
+         ORDER BY day_num"""),
+    "ts_holt_daily" -> Op(holtDaily,
       s"""WITH RECURSIVE ${Stats4.dailyMicrosSql},
          holt(rn, day_us, y, l, b) AS (
            SELECT rn, day_us, y_micro, y_micro, CAST(0 AS BIGINT)
@@ -1140,8 +1114,8 @@ object Warehouse5 {
              / 1e6, 6) AS forecast,
            round(abs(y - (LAG(l) OVER (ORDER BY rn) + LAG(b) OVER (ORDER BY rn)))
              / 1e6, 6) AS abs_err
-         FROM holt ORDER BY rn""",
-    "attribution_position" ->
+         FROM holt ORDER BY rn"""),
+    "attribution_position" -> Op(positionAttribution,
       s"""WITH tagged AS (SELECT user_id, ts, event_id, event_type, value,
              SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1166,8 +1140,8 @@ object Warehouse5 {
            FROM ranked JOIN purchases USING (user_id, g))
          SELECT touch, CAST(COUNT(*) AS BIGINT) AS n_credited_touches,
            round(${dsumSql("credited")}, 6) AS credited_revenue
-         FROM credited GROUP BY 1 ORDER BY 1""",
-    "ts_ewma_deviation" -> {
+         FROM credited GROUP BY 1 ORDER BY 1"""),
+    "ts_ewma_deviation" -> Op(ewmaDeviation, {
       val (num, den) = ewmaSqlChain
       val lags = (1 to EwmaLags)
         .map(k => s"lag(x, $k) OVER (ORDER BY bucket) AS x$k").mkString(", ")
@@ -1180,8 +1154,8 @@ object Warehouse5 {
            round(x - ewma, 6) AS dev
          FROM sm ORDER BY abs(round(x - ewma, 6)) DESC, bucket_us ASC
          LIMIT 20"""
-    },
-    "ml_ols_daily_trend" ->
+    }),
+    "ml_ols_daily_trend" -> Op(olsDailyTrend,
       s"""WITH daily AS (SELECT CAST(date_diff('day', DATE '1995-01-01',
              CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
              round(${dsumSql("o_totalprice")} / 1e6, 6) AS y
@@ -1202,8 +1176,8 @@ object Warehouse5 {
            round(((n * sxy - sx * sy) * (n * sxy - sx * sy)) /
              (CAST(n * sxx - sx * sx AS DOUBLE) * (n * syy - sy * sy)), 6)
              AS r2
-         FROM s""",
-    "ts_open_orders_curve" ->
+         FROM s"""),
+    "ts_open_orders_curve" -> Op(openOrdersCurve,
       """WITH op AS (SELECT epoch_us(date_trunc('day',
                CAST(o_orderdate AS TIMESTAMP))) // 86400000000 AS day_num,
              CAST(COUNT(*) AS BIGINT) AS n_opened
@@ -1228,8 +1202,8 @@ object Warehouse5 {
          SELECT day_num, n_opened, n_closed,
            CAST(open_after AS BIGINT) AS open_after,
            open_after = MAX(open_after) OVER () AS is_peak
-         FROM c ORDER BY day_num""",
-    "win_activity_streaks" ->
+         FROM c ORDER BY day_num"""),
+    "win_activity_streaks" -> Op(activityStreaks,
       s"""WITH days AS (SELECT DISTINCT user_id,
              epoch_us(date_trunc('day', $evTs)) // 86400000000 AS day_num
            FROM events),
@@ -1242,8 +1216,8 @@ object Warehouse5 {
              CAST(MAX(day_num) AS BIGINT) AS end_day
            FROM isl GROUP BY user_id, grp)
          SELECT user_id, streak_days, start_day, end_day FROM s
-         ORDER BY streak_days DESC, user_id, start_day LIMIT 20""",
-    "agg_mode_top_user" ->
+         ORDER BY streak_days DESC, user_id, start_day LIMIT 20"""),
+    "agg_mode_top_user" -> Op(modeTopUser,
       """WITH c AS (SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS n
            FROM events GROUP BY 1, 2),
          p AS (SELECT event_type, user_id AS modal_user, n AS n_modal,
@@ -1254,8 +1228,8 @@ object Warehouse5 {
          SELECT event_type, modal_user, n_modal,
            CAST(n_type AS BIGINT) AS n_type,
            round(CAST(n_modal AS DOUBLE) / CAST(n_type AS DOUBLE), 6) AS share
-         FROM p WHERE rk = 1 ORDER BY event_type""",
-    "ts_dow_hour_profile" ->
+         FROM p WHERE rk = 1 ORDER BY event_type"""),
+    "ts_dow_hour_profile" -> Op(dowHourProfile,
       s"""WITH c AS (SELECT isodow($evTs) AS dow, hour($evTs) AS hr,
              CAST(COUNT(*) AS BIGINT) AS n_events,
              round(${dsumSql("value")} / COUNT(value), 6) AS avg_value,
@@ -1265,8 +1239,8 @@ object Warehouse5 {
            round(CAST(n_events AS DOUBLE)
              / CAST(SUM(n_events) OVER () AS DOUBLE), 6) AS share_of_total,
            dow >= 6 AS is_weekend
-         FROM c ORDER BY dow, hr""",
-    "ts_ohlc_hourly" ->
+         FROM c ORDER BY dow, hr"""),
+    "ts_ohlc_hourly" -> Op(ohlcHourly,
       s"""SELECT date_trunc('hour', $evTs) AS bucket, event_type,
            arg_min(value, event_id) AS open,
            MAX(value) AS high, MIN(value) AS low,
@@ -1274,8 +1248,8 @@ object Warehouse5 {
            CAST(COUNT(*) AS BIGINT) AS n_events,
            round(${dsumSql("value")}, 6) AS v_sum,
            round(MAX(value) - MIN(value), 6) AS range
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "ts_crosscorr_types" -> {
+         FROM events GROUP BY 1, 2 ORDER BY 1, 2"""),
+    "ts_crosscorr_types" -> Op(crossCorrTypes, {
       val legs = (-6 to 6).map { k =>
         val sh = if (k >= 0) s"lead(b, $k)" else s"lag(b, ${-k})"
         s"SELECT $k AS lag_h, a AS x, $sh OVER (ORDER BY bucket) AS y FROM dense"
@@ -1306,16 +1280,16 @@ object Warehouse5 {
          SELECT lag_h, n, r,
            abs(r) = (SELECT MAX(abs(r)) FROM r) AS is_best
          FROM r ORDER BY lag_h"""
-    },
-    "win_sliding_distinct" ->
+    }),
+    "win_sliding_distinct" -> Op(slidingDistinct,
       s"""SELECT user_id, epoch_us($evTs) AS ts_us, event_id,
            CAST(COUNT(DISTINCT event_type) OVER (PARTITION BY user_id
              ORDER BY $evTs, event_id
              ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS BIGINT)
              AS n_distinct_5
          FROM events WHERE user_id < 10
-         ORDER BY user_id, ts_us, event_id""",
-    "attr_last_touch" ->
+         ORDER BY user_id, ts_us, event_id"""),
+    "attr_last_touch" -> Op(lastTouchAttribution,
       s"""WITH ev AS (SELECT user_id, $evTs AS ts, event_id, event_type, value
            FROM events),
          marked AS (SELECT *,
@@ -1331,8 +1305,8 @@ object Warehouse5 {
            FROM p GROUP BY 1)
          SELECT touch, n_purchases, revenue,
            round(revenue / (SELECT ${dsumSql("revenue")} FROM bt), 6) AS share
-         FROM bt ORDER BY touch""",
-    "ts_stl_decompose" ->
+         FROM bt ORDER BY touch"""),
+    "ts_stl_decompose" -> Op(stlDecompose,
       s"""WITH hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
              round(${dsumSql("value")}, 6) AS x
            FROM events GROUP BY 1),
@@ -1354,8 +1328,8 @@ object Warehouse5 {
            round(detr - seasonal, 6) AS resid
          FROM dt JOIN se USING (hod)
          ORDER BY abs(round(detr - seasonal, 6)) DESC, bucket_us ASC
-         LIMIT 20""",
-    "anomaly_mad_robust" ->
+         LIMIT 20"""),
+    "anomaly_mad_robust" -> Op(madOutliers,
       """WITH med AS (SELECT event_type,
              round(quantile_cont(value, 0.5), 6) AS med
            FROM events GROUP BY 1),
@@ -1370,6 +1344,6 @@ object Warehouse5 {
              THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
            round(MAX(abs(0.6745 * (d.value - d.med) / mad.mad)), 6) AS max_abs_z
          FROM dev d JOIN mad USING (event_type)
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
   )
 }

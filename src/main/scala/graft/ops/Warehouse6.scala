@@ -231,18 +231,8 @@ object Warehouse6 {
         .as("trend_strength"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_seasonal_strength" -> (seasonalStrength _),
-    "attribution_markov_removal" -> (markovRemoval _),
-    "basket_top_triples" -> (basketTopTriples _),
-    "ts_hourly_percentiles" -> (hourlyPercentiles _),
-    "llm_e2e_pipeline" -> (e2ePipeline _),
-  )
-
-  private val evTs = "CAST(ts AS TIMESTAMP)"
-
-  val oracles: Map[String, String] = Map(
-    "ts_seasonal_strength" ->
+  val entries: Map[String, Op] = Map(
+    "ts_seasonal_strength" -> Op(seasonalStrength,
       s"""WITH hourly AS (SELECT date_trunc('hour', $evTs) AS bucket,
              round(${dsumSql("value")}, 6) AS x
            FROM events GROUP BY 1),
@@ -284,8 +274,8 @@ object Warehouse6 {
            round(ss_tr / CAST(n_hours AS DOUBLE), 6) AS var_trend_resid,
            round(GREATEST(0.0, 1.0 - ss_r / ss_sr), 6) AS seasonal_strength,
            round(GREATEST(0.0, 1.0 - ss_r / ss_tr), 6) AS trend_strength
-         FROM s""",
-    "attribution_markov_removal" ->
+         FROM s"""),
+    "attribution_markov_removal" -> Op(markovRemoval,
       s"""WITH RECURSIVE base AS (
            SELECT user_id, $evTs AS tss, event_id, event_type,
              COALESCE(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
@@ -343,8 +333,8 @@ object Warehouse6 {
              AS DOUBLE) AS te FROM eff)
          SELECT channel, cvr_base, cvr_removed, removal_effect,
            round(removal_effect / te, 6) AS attribution_share
-         FROM eff, tot ORDER BY channel""",
-    "basket_top_triples" ->
+         FROM eff, tot ORDER BY channel"""),
+    "basket_top_triples" -> Op(basketTopTriples,
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
            FROM lineitem)
          SELECT a.p AS part_a, b.p AS part_b, c.p AS part_c,
@@ -352,14 +342,14 @@ object Warehouse6 {
          FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
            JOIN op c ON b.o = c.o AND b.p < c.p
          GROUP BY 1, 2, 3 HAVING COUNT(*) >= 2
-         ORDER BY support DESC, part_a, part_b, part_c LIMIT 15""",
-    "ts_hourly_percentiles" ->
+         ORDER BY support DESC, part_a, part_b, part_c LIMIT 15"""),
+    "ts_hourly_percentiles" -> Op(hourlyPercentiles,
       s"""SELECT hour($evTs) AS hod, CAST(COUNT(*) AS BIGINT) AS n,
          round(quantile_cont(CAST(value AS DOUBLE), 0.5), 6) AS p50,
          round(quantile_cont(CAST(value AS DOUBLE), 0.9), 6) AS p90,
          round(quantile_cont(CAST(value AS DOUBLE), 0.99), 6) AS p99
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "llm_e2e_pipeline" ->
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    "llm_e2e_pipeline" -> Op(e2ePipeline,
       """WITH k AS (SELECT doc_id, text,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS wc
            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text)
@@ -396,6 +386,6 @@ object Warehouse6 {
          SELECT stage, label, n_units,
            round(CAST(n_units AS DOUBLE) / CAST(prev AS DOUBLE), 6)
              AS pct_of_prev
-         FROM funnel ORDER BY stage""",
+         FROM funnel ORDER BY stage"""),
   )
 }

@@ -55,12 +55,8 @@ object Warehouse7 {
       .limit(20)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rev_hhi_parts" -> (hhiSupplierParts _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "rev_hhi_parts" ->
+  val entries: Map[String, Op] = Map(
+    "rev_hhi_parts" -> Op(hhiSupplierParts,
       """WITH rev AS (SELECT l_partkey, l_suppkey,
              CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
                AS DECIMAL(18,6))) AS DOUBLE) AS rev
@@ -81,6 +77,6 @@ object Warehouse7 {
          SELECT l_partkey AS p_partkey, n_suppliers, total_rev, hhi,
            hhi > 2500.0 AS highly_concentrated
          FROM hhi WHERE n_suppliers >= 2
-         ORDER BY hhi DESC, n_suppliers DESC, p_partkey LIMIT 20""",
+         ORDER BY hhi DESC, n_suppliers DESC, p_partkey LIMIT 20"""),
   )
 }

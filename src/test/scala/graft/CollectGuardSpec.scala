@@ -53,14 +53,23 @@ class CollectGuardSpec extends AnyFunSuite {
 
   test("src/main has one 6-dp HALF_UP double rounding and one dotSql") {
     // a private copy of ArrayMath.round6 or Tables.dotSql drifts from the
-    // one the oracle parity argument is about; call the shared one
+    // one the oracle parity argument is about; call the shared one. The
+    // dot product is matched by its DuckDB text shape, across string
+    // concatenation, so a renamed copy or a range-form norm fails too.
     val round6 = """setScale\(\s*6\s*,\s*(?:BigDecimal|java\.math)\.RoundingMode\.HALF_UP\s*\)\s*\.(?:toDouble|doubleValue)""".r
-    val dotSql = """def\s+dotSql\b""".r
-    def sites(re: scala.util.matching.Regex) = sources.flatMap { case (path, text) =>
-      re.findAllMatchIn(text).map(_ => path) }
+    val dotSql = """list_transform\(range\(1,[^)]*\),\s*i\s*->[\s"+s]*CAST\([\w.$]+\[i\] AS DOUBLE\) \* CAST\([\w.$]+\[i\] AS DOUBLE\)""".r
     assert(sites(round6).map(new java.io.File(_).getName) == Seq("ArrayMath.scala"),
       s"6-dp HALF_UP roundings outside ArrayMath.round6: ${sites(round6)}")
     assert(sites(dotSql).map(new java.io.File(_).getName) == Seq("Tables.scala"),
-      s"dotSql definitions outside Tables.dotSql: ${sites(dotSql)}")
+      s"DuckDB dot products outside Tables.dotSql: ${sites(dotSql)}")
   }
+
+  test("src/main spells the DuckDB events.ts cast once, as Tables.evTs") {
+    val evTs = sites("""CAST\(ts AS TIMESTAMP\)""".r)
+    assert(evTs.map(new java.io.File(_).getName) == Seq("Tables.scala"),
+      s"CAST(ts AS TIMESTAMP) outside Tables.evTs: $evTs")
+  }
+
+  private def sites(re: scala.util.matching.Regex): Seq[String] =
+    sources.flatMap { case (path, text) => re.findAllMatchIn(text).map(_ => path) }
 }

@@ -20,8 +20,8 @@ class OperatorSpec extends SparkTestBase {
 
   test("every query key has an oracle (round 9: zero no_oracle rows)") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    // round 9: the two sketch queries now declare exact-side columns plus
-    // a deterministic tolerance verdict, so they are hash-gated too
+    // every registry entry is an Op(kernel, oracle), so a kernel without
+    // an oracle cannot be written; this pins that the two views agree
     assert(noOracle === Set.empty[String])
   }
 

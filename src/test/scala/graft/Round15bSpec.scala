@@ -71,7 +71,7 @@ class Round15bSpec extends SparkTestBase {
     assert(minDist > 0.01, f"cos table entry $minDist%.6f from boundary")
     assert((0 until 32).forall(x => MmPHash.cosT(0)(x) == 16384))
     // the oracle inlines exactly these integers
-    assert(Mm3.oracles("mm_image_phash_dedup").contains(MmPHash.cosTableValues))
+    assert(Mm3.entries("mm_image_phash_dedup").oracle.contains(MmPHash.cosTableValues))
   }
 
   test("hash mappers reject a truncated or wrong-shaped payload " +

@@ -134,7 +134,7 @@ class Round17Spec extends SparkTestBase {
   test("mel filterbank: band 2 holds the 500 Hz fundamental and dominates; e_fund cross-pins L395") {
     val mel = ops.Mm8.audioMel(spark, sf0001).collect()
       .map(r => r.getLong(0) -> r).toMap
-    val spec = ops.Mm7.queries("mm_audio_spectral")(spark, sf0001).collect()
+    val spec = ops.Mm7.entries("mm_audio_spectral").run(spark, sf0001).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap // doc_id -> e_fund
     assert(mel.nonEmpty)
     mel.foreach { case (id, r) =>
