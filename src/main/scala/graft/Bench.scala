@@ -253,6 +253,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Session.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Session.quietUnpartitionedWindows()
     // Warm every query once at the smallest fixture before timing: the
     // generated-code cache is keyed on plan shape (not input path), so this
     // JIT-compiles each query's codegen classes for pennies and the timed

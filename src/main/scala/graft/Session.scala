@@ -22,4 +22,9 @@ object Session {
     // `transformWithState` requires it
     .config("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** `WindowExec` WARNs "No Partition Defined" on every unpartitioned window;
+    * `WindowGuardSpec` proves each such frame bounded, so that logger logs ERROR. */
+  def quietUnpartitionedWindows(): Unit = org.apache.logging.log4j.core.config.Configurator
+    .setLevel("org.apache.spark.sql.execution.window.WindowExec", org.apache.logging.log4j.Level.ERROR)
 }

@@ -176,9 +176,9 @@ object Tables {
   def dotSql(a: String, b: String, dims: Int = 64): String =
     s"list_sum(list_transform(range(1,${dims + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
-  /** DuckDB twin of `ArrayMath.l2Norm`. */
-  def normSql(a: String): String =
-    s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
+  /** DuckDB sum of squares of the list `a`; `normSql`, its root, twins `ArrayMath.l2Norm`. */
+  def sumSqSql(a: String): String = s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+  def normSql(a: String): String = s"sqrt(${sumSqSql(a)})"
 
   /** The L2 norm of the first `dims` elements of `a` (a matryoshka prefix). */
   def normSql(a: String, dims: Int): String = s"sqrt(${dotSql(a, a, dims)})"

@@ -153,7 +153,7 @@ object Llm10 {
     * all-pairs), same per-doc island merge via [[spansFromDupPos]].
     * The streaming twin ([[graft.streaming.Streams3.substrDedupTws]])
     * replays this prefix semantics one arriving doc at a time against
-    * shingle-keyed state — StreamingSpec pins batch ≡ streaming. */
+    * shingle-keyed state — the twin table pins batch ≡ streaming. */
   def dedupSubstringIncr(spark: SparkSession, dir: String): DataFrame = {
     val s = shingleStarts(spark, dir)
     val wf = Window.partitionBy(col("sh")).orderBy(col("doc_id"), col("pos"))

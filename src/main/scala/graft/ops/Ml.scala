@@ -1321,9 +1321,7 @@ object Ml {
     "ml_farthest_first" -> Op(farthestFirstInit, {
       val dotSC = dotSql("s.embedding", "c.embedding")
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         sq AS (SELECT vec_id, embedding,
-             list_sum(list_transform(embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS aa
+         sq AS (SELECT vec_id, embedding, ${sumSqSql("embedding")} AS aa
            FROM e),
          c0 AS (SELECT vec_id, embedding, aa AS cc FROM sq
            ORDER BY vec_id LIMIT 1),

@@ -94,9 +94,8 @@ object Scalars {
            / CAST(COUNT(value) AS DOUBLE) AS avg_value
          FROM events GROUP BY 1 ORDER BY 1"""),
     "scalar_array_embedding_norm" -> Op(scalarArrayEmbeddingNorm,
-      """SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(sqrt(list_sum(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS DECIMAL(18,6))) AS DOUBLE)
+      s"""SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(CAST(${normSql("embedding")} AS DECIMAL(18,6))) AS DOUBLE)
            / CAST(COUNT(*) AS DOUBLE) AS avg_norm,
          CAST(MIN(len(embedding)) AS INT) AS dim
          FROM embeddings GROUP BY 1 ORDER BY 1"""),

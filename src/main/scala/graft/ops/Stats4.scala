@@ -164,7 +164,7 @@ object Stats4 {
         round(col("mu_micro") * 12 / 1e6, 6).as("lambda"))
 
   /** The full PH frame in exact integer micros (every hour, pre-alarm
-    * filter) — shared by [[pageHinkley]] and the StreamingSpec pin of
+    * filter) — shared by [[pageHinkley]] and the twin-table row of
     * [[graft.streaming.Streams3.pageHinkleyTws]]. */
   private[graft] def pageHinkleyFrameMicro(spark: SparkSession,
       dir: String): DataFrame = {

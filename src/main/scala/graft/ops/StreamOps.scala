@@ -123,7 +123,7 @@ object StreamOps {
     * across engines and row orders. Streaming twin:
     * [[graft.streaming.Streams.countTriggerWindowTws]] (bounded
     * ListState buffer = the evictor, element counter = the trigger);
-    * StreamingSpec proves fire-point and pane equality cross-batch. */
+    * the twin table checks fire-point and pane equality at every batching. */
   def countTriggerEvict(spark: SparkSession, dir: String): DataFrame = {
     val ord = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val pane = ord.rowsBetween(-4, 0)
@@ -150,8 +150,8 @@ object StreamOps {
     * the decimal contract. Streaming twin:
     * [[graft.streaming.Streams.rateLimitTws]] (per-(user, day) counter
     * in keyed state — O(1) per key·window, the quota itself);
-    * StreamingSpec proves the admitted event SET is identical
-    * cross-batch. */
+    * the twin table checks the admitted event SET is identical at
+    * every batching. */
   def rateLimit(spark: SparkSession, dir: String): DataFrame = {
     val day = date_trunc("day", col("ts"))
     val w = Window.partitionBy(col("user_id"), day)

@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
   *
   * Proven in `graft.StreamingSpec` with `MemoryStream`: watermark
   * advancement, late-data drop, session merge, dedup-within-watermark,
-  * custom keyed state, and batch≡streaming result equality.
+  * custom keyed state; its twin table checks batch≡streaming equality.
   *
   * Scale notes (100 TB/day stream): every stateful op is keyed on
   * (window-bucket ×) user/key → state is hash-partitioned across executors;
@@ -68,18 +68,17 @@ object Streams {
       .dropDuplicatesWithinWatermark("user_id", "event_type")
 
   /** I6 — KeyedProcessFunction analogue: per-user running first/last/count
-    * via mapGroupsWithState (Update mode). */
+    * via mapGroupsWithState (Update mode), at its batch twin's µs grain. */
   def userFirstLast(events: Dataset[Event]): Dataset[UserAccum] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.user_id)
       .mapGroupsWithState[UserAccum, UserAccum](GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Event], state: GroupState[UserAccum]) =>
-          val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
           val prev = state.getOption.getOrElse(UserAccum(uid, Long.MaxValue, Long.MinValue, 0L))
-          val next = sorted.foldLeft(prev) { (acc, e) =>
-            UserAccum(uid, math.min(acc.first_ms, e.ts.getTime),
-              math.max(acc.last_ms, e.ts.getTime), acc.n + 1)
+          val next = it.foldLeft(prev) { (acc, e) =>
+            UserAccum(uid, math.min(acc.first_us, microsOf(e.ts)),
+              math.max(acc.last_us, microsOf(e.ts)), acc.n + 1)
           }
           state.update(next)
           next
@@ -164,7 +163,7 @@ object Streams {
     * treats all consecutive views as ONE maximal run. This matches Flink's
     * `within()` contract (a pattern instance cannot outlive its span), so
     * the streaming side is the more faithful CEP semantics; the batch
-    * surrogate is the relational approximation. StreamingSpec exercises
+    * surrogate is the relational approximation. The twin table runs
     * the twin on data whose runs fit inside the span, where the two
     * semantics coincide. */
   def kleeneViewsThenPurchase(events: Dataset[Event],
@@ -231,23 +230,27 @@ object Streams {
       .flatMapGroupsWithState[Scd2Open, Scd2Row](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Event], state: GroupState[Scd2Open]) =>
-          val evs = it.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))
           val out = Seq.newBuilder[Scd2Row]
           var open = state.getOption
-          for (e <- evs) {
+          for (e <- it.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))) {
             val t = microsOf(e.ts)
-            open match {
-              case Some(o) if o.event_type == e.event_type => ()
-              case Some(o) =>
-                out += Scd2Row(uid, o.version, o.event_type, o.valid_from_us, Some(t))
-                open = Some(Scd2Open(e.event_type, t, o.version + 1))
-              case None =>
-                open = Some(Scd2Open(e.event_type, t, 1L))
-            }
+            val (next, closed) = scd2Step(open, e.event_type, t)
+            closed.foreach(o => out += Scd2Row(uid, o.version, o.event_type, o.valid_from_us, Some(t)))
+            open = Some(next)
           }
           open.foreach(state.update)
           out.result().iterator
       }
+  }
+
+  /** The per-user SCD2 step of [[scd2Intervals]] and [[TemporalJoinProcessor]]
+    * (batch: `Warehouse.scd2Dim`): a type change at `t` closes version v and
+    * opens v+1. Returns (the open version after the event, the one it closed). */
+  private[streaming] def scd2Step(open: Option[Scd2Open], eventType: String,
+      t: Long): (Scd2Open, Option[Scd2Open]) = open match {
+    case Some(o) if o.event_type == eventType => (o, None)
+    case Some(o) => (Scd2Open(eventType, t, o.version + 1), Some(o))
+    case None => (Scd2Open(eventType, t, 1L), None)
   }
 
   /** I5 — per-user tumbling count window of `n`: buffers values in keyed
@@ -260,7 +263,7 @@ object Streams {
       .flatMapGroupsWithState[CwState, CountWindow](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Event], state: GroupState[CwState]) =>
-          val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+          val sorted = it.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))
           var s = state.getOption.getOrElse(CwState(0L, 0L, 0.0))
           val out = Seq.newBuilder[CountWindow]
           for (e <- sorted) {
@@ -820,7 +823,7 @@ object Streams {
     * in the SAME ×10⁶ scaled-long space as the batch twin's
     * DECIMAL(18,6) terms, so after any batch slicing the final per-type
     * (n, n_alarms, max_s, first_alarm) EQUALS the batch query exactly —
-    * StreamingSpec feeds the whole fixture in ts-ordered batches and
+    * the twin table feeds the whole fixture at three batchings and
     * asserts bit-equality. Rows inside a micro-batch are folded in
     * (ts, event_id) order; state per key is five longs, O(1) forever. */
   def cusumTws(events: Dataset[Event], kMicro: Long = 55000000L,
@@ -1330,7 +1333,7 @@ object Streams {
     * seen (day-close-by-progress, the bounded-drain analogue of a
     * day watermark); the final open day stays pending, mirroring the
     * batch query's horizon. Arithmetic is byte-for-byte the batch
-    * recursion: integer micro-units, FLOOR halving — so StreamingSpec
+    * recursion: integer micro-units, FLOOR halving — so the twin table
     * pins every emitted (level, trend, forecast) bit-equal to the
     * recursive-CTE batch rows across RocksDB micro-batches. */
   def holtTws(events: Dataset[Event]): Dataset[HoltPoint] = {
@@ -1402,7 +1405,7 @@ object Streams {
     * pending, mirroring the batch op's unattributed drop). Credit
     * arithmetic is byte-for-byte the batch rule (k=1→1, k=2→0.5,
     * ends→0.4, middles→round-6 of 0.2/(k−2); credited = round-6 of
-    * credit×value), so StreamingSpec pins the aggregated credited
+    * credit×value), so the twin table pins the aggregated credited
     * revenue bit-equal to the batch query across RocksDB micro-batch
     * boundaries. */
   def attributionTws(events: Dataset[Event]): Dataset[AttributedTouch] = {
@@ -1458,7 +1461,7 @@ object Streams {
     * sort by (ts, event_id) — the batch window's total order — so gaps
     * accumulated ACROSS batch boundaries are identical to the batch lag
     * as long as each user's events arrive in event-time order (the
-    * in-order replay StreamingSpec drives; out-of-order arrivals are
+    * in-order replay the twin table drives; out-of-order arrivals are
     * the documented divergence, as for any lag-vs-state translation).
     * State per user is O(1). The banded distribution/percentile summary
     * is the batch query's finishing pass over these gaps. */
@@ -1507,7 +1510,7 @@ object Streams {
     * GC-able exactly like a window. Emits admitted events with their
     * in-day admission index. In-order-per-user input contract (as
     * L171/L184): the batch twin's (ts, event_id) admission order equals
-    * arrival order under chronological feed, which StreamingSpec
+    * arrival order under chronological feed, which the twin table
     * asserts by set-equality of admitted (user, day, event) across
     * micro-batch boundaries — a counter surviving the batch boundary is
     * precisely what separates this from a per-batch row_number. */
@@ -1564,7 +1567,7 @@ object Streams {
         OutputMode.Update(), init)
   }
 
-  case class UserAccum(user_id: Long, first_ms: Long, last_ms: Long, n: Long)
+  case class UserAccum(user_id: Long, first_us: Long, last_us: Long, n: Long)
 
   /** Open SCD2 version ([[scd2Intervals]] state). */
   case class Scd2Open(event_type: String, valid_from_us: Long, version: Long)
@@ -1661,7 +1664,7 @@ object Streams {
     * trivially, min_by/max_by on the UNIQUE sequence number
     * (event_id), the volume sum in DECIMAL — so candles accumulated
     * across micro-batch boundaries are BIT-EQUAL to the batch rollup
-    * over the same rows (StreamingSpec pins it against the registered
+    * over the same rows (the twin table pins it against the registered
     * batch query itself). State per open candle is O(1): six scalars. */
   def ohlcWindowed(events: DataFrame): DataFrame =
     events
@@ -1686,7 +1689,7 @@ object Streams {
     * sum — and the PSI is a ROW-LOCAL decimal fold over those ten
     * cells against the broadcast-free literal reference, so state per
     * window is O(10) and the emitted PSI is bit-equal to running the
-    * SAME function over the same rows in batch (StreamingSpec pins it
+    * SAME function over the same rows in batch (the twin table pins it
     * across RocksDB micro-batches; the function body is shared —
     * `groupBy(window(...))` plans identically over bounded input).
     * Laplace-smoothed current side ((n+1)/(N+10), the L126
@@ -1725,7 +1728,7 @@ object Streams {
     * deployment scale the exact set swaps for the [[kmvWindowed]]
     * bottom-k sketch on the same plan, trading exactness for O(k)
     * state. `target_day` = the day the window CLOSES on, matching the
-    * batch query's day_num grain (StreamingSpec pins streamed windows
+    * batch query's day_num grain (the twin table pins streamed windows
     * equal to the batch expansion on every batch-emitted day). */
   def wauSliding(events: DataFrame): DataFrame =
     events
@@ -1740,7 +1743,7 @@ object Streams {
     * and the robust-z scoring — a whole-horizon median/MAD statistic —
     * runs per trigger over the tiny day-grain output via the SAME
     * [[graft.ops.Audit.volumeScoreOn]] the batch query uses
-    * (foreachBatch / on the sink table; StreamingSpec pins the
+    * (foreachBatch / on the sink table; the twin table pins the
     * composition bit-equal to the registered batch query). Splitting
     * there is the honest design: a median over all days is not an
     * incremental per-key fold, but the frame it reads is
@@ -1920,9 +1923,9 @@ object Streams {
     * updates apply (in event_id order) before ANY probe fires, because a
     * version born at ts T owns T — including the version the probing
     * purchase itself creates. In-order-per-user arrival across
-    * micro-batches is the documented contract (as L171); StreamingSpec
-    * proves full-fixture row equality with the batch join across three
-    * chronological RocksDB micro-batches. */
+    * micro-batches is the documented contract (as L171); the twin
+    * table checks full-fixture row equality with the batch join at
+    * three batchings. */
   def temporalJoinStream(events: Dataset[Event]): Dataset[TemporalMatch] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
@@ -1942,9 +1945,11 @@ object Streams {
         Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.scalaLong),
         streaming.TTLConfig.NONE)
 
+    /** [[scd2Step]] over the `(version, event_type, valid_from_us)` state. */
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: streaming.TimerValues): Iterator[TemporalMatch] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[TemporalMatch]
+      var open = Option(cur.get()).map { case (v, ty, vf) => Scd2Open(ty, vf, v) }
       val sorted = rows.toSeq.sortBy(e => (microsOf(e.ts), e.event_id))
       var i = 0
       while (i < sorted.length) {
@@ -1952,22 +1957,14 @@ object Streams {
         var j = i
         while (j < sorted.length && microsOf(sorted(j).ts) == t) j += 1
         // phase 1: every equal-ts event applies its dimension update
-        sorted.slice(i, j).foreach { e =>
-          if (!cur.exists() || cur.get()._2 != e.event_type) {
-            val v = if (cur.exists()) cur.get()._1 + 1 else 1L
-            cur.update((v, e.event_type, t))
-          }
-        }
+        sorted.slice(i, j).foreach(e => open = Some(scd2Step(open, e.event_type, t)._1))
         // phase 2: equal-ts probes see the post-update version (a version
         // born at T owns T — the batch half-open interval)
-        sorted.slice(i, j).foreach { e =>
-          if (e.event_type == "purchase") {
-            val (v, ty, vf) = cur.get()
-            out += TemporalMatch(e.event_id, key, v, ty, vf)
-          }
-        }
+        sorted.slice(i, j).filter(_.event_type == "purchase").foreach(e => open.foreach(o =>
+          out += TemporalMatch(e.event_id, key, o.version, o.event_type, o.valid_from_us)))
         i = j
       }
+      open.foreach(o => cur.update((o.version, o.event_type, o.valid_from_us)))
       out.iterator
     }
   }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * #3): the HBOS multivariate anomaly scorer, the STL daily decomposition
   * + residual monitor, and the golden-record survivorship ledger — each
   * the live form of an already-oracled batch query, arithmetic shared or
-  * mirrored byte-for-byte so StreamingSpec can pin batch ≡ stream across
+  * mirrored byte-for-byte so the twin table can pin batch ≡ stream across
   * RocksDB micro-batch boundaries.
   *
   * The deployment split these twins encode is the standard one: the
@@ -41,8 +41,8 @@ object Streams2 {
     * maximum surprise the reference can express — count 1 of N, i.e.
     * −ln(1/N) — with `novel_bin` set so the reader can split
     * "high-scoring trained bin" from "bin the reference never saw"
-    * (round-15 ADVICE fix; StreamingSpec pins both the covered-bin
-    * batch≡stream equality and the novel-bin path). Global top-k is
+    * (round-15 ADVICE fix; the twin table pins the covered-bin
+    * batch≡stream equality, StreamingSpec the novel-bin path). Global top-k is
     * the batch query's job; the stream emits every score. */
   def hbosScored(events: DataFrame, hodHist: DataFrame, dowHist: DataFrame,
       vbandHist: DataFrame, nTotal: Long): DataFrame = {
@@ -79,7 +79,7 @@ object Streams2 {
     * when its 3 successor day-rows exist AND are closed
     * (day-close-by-progress: a later day has been seen), so at any
     * fixture cut the stream has emitted exactly the batch frame minus
-    * its final row — StreamingSpec pins that alignment bit-for-bit.
+    * its final row — the twin table pins that alignment bit-for-bit.
     * The weekly seasonal profile and the robust location/scale
     * (median, MAD) are corpus statistics: trained in batch, frozen in
     * as references (the L273 PSI convention); the residual and its
@@ -198,7 +198,7 @@ object Streams2 {
     * recent `maxPerBucket` same-bucket members only — exactly the
     * sliding-window dedup guarantee streaming-SNM (L160) already
     * documents for text. Default `Int.MaxValue` preserves the
-    * exact-batch-equality mode (the StreamingSpec batch≡stream pin);
+    * exact-batch-equality mode (the twin table's batch≡stream pin);
     * the eviction leg pins that a replica beyond the horizon no longer
     * alerts while one inside it still does. */
   def imageAHashTws(docIds: Dataset[Long],
@@ -290,7 +290,7 @@ object Streams2 {
     * member count, total chars) plus the source tally map for the
     * majority vote — all order-independent folds, so any arrival order
     * and any micro-batch split converge to the batch survivorship
-    * (StreamingSpec pins the final upsert per cluster row-equal to the
+    * (the twin table pins the final upsert per cluster row-equal to the
     * batch query). One upsert emits per cluster per micro-batch touched
     * — the ledger contract; the batch key's multi-member-only filter is
     * the reader's, mirrored in the spec. */

@@ -32,7 +32,7 @@ object Streams3 {
     * a ValueState; every later occurrence emits a [[DupFlag]].
     * Intra-batch occurrences fold in (doc_id, pos) order, so a
     * micro-batch boundary can never change which occurrence is the
-    * keeper — StreamingSpec pins the streamed flags' per-doc span
+    * keeper — the twin table pins the streamed flags' per-doc span
     * merge equal to the batch `llm_dedup_substring_incr` rows across
     * RocksDB micro-batches. */
   def substrDedupTws(docs: Dataset[(Long, String)]): Dataset[DupFlag] = {
@@ -72,7 +72,7 @@ object Streams3 {
     * in frame_no order; a frame whose predecessor index is missing
     * (out-of-contract arrival) is folded into state without alerting
     * rather than SAD'd against a non-adjacent frame — the batch chain
-    * only ever compares consecutive frames. StreamingSpec pins the
+    * only ever compares consecutive frames. The twin table pins the
     * streamed alerts set-equal to the batch `mm_video_scene_cut` rows
     * with micro-batch boundaries cutting videos mid-sequence. */
   def sceneCutTws(frames: Dataset[FrameEvent]): Dataset[CutAlert] = {
@@ -170,7 +170,7 @@ object Streams3 {
     * bounded-drain analogue of an hour watermark, the
     * [[graft.streaming.Streams.holtTws]] convention). Arithmetic is
     * byte-for-byte the batch frame: exact half-up integer-micro
-    * running means, 64-bit m and prefix-min — StreamingSpec pins every
+    * running means, 64-bit m and prefix-min — the twin table pins every
     * emitted (rn, mean, m, ph) bit-equal to
     * [[graft.ops.Stats4.pageHinkleyFrameMicro]] across RocksDB
     * micro-batches, including hours split across batch boundaries. */
@@ -432,7 +432,7 @@ object Streams3 {
     * √n quantized to DECIMAL(18,6) HALF_UP before the total (the
     * `dsum` convention — order-free), p = round(√n/T, 6), expected
     * docs = round(1000·√n/T) — so after the last fixture hour closes
-    * the emitted table IS the batch frame (StreamingSpec pins it).
+    * the emitted table IS the batch frame (the twin table pins it).
     * State is source-cardinality-bounded (cumulative totals) plus the
     * open hours' partial counts — never the document stream. */
   def sourceMixTws(docs: Dataset[SourceHour]): Dataset[MixPoint] = {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `.collect()` in `src/main` is a latent driver OOM at warehouse scale
   * (this is exactly how llm_dedup_embed's unbounded collect slipped
   * through round 4). And one copy of each shared kernel helper: the
-  * 6-dp rounding and the DuckDB dot product. */
+  * 6-dp rounding, the DuckDB dot product and its sum of squares. */
 class CollectGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(dir: java.io.File): Seq[java.io.File] = {
@@ -54,14 +54,19 @@ class CollectGuardSpec extends AnyFunSuite {
   test("src/main has one 6-dp HALF_UP double rounding and one dotSql") {
     // a private copy of ArrayMath.round6 or Tables.dotSql drifts from the
     // one the oracle parity argument is about; call the shared one. The
-    // dot product is matched by its DuckDB text shape, across string
-    // concatenation, so a renamed copy or a range-form norm fails too.
+    // dot product and the whole-list sum of squares (Tables.sumSqSql, which
+    // normSql wraps) are matched by their DuckDB text shape, across string
+    // concatenation and line breaks, so a renamed copy or a range-form
+    // norm fails too.
     val round6 = """setScale\(\s*6\s*,\s*(?:BigDecimal|java\.math)\.RoundingMode\.HALF_UP\s*\)\s*\.(?:toDouble|doubleValue)""".r
     val dotSql = """list_transform\(range\(1,[^)]*\),\s*i\s*->[\s"+s]*CAST\([\w.$]+\[i\] AS DOUBLE\) \* CAST\([\w.$]+\[i\] AS DOUBLE\)""".r
+    val sumSqSql = """list_transform\([\w.$]+,[\s"+s]*(\w+)\s*->[\s"+s]*CAST\(\1 AS DOUBLE\) \* CAST\(\1 AS DOUBLE\)""".r
     assert(sites(round6).map(new java.io.File(_).getName) == Seq("ArrayMath.scala"),
       s"6-dp HALF_UP roundings outside ArrayMath.round6: ${sites(round6)}")
     assert(sites(dotSql).map(new java.io.File(_).getName) == Seq("Tables.scala"),
       s"DuckDB dot products outside Tables.dotSql: ${sites(dotSql)}")
+    assert(sites(sumSqSql).map(new java.io.File(_).getName) == Seq("Tables.scala"),
+      s"DuckDB sums of squares outside Tables.sumSqSql: ${sites(sumSqSql)}")
   }
 
   test("src/main spells the DuckDB events.ts cast once, as Tables.evTs") {

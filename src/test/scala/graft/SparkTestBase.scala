@@ -8,6 +8,7 @@ object SparkTestSession {
   lazy val spark: SparkSession = {
     val s = Session.builder(4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    Session.quietUnpartitionedWindows()
     s
   }
 }

@@ -2,11 +2,13 @@ package graft
 
 import graft.streaming.Streams
 import graft.streaming.Streams.Event
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** Structured Streaming semantics (SURVEY.md §2.I, the (a) side of the dual
   * formulation): watermark advancement, late-data drop, session merge,
@@ -14,22 +16,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * modes, and batch≡streaming equality. All via MemoryStream — the idiomatic
   * Spark analogue of Flink's MiniCluster harness. */
 class StreamingSpec extends SparkTestBase {
+  import spark.implicits._
+  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def ev(id: Long, t: String, uid: Long, typ: String, v: Double) =
     Event(id, ts(t), uid, typ, v)
 
-  private def usOf(t: String): Long = {
-    val x = ts(t)
+  private def usOf(t: String): Long = usOf(ts(t))
+  private def usOf(x: java.sql.Timestamp): Long =
     math.floorDiv(x.getTime, 1000L) * 1000000L + x.getNanos / 1000L
-  }
 
   private def runToTable(df: DataFrame, name: String, mode: String): StreamingQuery =
     df.writeStream.format("memory").queryName(name).outputMode(mode).start()
 
   test("I2+I1: tumbling counts in append mode emit only watermark-finalized windows") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.tumblingCounts(ms.toDF()), "tumb_append", "append")
     try {
@@ -50,9 +50,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I8: rows later than the watermark are dropped, not re-fired") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.tumblingCounts(ms.toDF()), "tumb_late", "append")
     try {
@@ -69,9 +66,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I4: session windows merge events within gap and split across it") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.sessionStats(ms.toDF()), "sess", "append")
     try {
@@ -92,9 +86,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I7: dropDuplicatesWithinWatermark emits first occurrence only") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.dedupFirst(ms.toDF()), "dedup", "append")
     try {
@@ -111,9 +102,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I6: mapGroupsWithState accumulates per-user first/last/count across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.userFirstLast(ms.toDS()).toDF(), "ufl", "update")
     try {
@@ -124,16 +112,13 @@ class StreamingSpec extends SparkTestBase {
       q.processAllAvailable()
       val last = spark.table("ufl").where($"user_id" === 1)
         .orderBy($"n".desc).limit(1)
-        .select($"first_ms", $"last_ms", $"n").as[(Long, Long, Long)].head()
-      assert(last === ((ts("2024-01-01 09:00:00").getTime,
-        ts("2024-01-01 12:00:00").getTime, 3L)))
+        .select($"first_us", $"last_us", $"n").as[(Long, Long, Long)].head()
+      assert(last === ((usOf("2024-01-01 09:00:00"),
+        usOf("2024-01-01 12:00:00"), 3L)))
     } finally q.stop()
   }
 
   test("CEP Kleene twin: view+ runs close on the breaking event, time out via event-time timer") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.kleeneViewsThenPurchase(ms.toDS()).toDF(), "kleene", "append")
     try {
@@ -169,9 +154,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("SCD2 twin: versions close on type change, across micro-batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.scd2Intervals(ms.toDS()).toDF(), "scd2", "append")
     try {
@@ -198,9 +180,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I5: flatMapGroupsWithState count-window emits exactly full windows") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.countWindowSum(ms.toDS(), 3).toDF(), "cw", "append")
     try {
@@ -215,9 +194,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("C6 streaming: watermarked stream-stream interval join matches pairs") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.intervalJoin(ms.toDF()), "ij", "append")
     try {
@@ -235,9 +211,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I3b: cumulate windows grow within the span and refine across micro-batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.cumulateCounts(ms.toDF()), "cumu", "update")
     try {
@@ -266,9 +239,6 @@ class StreamingSpec extends SparkTestBase {
     // state: each micro-batch merges into it, and the final signature must
     // equal the batch signature over the union of all batches — the
     // mergeability the sketch exists for, exercised through the state store
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[(String, Long)]
     val sig = ms.toDF().toDF("g", "x").groupBy("g")
       .agg(functions.MinHash.sig(col("x"), 8).as("sig"))
@@ -291,9 +261,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("C6c streaming: bucketed range join joins across buckets with no natural equi key") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.rangeJoinBucketed(ms.toDF()), "rjb", "append")
     try {
@@ -319,9 +286,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("C6 streaming: LEFT OUTER interval join emits null-match rows after watermark passes") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.intervalJoinLeftOuter(ms.toDF()), "ijlo", "append")
     try {
@@ -350,9 +314,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("C6 streaming: FULL OUTER interval join emits matched, left-null AND right-null rows") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.intervalJoinFullOuter(ms.toDF()), "ijfo", "append")
     try {
@@ -388,9 +349,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("chained stateful operators in one query: watermarked dedup then windowed count") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val piped = Streams.dedupFirst(ms.toDF(), "10 minutes")
       .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
@@ -414,9 +372,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("trigger AvailableNow: drains everything available, then stops on its own") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     ms.addData(
       ev(1, "2024-01-01 10:00:00", 1, "click", 1.0),
@@ -434,9 +389,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I6b: event-time timer closes gap sessions when the watermark passes (onTimer analogue)") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(
       Streams.timerSessions(ms.toDS()).toDF(), "timer_sessions", "append")
@@ -466,63 +418,7 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("I10+batch≡streaming: complete-mode aggregation equals the batch twin on the same data") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val batchEvents = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect()
-    val ms = MemoryStream[Event]
-    val streamed = ms.toDF()
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"))
-      .select(unix_micros($"w.start").as("ws_us"), $"event_type", $"n")
-    val q = runToTable(streamed, "tumb_complete", "complete")
-    try {
-      ms.addData(batchEvents.toSeq: _*)
-      q.processAllAvailable()
-      val stream = spark.table("tumb_complete").orderBy("ws_us", "event_type").collect()
-      val batch = ops.StreamOps.tumblingCounts(spark, sf0001).collect()
-      assert(stream.toSeq === batch.toSeq)
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: timer sessions equal the batch sessionizer on the full fixture") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val batchEvents = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect()
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.timerSessions(ms.toDS()).toDF(), "timer_eq", "append")
-    try {
-      ms.addData(batchEvents.toSeq: _*)
-      q.processAllAvailable()
-      // sentinel far-future events push the watermark past every real
-      // session's end so every timer fires; two batches so eviction runs
-      ms.addData(ev(-1, "2030-01-01 00:00:00", -1, "click", 0.0))
-      q.processAllAvailable()
-      ms.addData(ev(-2, "2030-06-01 00:00:00", -1, "click", 0.0))
-      q.processAllAvailable()
-      val streamed = spark.table("timer_eq")
-        .where($"user_id" >= 0) // drop the sentinel user
-        .select($"user_id", $"n_events", round($"sum_value", 6).as("sv"))
-        .as[(Long, Long, Double)].collect()
-        .groupBy(identity).view.mapValues(_.length).toMap
-      val batch = ops.Warehouse.sessionizeEvents(spark, sf0001)
-        .select($"user_id", $"n_events", round($"sum_value", 6).as("sv"))
-        .as[(Long, Long, Double)].collect()
-        .groupBy(identity).view.mapValues(_.length).toMap
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
   test("I6 (Spark 4 transformWithState): RocksDB-backed ValueState accumulates per key") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.userTotalsTws(ms.toDS()).toDF(), "tws", "update")
     try {
@@ -539,9 +435,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I6e: ListState buffer stays bounded and MapState counts accumulate across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.userProfileTws(ms.toDS(), keepN = 3).toDF(), "profile", "update")
     try {
@@ -561,9 +454,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("A10: upsert sink keeps the latest row per key across batches (staging swap)") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
     val ms = MemoryStream[Event]
     val q = Streams.foreachBatchUpsert(ms.toDF(), dir,
@@ -586,9 +476,6 @@ class StreamingSpec extends SparkTestBase {
   /** Runs `batches` through a fresh upsert sink on a new table, one
     * micro-batch each; returns the table path. */
   private def upsertBatches(keys: Seq[String], batches: Seq[Event]*): String = {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
     val ms = MemoryStream[Event]
     val q = Streams.foreachBatchUpsert(ms.toDF(), dir, keys, orderCol = "ts").start()
@@ -598,16 +485,12 @@ class StreamingSpec extends SparkTestBase {
   }
 
   private def upsertTable(dir: String): Set[Event] = {
-    val s = spark
-    import s.implicits._
     spark.read.parquet(dir).as[Event].collect().toSet
   }
 
   /** Reference upsert semantics: row_number 1 of a window over all rows
     * per key, newest (ts, event_id) first. */
   private def windowLatest(keys: Seq[String], rows: Seq[Event]): Set[Event] = {
-    val s = spark
-    import s.implicits._
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
       .orderBy(col("ts").desc, col("event_id").desc)
     rows.toDF().withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
@@ -661,9 +544,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("A10 merge: replaying a committed batch leaves the table unchanged") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
     val ckpt = java.nio.file.Files.createTempDirectory("graft-upsert-ckpt").toString
     val ms = MemoryStream[Event]
@@ -727,9 +607,6 @@ class StreamingSpec extends SparkTestBase {
     (0 until n).map(i => f"part-$i%05d-of-$n%05d.parquet").toSet
 
   test("A10 merge: a steady-state upsert batch is one Spark job and writes <= defaultParallelism files") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
     val ms = MemoryStream[Event]
     val q = Streams.foreachBatchUpsert(ms.toDF(), dir, Seq("user_id"), "ts").start()
@@ -766,9 +643,6 @@ class StreamingSpec extends SparkTestBase {
     * as exactly the bucket files holding the newest row per user of
     * `init` (unique per user) and both batches. */
   private def migratesToBuckets(dir: String, init: Seq[Event]): Unit = {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val b1 = (1 to 300).map(i => ev(1000L + i, "2024-01-01 11:00:00", (i % 120).toLong, "view", i.toDouble))
     val b2 = (1 to 300).map(i => ev(2000L + i, "2024-01-01 09:00:00", (i % 240).toLong, "click", i.toDouble))
     val ms = MemoryStream[Event]
@@ -798,16 +672,12 @@ class StreamingSpec extends SparkTestBase {
     (0 until 200).map(u => ev(u.toLong, "2024-01-01 10:00:00", u.toLong, "click", u.toDouble))
 
   test("A10 layout: a table written by the DataFrame writer is re-bucketed once") {
-    val s = spark
-    import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
     upsertInit.toDF().repartition(3).write.parquet(dir)
     migratesToBuckets(dir, upsertInit)
   }
 
   test("A10 layout: a table compacted by Maintenance.compactParquet is re-bucketed once") {
-    val s = spark
-    import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
     upsertInit.toDF().repartition(3).write.parquet(dir)
     assert(graft.ops.Maintenance.compactParquet(spark, dir).filesAfter === 1)
@@ -815,8 +685,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("A10 layout: a table bucketed for another core count is re-bucketed once") {
-    val s = spark
-    import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-upsert").toFile
     val written = new java.io.File(root, "written")
     upsertInit.toDF().repartition(2).write.parquet(written.getPath)
@@ -830,9 +698,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("A10 merge: a table whose stored schema drifted from the stream fails the batch") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/current"
     Seq((1L, "2024-01-01 10:00:00", 1L, "click", "1.0"))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
@@ -851,9 +716,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I6f: transformWithState event-time timers close gap sessions; stale timers ignored") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.timerSessionsTws(ms.toDS()).toDF(), "tws_timer", "append")
     try {
@@ -887,9 +749,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I6f: transformWithState timer sessions split an in-batch gap like the GroupState twin") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.timerSessionsTws(ms.toDS()).toDF(), "tws_timer_gap", "append")
     try {
@@ -910,9 +769,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I4d: dynamic-gap sessions — a purchase's 4h window outlives a click's 1h; boundary closes in-line") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.dynamicGapSessionsTws(ms.toDS()).toDF(), "tws_dyn", "append")
     try {
@@ -948,51 +804,7 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("I4d+L97: dynamic-gap streaming sessions equal the batch twin on the whole fixture") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val rows = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[(Long, java.sql.Timestamp, Long, String, Double)].collect()
-      .map(r => Event(r._1, r._2, r._3, r._4, r._5))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    // split at a strict ts boundary so the 0s watermark drops nothing
-    val cut = rows(rows.length / 2).ts.getTime
-    val (b1, b2) = rows.partition(_.ts.getTime < cut)
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.dynamicGapSessionsTws(ms.toDS()).toDF(), "tws_dyn_eq", "append")
-    try {
-      ms.addData(b1: _*)
-      q.processAllAvailable()
-      ms.addData(b2: _*)
-      q.processAllAvailable()
-      // far-future sentinels flush every open tail (watermark lags one batch)
-      ms.addData(ev(-1, "2030-01-01 00:00:00", -1, "click", 0.0))
-      q.processAllAvailable()
-      ms.addData(ev(-2, "2030-06-01 00:00:00", -1, "click", 0.0))
-      q.processAllAvailable()
-      val streamed = spark.table("tws_dyn_eq").where($"user_id" >= 0)
-        .select($"user_id", $"n_events", $"start_us", $"end_us", $"sum_value")
-        .as[(Long, Long, Long, Long, Double)].collect()
-        .map(t => (t._1, t._2, t._3, t._4) -> t._5).toMap
-      val batch = graft.ops.Warehouse.sessionizeDynamicGap(spark, sf0001)
-        .select($"user_id", $"n_events", $"start_us", $"end_us", $"sum_value")
-        .as[(Long, Long, Long, Long, Double)].collect()
-        .map(t => (t._1, t._2, t._3, t._4) -> t._5).toMap
-      assert(streamed.keySet === batch.keySet,
-        s"session boundaries diverge: extra=${streamed.keySet -- batch.keySet} missing=${batch.keySet -- streamed.keySet}")
-      batch.foreach { case (k, v) =>
-        assert(math.abs(streamed(k) - v) < 1e-6, s"sum mismatch at $k: ${streamed(k)} vs $v")
-      }
-      assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
   test("I5b: count-trigger fires every 3rd element over the last-5 evicted pane, across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.countTriggerWindowTws(ms.toDS()).toDF(), "tws_cte", "append")
     try {
@@ -1013,76 +825,7 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("I5b+L97: streamed count-trigger windows equal the batch twin on the whole fixture") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val rows = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[(Long, java.sql.Timestamp, Long, String, Double)].collect()
-      .map(r => Event(r._1, r._2, r._3, r._4, r._5))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    val cut = rows(rows.length / 2).ts.getTime
-    val (b1, b2) = rows.partition(_.ts.getTime < cut)
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.countTriggerWindowTws(ms.toDS()).toDF(), "tws_cte_eq", "append")
-    try {
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-      val streamed = spark.table("tws_cte_eq")
-        .select($"user_id", $"fire_seq", $"n_in_window", $"win_sum")
-        .as[(Long, Long, Long, Double)].collect()
-        .map(t => (t._1, t._2, t._3) -> t._4).toMap
-      val batch = graft.ops.StreamOps.countTriggerEvict(spark, sf0001)
-        .select($"user_id", $"fire_seq", $"n_in_window", $"win_sum")
-        .as[(Long, Long, Long, Double)].collect()
-        .map(t => (t._1, t._2, t._3) -> t._4).toMap
-      assert(streamed.keySet === batch.keySet,
-        s"fire points diverge: extra=${streamed.keySet -- batch.keySet} missing=${batch.keySet -- streamed.keySet}")
-      batch.foreach { case (k, v) =>
-        assert(math.abs(streamed(k) - v) < 1e-6, s"pane sum mismatch at $k: ${streamed(k)} vs $v")
-      }
-      assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("I6f+L216: streaming CUSUM equals the batch control chart on the whole fixture") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val rows = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[(Long, java.sql.Timestamp, Long, String, Double)].collect()
-      .map(r => Event(r._1, r._2, r._3, r._4, r._5))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    // three ts-ordered slices so the recursion crosses state boundaries
-    val (b1, rest) = rows.splitAt(rows.length / 3)
-    val (b2, b3) = rest.splitAt(rest.length / 2)
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.cusumTws(ms.toDS()).toDF(), "tws_cusum_eq", "update")
-    try {
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-      ms.addData(b3: _*); q.processAllAvailable()
-      // update mode: the row with the max n per type is the final state
-      val streamed = spark.table("tws_cusum_eq")
-        .select($"event_type", $"n", $"n_alarms", $"max_s", $"first_alarm_us")
-        .as[(String, Long, Long, Double, Long)].collect()
-        .groupBy(_._1).map { case (_, xs) => xs.maxBy(_._2) }
-        .toSeq.sortBy(_._1)
-      val batch = graft.ops.Warehouse4.cusumAnomaly(spark, sf0001)
-        .select($"event_type", $"n", $"n_alarms", $"max_s", $"first_alarm_us")
-        .as[(String, Long, Long, Double, Long)].collect().toSeq.sortBy(_._1)
-      assert(streamed == batch,
-        s"streaming chart diverged:\n  stream $streamed\n  batch  $batch")
-      assert(batch.map(_._3).sum > 0, "no alarms anywhere — dead chart")
-    } finally q.stop()
-  }
-
   test("I6f: CUSUM alarm time floors pre-1970 instants to the µs below") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.cusumTws(ms.toDS()).toDF(), "tws_cusum_pre1970", "update")
     try {
@@ -1096,9 +839,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("online SNM: sorted-buffer pairs across batches, prefix-keyed, bounded state; precision 1 on the fixture") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Streams.StreamDoc]
     val q = runToTable(Streams.streamingSnm(ms.toDS()).toDF(), "snm_stream", "append")
     try {
@@ -1142,9 +882,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I6g: initial state bootstraps keyed totals — a migrated job resumes, not restarts") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     // "savepoint": user 1 had (2 events, 10.0) before the cutover
     val seed = Seq((1L, 2L, 10.0)).toDS()
@@ -1163,9 +900,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I6c: value state expires after its TTL — the key restarts instead of resuming") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     // discrete single-batch runs over one checkpoint: the realistic
     // incremental shape for processing-time TTL, and the only settle-able
@@ -1215,9 +949,6 @@ class StreamingSpec extends SparkTestBase {
     // run with changelog checkpointing on over a stop/restart so the
     // recovery path (changelog replay on top of the last snapshot) is
     // exercised, not just the happy path.
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val changelogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     val prevC = spark.conf.getOption(changelogKey)
     spark.conf.set(changelogKey, "true")
@@ -1260,9 +991,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I6h: absence alerts — timer fires for uncancelled clicks only (notFollowedBy)") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.absenceAlerts(ms.toDS()).toDF(), "absence", "append")
     try {
@@ -1294,9 +1022,6 @@ class StreamingSpec extends SparkTestBase {
     // micro-batch — purchase does NOT follow the click, so the click still
     // alerts. user 2: click(id 20) then same-µs purchase(id 25) — follows,
     // cancels.
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     // 10-min watermark delay: with the default 0s, batch 1 advances the
     // watermark TO the clicks' timestamp, and the same-µs batch-2
@@ -1323,9 +1048,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("C8: connected control+data streams — rules update keyed thresholds across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     def t(m: String) = java.sql.Timestamp.valueOf(m)
     val data = MemoryStream[Event]
     val ctrl = MemoryStream[(String, java.sql.Timestamp, Double)]
@@ -1360,500 +1082,7 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("batch≡streaming: relaxed chain matches equal cep_followed_by_relaxed, state crossing batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(
-      Streams.relaxedChainMatches(ms.toDS(), Seq("view", "click", "purchase"),
-        withinUs = Some(3L * 24 * 3600 * 1000000L)).toDF(),
-      "chain_eq", "append")
-    try {
-      // three chronological micro-batches: most fixture chains must cross
-      // a batch boundary through RocksDB state to be found
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("chain_eq")
-        .select($"user_id", $"ids", $"span_us").as[(Long, Seq[Long], Long)]
-        .collect().map { case (u, ids, sp) => (u, ids.mkString(","), sp) }.toSet
-      val batch = ops.Joins.cepFollowedByRelaxed(spark, sf0001)
-        .select($"user_id", $"view_id", $"click_id", $"purchase_id", $"span_us")
-        .as[(Long, Long, Long, Long, Long)]
-        .collect().map { case (u, v, c, p, sp) => (u, s"$v,$c,$p", sp) }.toSet
-      assert(streamed === batch,
-        s"only-streamed=${(streamed -- batch).take(5)} only-batch=${(batch -- streamed).take(5)}")
-      assert(streamed.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: temporal join equals cdc_temporal_join on the full fixture") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.temporalJoinStream(ms.toDS()).toDF(),
-      "temporal_eq", "append")
-    try {
-      // three chronological micro-batches: most users' dimension versions
-      // must persist through RocksDB state to serve later-batch probes
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("temporal_eq")
-        .select($"purchase_id", $"user_id", $"version", $"type_at_purchase",
-          $"valid_from_us")
-        .as[(Long, Long, Long, String, Long)].collect().toSet
-      val batch = ops.Warehouse.cdcTemporalJoin(spark, sf0001)
-        .select($"purchase_id", $"user_id", $"version", $"type_at_purchase",
-          $"valid_from_us")
-        .as[(Long, Long, Long, String, Long)].collect().toSet
-      assert(streamed === batch,
-        s"only-streamed=${(streamed -- batch).take(5)} only-batch=${(batch -- streamed).take(5)}")
-      assert(streamed.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: OHLC candles bit-equal to the batch rollup across micro-batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.ohlcWindowed(ms.toDF()), "ohlc_win", "complete")
-    try {
-      // three chronological micro-batches: most candles accumulate
-      // open/high/low/close across a state-store boundary
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("ohlc_win")
-        .select($"bucket".cast("string"), $"event_type", $"open", $"high",
-          $"low", $"close", $"n_events", $"v_sum", $"range")
-        .as[(String, String, Double, Double, Double, Double, Long, Double, Double)]
-        .collect().toSet
-      val batch = SparkEntry.queries("ts_ohlc_hourly")(spark, sf0001)
-        .select($"bucket".cast("string"), $"event_type", $"open", $"high",
-          $"low", $"close", $"n_events", $"v_sum", $"range")
-        .as[(String, String, Double, Double, Double, Double, Long, Double, Double)]
-        .collect().toSet
-      assert(streamed === batch,
-        s"only-streamed=${(streamed -- batch).take(3)} only-batch=${(batch -- streamed).take(3)}")
-      assert(batch.size > 10, "fixture must span many candles")
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: Holt level/trend maintenance bit-equal to the recursive-CTE batch") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.holtTws(ms.toDS()).toDF(), "holt_tws", "append")
-    try {
-      ordered.grouped((ordered.length + 3) / 4).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("holt_tws")
-        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
-          r.getDouble(3), if (r.isNullAt(4)) None else Some(r.getDouble(4))))
-        .sortBy(_._1).toSeq
-      val batch = SparkEntry.queries("ts_holt_daily")(spark, sf0001)
-        .collect().map(r => (r.getLong(1), r.getDouble(2), r.getDouble(3),
-          r.getDouble(4), if (r.isNullAt(5)) None else Some(r.getDouble(5))))
-        .sortBy(_._1).toSeq
-      // stream emits every day that CLOSED (a later day was seen) — all
-      // but the final day of the batch horizon
-      assert(streamed == batch.dropRight(1),
-        s"\nstream ${streamed.take(3)}…\nbatch ${batch.take(3)}…")
-      assert(streamed.length >= 25, "fixture must close many days")
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: Page–Hinkley statistic bit-equal to the batch frame, hours split across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    // the monitored (drift-planted) series and λ come from the batch frame
-    val frame = ops.Stats4.pageHinkleyFrameMicro(spark, sf0001)
-      .select($"rn", $"bucket_us", $"x_mon", $"mean_run", $"m", $"ph",
-        $"mu_micro")
-      .collect().sortBy(_.getLong(0))
-    val lambdaMicro = frame.head.getLong(6) * 12
-    // every hour arrives as TWO partial contributions, interleaved so
-    // most hours straddle a micro-batch boundary
-    val points = frame.flatMap { r =>
-      val (b, x) = (r.getLong(1), r.getLong(2))
-      Seq(streaming.Streams3.HourPoint(b, x / 2),
-        streaming.Streams3.HourPoint(b, x - x / 2))
-    }
-    val ms = MemoryStream[streaming.Streams3.HourPoint]
-    val q = runToTable(
-      streaming.Streams3.pageHinkleyTws(ms.toDS(), lambdaMicro,
-        frame.head.getLong(6) / 4).toDF(),
-      "ph_tws", "append")
-    try {
-      points.grouped((points.length + 4) / 5).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("ph_tws")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getBoolean(6)))
-        .sortBy(_._1).toSeq
-      val batch = frame.dropRight(1).map(r => (r.getLong(0), r.getLong(1),
-        r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-        r.getLong(5) > lambdaMicro)).toSeq
-      assert(streamed == batch,
-        s"\nstream ${streamed.take(3)}…\nbatch ${batch.take(3)}…")
-      assert(streamed.count(_._7) > 0, "the planted drift must alarm")
-      assert(streamed.exists(!_._7), "pre-drift hours must stay silent")
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: U-shaped attribution credits bit-equal to the batch query") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.attributionTws(ms.toDS()).toDF(),
-      "attr_tws", "append")
-    try {
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("attr_tws")
-        .groupBy($"touch")
-        .agg(count(lit(1)).as("n_credited_touches"),
-          round(Tables.dsum($"credited"), 6).as("credited_revenue"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-        .sortBy(_._1).toSeq
-      val batch = SparkEntry.queries("attribution_position")(spark, sf0001)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-        .sortBy(_._1).toSeq
-      assert(streamed == batch, s"\nstream $streamed\nbatch $batch")
-      assert(batch.map(_._2).sum > 100, "fixture must carry many credits")
-      // per-journey credit conservation on the streamed side
-      val perJourney = spark.table("attr_tws")
-        .groupBy($"user_id", $"purchase_event_id")
-        .agg(round(Tables.dsum($"credit"), 6).as("csum"), count(lit(1)).as("k"))
-        .collect()
-      perJourney.foreach { r =>
-        assert(math.abs(r.getDouble(2) - 1.0) < r.getLong(3) * 1e-6,
-          s"credits must conserve: $r")
-      }
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: windowed PSI drift monitor bit-equal to the batch form") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    // the frozen reference: the fixture's own first day, smoothed the
-    // same way the current side is — day 1 should then NOT drift
-    val day1 = ordered.takeWhile(_.ts.getTime < ordered.head.ts.getTime -
-      ordered.head.ts.getTime % 86400000L + 86400000L)
-    val counts = Array.tabulate(10) { k =>
-      day1.count(e => math.min(math.floor(e.value / 20.0).toLong, 9L) == k).toLong
-    }
-    val ref = counts.map(c => (c + 1.0) / (day1.length + 10.0)).toSeq
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.psiWindowed(ms.toDF(), ref), "psi_win", "complete")
-    try {
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val cols = Seq("ws", "nb_0", "nb_1", "nb_2", "nb_3", "nb_4", "nb_5",
-        "nb_6", "nb_7", "nb_8", "nb_9", "psi", "drift")
-      val streamed = spark.table("psi_win")
-        .select((col("ws").cast("string") +: cols.drop(1).map(col)): _*)
-        .collect().map(_.toSeq).toSet
-      val batch = Streams.psiWindowed(Tables.events(spark, sf0001), ref)
-        .select((col("ws").cast("string") +: cols.drop(1).map(col)): _*)
-        .collect().map(_.toSeq).toSet
-      assert(streamed === batch)
-      assert(batch.size > 10, "fixture must span many day windows")
-      // the reference day itself must sit at (near-)zero PSI, undrifted
-      val firstDay = spark.table("psi_win").orderBy("ws").collect().head
-      assert(!firstDay.getBoolean(12), "reference day must not drift")
-      assert(firstDay.getDouble(11) < 0.01)
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: per-user inter-arrival gaps equal the batch lag window") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.interArrivalTws(ms.toDS()).toDF(),
-      "gap_tws", "append")
-    try {
-      // four micro-batches: most users' last-seen state crosses at least
-      // one batch boundary
-      ordered.grouped((ordered.length + 3) / 4).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("gap_tws")
-        .select($"user_id", $"event_id", $"gap_s").as[(Long, Long, Long)]
-        .collect().sorted.toSeq
-      val batch = Tables.events(spark, sf0001)
-        .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"))
-        .withColumn("gap_s",
-          expr("(us - lag(us, 1) OVER (PARTITION BY user_id " +
-            "ORDER BY us, event_id)) div 1000000"))
-        .where(col("gap_s").isNotNull)
-        .select($"user_id", $"event_id", $"gap_s").as[(Long, Long, Long)]
-        .collect().sorted.toSeq
-      assert(streamed === batch)
-      // one gap per event after each user's first
-      val nUsers = ordered.map(_.user_id).distinct.length
-      assert(batch.length === ordered.length - nUsers)
-      assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: rolling 7-day WAU equals the batch day expansion") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.wauSliding(ms.toDF()), "wau_win", "complete")
-    try {
-      // three micro-batches: most 7-day windows accumulate their user
-      // sets across a state-store boundary
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("wau_win").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val batch = SparkEntry.queries("dau_rolling_7d")(spark, sf0001)
-        .select($"day_num", $"wau_7d").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      assert(batch.length > 10, "fixture must span many days")
-      batch.foreach { case (d, wau) =>
-        assert(streamed.get(d).contains(wau),
-          s"day $d: streamed ${streamed.get(d)} != batch $wau")
-      }
-      // streamed side may additionally carry horizon-edge windows the
-      // batch clips (target days past max_day / days with no direct
-      // activity) — but never fewer
-      assert(streamed.size >= batch.length)
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: ingest-volume anomaly monitor equals the batch query") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.dailyVolumeWindowed(ms.toDF()), "vol_win", "complete")
-    try {
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      // the finishing robust-z pass is the SAME function the batch query
-      // runs, applied to the streamed day-grain counts
-      val streamedScored = ops.Audit.volumeScoreOn(spark.table("vol_win"))
-        .collect().map(_.toSeq).toSeq
-      val batch = SparkEntry.queries("dq_volume_anomaly")(spark, sf0001)
-        .collect().map(_.toSeq).toSeq
-      assert(streamedScored === batch)
-      assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: per-window count-min sketches bit-equal across micro-batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.cmsWindowed(ms.toDF()), "cms_win", "complete")
-    try {
-      // three chronological micro-batches: most windows accumulate their
-      // sketch across a state-store boundary (partial/merge in state)
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("cms_win")
-        .select($"ws".cast("string"), $"sk").as[(String, Seq[Long])]
-        .collect().toMap
-      val batch = Streams.cmsWindowed(Tables.events(spark, sf0001))
-        .select($"ws".cast("string"), $"sk").as[(String, Seq[Long])]
-        .collect().toMap
-      assert(streamed.keySet === batch.keySet)
-      batch.foreach { case (ws, sk) =>
-        assert(streamed(ws) == sk, s"sketch drift in window $ws")
-      }
-      assert(batch.size > 1, "fixture must span multiple windows")
-      // total mass conservation: each sketch row sums to the window's rows
-      val perWindow = Tables.events(spark, sf0001)
-        .groupBy(window($"ts", "1 day")).count()
-        .select($"window.start".cast("string"), $"count").as[(String, Long)]
-        .collect().toMap
-      streamed.foreach { case (ws, sk) =>
-        (0 until 4).foreach { j =>
-          assert(sk.slice(j * 16, (j + 1) * 16).sum == perWindow(ws),
-            s"row $j of window $ws lost mass")
-        }
-      }
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: rate-limiter admits the same event set as the batch row_number twin") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.rateLimitTws(ms.toDS()).toDF(), "rl_stream", "append")
-    try {
-      // three chronological micro-batches: most (user, day) quotas span a
-      // state-store boundary — the counter must survive it
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("rl_stream")
-        .select($"user_id", $"day_us", $"event_id", $"n_in_day")
-        .as[(Long, Long, Long, Long)].collect().toSet
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"user_id", date_trunc("day", $"ts"))
-        .orderBy($"ts", $"event_id")
-      val batch = Tables.events(spark, sf0001)
-        .withColumn("rn", row_number().over(w))
-        .where($"rn" <= 5)
-        .select($"user_id", unix_micros(date_trunc("day", $"ts")),
-          $"event_id", $"rn".cast("long"))
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(streamed === batch,
-        s"admitted sets diverge: extra=${(streamed -- batch).take(3)} " +
-          s"missing=${(batch -- streamed).take(3)}")
-      // the quota genuinely drops something, and admission never exceeds it
-      val total = Tables.events(spark, sf0001).count()
-      assert(streamed.size < total, "quota dropped nothing — limit unexercised")
-      assert(streamed.forall(_._4 <= 5L))
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: per-window KMV bottom-k sketches bit-equal across micro-batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    // k=8 < the fixture's 15 distinct users/day, so most windows exercise
-    // the BOUNDED path (buffer at capacity, cross-batch offer/evict in
-    // state), not just the exact-below-k accumulation
-    val q = runToTable(Streams.kmvWindowed(ms.toDF(), k = 8), "kmv_win", "complete")
-    try {
-      ordered.grouped((ordered.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("kmv_win")
-        .select($"ws".cast("string"), $"sk").as[(String, Seq[Long])]
-        .collect().toMap
-      val batch = Streams.kmvWindowed(Tables.events(spark, sf0001), k = 8)
-        .select($"ws".cast("string"), $"sk").as[(String, Seq[Long])]
-        .collect().toMap
-      assert(streamed.keySet === batch.keySet)
-      batch.foreach { case (ws, sk) =>
-        assert(streamed(ws) == sk, s"sketch drift in window $ws")
-      }
-      assert(batch.size > 1, "fixture must span multiple windows")
-      // independent ground truth: each window's sketch must be exactly
-      // the 8 smallest distinct h48 hashes of that window's users,
-      // ascending (the complete set when a window has < 8 distinct)
-      val truth = Tables.events(spark, sf0001)
-        .groupBy(window($"ts", "1 day"))
-        .agg(collect_set($"user_id").as("us"))
-        .select($"window.start".cast("string"), $"us").as[(String, Seq[Long])]
-        .collect().toMap
-      var sawBounded = false
-      streamed.foreach { case (ws, sk) =>
-        val want = truth(ws).map(u => Tables.h48jvm(u.toString))
-          .distinct.sorted.take(8)
-        assert(sk == want, s"window $ws sketch != bottom-8 of distinct h48")
-        if (truth(ws).size > 8) sawBounded = true
-      }
-      assert(sawBounded, "no window exceeded k — bounded path not exercised")
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: absence alerts equal cep_not_followed_by on the full fixture") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val batchEvents = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect()
-    val ms = MemoryStream[Event]
-    val q = runToTable(Streams.absenceAlerts(ms.toDS()).toDF(), "absence_eq", "append")
-    try {
-      ms.addData(batchEvents.toSeq: _*)
-      q.processAllAvailable()
-      // sentinel far-future views push the watermark past every deadline
-      // ('view' neither alerts nor cancels); two batches so every timer fires
-      ms.addData(ev(-1, "2030-01-01 00:00:00", -1, "view", 0.0))
-      q.processAllAvailable()
-      ms.addData(ev(-2, "2030-06-01 00:00:00", -1, "view", 0.0))
-      q.processAllAvailable()
-      val streamed = spark.table("absence_eq").where($"user_id" >= 0)
-        .select($"user_id", $"click_id").as[(Long, Long)].collect().toSet
-      val batch = ops.Joins.cepNotFollowedBy(spark, sf0001)
-        .select($"user_id", $"click_id").as[(Long, Long)].collect().toSet
-      assert(streamed === batch,
-        s"only-streamed=${streamed -- batch} only-batch=${batch -- streamed}")
-    } finally q.stop()
-  }
-
   test("online near-dup: exact replicas alert in-stream; every alert is a batch LSH candidate") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     // the sf0.001 corpus has NO exact duplicates (its near-dups are weak
     // band-collision pairs) — plant replicas of five fixture docs under
     // fresh ids to give the detector true positives with known answers
@@ -1899,8 +1128,6 @@ class StreamingSpec extends SparkTestBase {
     // values > 1 → rounds {4, 2}, {2, 1}, {1}, {} — the observed multiset
     // is the full iteration trace, independent of file/batch grouping.
     val dir = java.nio.file.Files.createTempDirectory("graft-iterate").toString
-    val s = spark
-    import s.implicits._
     Seq(8L, 5L).toDF("value").write.mode("append").parquet(dir)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("value",
@@ -1921,9 +1148,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I10: update mode re-emits a window's row as new data refines it") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val q = runToTable(Streams.tumblingCounts(ms.toDF()), "tumb_update", "update")
     try {
@@ -1939,8 +1163,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("A2: kafka-style binary JSON payloads round-trip through parseEventJson") {
-    val s = spark
-    import s.implicits._
     val original = Tables.events(spark, sf0001)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
     val wire = original // serialize exactly as a Kafka producer would
@@ -1954,9 +1176,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("C7: stream-static broadcast join enriches every micro-batch") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "segment")
     val ms = MemoryStream[Event]
     val q = runToTable(
@@ -1975,9 +1194,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("C7: updating broadcast dim — batch N joins the dim as refreshed before batch N") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val dimDir = java.nio.file.Files.createTempDirectory("graft-dim").toString
     Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "segment")
       .write.mode("overwrite").parquet(dimDir)
@@ -2002,9 +1218,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I8: foreachBatch side-output captures late rows instead of dropping them") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val wm = new java.util.concurrent.atomic.AtomicReference(new java.sql.Timestamp(0L))
     val lateIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
@@ -2035,9 +1248,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I8b: lateRowsTap tracks the watermark itself — no caller-side progress polling") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ms = MemoryStream[Event]
     val lateIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
     val onTimeIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
@@ -2062,9 +1272,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("I9: checkpointed query recovers state across restart") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-sink").toString
     val ms = MemoryStream[Event]
@@ -2089,176 +1296,7 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("batch≡streaming: HBOS scoring against frozen histograms reproduces the batch top-20") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    // frozen references trained by the SAME projection the batch scorer
-    // uses (Audit.hbosFeatures/hbosHist) — the binning cannot drift
-    val feat = ops.Audit.hbosFeatures(spark, sf0001)
-    val scored = graft.streaming.Streams2.hbosScored(_: DataFrame,
-      ops.Audit.hbosHist(feat, "hod"), ops.Audit.hbosHist(feat, "dow"),
-      ops.Audit.hbosHist(feat, "vband"), feat.count())
-    val ordered = Tables.events(spark, sf0001)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    val ms = MemoryStream[Event]
-    val q = runToTable(scored(ms.toDF()), "hbos_stream", "append")
-    try {
-      ordered.grouped((ordered.length + 3) / 4).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("hbos_stream").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3),
-          r.getDouble(4)))
-      // the fixture refs cover every fixture bin: nothing drops at the join
-      assert(streamed.length === ordered.length)
-      val top20 = streamed.sortBy(t => (-t._5, t._1)).take(20).toSeq
-      val batch = SparkEntry.queries("anomaly_hbos")(spark, sf0001).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3),
-          r.getDouble(4))).toSeq
-      assert(top20 === batch)
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: STL day-close decomposition + robust-z monitor align with the batch frame") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ordered = Tables.orders(spark, sf0001)
-      .select($"o_orderkey", $"o_orderdate", $"o_custkey", $"o_totalprice")
-      .collect()
-      .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
-        "order", r.getDouble(3)))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    // frozen references: the batch decomposition's weekly profile and the
-    // batch monitor's robust location/scale (the L273 reference pattern)
-    val stlDf = SparkEntry.queries("ts_stl_daily")(spark, sf0001)
-    val stlBatch = stlDf.collect()
-    val seasonal = stlBatch.map(r => (r.getLong(1), r.getDouble(4))).toMap
-    val med = stlDf.agg(round(expr("percentile(residual, 0.5)"), 6))
-      .collect()(0).getDouble(0)
-    val mad = stlDf.withColumn("adev", abs(col("residual") - lit(med)))
-      .agg(round(expr("percentile(adev, 0.5)"), 6)).collect()(0).getDouble(0)
-    val ms = MemoryStream[Event]
-    val q = runToTable(graft.streaming.Streams2
-      .stlDailyTws(ms.toDS(), seasonal, med, mad).toDF(), "stl_tws", "append")
-    try {
-      ordered.grouped((ordered.length + 3) / 4).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamedRows = spark.table("stl_tws").collect()
-      val streamed = streamedRows
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
-          r.getDouble(4), r.getDouble(5))).sortBy(_._1).toSeq
-      val batch = stlBatch
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
-          r.getDouble(4), r.getDouble(5))).sortBy(_._1).toSeq
-      // stream emits every day whose CENTERED window closed — the batch
-      // frame minus its final row (the Holt day-close alignment)
-      assert(streamed === batch.dropRight(1),
-        s"\nstream ${streamed.take(3)}…\nbatch ${batch.take(3)}…")
-      assert(streamed.length >= 20, "fixture must close many day windows")
-      // the monitor columns agree with anomaly_stl_residual on every
-      // overlapping day (that key emits only its top-20 by |z|)
-      val zStream = streamedRows
-        .map(r => r.getLong(0) -> (r.getDouble(6), r.getBoolean(7))).toMap
-      val anomBatch = SparkEntry.queries("anomaly_stl_residual")(spark, sf0001)
-        .collect().map(r => r.getLong(0) -> (r.getDouble(5), r.getBoolean(6)))
-      val overlap = anomBatch.filter(p => zStream.contains(p._1))
-      assert(overlap.nonEmpty)
-      overlap.foreach { case (d, zf) => assert(zStream(d) === zf, s"day $d") }
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: online image aHash alerts equal the batch band-candidate verdicts") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ids = Tables.documents(spark, sf0001)
-      .select($"doc_id").as[Long].collect().sorted
-    val ms = MemoryStream[Long]
-    val q = runToTable(
-      graft.streaming.Streams2.imageAHashTws(ms.toDS()).toDF(),
-      "ahash_tws", "append")
-    try {
-      ids.grouped((ids.length + 3) / 4).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("ahash_tws")
-        .select($"d1", $"d2", $"hamming").distinct().collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      // JVM replica of the batch semantics: candidates share >= 1 band,
-      // verified by exact Hamming <= 8 (same shared MmAHash code path)
-      val hs = ids.map(id =>
-        ops.MmAHash.decodeHash(id, ops.MmAHash.synthesize(id)))
-      val expected = (for {
-        i <- hs.indices.iterator
-        j <- (i + 1) until hs.length
-        a = hs(i); b = hs(j)
-        if a.b0 == b.b0 || a.b1 == b.b1 || a.b2 == b.b2 || a.b3 == b.b3
-        ham = Integer.bitCount(a.b0 ^ b.b0) + Integer.bitCount(a.b1 ^ b.b1) +
-          Integer.bitCount(a.b2 ^ b.b2) + Integer.bitCount(a.b3 ^ b.b3)
-        if ham <= 8
-      } yield (math.min(a.doc_id, b.doc_id), math.max(a.doc_id, b.doc_id),
-        ham)).toSet
-      assert(expected.nonEmpty, "fixture must hold planted image families")
-      assert(streamed === expected,
-        s"only-streamed=${(streamed -- expected).take(3)} " +
-          s"only-expected=${(expected -- streamed).take(3)}")
-      // and the per-Hamming histogram equals the registered batch key
-      val hist = streamed.groupBy(_._3).map { case (h, ps) =>
-        (h, ps.size.toLong) }
-      val batch = SparkEntry.queries("mm_image_ahash_dedup")(spark, sf0001)
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-      assert(hist === batch)
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: golden-record ledger's final upsert per cluster equals the batch survivorship") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    // cluster assignment frozen from the batch matcher — the ledger
-    // maintains survivorship live, re-clustering stays offline
-    val pairs = ops.Er.snmMultipass(spark, sf0001).select($"d1", $"d2")
-    val labels = ops.Llm3.componentLabelsDf(spark, pairs)
-    val members = Tables.documents(spark, sf0001)
-      .select($"doc_id", $"n_chars", $"source")
-      .join(labels.select($"node".as("doc_id"), $"label".as("cluster")),
-        Seq("doc_id"))
-      .select($"doc_id", $"n_chars".cast("long").as("n_chars"), $"source",
-        $"cluster")
-      .as[graft.streaming.Streams2.DocMember].collect().sortBy(_.doc_id)
-    val ms = MemoryStream[graft.streaming.Streams2.DocMember]
-    val q = runToTable(graft.streaming.Streams2.goldenRecordTws(ms.toDS()).toDF(),
-      "golden_tws", "append")
-    try {
-      members.grouped((members.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      def row8(r: org.apache.spark.sql.Row) =
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getString(4), r.getLong(5), r.getLong(6), r.getLong(7))
-      // final ledger state per cluster = the row with the max member
-      // count; the batch key publishes only multi-member entities
-      val finals = spark.table("golden_tws").collect().map(row8)
-        .groupBy(_._1).map(_._2.maxBy(_._2)).toSeq
-        .filter(_._2 >= 2).sortBy(_._1)
-      val batch = SparkEntry.queries("er_golden_record")(spark, sf0001)
-        .collect().map(row8).sortBy(_._1).toSeq
-      assert(batch.nonEmpty, "fixture must hold multi-member entities")
-      assert(finals === batch)
-    } finally q.stop()
-  }
-
   test("hbosScored: a never-seen bin scores max-surprise with novel_bin set, not dropped") {
-    val s = spark
-    import s.implicits._
     // event 2's hour (23) is absent from the frozen hod histogram — the
     // r14 inner join silently dropped it; it must now surface at the
     // maximum surprise the reference can express, -ln(1/N)
@@ -2278,9 +1316,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("StlProcessor frontier: late data below the frontier is dropped; above it still folds in") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     def dayNum(d: String): Long =
       math.floorDiv(usOf(s"$d 00:00:00"), 86400000000L)
     val ms = MemoryStream[Event]
@@ -2319,9 +1354,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("imageAHashTws retention: a replica past the maxPerBucket horizon no longer alerts") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
     // ids 1, 151, 301 synthesize IDENTICAL images (same family mod 50,
     // same perturbation mod 3) — every pair is a Hamming-0 duplicate
     val ms = MemoryStream[Long]
@@ -2342,25 +1374,599 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("batch≡streaming: online exact-substring dedup flags merge to the batch keep-first span rows") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val docs = Tables.documents(spark, sf0001)
-      .select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1)
-    val ms = MemoryStream[(Long, String)]
-    val q = runToTable(
-      graft.streaming.Streams3.substrDedupTws(ms.toDS()).toDF(),
-      "substr_tws", "append")
-    try {
-      // docs arrive in doc_id order across three micro-batches — the
-      // prefix semantics' time axis
-      docs.grouped((docs.length + 2) / 3).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
+  // ------------------------------------------------------------ twin table
+  //
+  // Prefix consistency, the Structured Streaming contract: an operator's
+  // output must not depend on where the micro-batch boundaries fall. Each
+  // row pairs a streaming operator with its batch twin, and `runTwin`
+  // drives the row at three batchings, each of which must equal the twin.
+
+  /** One row of the twin table. `input` is in (µs ts, event_id) order, and
+    * a cut may fall between two adjacent inputs only where `cuttable`
+    * holds: for events, between distinct timestamps, because with a 0 s
+    * watermark a row at the previous batch's max timestamp is late. Each
+    * `flush` sentinel follows the input as a batch of its own. `twin` is
+    * the batch side, computed once per row; `check` projects the streamed
+    * table and compares it with the twin. `operator` is the
+    * `graft.streaming` def under test. */
+  private final class Twin[A, B](val name: String, val operator: String,
+      val input: () => Seq[A], val run: Dataset[A] => DataFrame, val mode: String,
+      val twin: () => B, val check: (DataFrame, B) => Unit, val flush: Seq[A],
+      val cuttable: (A, A) => Boolean)(implicit val enc: Encoder[A])
+
+  /** A row over events, by default the sf0.001 fixture. */
+  private def eventTwin[B](name: String, operator: String,
+      run: Dataset[Event] => DataFrame, mode: String, twin: () => B,
+      flush: Seq[Event] = Nil, input: () => Seq[Event] = () => fixtureEvents)(
+      check: (DataFrame, B) => Unit): Twin[Event, B] =
+    new Twin(name, operator, input, run, mode, twin, check, flush,
+      (a: Event, b: Event) => usOf(a.ts) != usOf(b.ts))(Encoders.product[Event])
+
+  /** An event row whose streamed table and batch twin go through the same
+    * `project`; `check` gets (streamed, batch). */
+  private def projTwin[P](name: String, operator: String,
+      run: Dataset[Event] => DataFrame, mode: String, batch: () => DataFrame,
+      flush: Seq[Event] = Nil)(project: DataFrame => P)(
+      check: (P, P) => Unit): Twin[Event, P] =
+    eventTwin(name, operator, run, mode, () => project(batch()), flush)(
+      (out, b) => check(project(out), b))
+
+  /** A row whose input carries no watermark, so any cut is allowed. */
+  private def anyCutTwin[A, B](enc: Encoder[A])(name: String, operator: String,
+      input: () => Seq[A], run: Dataset[A] => DataFrame, mode: String, twin: () => B)(
+      check: (DataFrame, B) => Unit): Twin[A, B] =
+    new Twin(name, operator, input, run, mode, twin, check, Nil, (_: A, _: A) => true)(enc)
+
+  /** The sf0.001 events in (µs ts, event_id) order. */
+  private lazy val fixtureEvents: Seq[Event] =
+    Tables.events(spark, sf0001)
+      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Event]
+      .collect().toSeq.sortBy(e => (usOf(e.ts), e.event_id))
+
+  /** Far-future sentinels of user -1 that push the watermark past every
+    * open session and deadline; two batches, because the watermark lags
+    * one batch. */
+  private def farFuture(eventType: String) = Seq(
+    ev(-1, "2030-01-01 00:00:00", -1, eventType, 0.0),
+    ev(-2, "2030-06-01 00:00:00", -1, eventType, 0.0))
+
+  /** The timer-session operators against `Warehouse.sessionizeEvents`,
+    * compared as multisets of (user, n_events, 6-dp sum). */
+  private def sessionTwin(name: String, operator: String,
+      run: Dataset[Event] => DataFrame) =
+    projTwin(name, operator, run, "append",
+      () => ops.Warehouse.sessionizeEvents(spark, sf0001), farFuture("click"))(
+      _.where($"user_id" >= 0) // drop the sentinel user
+        .select($"user_id", $"n_events", round($"sum_value", 6).as("sv"))
+        .as[(Long, Long, Double)].collect()
+        .groupBy(identity).view.mapValues(_.length).toMap) { (streamed, batch) =>
+      assert(streamed === batch)
+    }
+
+  /** The monitored (drift-planted) hourly series of the batch frame, with
+    * its μ in column 6; λ and δ are multiples of μ. */
+  private lazy val phFrame = ops.Stats4.pageHinkleyFrameMicro(spark, sf0001)
+    .select($"rn", $"bucket_us", $"x_mon", $"mean_run", $"m", $"ph", $"mu_micro")
+    .collect().sortBy(_.getLong(0))
+  private lazy val phLambda = phFrame.head.getLong(6) * 12
+
+  /** The PSI reference: the fixture's own first day, smoothed the same way
+    * the current side is — day 1 should then NOT drift. */
+  private lazy val psiRef: Seq[Double] = {
+    val ordered = fixtureEvents
+    val day1 = ordered.takeWhile(_.ts.getTime < ordered.head.ts.getTime -
+      ordered.head.ts.getTime % 86400000L + 86400000L)
+    val counts = Array.tabulate(10) { k =>
+      day1.count(e => math.min(math.floor(e.value / 20.0).toLong, 9L) == k).toLong
+    }
+    counts.map(c => (c + 1.0) / (day1.length + 10.0)).toSeq
+  }
+  private val psiCols = Seq("ws", "nb_0", "nb_1", "nb_2", "nb_3", "nb_4", "nb_5",
+    "nb_6", "nb_7", "nb_8", "nb_9", "psi", "drift")
+
+  /** HBOS scoring against references trained by the SAME projection the
+    * batch scorer uses (Audit.hbosFeatures/hbosHist) — the binning cannot
+    * drift. */
+  private lazy val hbosScore: DataFrame => DataFrame = {
+    val feat = ops.Audit.hbosFeatures(spark, sf0001)
+    graft.streaming.Streams2.hbosScored(_: DataFrame,
+      ops.Audit.hbosHist(feat, "hod"), ops.Audit.hbosHist(feat, "dow"),
+      ops.Audit.hbosHist(feat, "vband"), feat.count())
+  }
+
+  /** `ts_stl_daily` and the references the STL monitor freezes from it: the
+    * weekly profile and the robust location/scale of the residuals (the
+    * L273 reference pattern). */
+  private lazy val stlFrame = {
+    val stlDf = SparkEntry.queries("ts_stl_daily")(spark, sf0001)
+    val med = stlDf.agg(round(expr("percentile(residual, 0.5)"), 6))
+      .collect()(0).getDouble(0)
+    val mad = stlDf.withColumn("adev", abs(col("residual") - lit(med)))
+      .agg(round(expr("percentile(adev, 0.5)"), 6)).collect()(0).getDouble(0)
+    (stlDf.collect(), med, mad)
+  }
+
+  /** Documents with their cluster frozen from the batch matcher — the
+    * golden-record ledger maintains survivorship live, re-clustering stays
+    * offline. */
+  private lazy val clusterMembers = {
+    val pairs = ops.Er.snmMultipass(spark, sf0001).select($"d1", $"d2")
+    val labels = ops.Llm3.componentLabelsDf(spark, pairs)
+    Tables.documents(spark, sf0001)
+      .select($"doc_id", $"n_chars", $"source")
+      .join(labels.select($"node".as("doc_id"), $"label".as("cluster")),
+        Seq("doc_id"))
+      .select($"doc_id", $"n_chars".cast("long").as("n_chars"), $"source",
+        $"cluster")
+      .as[graft.streaming.Streams2.DocMember].collect().sortBy(_.doc_id).toSeq
+  }
+
+  private lazy val docIds: Seq[Long] =
+    Tables.documents(spark, sf0001).select($"doc_id").as[Long].collect().sorted.toSeq
+
+  private val Hour = 3600000000L
+
+  private def row8(r: org.apache.spark.sql.Row) =
+    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getString(4), r.getLong(5), r.getLong(6), r.getLong(7))
+
+  /** The rows; each folded hand-written test kept its name and assertions. */
+  private val twins: Seq[Twin[_, _]] = Seq(
+    eventTwin("I10+batch≡streaming: complete-mode aggregation equals the batch twin on the same data",
+      "window count, inline", _.toDF()
+        .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
+        .agg(count(lit(1)).as("n"))
+        .select(unix_micros($"w.start").as("ws_us"), $"event_type", $"n"),
+      "complete", () => ops.StreamOps.tumblingCounts(spark, sf0001).collect()) { (out, batch) =>
+      val stream = out.orderBy("ws_us", "event_type").collect()
+      assert(stream.toSeq === batch.toSeq)
+    },
+    sessionTwin("batch≡streaming: timer sessions equal the batch sessionizer on the full fixture",
+      "timerSessions", Streams.timerSessions(_).toDF()),
+    sessionTwin("batch≡streaming: transformWithState timer sessions equal the batch sessionizer",
+      "timerSessionsTws", Streams.timerSessionsTws(_).toDF()),
+    projTwin("I4d+L97: dynamic-gap streaming sessions equal the batch twin on the whole fixture",
+      "dynamicGapSessionsTws", Streams.dynamicGapSessionsTws(_).toDF(), "append",
+      () => graft.ops.Warehouse.sessionizeDynamicGap(spark, sf0001), farFuture("click"))(
+      _.where($"user_id" >= 0)
+        .select($"user_id", $"n_events", $"start_us", $"end_us", $"sum_value")
+        .as[(Long, Long, Long, Long, Double)].collect()
+        .map(t => (t._1, t._2, t._3, t._4) -> t._5).toMap) { (streamed, batch) =>
+      assert(streamed.keySet === batch.keySet,
+        s"session boundaries diverge: extra=${streamed.keySet -- batch.keySet} missing=${batch.keySet -- streamed.keySet}")
+      batch.foreach { case (k, v) =>
+        assert(math.abs(streamed(k) - v) < 1e-6, s"sum mismatch at $k: ${streamed(k)} vs $v")
       }
-      val flags = spark.table("substr_tws")
-        .select($"doc_id", $"nw", $"pos").collect()
+      assert(batch.nonEmpty)
+    },
+    projTwin("I5b+L97: streamed count-trigger windows equal the batch twin on the whole fixture",
+      "countTriggerWindowTws", Streams.countTriggerWindowTws(_).toDF(), "append",
+      () => graft.ops.StreamOps.countTriggerEvict(spark, sf0001))(
+      _.select($"user_id", $"fire_seq", $"n_in_window", $"win_sum")
+        .as[(Long, Long, Long, Double)].collect()
+        .map(t => (t._1, t._2, t._3) -> t._4).toMap) { (streamed, batch) =>
+      assert(streamed.keySet === batch.keySet,
+        s"fire points diverge: extra=${streamed.keySet -- batch.keySet} missing=${batch.keySet -- streamed.keySet}")
+      batch.foreach { case (k, v) =>
+        assert(math.abs(streamed(k) - v) < 1e-6, s"pane sum mismatch at $k: ${streamed(k)} vs $v")
+      }
+      assert(batch.nonEmpty)
+    },
+    // update mode: the row with the max n per type is the final state
+    projTwin("I6f+L216: streaming CUSUM equals the batch control chart on the whole fixture",
+      "cusumTws", Streams.cusumTws(_).toDF(), "update",
+      () => graft.ops.Warehouse4.cusumAnomaly(spark, sf0001))(
+      _.select($"event_type", $"n", $"n_alarms", $"max_s", $"first_alarm_us")
+        .as[(String, Long, Long, Double, Long)].collect()
+        .groupBy(_._1).map { case (_, xs) => xs.maxBy(_._2) }
+        .toSeq.sortBy(_._1)) { (streamed, batch) =>
+      assert(streamed == batch,
+        s"streaming chart diverged:\n  stream $streamed\n  batch  $batch")
+      assert(batch.map(_._3).sum > 0, "no alarms anywhere — dead chart")
+    },
+    // relaxedChainMatches is relaxedBlockMatches with singleton blocks
+    eventTwin("batch≡streaming: relaxed chain matches equal cep_followed_by_relaxed, state crossing batches",
+      "relaxedBlockMatches", Streams.relaxedChainMatches(_, Seq("view", "click", "purchase"),
+        withinUs = Some(3L * 24 * 3600 * 1000000L)).toDF(), "append",
+      () => ops.Joins.cepFollowedByRelaxed(spark, sf0001)
+        .select($"user_id", $"view_id", $"click_id", $"purchase_id", $"span_us")
+        .as[(Long, Long, Long, Long, Long)]
+        .collect().map { case (u, v, c, p, sp) => (u, s"$v,$c,$p", sp) }.toSet) { (out, batch) =>
+      val streamed = out.select($"user_id", $"ids", $"span_us").as[(Long, Seq[Long], Long)]
+        .collect().map { case (u, ids, sp) => (u, ids.mkString(","), sp) }.toSet
+      assert(streamed === batch,
+        s"only-streamed=${(streamed -- batch).take(5)} only-batch=${(batch -- streamed).take(5)}")
+      assert(streamed.nonEmpty)
+    },
+    projTwin("batch≡streaming: temporal join equals cdc_temporal_join on the full fixture",
+      "temporalJoinStream", Streams.temporalJoinStream(_).toDF(), "append",
+      () => ops.Warehouse.cdcTemporalJoin(spark, sf0001))(
+      _.select($"purchase_id", $"user_id", $"version", $"type_at_purchase", $"valid_from_us")
+        .as[(Long, Long, Long, String, Long)].collect().toSet) { (streamed, batch) =>
+      assert(streamed === batch,
+        s"only-streamed=${(streamed -- batch).take(5)} only-batch=${(batch -- streamed).take(5)}")
+      assert(streamed.nonEmpty)
+    },
+    // open versions stay in state (append mode cannot retract): the twin is
+    // the batch query's closed versions
+    projTwin("batch≡streaming: SCD2 closed versions equal cdc_scd2_intervals",
+      "scd2Intervals", Streams.scd2Intervals(_).toDF(), "append",
+      () => ops.Warehouse.cdcScd2Intervals(spark, sf0001).where($"valid_to_us".isNotNull))(
+      _.select($"user_id", $"version", $"event_type", $"valid_from_us", $"valid_to_us")
+        .as[(Long, Long, String, Long, Long)].collect().toSet) { (streamed, batch) =>
+      assert(streamed === batch,
+        s"only-streamed=${(streamed -- batch).take(5)} only-batch=${(batch -- streamed).take(5)}")
+      assert(batch.nonEmpty)
+    },
+    // full windows only; the sums compare at the 6-dp contract, because the
+    // batch twin sums DECIMAL(18,6) terms
+    projTwin("batch≡streaming: count windows of 10 equal the full buckets of stream_count_window_sum",
+      "countWindowSum", Streams.countWindowSum(_, 10).toDF(), "append",
+      () => ops.StreamOps.countWindowSum(spark, sf0001).where($"n" === 10)
+        .withColumnRenamed("bucket", "window_idx"))(
+      _.select($"user_id", $"window_idx", $"sum_value").as[(Long, Long, Double)]
+        .collect().map(t => (t._1, t._2) -> t._3).toMap) { (streamed, batch) =>
+      assert(streamed.keySet === batch.keySet)
+      batch.foreach { case (k, v) => assert(math.abs(streamed(k) - v) < 1e-6, s"sum at $k") }
+      assert(batch.nonEmpty)
+    },
+    // ids 2 and 1 share a millisecond; µs order puts id 2 first, so the two
+    // land in different windows of 2
+    eventTwin("countWindowSum orders two events of one millisecond by µs, not by event_id",
+      "countWindowSum", Streams.countWindowSum(_, 2).toDF(), "append",
+      () => Set((0L, 3.0), (1L, 12.0)),
+      input = () => Seq(ev(5, "2024-01-01 09:59:59", 1, "click", 1.0),
+        ev(2, "2024-01-01 10:00:00.0001", 1, "click", 2.0),
+        ev(1, "2024-01-01 10:00:00.0009", 1, "click", 4.0),
+        ev(6, "2024-01-01 10:00:01", 1, "click", 8.0))) { (out, want) =>
+      assert(out.select($"window_idx", $"sum_value").as[(Long, Double)].collect().toSet === want)
+    },
+    // update mode: the row with the max n per user is the final state
+    projTwin("batch≡streaming: per-user first/last/count equal stream_user_first_last",
+      "userFirstLast", Streams.userFirstLast(_).toDF(), "update",
+      () => SparkEntry.queries("stream_user_first_last")(spark, sf0001)
+        .withColumnRenamed("n_events", "n"))(
+      _.select($"user_id", $"first_us", $"last_us", $"n").as[(Long, Long, Long, Long)]
+        .collect().groupBy(_._1).map { case (_, xs) => xs.maxBy(_._4) }.toSet) {
+      (streamed, batch) => assert(streamed === batch)
+    },
+    // the twins coincide only where every view run fits inside the 2-day
+    // span (see Streams.kleeneViewsThenPurchase); the fixture's longest is
+    // checked below
+    projTwin("batch≡streaming: Kleene view runs equal cep_kleene_timeout",
+      "kleeneViewsThenPurchase", Streams.kleeneViewsThenPurchase(_).toDF(), "append",
+      () => ops.Joins.cepKleeneTimeout(spark, sf0001), farFuture("click"))(
+      _.where($"user_id" >= 0)
+        .select($"user_id", $"first_view_id", $"n_views", $"matched", $"purchase_id", $"span_us")
+        .as[(Long, Long, Long, Boolean, Option[Long], Option[Long])].collect().toSet) {
+      (streamed, batch) =>
+      val runs = fixtureEvents.groupBy(_.user_id).values.flatMap(_.foldLeft(List.empty[List[Long]]) {
+        case (run :: done, e) if e.event_type == "view" && run.nonEmpty => (usOf(e.ts) :: run) :: done
+        case (acc, e) => (if (e.event_type == "view") List(usOf(e.ts)) else Nil) :: acc
+      }).filter(_.nonEmpty)
+      assert(runs.map(r => r.head - r.last).max <= 2L * 24 * 3600 * 1000000L)
+      assert(streamed === batch,
+        s"only-streamed=${(streamed -- batch).take(5)} only-batch=${(batch -- streamed).take(5)}")
+      assert(batch.exists(_._4) && batch.exists(!_._4))
+    },
+    projTwin("batch≡streaming: OHLC candles bit-equal to the batch rollup across micro-batches",
+      "ohlcWindowed", ds => Streams.ohlcWindowed(ds.toDF()), "complete",
+      () => SparkEntry.queries("ts_ohlc_hourly")(spark, sf0001))(
+      _.select($"bucket".cast("string"), $"event_type", $"open", $"high",
+        $"low", $"close", $"n_events", $"v_sum", $"range")
+        .as[(String, String, Double, Double, Double, Double, Long, Double, Double)]
+        .collect().toSet) { (streamed, batch) =>
+      assert(streamed === batch,
+        s"only-streamed=${(streamed -- batch).take(3)} only-batch=${(batch -- streamed).take(3)}")
+      assert(batch.size > 10, "fixture must span many candles")
+    },
+    eventTwin("batch≡streaming: Holt level/trend maintenance bit-equal to the recursive-CTE batch",
+      "holtTws", Streams.holtTws(_).toDF(), "append",
+      () => SparkEntry.queries("ts_holt_daily")(spark, sf0001)
+        .collect().map(r => (r.getLong(1), r.getDouble(2), r.getDouble(3),
+          r.getDouble(4), if (r.isNullAt(5)) None else Some(r.getDouble(5))))
+        .sortBy(_._1).toSeq) { (out, batch) =>
+      val streamed = out
+        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
+          r.getDouble(3), if (r.isNullAt(4)) None else Some(r.getDouble(4))))
+        .sortBy(_._1).toSeq
+      // stream emits every day that CLOSED (a later day was seen) — all
+      // but the final day of the batch horizon
+      assert(streamed == batch.dropRight(1),
+        s"\nstream ${streamed.take(3)}…\nbatch ${batch.take(3)}…")
+      assert(streamed.length >= 25, "fixture must close many days")
+    },
+    // every hour arrives as TWO partial contributions, and a cut may fall
+    // between them, so hours straddle micro-batch boundaries
+    anyCutTwin(Encoders.product[streaming.Streams3.HourPoint])(
+      "batch≡streaming: Page–Hinkley statistic bit-equal to the batch frame, hours split across batches",
+      "pageHinkleyTws", () => phFrame.toSeq.flatMap { r =>
+        val (b, x) = (r.getLong(1), r.getLong(2))
+        Seq(streaming.Streams3.HourPoint(b, x / 2),
+          streaming.Streams3.HourPoint(b, x - x / 2))
+      }, streaming.Streams3.pageHinkleyTws(_, phLambda, phFrame.head.getLong(6) / 4).toDF(),
+      "append", () => phFrame.dropRight(1).map(r => (r.getLong(0), r.getLong(1),
+        r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
+        r.getLong(5) > phLambda)).toSeq) { (out, batch) =>
+      val streamed = out
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getLong(5), r.getBoolean(6)))
+        .sortBy(_._1).toSeq
+      assert(streamed == batch,
+        s"\nstream ${streamed.take(3)}…\nbatch ${batch.take(3)}…")
+      assert(streamed.count(_._7) > 0, "the planted drift must alarm")
+      assert(streamed.exists(!_._7), "pre-drift hours must stay silent")
+    },
+    eventTwin("batch≡streaming: U-shaped attribution credits bit-equal to the batch query",
+      "attributionTws", Streams.attributionTws(_).toDF(), "append",
+      () => SparkEntry.queries("attribution_position")(spark, sf0001)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(_._1).toSeq) { (out, batch) =>
+      val streamed = out
+        .groupBy($"touch")
+        .agg(count(lit(1)).as("n_credited_touches"),
+          round(Tables.dsum($"credited"), 6).as("credited_revenue"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(_._1).toSeq
+      assert(streamed == batch, s"\nstream $streamed\nbatch $batch")
+      assert(batch.map(_._2).sum > 100, "fixture must carry many credits")
+      // per-journey credit conservation on the streamed side
+      val perJourney = out
+        .groupBy($"user_id", $"purchase_event_id")
+        .agg(round(Tables.dsum($"credit"), 6).as("csum"), count(lit(1)).as("k"))
+        .collect()
+      perJourney.foreach { r =>
+        assert(math.abs(r.getDouble(2) - 1.0) < r.getLong(3) * 1e-6,
+          s"credits must conserve: $r")
+      }
+    },
+    eventTwin("batch≡streaming: windowed PSI drift monitor bit-equal to the batch form",
+      "psiWindowed", ds => Streams.psiWindowed(ds.toDF(), psiRef), "complete",
+      () => Streams.psiWindowed(Tables.events(spark, sf0001), psiRef)
+        .select((col("ws").cast("string") +: psiCols.drop(1).map(col)): _*)
+        .collect().map(_.toSeq).toSet) { (out, batch) =>
+      val streamed = out
+        .select((col("ws").cast("string") +: psiCols.drop(1).map(col)): _*)
+        .collect().map(_.toSeq).toSet
+      assert(streamed === batch)
+      assert(batch.size > 10, "fixture must span many day windows")
+      // the reference day itself must sit at (near-)zero PSI, undrifted
+      val firstDay = out.orderBy("ws").collect().head
+      assert(!firstDay.getBoolean(12), "reference day must not drift")
+      assert(firstDay.getDouble(11) < 0.01)
+    },
+    eventTwin("batch≡streaming: per-user inter-arrival gaps equal the batch lag window",
+      "interArrivalTws", Streams.interArrivalTws(_).toDF(), "append",
+      () => Tables.events(spark, sf0001)
+        .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"))
+        .withColumn("gap_s",
+          expr("(us - lag(us, 1) OVER (PARTITION BY user_id " +
+            "ORDER BY us, event_id)) div 1000000"))
+        .where(col("gap_s").isNotNull)
+        .select($"user_id", $"event_id", $"gap_s").as[(Long, Long, Long)]
+        .collect().sorted.toSeq) { (out, batch) =>
+      val streamed = out
+        .select($"user_id", $"event_id", $"gap_s").as[(Long, Long, Long)]
+        .collect().sorted.toSeq
+      assert(streamed === batch)
+      // one gap per event after each user's first
+      val nUsers = fixtureEvents.map(_.user_id).distinct.length
+      assert(batch.length === fixtureEvents.length - nUsers)
+      assert(batch.nonEmpty)
+    },
+    eventTwin("batch≡streaming: rolling 7-day WAU equals the batch day expansion",
+      "wauSliding", ds => Streams.wauSliding(ds.toDF()), "complete",
+      () => SparkEntry.queries("dau_rolling_7d")(spark, sf0001)
+        .select($"day_num", $"wau_7d").collect()
+        .map(r => (r.getLong(0), r.getLong(1)))) { (out, batch) =>
+      val streamed = out.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(batch.length > 10, "fixture must span many days")
+      batch.foreach { case (d, wau) =>
+        assert(streamed.get(d).contains(wau),
+          s"day $d: streamed ${streamed.get(d)} != batch $wau")
+      }
+      // streamed side may additionally carry horizon-edge windows the
+      // batch clips (target days past max_day / days with no direct
+      // activity) — but never fewer
+      assert(streamed.size >= batch.length)
+    },
+    // the finishing robust-z pass is the SAME function the batch query
+    // runs, applied to the streamed day-grain counts
+    eventTwin("batch≡streaming: ingest-volume anomaly monitor equals the batch query",
+      "dailyVolumeWindowed", ds => Streams.dailyVolumeWindowed(ds.toDF()), "complete",
+      () => SparkEntry.queries("dq_volume_anomaly")(spark, sf0001)
+        .collect().map(_.toSeq).toSeq) { (out, batch) =>
+      val streamedScored = ops.Audit.volumeScoreOn(out)
+        .collect().map(_.toSeq).toSeq
+      assert(streamedScored === batch)
+      assert(batch.nonEmpty)
+    },
+    eventTwin("batch≡streaming: per-window count-min sketches bit-equal across micro-batches",
+      "cmsWindowed", ds => Streams.cmsWindowed(ds.toDF()), "complete",
+      () => sketches(Streams.cmsWindowed(Tables.events(spark, sf0001)))) { (out, batch) =>
+      val streamed = sketches(out)
+      assert(streamed.keySet === batch.keySet)
+      batch.foreach { case (ws, sk) =>
+        assert(streamed(ws) == sk, s"sketch drift in window $ws")
+      }
+      assert(batch.size > 1, "fixture must span multiple windows")
+      // total mass conservation: each sketch row sums to the window's rows
+      val perWindow = Tables.events(spark, sf0001)
+        .groupBy(window($"ts", "1 day")).count()
+        .select($"window.start".cast("string"), $"count").as[(String, Long)]
+        .collect().toMap
+      streamed.foreach { case (ws, sk) =>
+        (0 until 4).foreach { j =>
+          assert(sk.slice(j * 16, (j + 1) * 16).sum == perWindow(ws),
+            s"row $j of window $ws lost mass")
+        }
+      }
+    },
+    eventTwin("batch≡streaming: rate-limiter admits the same event set as the batch row_number twin",
+      "rateLimitTws", Streams.rateLimitTws(_).toDF(), "append", () => {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy($"user_id", date_trunc("day", $"ts"))
+          .orderBy($"ts", $"event_id")
+        Tables.events(spark, sf0001)
+          .withColumn("rn", row_number().over(w))
+          .where($"rn" <= 5)
+          .select($"user_id", unix_micros(date_trunc("day", $"ts")),
+            $"event_id", $"rn".cast("long"))
+          .as[(Long, Long, Long, Long)].collect().toSet
+      }) { (out, batch) =>
+      val streamed = out
+        .select($"user_id", $"day_us", $"event_id", $"n_in_day")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      assert(streamed === batch,
+        s"admitted sets diverge: extra=${(streamed -- batch).take(3)} " +
+          s"missing=${(batch -- streamed).take(3)}")
+      // the quota genuinely drops something, and admission never exceeds it
+      val total = Tables.events(spark, sf0001).count()
+      assert(streamed.size < total, "quota dropped nothing — limit unexercised")
+      assert(streamed.forall(_._4 <= 5L))
+    },
+    // k=8 < the fixture's 15 distinct users/day, so most windows exercise
+    // the BOUNDED path (buffer at capacity, cross-batch offer/evict in
+    // state), not just the exact-below-k accumulation
+    eventTwin("batch≡streaming: per-window KMV bottom-k sketches bit-equal across micro-batches",
+      "kmvWindowed", ds => Streams.kmvWindowed(ds.toDF(), k = 8), "complete",
+      () => sketches(Streams.kmvWindowed(Tables.events(spark, sf0001), k = 8))) { (out, batch) =>
+      val streamed = sketches(out)
+      assert(streamed.keySet === batch.keySet)
+      batch.foreach { case (ws, sk) =>
+        assert(streamed(ws) == sk, s"sketch drift in window $ws")
+      }
+      assert(batch.size > 1, "fixture must span multiple windows")
+      // independent ground truth: each window's sketch must be exactly
+      // the 8 smallest distinct h48 hashes of that window's users,
+      // ascending (the complete set when a window has < 8 distinct)
+      val truth = Tables.events(spark, sf0001)
+        .groupBy(window($"ts", "1 day"))
+        .agg(collect_set($"user_id").as("us"))
+        .select($"window.start".cast("string"), $"us").as[(String, Seq[Long])]
+        .collect().toMap
+      var sawBounded = false
+      streamed.foreach { case (ws, sk) =>
+        val want = truth(ws).map(u => Tables.h48jvm(u.toString))
+          .distinct.sorted.take(8)
+        assert(sk == want, s"window $ws sketch != bottom-8 of distinct h48")
+        if (truth(ws).size > 8) sawBounded = true
+      }
+      assert(sawBounded, "no window exceeded k — bounded path not exercised")
+    },
+    // 'view' sentinels neither alert nor cancel
+    projTwin("batch≡streaming: absence alerts equal cep_not_followed_by on the full fixture",
+      "absenceAlerts", Streams.absenceAlerts(_).toDF(), "append",
+      () => ops.Joins.cepNotFollowedBy(spark, sf0001), farFuture("view"))(
+      _.where($"user_id" >= 0).select($"user_id", $"click_id").as[(Long, Long)]
+        .collect().toSet) { (streamed, batch) =>
+      assert(streamed === batch,
+        s"only-streamed=${streamed -- batch} only-batch=${batch -- streamed}")
+    },
+    eventTwin("batch≡streaming: HBOS scoring against frozen histograms reproduces the batch top-20",
+      "hbosScored", ds => hbosScore(ds.toDF()), "append",
+      () => SparkEntry.queries("anomaly_hbos")(spark, sf0001).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3),
+          r.getDouble(4))).toSeq) { (out, batch) =>
+      val streamed = out.collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3),
+          r.getDouble(4)))
+      // the fixture refs cover every fixture bin: nothing drops at the join
+      assert(streamed.length === fixtureEvents.length)
+      val top20 = streamed.sortBy(t => (-t._5, t._1)).take(20).toSeq
+      assert(top20 === batch)
+    },
+    eventTwin("batch≡streaming: STL day-close decomposition + robust-z monitor align with the batch frame",
+      "stlDailyTws", ds => graft.streaming.Streams2.stlDailyTws(ds,
+        stlFrame._1.map(r => (r.getLong(1), r.getDouble(4))).toMap,
+        stlFrame._2, stlFrame._3).toDF(), "append",
+      () => stlFrame._1
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
+          r.getDouble(4), r.getDouble(5))).sortBy(_._1).toSeq,
+      input = () => Tables.orders(spark, sf0001)
+        .select($"o_orderkey", $"o_orderdate", $"o_custkey", $"o_totalprice")
+        .collect()
+        .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
+          "order", r.getDouble(3)))
+        .sortBy(e => (usOf(e.ts), e.event_id)).toSeq) { (out, batch) =>
+      val streamedRows = out.collect()
+      val streamed = streamedRows
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
+          r.getDouble(4), r.getDouble(5))).sortBy(_._1).toSeq
+      // stream emits every day whose CENTERED window closed — the batch
+      // frame minus its final row (the Holt day-close alignment)
+      assert(streamed === batch.dropRight(1),
+        s"\nstream ${streamed.take(3)}…\nbatch ${batch.take(3)}…")
+      assert(streamed.length >= 20, "fixture must close many day windows")
+      // the monitor columns agree with anomaly_stl_residual on every
+      // overlapping day (that key emits only its top-20 by |z|)
+      val zStream = streamedRows
+        .map(r => r.getLong(0) -> (r.getDouble(6), r.getBoolean(7))).toMap
+      val anomBatch = SparkEntry.queries("anomaly_stl_residual")(spark, sf0001)
+        .collect().map(r => r.getLong(0) -> (r.getDouble(5), r.getBoolean(6)))
+      val overlap = anomBatch.filter(p => zStream.contains(p._1))
+      assert(overlap.nonEmpty)
+      overlap.foreach { case (d, zf) => assert(zStream(d) === zf, s"day $d") }
+    },
+    anyCutTwin(Encoders.scalaLong)(
+      "batch≡streaming: online image aHash alerts equal the batch band-candidate verdicts",
+      "imageAHashTws", () => docIds, graft.streaming.Streams2.imageAHashTws(_).toDF(),
+      "append", () => {
+        // JVM replica of the batch semantics: candidates share >= 1 band,
+        // verified by exact Hamming <= 8 (same shared MmAHash code path)
+        val hs = docIds.map(id =>
+          ops.MmAHash.decodeHash(id, ops.MmAHash.synthesize(id)))
+        (for {
+          i <- hs.indices.iterator
+          j <- (i + 1) until hs.length
+          a = hs(i); b = hs(j)
+          if a.b0 == b.b0 || a.b1 == b.b1 || a.b2 == b.b2 || a.b3 == b.b3
+          ham = Integer.bitCount(a.b0 ^ b.b0) + Integer.bitCount(a.b1 ^ b.b1) +
+            Integer.bitCount(a.b2 ^ b.b2) + Integer.bitCount(a.b3 ^ b.b3)
+          if ham <= 8
+        } yield (math.min(a.doc_id, b.doc_id), math.max(a.doc_id, b.doc_id),
+          ham)).toSet
+      }) { (out, expected) =>
+      val streamed = out
+        .select($"d1", $"d2", $"hamming").distinct().collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(expected.nonEmpty, "fixture must hold planted image families")
+      assert(streamed === expected,
+        s"only-streamed=${(streamed -- expected).take(3)} " +
+          s"only-expected=${(expected -- streamed).take(3)}")
+      // and the per-Hamming histogram equals the registered batch key
+      val hist = streamed.groupBy(_._3).map { case (h, ps) =>
+        (h, ps.size.toLong) }
+      val batch = SparkEntry.queries("mm_image_ahash_dedup")(spark, sf0001)
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+      assert(hist === batch)
+    },
+    // final ledger state per cluster = the row with the max member count;
+    // the batch key publishes only multi-member entities
+    anyCutTwin(Encoders.product[graft.streaming.Streams2.DocMember])(
+      "batch≡streaming: golden-record ledger's final upsert per cluster equals the batch survivorship",
+      "goldenRecordTws", () => clusterMembers,
+      graft.streaming.Streams2.goldenRecordTws(_).toDF(), "append",
+      () => SparkEntry.queries("er_golden_record")(spark, sf0001)
+        .collect().map(row8).sortBy(_._1).toSeq) { (out, batch) =>
+      val finals = out.collect().map(row8)
+        .groupBy(_._1).map(_._2.maxBy(_._2)).toSeq
+        .filter(_._2 >= 2).sortBy(_._1)
+      assert(batch.nonEmpty, "fixture must hold multi-member entities")
+      assert(finals === batch)
+    },
+    // docs arrive in doc_id order — the prefix semantics' time axis
+    anyCutTwin(Encoders.tuple(Encoders.scalaLong, Encoders.STRING))(
+      "batch≡streaming: online exact-substring dedup flags merge to the batch keep-first span rows",
+      "substrDedupTws", () => Tables.documents(spark, sf0001)
+        .select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1).toSeq,
+      graft.streaming.Streams3.substrDedupTws(_).toDF(), "append",
+      () => SparkEntry.queries("llm_dedup_substring_incr")(spark, sf0001)
+        .collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toMap) { (out, batch) =>
+      val flags = out.select($"doc_id", $"nw", $"pos").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       // JVM replica of spansFromDupPos: islands with gap <= K, span
       // [min, max + K - 1]
@@ -2379,93 +1985,168 @@ class StreamingSpec extends SparkTestBase {
         val (n, w) = spans(rs.map(_._3).toSeq)
         d -> (rs.head._2, n, w)
       }
-      val batch = SparkEntry.queries("llm_dedup_substring_incr")(spark, sf0001)
-        .collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap
       assert(batch.nonEmpty, "fixture must hold duplicated spans")
       assert(streamed === batch,
         s"only-streamed=${(streamed.toSet -- batch.toSet).take(3)} " +
           s"only-batch=${(batch.toSet -- streamed.toSet).take(3)}")
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: online scene-cut alerts equal the batch shot boundaries") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val ids = Tables.documents(spark, sf0001)
-      .select($"doc_id").as[Long].collect().sorted
-    // frames arrive in order per video; chunking at 2699 (not a
-    // multiple of 16) cuts videos mid-sequence at micro-batch edges
-    val frames = ids.flatMap(id => (0 until 16).map(t =>
-      graft.streaming.Streams3.FrameEvent(id, t)))
-    val ms = MemoryStream[graft.streaming.Streams3.FrameEvent]
-    val q = runToTable(
-      graft.streaming.Streams3.sceneCutTws(ms.toDS()).toDF(),
-      "scene_tws", "append")
-    try {
-      frames.grouped(2699).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("scene_tws")
-        .select($"doc_id", $"frame_no", $"sad").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val batch = SparkEntry.queries("mm_video_scene_cut")(spark, sf0001)
+    },
+    // frames arrive in order per video; a cut may fall mid-video
+    anyCutTwin(Encoders.product[graft.streaming.Streams3.FrameEvent])(
+      "batch≡streaming: online scene-cut alerts equal the batch shot boundaries",
+      "sceneCutTws", () => docIds.flatMap(id => (0 until 16).map(t =>
+        graft.streaming.Streams3.FrameEvent(id, t))),
+      graft.streaming.Streams3.sceneCutTws(_).toDF(), "append",
+      () => SparkEntry.queries("mm_video_scene_cut")(spark, sf0001)
         .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet) { (out, batch) =>
+      val streamed = out.select($"doc_id", $"frame_no", $"sad").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(batch.nonEmpty, "fixture must hold planted cuts")
       assert(streamed === batch,
         s"only-streamed=${(streamed -- batch).take(3)} " +
           s"only-batch=${(batch -- streamed).take(3)}")
-    } finally q.stop()
-  }
-
-  test("batch≡streaming: live source-mix weights equal the batch temperature mix once the last hour closes") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val Hour = 3600000000L
-    // replay the sf0.001 corpus across five ingest hours (doc_id mod 5),
-    // plus one dummy row in hour 5 whose only job is to CLOSE hour 4 —
-    // its own hour never closes, so it never pollutes the totals
-    val points = Tables.documents(spark, sf0001)
-      .select($"doc_id", $"source").collect()
-      .map(r => streaming.Streams3.SourceHour(
-        (r.getLong(0) % 5) * Hour, r.getString(1)))
-      .sortBy(_.bucket_us) :+
-      streaming.Streams3.SourceHour(5 * Hour, "zz_flush")
-    val ms = MemoryStream[streaming.Streams3.SourceHour]
-    val q = runToTable(
-      streaming.Streams3.sourceMixTws(ms.toDS()).toDF(), "mix_tws", "append")
-    try {
-      points.grouped((points.length + 4) / 5).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
+    },
+    // the sf0.001 corpus replayed across five ingest hours (doc_id mod 5),
+    // plus one dummy row in hour 5 whose only job is to CLOSE hour 4 — its
+    // own hour never closes, so it never pollutes the totals
+    anyCutTwin(Encoders.product[streaming.Streams3.SourceHour])(
+      "batch≡streaming: live source-mix weights equal the batch temperature mix once the last hour closes",
+      "sourceMixTws", () => Tables.documents(spark, sf0001)
+        .select($"doc_id", $"source").collect()
+        .map(r => streaming.Streams3.SourceHour(
+          (r.getLong(0) % 5) * Hour, r.getString(1)))
+        .sortBy(_.bucket_us).toSeq :+
+        streaming.Streams3.SourceHour(5 * Hour, "zz_flush"),
+      streaming.Streams3.sourceMixTws(_).toDF(), "append",
+      () => ops.Llm4.temperatureMix(spark, sf0001).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+        .sortBy(_._1).toSeq) { (out, batch) =>
       // the cumulative table emitted at the LAST closed hour covers the
       // whole corpus, so it must be bit-equal to the batch query
-      val streamed = spark.table("mix_tws")
+      val streamed = out
         .where($"bucket_us" === 4 * Hour)
         .select($"source", $"n_docs", $"p", $"expected_docs").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-        .sortBy(_._1).toSeq
-      val batch = ops.Llm4.temperatureMix(spark, sf0001).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
         .sortBy(_._1).toSeq
       assert(streamed == batch,
         s"\nstream ${streamed.take(3)}…\nbatch ${batch.take(3)}…")
       // every earlier closed hour published a consistent partial table
-      val hours = spark.table("mix_tws").select($"bucket_us").distinct()
+      val hours = out.select($"bucket_us").distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
       assert(hours == (0 until 5).map(_ * Hour).toSeq, hours)
       // and each published hour's p column sums to ~1
       (0 until 5).foreach { h =>
-        val ps = spark.table("mix_tws").where($"bucket_us" === h * Hour)
+        val ps = out.where($"bucket_us" === h * Hour)
           .select($"p").collect().map(_.getDouble(0)).sum
         assert(math.abs(ps - 1.0) < 1e-4, s"hour $h p-sum $ps")
       }
-    } finally q.stop()
+    })
+
+  private def sketches(df: DataFrame): Map[String, Seq[Long]] =
+    df.select($"ws".cast("string"), $"sk").as[(String, Seq[Long])].collect().toMap
+
+  private val fineBatches = 16
+
+  /** `input` cut three ways, each labelled for the failure message: one
+    * batch; 2–3 batches at random cut points drawn with `seed`; and
+    * `fineBatches` batches at evenly spaced cut points (one per cut point
+    * when there are fewer). */
+  private def batchings[A](input: IndexedSeq[A], cuttable: (A, A) => Boolean,
+      seed: Long): Seq[(String, Seq[Seq[A]])] = {
+    val points = (1 until input.length).filter(i => cuttable(input(i - 1), input(i)))
+    def cutAt(cs: Seq[Int]): Seq[Seq[A]] =
+      (0 +: cs.sorted :+ input.length).sliding(2).map(p => input.slice(p(0), p(1))).toSeq
+    val rnd = new scala.util.Random(seed)
+    val fine = if (points.length < fineBatches) points
+      else (1 until fineBatches).map(k => points(k * points.length / fineBatches))
+    Seq("one batch" -> Seq(input),
+      s"seed $seed" -> cutAt(rnd.shuffle(points).take(1 + rnd.nextInt(2))),
+      s"${fine.length + 1} batches" -> cutAt(fine))
+  }
+
+  /** Starts streaming row `i` at each batching of its input, then its flush
+    * sentinels, into memory tables; returns each batching's label and its
+    * table. Row `i` draws its random cuts with seed 1000 + i. */
+  private def startTwin[A](t: Twin[A, _], i: Int)(
+      implicit ec: ExecutionContext): Seq[(String, Future[String])] = {
+    implicit val enc: Encoder[A] = t.enc
+    batchings(t.input().toIndexedSeq, t.cuttable, 1000L + i).zipWithIndex.map {
+      case ((label, chunks), k) => s"$label (${chunks.length} input batches)" -> Future {
+        val ms = MemoryStream[A]
+        val q = runToTable(t.run(ms.toDS()), s"twin_${i}_$k", t.mode)
+        try (chunks ++ t.flush.map(Seq(_))).foreach { c =>
+          ms.addData(c: _*)
+          q.processAllAvailable()
+        } finally q.stop()
+        s"twin_${i}_$k"
+      }
+    }
+  }
+
+  /** Every run of every row — (batching label, its memory table) — started
+    * together when the first row's test runs. A micro-batch of fixture size
+    * costs mostly fixed work (state-store commit, offset and commit logs),
+    * so four runs stream side by side; each test then checks its own
+    * row's tables. */
+  private lazy val twinRuns: IndexedSeq[Seq[(String, Future[String])]] = {
+    sqlCtx // the session starts here, not on a pool thread
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val runs = twins.toIndexedSeq.zipWithIndex.map { case (t, i) => startTwin(t, i) }
+    Future.sequence(runs.flatten.map(_._2.transform(scala.util.Success(_))))
+      .onComplete(_ => pool.shutdown())
+    runs
+  }
+
+  /** Checks every batching of row `i` against its twin. */
+  private def checkTwin[A, B](t: Twin[A, B], i: Int): Unit = {
+    val want = t.twin()
+    twinRuns(i).foreach { case (label, run) =>
+      val clue = s"${t.operator} at $label"
+      Await.ready(run, Duration(20, "minutes")).value.get match {
+        case scala.util.Failure(e) => fail(s"$clue: the stream failed", e)
+        case scala.util.Success(table) =>
+          try withClue(s"$clue: ")(t.check(spark.table(table), want))
+          finally spark.catalog.dropTempView(table)
+      }
+    }
+  }
+
+  twins.zipWithIndex.foreach { case (t, i) => test(t.name)(checkTwin(t, i)) }
+
+  /** Public `graft.streaming` operators that keep keyed state but have no
+    * twin row, each with the reason. */
+  private val twinExempt = Map(
+    "userTotalsTws" -> "no batch twin; the stream_keyed_state benchmark runs it",
+    "userTotalsTwsTtl" -> "processing-time TTL: its output depends on the wall clock",
+    "userTotalsBootstrapped" -> "its output depends on an initial-state Dataset",
+    "userProfileTws" -> "no batch twin",
+    "streamingSnm" -> "a bounded buffer: its pairs are a subset of the batch SNM pairs",
+    "streamingNearDup" -> "its alerts are a subset of the batch LSH candidates",
+    "connectedThresholdFilter" -> "two connected streams, no batch twin",
+    "adwinTws" -> "its twin is a JVM replica of AdwinKernel (Round15jSpec)",
+    "kcenterDoublingTws" -> "its twin is a JVM replica of KcenterDoubling.step (Round15hSpec)")
+
+  test("every public graft.streaming keyed-state operator has a twin row or an exemption") {
+    val stateCall = """\.(?:transformWithState|mapGroupsWithState|flatMapGroupsWithState)\b""".r
+    val defLine = """^  (private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+    val keyed = new java.io.File("src/main/scala/graft/streaming").listFiles()
+      .filter(_.getName.endsWith(".scala")).toSeq.flatMap { f =>
+        var owner = Option.empty[String]
+        scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(_.mkString)
+          .replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
+          .split("\n").toSeq.flatMap { line =>
+            line match {
+              case defLine(priv, name) => owner = Option.when(priv == null)(name)
+              case _ =>
+            }
+            owner.filter(_ => stateCall.findFirstIn(line).isDefined)
+          }
+      }.toSet
+    val rows = twins.map(_.operator).toSet
+    assert(keyed -- rows -- twinExempt.keySet === Set.empty[String],
+      "keyed-state operators with no twin row and no exemption")
+    assert(twinExempt.keySet -- keyed === Set.empty[String], "stale exemptions")
+    assert((twinExempt.keySet & rows) === Set.empty[String], "exempt operators with a row")
   }
 }
